@@ -144,10 +144,11 @@ def encode_block(
     return header + body
 
 
-def decode_block(blob: bytes, block_base: int, with_positions: bool = True):
-    """Inverse of encode_block -> (docids, tfs, doc_lens, positions).
-    ``with_positions=False`` skips materializing the per-posting position
-    lists (scoring doesn't need them)."""
+def _decode_block_flat(blob: bytes, block_base: int, with_positions: bool):
+    """decode_block's arrays -> (docids, tfs, doc_lens, npos, positions),
+    positions as ONE flat int64 array of absolute per-posting positions
+    (posting i owns the next npos[i] entries); empty unless
+    ``with_positions``."""
     # header = ONE varint (<= 10 bytes): slice before decoding, or the
     # boundary scan walks (and allocates over) the ENTIRE blob just to
     # find the first varint's end — and the body decode then repeats the
@@ -156,7 +157,7 @@ def decode_block(blob: bytes, block_base: int, with_positions: bool = True):
     n = int(n_arr[0])
     if n == 0:
         empty = np.empty(0, dtype=np.int64)
-        return empty, empty.copy(), empty.copy(), []
+        return empty, empty.copy(), empty.copy(), empty.copy(), empty.copy()
     vals = decode_all_varints(blob, off)
     deltas = vals[:n]
     tfs = vals[n : 2 * n]
@@ -164,40 +165,59 @@ def decode_block(blob: bytes, block_base: int, with_positions: bool = True):
     npos = vals[3 * n : 4 * n]
     docids = np.cumsum(deltas) + block_base
     if not with_positions:
-        return docids, tfs, doc_lens, [[] for _ in range(n)]
+        return docids, tfs, doc_lens, npos, np.empty(0, dtype=np.int64)
     pos_deltas = vals[4 * n : 4 * n + int(npos.sum())]
     # per-segment cumsum: global cumsum minus each segment's start offset
-    positions: list[list[int]] = []
     if len(pos_deltas):
         cs = np.cumsum(pos_deltas)
-        bounds = np.cumsum(npos)
-        starts = bounds - npos
+        starts = np.cumsum(npos) - npos
         base = np.where(starts > 0, cs[starts - 1], 0)
-        adj = cs - np.repeat(base, npos)
-        positions = [seg.tolist() for seg in np.split(adj, bounds[:-1])]
+        flat = cs - np.repeat(base, npos)
     else:
-        positions = [[] for _ in range(n)]
+        flat = np.empty(0, dtype=np.int64)
+    return docids, tfs, doc_lens, npos, flat
+
+
+def decode_block(blob: bytes, block_base: int, with_positions: bool = True):
+    """Inverse of encode_block -> (docids, tfs, doc_lens, positions).
+    ``with_positions=False`` skips materializing the per-posting position
+    lists (scoring doesn't need them)."""
+    docids, tfs, doc_lens, npos, flat = _decode_block_flat(blob, block_base, with_positions)
+    n = len(docids)
+    if not with_positions or not len(flat):
+        return docids, tfs, doc_lens, [[] for _ in range(n)]
+    positions = [seg.tolist() for seg in np.split(flat, np.cumsum(npos)[:-1])]
     return docids, tfs, doc_lens, positions
 
 
-def decode_blocks_arrays(blobs, bases, with_positions: bool = True):
+def decode_blocks_arrays(blobs, bases, with_positions: bool = True, flat_positions: bool = False):
     """Decode many blobs at once -> concatenated (docids, tfs, doc_lens,
-    positions, counts). Used by the mapInPandas decode path."""
-    all_d, all_t, all_l, all_p, counts = [], [], [], [], []
+    positions, counts). Used by the mapInPandas decode path and the
+    driver-side serving path. ``flat_positions=True`` returns positions
+    as an (npos, flat) pair of int64 arrays instead of one Python list
+    per posting — what vectorized phrase matching consumes."""
+    all_d, all_t, all_l, all_n, all_f, all_p, counts = [], [], [], [], [], [], []
     for blob, base in zip(blobs, bases):
-        d, t, ln, p = decode_block(bytes(blob), int(base), with_positions)
+        if flat_positions:
+            d, t, ln, npos, flat = _decode_block_flat(bytes(blob), int(base), with_positions)
+            all_n.append(npos)
+            all_f.append(flat)
+        else:
+            d, t, ln, p = decode_block(bytes(blob), int(base), with_positions)
+            all_p.extend(p)
         all_d.append(d)
         all_t.append(t)
         all_l.append(ln)
-        all_p.extend(p)
         counts.append(len(d))
     if not counts:
         e = np.empty(0, dtype=np.int64)
-        return e, e.copy(), e.copy(), [], []
+        pos = (e.copy(), e.copy()) if flat_positions else []
+        return e, e.copy(), e.copy(), pos, []
+    pos = (np.concatenate(all_n), np.concatenate(all_f)) if flat_positions else all_p
     return (
         np.concatenate(all_d),
         np.concatenate(all_t),
         np.concatenate(all_l),
-        all_p,
+        pos,
         counts,
     )

@@ -37,8 +37,17 @@ Design decisions, all for 10^12-doc scale:
   all in the blob, `max_impact` precomputed at build (BM25 impact is
   query-independent) — the query path never joins doc_stats.
 
-Everything Python here runs inside Arrow-batched pandas UDFs over whole
-blocks — no per-row Python (north rule).
+- **Two serving paths, one kernel.** A store opened by `load_blocks`
+  keeps its path and the manifest it read. A query whose terms the
+  Spark path would decode in full anyway — Σdf over the terms (read
+  from the term dictionary) below ``min_prune_postings``, or a store of
+  at most max(seed_blocks, 4) blocks — is served in the driver from
+  that manifest snapshot: pyarrow reads the terms' bucket dirs, numpy
+  decodes, scores and takes the top-k, and the result is a local
+  relation (0 Spark jobs). Everything else runs as Spark jobs, its
+  Python inside Arrow-batched pandas UDFs. Both paths decode with
+  `decode_blocks_arrays` and score with `_bm25_impact`, over whole
+  blocks — no per-row Python (north rule).
 """
 
 from __future__ import annotations
@@ -50,13 +59,15 @@ from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.porter import porter_stem
 from ..functions.tokenizer import tokenize_py
-from ..functions.varint import decode_block, encode_block
+from ..functions.varint import decode_blocks_arrays, encode_block
 from .index_build import DOC_KEY, InvertedIndex
 
 # ONE definition of the BM25 constants (scoring.py): the stored per-block
@@ -285,7 +296,9 @@ _BLOCK_SCHEMA = T.StructType(
 )
 
 
-def _bm25_impact(tf: np.ndarray, doc_len: np.ndarray, idf: float, avg_len: float) -> np.ndarray:
+def _bm25_impact(
+    tf: np.ndarray, doc_len: np.ndarray, idf: "float | np.ndarray", avg_len: float
+) -> np.ndarray:
     tf = tf.astype(np.float64)
     denom = tf + K1 * (1.0 - B + B * doc_len.astype(np.float64) / avg_len)
     return idf * tf * (K1 + 1.0) / denom
@@ -437,6 +450,10 @@ class BlockIndex:
     #                               after decode, compact_blocks purges
     #                               them physically (Lucene's live-docs
     #                               bitmap, re-expressed relationally)
+    path: str | None = None       # store root and the manifest load_blocks
+    manifest: dict | None = None  # read: the snapshot the driver-side
+    #                               serving path reads from (None for
+    #                               in-memory build_blocks indexes)
 
     def cache(self) -> "BlockIndex":
         self.blocks = self.blocks.cache()
@@ -565,6 +582,7 @@ def _query_terms(query: str, stem: bool) -> list[str]:
 
 
 DEFAULT_MIN_PRUNE_POSTINGS = 100_000
+DEFAULT_SEED_BLOCKS = 8
 
 
 def _prune_live_blocks(
@@ -691,13 +709,227 @@ def _prune_live_blocks(
     return live, n_live, n_total
 
 
+# ------------------------------------------------------- driver serving
+#
+# A query the Spark path would decode in full anyway (see the gate in
+# `_driver_idf`) is answered in the driver process straight from the
+# loaded store's committed files: the term dictionary gives df/idf, the
+# terms' bucket directories give the blobs, and the result becomes a
+# local relation — a collect() runs no Spark job. Decode and the BM25
+# partial are the same functions the Spark path runs in its tasks.
+
+
+def _result_schema(bidx: BlockIndex, *extra: T.StructField) -> T.StructType:
+    """(doc_key..., *extra) with the key fields typed as in the docid map."""
+    key_schema = bidx.docid_map.schema
+    return T.StructType([key_schema[c] for c in bidx.doc_key] + list(extra))
+
+
+def _local_frame(spark, schema: T.StructType, table: pa.Table | None = None) -> DataFrame:
+    """A DataFrame over driver-held rows (``None``: no rows). Built from
+    a pyarrow table it is a local relation whose collect() runs no Spark
+    job; ``createDataFrame`` over a Python list or an EMPTY pandas frame
+    instead runs a Python-worker job (~0.5 s)."""
+    if table is None:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        table = to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema=schema)
+
+
+def _store_root(bidx: BlockIndex) -> str | None:
+    """Local directory of a store the driver path can read, or None: the
+    index was not opened by load_blocks, its manifest predates the
+    segment layout, its buckets are not crc32 (n_buckets is None), or
+    its path is not on the local filesystem (hdfs://, s3a://, ...)."""
+    from urllib.parse import urlparse
+
+    meta = bidx.manifest
+    if bidx.path is None or meta is None or not bidx.n_buckets:
+        return None
+    dirs = meta.get("data_dirs")
+    if not dirs or "." in dirs or not meta.get("stats_dir"):
+        return None
+    url = urlparse(bidx.path)
+    if url.scheme not in ("", "file"):
+        return None
+    root = url.path if url.scheme else bidx.path
+    return root if os.path.isdir(root) else None
+
+
+def _arrow_read(dirs: list[str], columns: list[str], filt) -> pa.Table | None:
+    """One pyarrow scan of the parquet part files under ``dirs`` (missing
+    dirs skipped; None when there are no files). Fields are read as
+    nullable: `write_blocks` and `append_blocks` segments disagree on
+    the nullability of e.g. docid_map.docid, which a plain
+    ``pa.concat_tables`` rejects."""
+    files = [
+        os.path.join(d, f)
+        for d in dirs if os.path.isdir(d)
+        for f in sorted(os.listdir(d)) if not f.startswith((".", "_"))
+    ]
+    if not files:
+        return None
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(files[0])
+    schema = pa.schema([schema.field(c).with_nullable(True) for c in columns])
+    return ds.dataset(files, schema=schema, format="parquet").to_table(filter=filt)
+
+
+def _driver_idf(
+    bidx: BlockIndex, terms: list[str], min_prune_postings: int, seed_blocks: int
+) -> dict[str, float] | None:
+    """{term: idf_bm25} from the store's term dictionary when the driver
+    path serves a query over ``terms``; None routes it to Spark.
+
+    The gate is the one `_prune_live_blocks` applies, decided from store
+    metadata: Σdf over the terms equals the posting total that function
+    stages and aggregates (append adds df, compaction recounts it,
+    deletes and merges leave it unchanged), and ⌈n_docs/block_span⌉
+    bounds the number of distinct blocks. Either bound below its limit
+    means Spark would decode every block of the terms anyway — and it
+    caps what the driver reads."""
+    root = _store_root(bidx)
+    if root is None:
+        return None
+    got = _arrow_read(
+        [f"{root}/{bidx.manifest['stats_dir']}"], ["term", "df", "idf_bm25"],
+        ds.field("term").isin(terms),
+    )
+    rows = got.to_pydict() if got is not None else {"term": [], "df": [], "idf_bm25": []}
+    n_store_blocks = -(-int(bidx.n_docs) // int(bidx.block_span))
+    if n_store_blocks <= max(seed_blocks, 4) or sum(rows["df"]) < min_prune_postings:
+        return dict(zip(rows["term"], rows["idf_bm25"]))
+    return None
+
+
+def _driver_postings(bidx: BlockIndex, terms: list[str], with_positions: bool):
+    """Decode every block of ``terms`` from the snapshot's segments ->
+    (term index per posting, docids, tfs, doc_lens, (npos, flat positions)).
+    Blocks are decoded in ``terms`` order, so each doc's partials are
+    summed in one fixed order and exact ties stay exact."""
+    root = _store_root(bidx)
+    buckets = sorted({term_bucket(t, bidx.n_buckets) for t in terms})
+    dirs = [
+        f"{root}/{d}/blocks/bucket={b}"
+        for d in bidx.manifest["data_dirs"] for b in buckets
+    ]
+    tab = _arrow_read(dirs, ["term", "block_id", "blob"], ds.field("term").isin(terms))
+    if tab is None or tab.num_rows == 0:
+        e = np.empty(0, dtype=np.int64)
+        return e, e.copy(), e.copy(), e.copy(), (e.copy(), e.copy())
+    rank = {t: i for i, t in enumerate(terms)}
+    tidx = np.array([rank[t] for t in tab.column("term").to_pylist()], dtype=np.int64)
+    block_id = tab.column("block_id").to_numpy()
+    order = np.lexsort((block_id, tidx))
+    blobs = tab.column("blob").take(pa.array(order)).to_pylist()
+    d, tf, ln, pos, counts = decode_blocks_arrays(
+        blobs, block_id[order] * bidx.block_span, with_positions, flat_positions=True
+    )
+    return np.repeat(tidx[order], counts), d, tf, ln, pos
+
+
+def _driver_dead(bidx: BlockIndex, docids: np.ndarray) -> np.ndarray:
+    """The tombstoned members of ``docids`` (a docid-filtered read of the
+    snapshot's tombstone dirs)."""
+    tdirs = bidx.manifest.get("tombstone_dirs", [])
+    if not tdirs or not len(docids):
+        return np.empty(0, dtype=np.int64)
+    root = _store_root(bidx)
+    got = _arrow_read(
+        [f"{root}/{t}" for t in tdirs], ["docid"], ds.field("docid").isin(docids)
+    )
+    return np.empty(0, dtype=np.int64) if got is None else got.column("docid").to_numpy()
+
+
+def _driver_keys(bidx: BlockIndex, docids: np.ndarray, values: dict[str, np.ndarray]) -> pa.Table:
+    """(doc_key..., *values) for sorted unique ``docids`` — a docid-
+    filtered read of the snapshot's docid maps; ``values`` are aligned
+    with ``docids``."""
+    root = _store_root(bidx)
+    key = list(bidx.doc_key)
+    got = _arrow_read(
+        [f"{root}/{d}/docid_map" for d in bidx.manifest["data_dirs"]],
+        [*key, "docid"], ds.field("docid").isin(docids),
+    )
+    if got is None:
+        got = pa.table({c: [] for c in [*key, "docid"]})
+    at = np.searchsorted(docids, got.column("docid").to_numpy())
+    return pa.table(
+        {**{c: got.column(c) for c in key}, **{n: v[at] for n, v in values.items()}}
+    )
+
+
+def _driver_topk(
+    bidx: BlockIndex,
+    idf: dict[str, float],
+    terms: list[str],
+    ex_terms: list[str],
+    k: int,
+    conjunctive: bool,
+) -> DataFrame:
+    """`bm25_topk_blocks` on the driver (same results, same schema)."""
+    schema = _result_schema(bidx, T.StructField("score", T.DoubleType()))
+    spark = bidx.docid_map.sparkSession
+    tidx, d, tf, ln, _ = _driver_postings(bidx, terms + ex_terms, with_positions=False)
+    excluded = tidx >= len(terms)
+    dead = d[excluded]
+    tidx, d, tf, ln = tidx[~excluded], d[~excluded], tf[~excluded], ln[~excluded]
+    if k <= 0 or not len(d):
+        return _local_frame(spark, schema)
+    term_idf = np.array([idf.get(t, 0.0) for t in terms])
+    docs, inv = np.unique(d, return_inverse=True)
+    scores = np.bincount(inv, weights=_bm25_impact(tf, ln, term_idf[tidx], bidx.avg_doc_len))
+    keep = ~np.isin(docs, np.concatenate([dead, _driver_dead(bidx, docs)]))
+    if conjunctive:
+        keep &= np.bincount(inv) == len(terms)
+    docs, scores = docs[keep], scores[keep]
+    if len(docs) > k:
+        # every doc scoring at least the k-th best: the k results plus
+        # the boundary ties whose order the doc_key tie-break decides
+        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
+        cand = scores >= kth
+        docs, scores = docs[cand], scores[cand]
+    keyed = _driver_keys(bidx, docs, {"score": scores})
+    order = [("score", "descending")] + [(c, "ascending") for c in bidx.doc_key]
+    return _local_frame(spark, schema, keyed.sort_by(order).slice(0, k))
+
+
+def _driver_phrase(bidx: BlockIndex, terms: list[str]) -> DataFrame:
+    """`phrase_match_blocks` on the driver: a phrase starts at p in a doc
+    when term i sits at p + i for every i — the intersection, over i, of
+    term i's (doc, position − i) keys, computed with numpy set ops."""
+    schema = _result_schema(bidx, T.StructField("n_occurrences", T.LongType()))
+    spark = bidx.docid_map.sparkSession
+    uniq = list(dict.fromkeys(terms))
+    tidx, d, _, _, (npos, flat) = _driver_postings(bidx, uniq, with_positions=True)
+    if not len(flat):
+        return _local_frame(spark, schema)
+    # docs ranked densely so (rank, start) packs into one int64 key
+    docs, doc_rank = np.unique(d, return_inverse=True)
+    pos_doc = np.repeat(doc_rank, npos)
+    pos_term = np.repeat(tidx, npos)
+    width = int(flat.max()) + 1
+    starts = None
+    for i, t in enumerate(terms):
+        sel = (pos_term == uniq.index(t)) & (flat >= i)
+        keys = pos_doc[sel] * width + (flat[sel] - i)
+        starts = keys if starts is None else starts[np.isin(starts, keys)]
+    hit, n_occ = np.unique(starts // width, return_counts=True)
+    hit_docs = docs[hit]
+    live = ~np.isin(hit_docs, _driver_dead(bidx, hit_docs))
+    keyed = _driver_keys(bidx, hit_docs[live], {"n_occurrences": n_occ[live].astype(np.int64)})
+    return _local_frame(spark, schema, keyed.sort_by([(c, "ascending") for c in bidx.doc_key]))
+
+
 def bm25_topk_blocks(
     bidx: BlockIndex,
     query: str,
     k: int = 80,
     stem: bool = True,
     prune: bool = True,
-    seed_blocks: int = 8,
+    seed_blocks: int = DEFAULT_SEED_BLOCKS,
     conjunctive: bool = False,
     min_prune_postings: int = DEFAULT_MIN_PRUNE_POSTINGS,
     exclude_terms: list[str] | None = None,
@@ -706,7 +938,20 @@ def bm25_topk_blocks(
 ) -> DataFrame:
     """Top-k BM25 from compressed blocks, block-max pruned, EXACT.
 
-    Returns (doc_key..., score). With ``prune=False`` decodes every block
+    Returns (doc_key..., score), ranked by score then doc_key.
+
+    Two paths, same results. On a store opened by `load_blocks`, a
+    query without ``include_docs``/``exclude_docs`` frames whose terms
+    (query and excluded) pass the driver gate — Σdf from the term
+    dictionary below ``min_prune_postings``, or a store of at most
+    max(``seed_blocks``, 4) blocks, exactly when `_prune_live_blocks`
+    would decode every block anyway — is answered in the driver from
+    the manifest snapshot the index was loaded with (`_driver_topk`):
+    0 Spark jobs, a local-relation result. Every other query (past the
+    gate, boolean frames, in-memory `build_blocks` indexes, legacy or
+    non-crc32 layouts, non-local paths) takes the Spark path below.
+
+    On the Spark path, ``prune=False`` decodes every block
     of every query term (the exhaustive baseline the pruned path is
     tested against). No per-query ``.cache()``: when the index is served
     from its bucketed parquet layout (write_blocks/load_blocks), the
@@ -738,6 +983,10 @@ def bm25_topk_blocks(
     terms = [t for t in terms if t not in set(ex_terms)]
     if not terms:
         return _empty_topk(bidx)
+    if include_docs is None and exclude_docs is None:
+        idf = _driver_idf(bidx, terms + ex_terms, min_prune_postings, seed_blocks)
+        if idf is not None:
+            return _driver_topk(bidx, idf, terms, ex_terms, k, conjunctive)
 
     dead = bidx.tombstones
     if exclude_docs is not None:
@@ -849,13 +1098,9 @@ def bm25_topk_many_blocks(
         for t in _query_terms(q, stem):
             pairs.append((qid, t))
     if not pairs:
-        spark = bidx.blocks.sparkSession
-        fields = (
-            [T.StructField("qid", T.StringType())]
-            + bidx.docid_map.select(*bidx.doc_key).schema.fields
-            + [T.StructField("score", T.DoubleType())]
-        )
-        return spark.createDataFrame([], T.StructType(fields))
+        schema = _result_schema(bidx, T.StructField("score", T.DoubleType()))
+        qid = T.StructField("qid", T.StringType())
+        return _local_frame(bidx.blocks.sparkSession, T.StructType([qid, *schema.fields]))
     spark = bidx.blocks.sparkSession
     qdf = spark.createDataFrame(pairs, "qid string, term string")
     all_terms = sorted({t for _, t in pairs})
@@ -909,9 +1154,8 @@ def bm25_topk_many_blocks(
 
 
 def _empty_topk(bidx: BlockIndex) -> DataFrame:
-    key_schema = bidx.docid_map.select(*bidx.doc_key).schema
-    fields = key_schema.fields + [T.StructField("score", T.DoubleType())]
-    return bidx.docid_map.sparkSession.createDataFrame([], T.StructType(fields))
+    schema = _result_schema(bidx, T.StructField("score", T.DoubleType()))
+    return _local_frame(bidx.docid_map.sparkSession, schema)
 
 
 def term_bucket(term: str, n_buckets: int) -> int:
@@ -1822,6 +2066,10 @@ def load_blocks(spark, path: str) -> "BlockIndex":
     from crashed appends are invisible (the exactly-once guarantee's
     read side). Multiple segments union per-scan — the bucket/term
     filters push through the Union into every child scan.
+
+    The index also keeps ``path`` and the ``manifest`` dict read here:
+    the driver serving path reads exactly this committed snapshot, with
+    no per-query manifest read.
     """
     meta = _read_meta(spark, path)
     bucket_fn = meta.get("bucket_fn", None)
@@ -1879,6 +2127,8 @@ def load_blocks(spark, path: str) -> "BlockIndex":
         stale_bounds=bool(meta.get("stale_bounds", False)),
         key_ordered=bool(meta.get("key_ordered", True)),
         tombstones=tombstones,
+        path=path,
+        manifest=meta,
     )
 
 
@@ -1894,6 +2144,11 @@ def _term_filter(bidx: BlockIndex, terms: list[str]):
     return cond
 
 
+def _phrase_terms(phrase: str, stem: bool) -> list[str]:
+    toks = tokenize_py(phrase)
+    return [porter_stem(t) for t in toks] if stem else toks
+
+
 def _phrase_docids(bidx: BlockIndex, phrase: str, stem: bool = True) -> DataFrame | None:
     """(docid, n_occurrences) of docs containing the exact phrase —
     the docid-level core shared by `phrase_match_blocks` and the
@@ -1905,8 +2160,7 @@ def _phrase_docids(bidx: BlockIndex, phrase: str, stem: bool = True) -> DataFram
     positions arrays; the per-term decodes join on docid (doc-range
     blocks co-partition the terms, so the join keys align block-wise).
     """
-    toks = tokenize_py(phrase)
-    terms = [porter_stem(t) for t in toks] if stem else toks
+    terms = _phrase_terms(phrase, stem)
     if not terms:
         return None
     tblocks = bidx.blocks.filter(_term_filter(bidx, list(set(terms))))
@@ -1939,14 +2193,28 @@ def phrase_match_blocks(
 ) -> DataFrame:
     """Exact phrase search served from the compressed blobs — the
     capability positions are stored for (north rule). Returns
-    (doc_key..., n_occurrences > 0)."""
-    out = _phrase_docids(bidx, phrase, stem)
-    if out is None:
+    (doc_key..., n_occurrences > 0) in doc_key order.
+
+    Two paths, same rows. A store opened by `load_blocks` whose phrase
+    terms pass the driver gate (`_driver_idf`: Σdf below
+    DEFAULT_MIN_PRUNE_POSTINGS, or a store of at most
+    max(DEFAULT_SEED_BLOCKS, 4) blocks) is matched in the driver with
+    numpy over the manifest snapshot's files and returned as a local
+    relation (0 Spark jobs). Every other index takes the Spark path,
+    which decodes the terms' blocks in a pandas UDF and joins them on
+    docid (`_phrase_docids`)."""
+    terms = _phrase_terms(phrase, stem)
+    if not terms:
         # same schema as the non-empty path: an untokenizable phrase
         # must not surprise unionByName / column-referencing callers
-        return _empty_topk(bidx).select(
-            *bidx.doc_key, F.lit(0).cast("long").alias("n_occurrences")
-        )
+        schema = _result_schema(bidx, T.StructField("n_occurrences", T.LongType()))
+        return _local_frame(bidx.docid_map.sparkSession, schema)
+    gate = _driver_idf(
+        bidx, list(dict.fromkeys(terms)), DEFAULT_MIN_PRUNE_POSTINGS, DEFAULT_SEED_BLOCKS
+    )
+    if gate is not None:
+        return _driver_phrase(bidx, terms)
+    out = _phrase_docids(bidx, phrase, stem)
     key = list(bidx.doc_key)
     return (
         out.join(bidx.docid_map, "docid")
@@ -1976,10 +2244,10 @@ def proximity_topk_blocks(
     ta = _query_terms(term_a, stem)
     tb = _query_terms(term_b, stem)
     if not ta or not tb:
-        empty = _empty_topk(bidx)
-        return empty.select(
-            *bidx.doc_key, F.lit(None).cast("long").alias("min_gap"), "score"
+        schema = _result_schema(
+            bidx, T.StructField("min_gap", T.LongType()), T.StructField("score", T.DoubleType())
         )
+        return _local_frame(bidx.docid_map.sparkSession, schema)
     a, b = ta[0], tb[0]
     tblocks = bidx.blocks.filter(_term_filter(bidx, list({a, b})))
     decoded = _drop_dead(
@@ -2016,7 +2284,8 @@ def proximity_topk_blocks(
 
 
 def count_live_blocks(
-    bidx: BlockIndex, query: str, k: int = 80, stem: bool = True, seed_blocks: int = 8
+    bidx: BlockIndex, query: str, k: int = 80, stem: bool = True,
+    seed_blocks: int = DEFAULT_SEED_BLOCKS,
 ) -> tuple[int, int]:
     """(blocks decoded with pruning, total query-term blocks) — the
     pruning-effectiveness counter (SURVEY §7 step 7). Shares

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 import pytest
 
 
@@ -49,3 +52,39 @@ def spark_index(corpus_sdf):
     from cis555_search_engine_spark.operators.index_build import build_index
 
     return build_index(corpus_sdf)
+
+
+class _JobCount:
+    n: int | None = None  # set when the counted block exits
+
+
+@contextmanager
+def _count_jobs(spark):
+    """Count the Spark jobs a block runs, as perfbench/spans.py does: the
+    block runs under its own job group, and ungrouped jobs started
+    meanwhile (engine worker threads) count too. The listener bus is
+    drained before reading the status tracker, so a job that already
+    finished is never missed."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    group = f"spark-jobs-{uuid.uuid4().hex[:12]}"
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "counted block")
+    out = _JobCount()
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        bus.waitUntilEmpty()
+        ungrouped = set(tracker.getJobIdsForGroup(None)) - before
+        out.n = len(set(tracker.getJobIdsForGroup(group)) | ungrouped)
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` then ``jobs.n`` = Spark jobs run
+    inside the block — e.g. to assert a driver-served query ran none, so
+    a silent fallback to Spark fails the test."""
+    return lambda: _count_jobs(spark)

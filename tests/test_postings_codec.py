@@ -1328,3 +1328,208 @@ def test_merge_segments_with_tombstones(spark, corpus_sdf, tmp_path):
     dead_set = {(r["conv_id"], r["turn_idx"]) for r in dead_keys.collect()}
     assert not (set(got) & dead_set)
     assert survivors.n_docs == merged.n_docs - meta["n_deleted"]
+
+
+# ------------------------------------------- driver path vs Spark path
+
+
+def _oracle_state(docs, dead=frozenset()):
+    """Oracle answers over a store state: ``docs`` count in the corpus
+    statistics, ``dead`` keys (tombstoned) vanish from every result."""
+    from cis555_search_engine_spark import oracle
+    from cis555_search_engine_spark.functions.porter import porter_stem
+    from cis555_search_engine_spark.functions.tokenizer import tokenize_py
+
+    idx = oracle.build_index(docs)
+    stems = lambda q: [porter_stem(t) for t in tokenize_py(q)]  # noqa: E731
+
+    def bm25(query, k, conjunctive=False, exclude=()):
+        terms, ex = set(stems(query)), {t for q in exclude for t in stems(q)}
+        out = []
+        for c, t, s in oracle.score_bm25(idx, query, k=idx.n_docs):
+            tf = idx.doc_tf[(c, t)]
+            if (c, t) in dead or (ex & tf.keys()) or (conjunctive and not terms <= tf.keys()):
+                continue
+            out.append((c, t, s))
+        return out[:k]
+
+    def phrase(text):
+        terms = stems(text)
+        out = []
+        for key, pos in sorted(idx.doc_pos.items()):
+            if key in dead or not all(t in pos for t in terms):
+                continue
+            n = sum(all(p + i in set(pos[t]) for i, t in enumerate(terms)) for p in pos[terms[0]])
+            if n:
+                out.append((*key, n))
+        return out
+
+    return bm25, phrase
+
+
+def test_driver_path_matches_spark_path_and_oracle(
+    spark, corpus_pdf, corpus_sdf, spark_index, block_index, spark_jobs, tmp_path
+):
+    """A loaded store answers bounded BM25 and phrase queries in the
+    driver (0 Spark jobs); on every store shape — fresh, appended (stale
+    bounds, docid order != key order, segments that disagree on the
+    nullability of docid_map.docid), tombstoned, tiered-merged,
+    compacted — it returns the same ranked keys as the Spark path over an
+    in-memory index of the same state and as the oracle, scores within
+    1e-9. A query past the gate still takes the pruned Spark path."""
+    import dataclasses
+    import zlib
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.dataset as pads
+    from pyspark.sql import functions as F
+
+    from cis555_search_engine_spark.operators.index_build import build_index
+    from cis555_search_engine_spark.operators.postings_codec import (
+        append_blocks,
+        bm25_topk_blocks,
+        build_blocks,
+        compact_blocks,
+        count_live_blocks,
+        delete_docs,
+        load_blocks,
+        phrase_match_blocks,
+        tiered_merge,
+        write_blocks,
+    )
+
+    docs = list(corpus_pdf[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None))
+    in_a = lambda c: zlib.crc32(c.encode()) % 2 == 0  # noqa: E731
+    is_dead = lambda c, t: t % 7 == 3  # noqa: E731
+    a_pred = F.crc32(F.col("conv_id").cast("binary")) % 2 == 0
+    dead_pred = F.col("turn_idx") % 7 == 3
+    dead = {(c, t) for c, t, _ in docs if is_dead(c, t)}
+    path = str(tmp_path / "store")
+
+    def cases(oracle):
+        """(serving function, query, kwargs, oracle answer) per query."""
+        bm25, phrase = oracle
+        # k cut inside a group of exactly tied scores
+        ranking = bm25("presidential election", 10**6)
+        k = next(i for i in range(3, len(ranking)) if ranking[i - 1][2] == ranking[i][2])
+        out = [
+            (bm25_topk_blocks, "presidential election", dict(k=k),
+             bm25("presidential election", k)),
+            (bm25_topk_blocks, "rice noodle", dict(k=10, conjunctive=True),
+             bm25("rice noodle", 10, True)),
+            (bm25_topk_blocks, "rice noodle", dict(k=10, exclude_terms=["waaaf"]),
+             bm25("rice noodle", 10, exclude=["waaaf"])),
+            (phrase_match_blocks, "waaaa waaaa", {}, phrase("waaaa waaaa")),
+            (phrase_match_blocks, "zoom coronavirus", {}, phrase("zoom coronavirus")),
+        ]
+        assert out[2][3] != bm25("rice noodle", 10), "the exclusion must matter"
+        assert out[3][3] and not out[4][3], "one phrase matches, one matches nothing"
+        return out
+
+    def check(got, want, what):
+        """Same ranked keys; scores (BM25) or occurrences (phrase) equal."""
+        assert [r[:2] for r in got] == [r[:2] for r in want], what
+        for g, w in zip(got, want):
+            assert math.isclose(g[2], w[2], rel_tol=1e-9, abs_tol=1e-9), what
+
+    def check_state(name, loaded, memory, oracle):
+        """The driver path on ``loaded`` (0 jobs) and the Spark path on
+        the in-memory twin ``memory`` each equal the oracle."""
+        assert loaded.manifest is not None
+        todo = cases(oracle)
+        for fn, q, kw, want in todo:
+            with spark_jobs() as jobs:
+                got = [tuple(r) for r in fn(loaded, q, **kw).collect()]
+            assert jobs.n == 0, (name, q, kw)
+            check(got, want, (name, q, kw, "driver path"))
+        if memory is None:
+            return
+        assert memory.manifest is None
+        # the Spark-path queries run concurrently: each is a handful of
+        # small jobs, so wall time is scheduling latency, not data
+        with ThreadPoolExecutor(len(todo)) as pool:
+            served = list(pool.map(
+                lambda c: [tuple(r) for r in c[0](memory, c[1], **c[2]).collect()], todo
+            ))
+        for (fn, q, kw, want), rows in zip(todo, served):
+            check(sorted(rows) if fn is phrase_match_blocks else rows, want,
+                  (name, q, kw, "spark path"))
+
+    # fresh: the store is written from its cached in-memory twin
+    docs_a = [d for d in docs if in_a(d[0])]
+    twin = build_blocks(build_index(corpus_sdf.filter(a_pred), cache=False), 64).cache()
+    write_blocks(twin, path, n_buckets=8)
+    check_state("fresh", load_blocks(spark, path), twin, _oracle_state(docs_a))
+    twin.blocks.unpersist()
+
+    # appended: the in-memory twin is the full build (block_index)
+    append_blocks(spark, path, build_index(corpus_sdf.filter(~a_pred), cache=False))
+    appended = load_blocks(spark, path)
+    assert appended.stale_bounds and not appended.key_ordered
+    # the case a plain pa.concat_tables rejects: the write_blocks and
+    # append_blocks segments disagree on the nullability of docid
+    nullable = {
+        pads.dataset(f"{path}/{d}/docid_map").schema.field("docid").nullable
+        for d in appended.manifest["data_dirs"]
+    }
+    assert nullable == {True, False}
+    check_state("appended", appended, block_index, _oracle_state(docs))
+
+    # tombstoned, then tiered-merged: one logical state, so the merged
+    # store is checked against the oracle the tombstoned twin matched
+    n_dead = delete_docs(spark, path, corpus_sdf.filter(dead_pred).select("conv_id", "turn_idx"))
+    assert n_dead == len(dead)
+    tomb = block_index.docid_map.join(
+        corpus_sdf.filter(dead_pred).select("conv_id", "turn_idx"), ["conv_id", "turn_idx"],
+        "left_semi",
+    ).select("docid")
+    dead_oracle = _oracle_state(docs, dead)
+    check_state("tombstoned", load_blocks(spark, path),
+                dataclasses.replace(block_index, tombstones=tomb), dead_oracle)
+    assert tiered_merge(spark, path, merge_at=2) == 1
+    merged = load_blocks(spark, path)
+    assert len(merged.manifest["data_dirs"]) == 1
+    check_state("merged", merged, None, dead_oracle)
+
+    # compacted: stats recomputed over the survivors
+    compact_blocks(spark, path)
+    live_docs = [d for d in docs if not is_dead(d[0], d[1])]
+    compacted = load_blocks(spark, path)
+    twin = build_blocks(build_index(corpus_sdf.filter(~dead_pred), cache=False), 64).cache()
+    check_state("compacted", compacted, twin, _oracle_state(live_docs))
+    twin.blocks.unpersist()
+
+    # past the gate (Σdf >= min_prune_postings=0, 16 blocks > the seed
+    # budget): the Spark block-max path, which prunes this query
+    bm25, _ = _oracle_state(live_docs)
+    with spark_jobs() as jobs:
+        got = [tuple(r) for r in
+               bm25_topk_blocks(compacted, "zoom", k=2, min_prune_postings=0).collect()]
+    assert jobs.n >= 1
+    check(got, bm25("zoom", 2), "gate crossed")
+    live, total = count_live_blocks(compacted, "zoom", k=2)
+    assert live < total, (live, total)
+
+
+def test_empty_results_run_no_spark_job(spark_index, block_index, spark_jobs):
+    """Empty results are local relations: no Python-worker job to build
+    an empty frame, with the same schemas as non-empty results."""
+    from cis555_search_engine_spark.operators.postings_codec import (
+        bm25_topk_blocks,
+        bm25_topk_many_blocks,
+        phrase_match_blocks,
+        proximity_topk_blocks,
+    )
+
+    cases = [
+        (bm25_topk_blocks(block_index, "", k=5), ["conv_id", "turn_idx", "score"]),
+        (phrase_match_blocks(block_index, "1234!@#"), ["conv_id", "turn_idx", "n_occurrences"]),
+        (proximity_topk_blocks(block_index, "", "rice"),
+         ["conv_id", "turn_idx", "min_gap", "score"]),
+        (bm25_topk_many_blocks(block_index, {"q": "!!"}), ["qid", "conv_id", "turn_idx", "score"]),
+    ]
+    for df, cols in cases:
+        with spark_jobs() as jobs:
+            assert df.collect() == []
+        assert jobs.n == 0, cols
+        assert df.columns == cols

@@ -480,6 +480,30 @@ def test_maintenance_job_tier_merge_cli(spark, corpus_pdf, tmp_path, monkeypatch
     )
 
 
+def test_maintenance_job_rejects_compact_with_tier_merge(tmp_path):
+    """--compact with --tier-merge is a usage error (exit code 2), raised
+    by argument parsing before any Spark session starts — not a tick
+    that silently skips the merge."""
+    import os
+    import subprocess
+    import sys as _sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [
+            _sys.executable, os.path.join(root, "tools", "maintenance_job.py"),
+            "--index", str(tmp_path / "idx"),
+            "--arrivals", str(tmp_path / "arrivals"),
+            "--checkpoint", str(tmp_path / "ckpt"),
+            "--compact", "--tier-merge",
+        ],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 2, proc.stderr
+    assert "--tier-merge" in proc.stderr and "--compact" in proc.stderr
+    assert not (tmp_path / "idx").exists()
+
+
 # ------------------------------------------------- static index pruning
 
 

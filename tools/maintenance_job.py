@@ -5,17 +5,19 @@ from arriving transcript parquet files.
     spark-submit --master local[N] --py-files pkg.zip tools/maintenance_job.py \
         --index <block-store-dir> --arrivals <stream-dir> \
         --checkpoint <ckpt-dir> [--bootstrap <corpus.parquet>] \
-        [--max-files-per-trigger 1] [--continuous] [--compact] \
-        [--tier-merge [--tier-factor 4] [--merge-at 4]]
+        [--max-files-per-trigger 1] [--continuous] \
+        [--compact | --tier-merge [--tier-factor 4] [--merge-at 4]]
 
 Without ``--continuous`` the job drains whatever has arrived
 (trigger availableNow) and exits — the cron-style maintenance tick.
 ``--bootstrap`` builds the initial store from a corpus file when the
 index directory does not exist yet. ``--compact`` runs the LSM-style
-merge after draining (restores tight pruning bounds). The tick ends
-with a manifest-scoped vacuum (sweeps superseded stats dirs from the
-drained epochs + any crash orphans); pass ``--no-vacuum`` to defer it
-when old-manifest readers may still be in flight (grace period).
+merge after draining (restores tight pruning bounds); ``--tier-merge``
+runs the cheaper tiered segment merge instead, and passing both is a
+usage error. The tick ends with a manifest-scoped vacuum (sweeps
+superseded stats dirs from the drained epochs + any crash orphans);
+pass ``--no-vacuum`` to defer it when old-manifest readers may still
+be in flight (grace period).
 
 Store metadata goes through the Hadoop FileSystem API, so ``--index``
 may be an hdfs:// or object-store path, like the store itself.
@@ -55,6 +57,12 @@ def main() -> None:
     ap.add_argument("--block-span", type=int, default=4096)
     ap.add_argument("--n-buckets", type=int, default=64)
     args = ap.parse_args()
+    if args.compact and args.tier_merge:
+        # compaction rewrites every segment into one, so a tiered merge
+        # after it has nothing to do: reject the pair instead of
+        # silently running only one of them
+        ap.error("--tier-merge cannot be combined with --compact "
+                 "(compaction already leaves a single segment)")
 
     from pyspark.sql import SparkSession
 
