@@ -352,7 +352,7 @@ def parse_boolean_query(query: str) -> dict:
     return out
 
 
-# ------------------------------------------------------ rank fusion (hybrid)
+# ------------------------------------------------------------- rank fusion
 
 
 def rrf_fuse(
@@ -375,8 +375,8 @@ def rrf_fuse(
     a vector (embedding-cosine) retriever — no score calibration needed
     because only integer ranks enter the sum, which also makes the
     fusion bit-reproducible across engines (the per-leg score scales
-    never meet). The reference engine is lexical-only; this fuses its
-    ranking with the similarity module's ANN leg.
+    never meet). The reference engine is lexical-only; any rankings
+    over the same key space can be fused, e.g. BM25 and tf-idf.
 
     Scale notes: leg frames are already top-N cuts (bounded, ≤ N rows
     each), so the union + hash-agg here is over O(N·legs) rows
@@ -399,21 +399,6 @@ def rrf_fuse(
         .orderBy(F.desc("rrf"), *[F.asc(kc) for kc in keys])
         .limit(k)
     )
-
-
-def with_rank(topn: DataFrame, order: Sequence[Column], out: str = "rank") -> DataFrame:
-    """1-based row_number ranks over an ALREADY top-N-cut frame. The
-    ordering must be TOTAL (include an id tie-break): row_number gives
-    tied rows distinct ranks in nondeterministic order otherwise.
-
-    The single-partition window here is deliberate and safe: callers
-    pass a bounded frame (an ``orderBy().limit(N)`` result, N ≤ a few
-    hundred), so the window sorts N rows on one task — the global
-    ordering work already happened in the leg's TakeOrderedAndProject.
-    Never call this on an uncut table."""
-    from pyspark.sql import Window
-
-    return topn.withColumn(out, F.row_number().over(Window.orderBy(*order)))
 
 
 # ------------------------------------------------- next-word suggestion

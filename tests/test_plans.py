@@ -8,17 +8,12 @@ the shuffle-free guarantee of the doc-local postings build.
 
 from __future__ import annotations
 
-import pytest
-
 
 def explain_str(df, mode: str = "formatted") -> str:
     jdf = df._jdf
     jvm = df.sparkSession._jvm
     em = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     return jdf.queryExecution().explainString(em)
-
-
-SF = "/root/testdata/sf0.001"
 
 
 def test_doclocal_build_has_no_shuffle(spark, corpus_sdf):
@@ -120,44 +115,6 @@ def test_block_build_no_forced_vocab_broadcast(spark, corpus_sdf):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_tpch_q3_builds_broadcast_join(spark):
-    import cis555_search_engine_spark.entry_queries as EQ
-
-    plan = explain_str(EQ.q_tpch_q3(spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_sample_stratified_is_scan_fused(spark):
-    """The stratified sampler must stay a narrow scan-side filter: no
-    Exchange, no join, no Python — the property that makes it free at
-    100 TB (it rides the scan the downstream consumer already pays for)."""
-    from cis555_search_engine_spark.operators.curation import sample_stratified
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = explain_str(sample_stratified(docs, {"en": 0.5, "de": 0.25}))
-    for op in ("Exchange", "Join", "ArrowEvalPython", "BatchEvalPython"):
-        assert op not in plan, plan
-
-
-def test_decontaminate_plan_shape(spark):
-    """No cartesian/nested-loop anywhere (the join is keyed by shingle
-    hash), and no forced broadcast of the big training side; the eval
-    side broadcast is opt-in."""
-    from pyspark.sql import functions as F
-
-    from cis555_search_engine_spark.operators.decontam import decontaminate
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    train = docs.filter(F.col("doc_id") % 7 != 0)
-    ev = docs.filter(F.col("doc_id") % 7 == 0)
-    plan = explain_str(decontaminate(train, ev, broadcast_eval=True))
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan  # the opted-in eval side
-    plan_shuffle = explain_str(decontaminate(train, ev, broadcast_eval=False))
-    assert "CartesianProduct" not in plan_shuffle
-
-
 def test_facet_counts_single_agg_after_join(spark_index, corpus_sdf):
     """Facet agg stays one hash aggregate pair (partial+final) over the
     match-set join — no window, no sort, no Python."""
@@ -210,34 +167,3 @@ def test_dictionary_prefix_scan_pushdown(spark, spark_index, tmp_path):
     assert [tuple(r) for r in q.collect()] == [tuple(r) for r in want]
 
 
-def test_hybrid_rrf_legs_cut_before_rank_window(spark):
-    """The RRF fuse plan must show each leg's distributed top-N cut
-    (TakeOrderedAndProject) feeding the single-partition rank window —
-    i.e. the global ordering work happens in the leg, and the window
-    sorts only the bounded cut. No cartesian product anywhere."""
-    from cis555_search_engine_spark.entry_queries import q_hybrid_rrf
-
-    plan = explain_str(q_hybrid_rrf(spark, SF))
-    # two legs (lexical + vector), each a TakeOrderedAndProject
-    assert plan.count("TakeOrderedAndProject") >= 2
-    assert "CartesianProduct" not in plan
-    # the fuse itself is one hash aggregation over the unioned legs
-    assert "Union" in plan
-
-
-def test_mmr_candidate_join_is_bounded_input(spark):
-    """mmr_rerank's result is a driver-computed LocalRelation over a
-    BOUNDED candidate collect — the plan must be a local scan (no
-    re-execution of the retrieval per action), and the unbounded-input
-    guard must trip before any unbounded collect."""
-    from cis555_search_engine_spark.operators.similarity import mmr_rerank
-
-    emb = spark.range(30).selectExpr(
-        "id as vec_id", "array(cast(id as float), 1.0f) as embedding"
-    )
-    cand = spark.range(30).selectExpr("id as doc_id", "cast(id as double) as rel")
-    out = mmr_rerank(cand.limit(10), emb, k=3)
-    plan = explain_str(out)
-    assert any(s in plan for s in ("LocalTableScan", "LocalRelation", "ExistingRDD"))
-    with pytest.raises(ValueError):
-        mmr_rerank(cand, emb, k=3, max_candidates=5)

@@ -2,7 +2,7 @@
 """Self-run the driver's correctness gate: for every entry in
 __spark_entry__.queries(), run the Spark DataFrame AND the DuckDB oracle
 SQL at the given sf, compare row count, column names, and an
-order-insensitive value hash.
+order-insensitive value hash. A query with no oracle is a failure.
 
 Usage: python tools/selfcheck.py [query ...] [--sf SFDIR]
 """
@@ -18,9 +18,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+# the tables the registered queries read (pagerank/hits link orders)
+TABLES = ("documents", "orders")
 
 
 def norm_cell(v) -> str:
@@ -80,14 +79,15 @@ def main() -> int:
         )
     failures = 0
     for name in names:
+        if name not in oracles:
+            print(f"{name:24s} FAIL no oracle")
+            failures += 1
+            continue
         t0 = time.time()
         sdf = qs[name](spark, args.sf)
         s_cols = sdf.columns
         s_rows = [tuple(r) for r in sdf.collect()]
         t_spark = time.time() - t0
-        if name not in oracles:
-            print(f"{name:24s} rows={len(s_rows):7d}  (rows-only check, no oracle)  {t_spark:5.1f}s")
-            continue
         t0 = time.time()
         res = con.sql(oracles[name])
         d_cols = res.columns
