@@ -268,7 +268,7 @@ def ngram_jaccard_pairs(
     # infer a size()>0 predicate and push it BELOW the staged projections,
     # re-inlining the whole shingle expression (with its per-element
     # tokenizer re-evaluation) into a per-row Filter — a silent ~3x cost
-    # found with .explain (PLANS.md)
+    # found with .explain
     sized = (
         arr.select("id", F.size("shh").alias("nsh"), F.explode_outer("shh").alias("h"))
         .filter(F.col("h").isNotNull())

@@ -70,7 +70,8 @@ def generate_transcripts(
     stay short but a deterministic minority run to ~100x the median —
     the adversarial length profile for block-max pruning (uniform
     lengths give flat per-block score maxima, so WAND cannot skip
-    anything no matter how it is implemented).
+    anything no matter how it is implemented), sequence packing,
+    repetition stats and passage dedup (round-4 verdict items 4+10).
     The default path draws the SAME rng stream as before, so existing
     seeds reproduce byte-identical fixtures.
     """

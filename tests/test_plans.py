@@ -16,6 +16,9 @@ def explain_str(df, mode: str = "formatted") -> str:
     return jdf.queryExecution().explainString(em)
 
 
+SF = "/root/testdata/sf0.001"
+
+
 def test_doclocal_build_has_no_shuffle(spark, corpus_sdf):
     from cis555_search_engine_spark.operators.index_build import build_postings_doclocal
 
@@ -113,6 +116,36 @@ def test_block_build_no_forced_vocab_broadcast(spark, corpus_sdf):
         assert "BroadcastExchange" not in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_sample_stratified_is_scan_fused(spark):
+    """The stratified sampler must stay a narrow scan-side filter: no
+    Exchange, no join, no Python — the property that makes it free at
+    100 TB (it rides the scan the downstream consumer already pays for)."""
+    from cis555_search_engine_spark.operators.curation import sample_stratified
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = explain_str(sample_stratified(docs, {"en": 0.5, "de": 0.25}))
+    for op in ("Exchange", "Join", "ArrowEvalPython", "BatchEvalPython"):
+        assert op not in plan, plan
+
+
+def test_decontaminate_plan_shape(spark):
+    """No cartesian/nested-loop anywhere (the join is keyed by shingle
+    hash), and no forced broadcast of the big training side; the eval
+    side broadcast is opt-in."""
+    from pyspark.sql import functions as F
+
+    from cis555_search_engine_spark.operators.decontam import decontaminate
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    train = docs.filter(F.col("doc_id") % 7 != 0)
+    ev = docs.filter(F.col("doc_id") % 7 == 0)
+    plan = explain_str(decontaminate(train, ev, broadcast_eval=True))
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+    assert "BroadcastHashJoin" in plan  # the opted-in eval side
+    plan_shuffle = explain_str(decontaminate(train, ev, broadcast_eval=False))
+    assert "CartesianProduct" not in plan_shuffle
 
 
 def test_facet_counts_single_agg_after_join(spark_index, corpus_sdf):

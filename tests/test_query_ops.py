@@ -224,70 +224,3 @@ def test_rrf_fuse_respects_k_and_ties(spark):
     b = spark.createDataFrame([(5, 1), (7, 2)], "doc_id int, rank int")
     rows = rrf_fuse([a, b], key="doc_id", c=60, k=1).collect()
     assert len(rows) == 1 and rows[0]["doc_id"] == 5
-
-
-# -------------------------------------------------------- facet_counts
-
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def docs_sdf(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").cache()
-
-
-def test_facet_counts_matches_bm25_scores(spark, docs_sdf):
-    from pyspark.sql import functions as F
-
-    from cis555_search_engine_spark.operators.index_build import build_index
-    from cis555_search_engine_spark.operators.scoring import bm25_scores, facet_counts
-
-    idx = build_index(docs_sdf, doc_key=("doc_id",), text_col="text", stem=False)
-    meta = docs_sdf.select("doc_id", "source")
-    got = {
-        r["facet"]: (r["n_docs"], r["max_score"], r["min_score"])
-        for r in facet_counts(idx, "hash join merge", meta, "source", stem=False).collect()
-    }
-
-    scored = bm25_scores(idx, "hash join merge", stem=False)
-    src = {r["doc_id"]: r["source"] for r in meta.collect()}
-    per_facet: dict[str, list[float]] = {}
-    for r in scored.select("doc_id", F.round("score", 4).alias("s")).collect():
-        per_facet.setdefault(src[r["doc_id"]], []).append(r["s"])
-    want = {f: (len(v), max(v), min(v)) for f, v in per_facet.items()}
-    assert got == want
-    assert len(want) > 1, "need several facets for a meaningful check"
-
-
-def test_facet_counts_empty_query(spark, docs_sdf):
-    from cis555_search_engine_spark.operators.index_build import build_index
-    from cis555_search_engine_spark.operators.scoring import facet_counts
-
-    idx = build_index(docs_sdf.limit(20), doc_key=("doc_id",), text_col="text", stem=False)
-    meta = docs_sdf.select("doc_id", "source")
-    out = facet_counts(idx, "", meta, "source", stem=False)
-    assert out.count() == 0
-    assert out.columns == ["facet", "n_docs", "max_score", "min_score"]
-
-
-# ----------------------------------------- heavy-tail (skewed) fixture
-# The uniform sf corpus (5-60 tokens/doc) is the friendliest case; the
-# synth heavy-tail corpus has Pareto lengths, p99 ~100x the median
-# (FIXTURES.md §skewed).
-
-
-@pytest.fixture(scope="module")
-def skewed_rows():
-    from cis555_search_engine_spark.synth import generate_transcripts
-
-    pdf = generate_transcripts(n_convs=40, seed=99, length_skew=1.0)
-    return [(i, t) for i, t in enumerate(pdf["text"].tolist())]
-
-
-def test_skewed_corpus_is_actually_heavy_tailed(skewed_rows):
-    import statistics
-
-    lens = sorted(len(t.split()) for _, t in skewed_rows)
-    med = statistics.median(lens)
-    assert lens[-1] > 20 * med, (med, lens[-1])

@@ -1,9 +1,10 @@
-"""Round-5b operators — permuterm wildcards, next-word suggestion,
-best-window snippets, static index pruning, personalized PageRank and the
-maintenance CLI — each vs a pure-Python oracle plus the edge cases the
-driver's sf0.01 data may not exercise."""
+"""Round-5b operators — sliding-window chunking, winnowing fingerprints
+(MOSS), permuterm wildcards, next-word suggestion — each vs a pure-Python
+oracle plus the edge cases the driver's sf0.01 data may not exercise."""
 
 from __future__ import annotations
+
+import hashlib
 
 import pytest
 
@@ -18,6 +19,150 @@ def docs_sdf(spark):
 @pytest.fixture(scope="module")
 def docs_rows(docs_sdf):
     return [(r["doc_id"], r["text"]) for r in docs_sdf.select("doc_id", "text").collect()]
+
+
+# ------------------------------------------------------- chunk_windows
+
+
+def _py_chunks(text: str, window: int, stride: int):
+    toks = [t for t in text.split() if t]
+    if not toks:
+        return []
+    n = len(toks)
+    n_chunks = 1 + max(0, -(-(n - window) // stride)) if n > window else 1
+    out = []
+    for c in range(n_chunks):
+        s = c * stride
+        out.append((c, s, min(window, n - s), " ".join(toks[s : s + window])))
+    return out
+
+
+def test_chunk_windows_matches_python_oracle(spark, docs_sdf, docs_rows):
+    from cis555_search_engine_spark.operators.curation import chunk_windows
+
+    got = {
+        (r["id"], r["chunk_id"]): (r["chunk_start"], r["n_tokens"], r["chunk_text"])
+        for r in chunk_windows(docs_sdf, window=8, stride=6).collect()
+    }
+    want = {}
+    for i, t in docs_rows:
+        for c, s, nt, txt in _py_chunks(t, 8, 6):
+            want[(i, c)] = (s, nt, txt)
+    assert got == want
+
+
+def test_chunk_windows_covers_every_token_and_overlap(spark):
+    from cis555_search_engine_spark.operators.curation import chunk_windows
+
+    text = " ".join(f"t{i}" for i in range(23))
+    df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
+    rows = sorted(
+        (r["chunk_start"], r["n_tokens"], r["chunk_text"])
+        for r in chunk_windows(df, window=10, stride=7).collect()
+    )
+    # starts 0,7,14 — last start must be < 23 and cover the tail
+    assert [r[0] for r in rows] == [0, 7, 14]
+    assert rows[-1][1] == 9  # truncated tail chunk
+    covered = set()
+    for s, nt, txt in rows:
+        toks = txt.split()
+        assert len(toks) == nt
+        assert toks == [f"t{i}" for i in range(s, s + nt)]
+        covered.update(range(s, s + nt))
+    assert covered == set(range(23))
+
+
+def test_chunk_windows_edges(spark):
+    from cis555_search_engine_spark.operators.curation import chunk_windows
+
+    df = spark.createDataFrame(
+        [(1, "a b c"), (2, ""), (3, None), (4, "solo")],
+        ["doc_id", "text"],
+    )
+    rows = chunk_windows(df, window=8, stride=6).collect()
+    got = {(r["id"], r["chunk_id"]): (r["n_tokens"], r["chunk_text"]) for r in rows}
+    # short docs -> exactly one truncated chunk; empty/null -> no rows
+    assert got == {(1, 0): (3, "a b c"), (4, 0): (1, "solo")}
+    with pytest.raises(ValueError):
+        chunk_windows(df, window=4, stride=5)
+
+
+# ------------------------------------------------- winnowing (MOSS)
+
+
+def _py_winnow(text: str, k: int, w: int):
+    toks = [t for t in text.split() if t]
+    if len(toks) < k:
+        return set()
+    grams = [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+    keys = [
+        (hashlib.md5(g.encode()).hexdigest()[:15], p) for p, g in enumerate(grams)
+    ]
+    sel = set()
+    for j in range(max(len(keys) - w, 0) + 1):
+        win = keys[j : j + w]
+        sel.add(min(win))  # (hex, pos) tuple min == fixed-width string min
+    return {(int(h, 16), p) for h, p in sel}
+
+
+def test_winnow_fingerprints_matches_python_oracle(spark, docs_sdf, docs_rows):
+    from cis555_search_engine_spark.operators.dedup import winnow_fingerprints
+
+    got: dict[int, set] = {}
+    for r in winnow_fingerprints(docs_sdf, k=4, w=5).collect():
+        got.setdefault(r["id"], set()).add((r["ghash"], r["pos"]))
+    want = {i: _py_winnow(t, 4, 5) for i, t in docs_rows if _py_winnow(t, 4, 5)}
+    assert got == want
+
+
+def test_winnow_shared_substring_guarantee(spark):
+    """The paper's detection floor: any shared run of >= k+w-1 tokens
+    must produce at least one shared fingerprint."""
+    from cis555_search_engine_spark.operators.dedup import winnow_fingerprints
+
+    core = "alpha beta gamma delta epsilon zeta eta theta"  # 8 = k+w-1
+    df = spark.createDataFrame(
+        [(1, "x1 y1 " + core + " z1"), (2, "p2 " + core + " q2 r2 s2")],
+        ["doc_id", "text"],
+    )
+    rows = winnow_fingerprints(df, k=4, w=5).collect()
+    by_doc: dict[int, set] = {}
+    for r in rows:
+        by_doc.setdefault(r["id"], set()).add(r["ghash"])
+    assert by_doc[1] & by_doc[2]
+
+
+def test_winnow_short_doc_single_fingerprint(spark):
+    from cis555_search_engine_spark.operators.dedup import winnow_fingerprints
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c")], ["doc_id", "text"]
+    )  # doc 1: 2 grams < w -> one global-min fp; doc 2: < k tokens -> none
+    rows = winnow_fingerprints(df, k=4, w=5).collect()
+    assert {r["id"] for r in rows} == {1}
+    assert len(rows) == 1
+
+
+def test_winnow_pairs_identical_docs_and_cap(spark, caplog):
+    from cis555_search_engine_spark.operators.dedup import winnow_pairs
+
+    text = " ".join(f"w{i % 13}x{i % 7}" for i in range(40))
+    df = spark.createDataFrame(
+        [(1, text), (2, text), (3, "totally different tokens only here "
+                                   "one two three four five six seven")],
+        ["doc_id", "text"],
+    )
+    rows = winnow_pairs(df, threshold=0.5, k=4, w=5).collect()
+    assert [(r["i"], r["j"], r["jac"]) for r in rows] == [(1, 2, 1.0)]
+    # hot-hash cap: every fingerprint shared by all 4 docs > cap=3 is
+    # dropped -> no pairs survive, and the cap logs
+    df4 = spark.createDataFrame([(i, text) for i in range(5)], ["doc_id", "text"])
+    import logging
+
+    with caplog.at_level(logging.WARNING):
+        got = winnow_pairs(df4, threshold=0.5, k=4, w=5, max_hash_df=3).collect()
+    assert got == []
+    assert any("hot-hash cap" in m for m in caplog.messages)
 
 
 # --------------------------------------------- permuterm / next-word
@@ -180,7 +325,49 @@ def test_best_window_snippets_empty_query(spark, small_index, docs_sdf):
     assert out.collect() == []
 
 
-# ------------------------------------------------- maintenance CLI
+# ------------------------------------------------- shard assignment
+
+
+def test_shard_assign_matches_python_oracle(spark, docs_sdf, docs_rows):
+    import hashlib
+
+    from cis555_search_engine_spark.operators.curation import shard_assign
+
+    got = {
+        r["id"]: (r["pos"], r["shard"], r["pos_in_shard"])
+        for r in shard_assign(docs_sdf, n_shards=4, seed=7).collect()
+    }
+    ids = [i for i, _ in docs_rows]
+    hk = {
+        i: int(hashlib.md5(f"{i}:7".encode()).hexdigest()[:15], 16) for i in ids
+    }
+    order = sorted(ids, key=lambda i: (hk[i], i))
+    want = {i: (p, p % 4, p // 4) for p, i in enumerate(order)}
+    assert got == want
+
+
+def test_shard_assign_balanced_and_stable(spark, docs_sdf):
+    from pyspark.sql import functions as F
+
+    from cis555_search_engine_spark.operators.curation import shard_assign
+
+    out = shard_assign(docs_sdf, n_shards=8, seed=0)
+    sizes = {r["shard"]: r["n"] for r in out.groupBy("shard").agg(F.count("*").alias("n")).collect()}
+    assert len(sizes) == 8
+    assert max(sizes.values()) - min(sizes.values()) <= 1  # round-robin deal
+    # stability under repartitioning: same assignment regardless of layout
+    re = shard_assign(docs_sdf.repartition(13), n_shards=8, seed=0)
+    a = {(r["id"], r["pos"]) for r in out.select("id", "pos").collect()}
+    b = {(r["id"], r["pos"]) for r in re.select("id", "pos").collect()}
+    assert a == b
+    # a different seed produces a different interleave
+    other = shard_assign(docs_sdf, n_shards=8, seed=1)
+    c = {(r["id"], r["pos"]) for r in other.select("id", "pos").collect()}
+    assert a != c
+    import pytest
+
+    with pytest.raises(ValueError):
+        shard_assign(docs_sdf, n_shards=0)
 
 
 def test_maintenance_job_tier_merge_cli(spark, corpus_pdf, tmp_path, monkeypatch):

@@ -478,6 +478,61 @@ def test_delete_crash_before_manifest_commit_exactly_once(spark, corpus_sdf, tmp
     assert snapshot() == (after_tomb, after_top)
 
 
+def test_streaming_decontaminate_equals_batch(spark, staged_corpus, corpus_sdf, tmp_path):
+    """Stream-screened contamination flags == the batch operator on the
+    same data; per-epoch overwrite is idempotent under restart."""
+    from pyspark.sql import functions as F
+
+    from cis555_search_engine_spark.operators.decontam import (
+        decontaminate_against,
+        read_eval_dict,
+        write_eval_dict,
+    )
+    from cis555_search_engine_spark.streaming.ingest import (
+        read_transcript_stream,
+        streaming_decontaminate,
+    )
+
+    # eval set: every 9th conv of the same corpus (guaranteed overlap)
+    keyed = corpus_sdf.select(
+        F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string")).alias("doc_id"),
+        "text",
+    )
+    ev_docs = keyed.filter(F.crc32(F.col("doc_id")) % 9 == 0)
+    dict_path = str(tmp_path / "evdict")
+    n_hashes = write_eval_dict(ev_docs, dict_path)
+    assert n_hashes > 0
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    q = streaming_decontaminate(
+        read_transcript_stream(spark, staged_corpus, max_files_per_trigger=1),
+        dict_path, out, ckpt,
+    )
+    q.awaitTermination(300)
+
+    got = {
+        (r["id"], r["n_hits"], r["n_shingles"], r["overlap_frac"])
+        for r in spark.read.parquet(os.path.join(out, "flagged")).collect()
+    }
+    want = {
+        (r["id"], r["n_hits"], r["n_shingles"], r["overlap_frac"])
+        for r in decontaminate_against(
+            keyed, read_eval_dict(spark, dict_path), id_col="doc_id"
+        ).collect()
+    }
+    assert got == want
+    assert got, "eval split must overlap the corpus or the test is vacuous"
+
+    # restart on the same checkpoint: nothing left to consume, no new epochs
+    epochs_before = set(os.listdir(os.path.join(out, "flagged")))
+    q2 = streaming_decontaminate(
+        read_transcript_stream(spark, staged_corpus, max_files_per_trigger=1),
+        dict_path, out, ckpt,
+    )
+    q2.awaitTermination(300)
+    assert set(os.listdir(os.path.join(out, "flagged"))) == epochs_before
+
+
 def test_trending_terms_stream_equals_batch(spark, tmp_path, corpus_pdf):
     """Windowed term counts: the streaming plan over the file source must
     emit exactly the batch result for every watermark-closed window, and
