@@ -174,102 +174,6 @@ def q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_WORDCOUNT = SQL_TOK + "SELECT term, count(*)::BIGINT AS cnt FROM tok GROUP BY term"
 
 
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE vocabulary induction (Sennrich et al. ACL 2016):
-    learn the first 10 merges from the corpus wordcount — each
-    iteration ONE pair-count hash agg over the distinct-word frame plus
-    a 1-row argmax collect; merge application is a literal space-walled
-    string replace whose leftmost-non-overlapping semantics IS BPE's
-    greedy merge (operators/bpe.bpe_train). The oracle unrolls all 10
-    iterations in SQL."""
-    from .operators.bpe import bpe_train
-
-    wc = q_wordcount(spark, sf_dir)
-    return bpe_train(wc, n_merges=10)
-
-
-def _sql_bpe_merges(k: int = 10) -> str:
-    parts = [
-        SQL_TOK
-        + """
-, wc AS MATERIALIZED (SELECT term, count(*)::BIGINT AS cnt FROM tok GROUP BY term),
-w0 AS MATERIALIZED (
-  SELECT ' ' || array_to_string(list_append(regexp_extract_all(term, '.'), '</w>'), '  ') || ' ' AS w,
-         cnt
-  FROM wc
-)"""
-    ]
-    for it in range(1, k + 1):
-        prev = f"w{it - 1}"
-        parts.append(f""",
-s{it} AS MATERIALIZED (SELECT string_split(trim(w), '  ') AS s, cnt FROM {prev}),
-p{it} AS MATERIALIZED (
-  SELECT s[u.i] AS a, s[u.i + 1] AS b, sum(cnt)::BIGINT AS c
-  FROM s{it}, unnest(generate_series(1, len(s) - 1)) AS u(i)
-  GROUP BY a, b
-  ORDER BY c DESC, a ASC, b ASC
-  LIMIT 1
-)""")
-        if it < k:  # the last merge's application is never read
-            parts.append(f""",
-w{it} AS MATERIALIZED (
-  SELECT replace(t.w, ' ' || p.a || '  ' || p.b || ' ', ' ' || p.a || p.b || ' ') AS w, t.cnt
-  FROM {prev} t, p{it} p
-)""")
-    selects = "\nUNION ALL ".join(
-        f"SELECT {it} AS step, a AS left_sym, b AS right_sym, a || b AS merged, c AS cnt FROM p{it}"
-        for it in range(1, k + 1)
-    )
-    parts.append(f"\n{selects}\nORDER BY step\n")
-    return "".join(parts)
-
-
-SQL_BPE_MERGES = _sql_bpe_merges(10)
-
-
-def q_bpe_subword_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The learned tokenizer feeding the engine: learn 10 BPE merges
-    from the corpus (bpe_train), re-segment EVERY token occurrence
-    under them (bpe_segment — narrow replaces, no UDF), and count the
-    resulting subword vocabulary — the retokenize-at-corpus-scale step
-    between vocab induction and a subword-level index build. The
-    oracle re-derives the merges AND the segmentation in one SQL
-    program."""
-    from .operators.bpe import bpe_segment, bpe_train
-
-    wc = q_wordcount(spark, sf_dir)
-    merges = [
-        (r["left_sym"], r["right_sym"])
-        for r in bpe_train(wc, n_merges=10).orderBy("step").collect()
-    ]
-    seg = bpe_segment(wc, merges)
-    return (
-        seg.select(F.explode("subwords").alias("subword"), "cnt")
-        .groupBy("subword")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def _sql_bpe_subword_counts(k: int = 10) -> str:
-    # reuse the merge-derivation chain: w{k-1} already carries merges
-    # 1..k-1, so the segmented frame is w{k-1} plus the k-th merge
-    base = _sql_bpe_merges(k)
-    head = base[: base.rindex("\nSELECT 1 AS step")]
-    return head + f""",
-zfinal AS MATERIALIZED (
-  SELECT replace(t.w, ' ' || p.a || '  ' || p.b || ' ', ' ' || p.a || p.b || ' ') AS w, t.cnt
-  FROM w{k - 1} t, p{k} p
-)
-SELECT sub.s AS subword, sum(t.cnt)::BIGINT AS cnt
-FROM (SELECT string_split(trim(w), '  ') AS subs, cnt FROM zfinal) t,
-     unnest(t.subs) AS sub(s)
-GROUP BY sub.s
-"""
-
-
-SQL_BPE_SUBWORD_COUNTS = _sql_bpe_subword_counts(10)
-
-
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1+A6+T1: BM25 top-80 for a fixed query, deterministic tie-break."""
     idx = get_index(spark, sf_dir)
@@ -1702,68 +1606,6 @@ SELECT id, clean, len(list_filter(string_split(clean, ' '), t -> t <> ''))::BIGI
 SQL_HTML_CLEAN = _sql_html_clean()
 
 
-def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-payload metadata extraction via mapInPandas (the multimodal
-    plumbing; payload = utf-8 bytes of text as the container has no
-    media libs — operators/multimodal.py)."""
-    from .operators.multimodal import extract_meta, with_payload
-
-    return extract_meta(with_payload(load(spark, sf_dir, "documents")))
-
-
-SQL_MULTIMODAL_META = """
-SELECT doc_id AS id,
-       octet_length(encode(text))::BIGINT AS n_bytes,
-       md5(text) AS digest,
-       sha256(text) AS sha,
-       ascii(text)::INT AS head_byte
-FROM documents
-"""
-
-
-def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL media-container decode: every doc gets a valid PNG / JPEG /
-    WAV / MP4 payload (id%4 mix) built from its id; the decoder parses
-    the actual container bytes (PNG IHDR + CRC verification, JPEG SOFn
-    marker scan, RIFF chunk walk, MP4 box walk) inside mapInPandas — no
-    media libraries involved. The oracle recomputes the expected
-    metadata from the id arithmetic
-    (operators/multimodal.decode_media_meta)."""
-    from .operators.multimodal import decode_media_meta, with_media_payload
-
-    return decode_media_meta(with_media_payload(load(spark, sf_dir, "documents")))
-
-
-def _sql_multimodal_decode() -> str:
-    from .operators.multimodal import make_jpeg, make_mp4, make_png
-
-    n_png = len(make_png(1, 1))
-    n_jpg = len(make_jpeg(1, 1))
-    n_mp4 = len(make_mp4(1, 1, 1))  # all boxes fixed-size -> constant
-    return f"""
-SELECT doc_id AS id,
-       CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-                       WHEN 2 THEN 'wav' ELSE 'mp4' END AS fmt,
-       CASE WHEN doc_id % 4 IN (0, 1, 3) THEN (doc_id % 300 + 1)::INT END AS width,
-       CASE WHEN doc_id % 4 IN (0, 1, 3) THEN (doc_id % 200 + 1)::INT END AS height,
-       CASE WHEN doc_id % 4 = 2
-            THEN (8000 + (doc_id % 5) * 8000)::INT END AS sample_rate,
-       CASE WHEN doc_id % 4 = 2
-            THEN ((doc_id // 4) % 2 + 1)::INT END AS channels,
-       CASE WHEN doc_id % 4 = 2
-            THEN ((doc_id % 100 + 1) * 1000 // (8000 + (doc_id % 5) * 8000))::BIGINT
-            WHEN doc_id % 4 = 3 THEN (doc_id % 5000 + 500)::BIGINT
-       END AS duration_ms,
-       (CASE doc_id % 4 WHEN 0 THEN {n_png} WHEN 1 THEN {n_jpg}
-             WHEN 2 THEN 44 + (doc_id % 100 + 1) * ((doc_id // 4) % 2 + 1) * 2
-             ELSE {n_mp4} END)::BIGINT AS n_bytes
-FROM documents
-"""
-
-
-SQL_MULTIMODAL_DECODE = _sql_multimodal_decode()
-
-
 def q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed curation pipeline: quality >= 0.55, lang in (en, de),
     exact-dedup representative (operators/curation.py)."""
@@ -2272,34 +2114,6 @@ GROUP BY a.comp, a.rep_score, a.cluster_size
 # --------------------------------------- round-4 pipeline additions
 
 
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: training docs (doc_id % 41 != 0)
-    sharing >= 1 trigram shingle with the eval split (doc_id % 41 == 0).
-    The eval-hash frame is known-small here, so it opts into the
-    broadcast; the operator default leaves the strategy to AQE."""
-    from .operators.decontam import decontaminate
-
-    docs = load(spark, sf_dir, "documents")
-    train = docs.filter(F.col("doc_id") % 41 != 0)
-    ev = docs.filter(F.col("doc_id") % 41 == 0)
-    return decontaminate(train, ev, n=3, broadcast_eval=True)
-
-
-SQL_DECONTAMINATE = (
-    "WITH "
-    + SQL_SHINGLE_CTES
-    + """,
-ev AS (SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id % 41 = 0),
-dx AS (SELECT doc_id, len(shingles)::BIGINT AS n_shingles, unnest(shingles) AS s
-       FROM sh WHERE doc_id % 41 <> 0)
-SELECT d.doc_id AS id, count(*)::BIGINT AS n_hits, d.n_shingles,
-       round(count(*)::DOUBLE / d.n_shingles, 6) AS overlap_frac
-FROM dx d JOIN ev ON d.s = ev.s
-GROUP BY d.doc_id, d.n_shingles
-"""
-)
-
-
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals per document."""
     from .operators.text_analysis import repetition_stats
@@ -2506,70 +2320,6 @@ FROM scored s JOIN documents d ON s.doc_id = d.doc_id
 GROUP BY d.source
 """
 )
-
-
-def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing (operators/pii.pii_scrub): redact emails / IPv4 /
-    phone numbers, with per-doc match counts. The synthetic corpus
-    carries no PII, so the wrapper first INJECTS deterministic PII
-    (derived from doc_id, every third doc) identically on both the
-    Spark and oracle sides — the redaction is then exercised with
-    nonzero matches instead of a vacuous all-zeros hash."""
-    from .operators.pii import pii_scrub
-
-    d = F.col("doc_id")
-    injected = F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        d.cast("string"),
-        F.lit("@example.com from 10."),
-        (d % 256).cast("string"),
-        F.lit(".0."),
-        (d % 100).cast("string"),
-        F.lit(" call 555-"),
-        F.lpad((d % 1000).cast("string"), 3, "0"),
-        F.lit("-0199"),
-    )
-    docs = load(spark, sf_dir, "documents").withColumn(
-        "text", F.when(d % 3 == 0, injected).otherwise(F.col("text"))
-    )
-    return pii_scrub(docs)
-
-
-def _sql_pii_redact() -> str:
-    # built FROM the operator's own pattern table so the twin cannot
-    # drift; the patterns use only Java-regex/RE2-identical constructs
-    # (operators/pii.py module docstring) and contain no quotes
-    from .operators.pii import PII_PATTERNS
-
-    clean = "text"
-    counts = []
-    for name, pattern, token in PII_PATTERNS:
-        clean = f"regexp_replace({clean}, '{pattern}', '{token}', 'g')"
-        counts.append((name, f"len(regexp_extract_all(text, '{pattern}'))"))
-    count_cols = ",\n       ".join(f"{c}::BIGINT AS n_{n}" for n, c in counts)
-    total = " + ".join(c for _, c in counts)
-    return f"""
-WITH inj AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 3 = 0
-              THEN text || ' contact user' || doc_id::VARCHAR
-                   || '@example.com from 10.' || (doc_id % 256)::VARCHAR
-                   || '.0.' || (doc_id % 100)::VARCHAR
-                   || ' call 555-' || lpad((doc_id % 1000)::VARCHAR, 3, '0')
-                   || '-0199'
-              ELSE text END AS text
-  FROM documents
-)
-SELECT doc_id AS id,
-       {clean} AS clean_text,
-       {count_cols},
-       ({total})::BIGINT AS n_pii
-FROM inj
-"""
-
-
-SQL_PII_REDACT = _sql_pii_redact()
 
 
 def q_zipf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3302,7 +3052,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "hits": q_hits,
     # --- data-pipeline tier: off the search path, listed after the
     # search-engine queries (ROADMAP item 3 deletes it module by module) ---
-    # near-duplicate detection, passage dedup, decontamination
+    # near-duplicate detection, passage dedup
     "dedup_exact": q_dedup_exact,
     "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
     "dedup_minhash_lsh": q_dedup_minhash_lsh,
@@ -3313,7 +3063,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_winnow": q_dedup_winnow,
     "dup_passages": q_dup_passages,
     "dedup_passage_removed": q_dedup_passage_removed,
-    "decontaminate": q_decontaminate,
     # text analysis
     "token_counts": q_token_counts,
     "fingerprint": q_fingerprint,
@@ -3329,7 +3078,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "corpus_drift": q_corpus_drift,
     "corpus_jsd": q_corpus_jsd,
     "vocab_coverage": q_vocab_coverage,
-    # curation, sampling, PII
+    # curation, sampling
     "curate": q_curate,
     "pack_sequences": q_pack_sequences,
     "chunk_windows": q_chunk_windows,
@@ -3338,12 +3087,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "sample_temperature": q_sample_temperature,
     "dsir_weights": q_dsir_weights,
     "dsir_select": q_dsir_select,
-    "pii_redact": q_pii_redact,
-    # BPE, multimodal
-    "bpe_merges": q_bpe_merges,
-    "bpe_subword_counts": q_bpe_subword_counts,
-    "multimodal_meta": q_multimodal_meta,
-    "multimodal_decode": q_multimodal_decode,
 }
 
 ORACLES: dict[str, str] = {
@@ -3400,7 +3143,7 @@ ORACLES: dict[str, str] = {
     "hits": SQL_HITS,
     # --- data-pipeline tier: off the search path, listed after the
     # search-engine queries (ROADMAP item 3 deletes it module by module) ---
-    # near-duplicate detection, passage dedup, decontamination
+    # near-duplicate detection, passage dedup
     "dedup_exact": SQL_DEDUP_EXACT,
     "dedup_ngram_jaccard": SQL_DEDUP_NGRAM,
     "dedup_minhash_lsh": SQL_DEDUP_MINHASH,
@@ -3411,7 +3154,6 @@ ORACLES: dict[str, str] = {
     "dedup_winnow": SQL_DEDUP_WINNOW,
     "dup_passages": SQL_DUP_PASSAGES,
     "dedup_passage_removed": SQL_DEDUP_PASSAGE_REMOVED,
-    "decontaminate": SQL_DECONTAMINATE,
     # text analysis
     "token_counts": SQL_TOKEN_COUNTS,
     "fingerprint": SQL_FINGERPRINT,
@@ -3427,7 +3169,7 @@ ORACLES: dict[str, str] = {
     "corpus_drift": SQL_CORPUS_DRIFT,
     "corpus_jsd": SQL_CORPUS_JSD,
     "vocab_coverage": SQL_VOCAB_COVERAGE,
-    # curation, sampling, PII
+    # curation, sampling
     "curate": SQL_CURATE,
     "pack_sequences": SQL_PACK_SEQUENCES,
     "chunk_windows": SQL_CHUNK_WINDOWS,
@@ -3436,10 +3178,4 @@ ORACLES: dict[str, str] = {
     "sample_temperature": SQL_SAMPLE_TEMPERATURE,
     "dsir_weights": SQL_DSIR_WEIGHTS,
     "dsir_select": SQL_DSIR_SELECT,
-    "pii_redact": SQL_PII_REDACT,
-    # BPE, multimodal
-    "bpe_merges": SQL_BPE_MERGES,
-    "bpe_subword_counts": SQL_BPE_SUBWORD_COUNTS,
-    "multimodal_meta": SQL_MULTIMODAL_META,
-    "multimodal_decode": SQL_MULTIMODAL_DECODE,
 }

@@ -89,24 +89,9 @@ def _run_concurrent(phases):
     (Spark job submission is thread-safe; phases must not share mutable
     driver state), re-raises the first failure after every phase has
     settled, and returns the phase results in call order.
-    ``CIS555_DEBUG_TIMING=1`` prints per-phase wall time.
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    if os.environ.get("CIS555_DEBUG_TIMING"):
-        import time as _time
-
-        def _timed(p):
-            def run():
-                t0 = _time.perf_counter()
-                out = p()
-                print(f"#   phase {getattr(p, '__name__', 'phase')}: "
-                      f"{_time.perf_counter() - t0:.2f}s", flush=True)
-                return out
-            run.__name__ = getattr(p, "__name__", "phase")
-            return run
-
-        phases = [_timed(p) for p in phases]
     with ThreadPoolExecutor(max_workers=len(phases)) as pool:
         futures = [pool.submit(p) for p in phases]
         errs = [f.exception() for f in futures]
@@ -861,6 +846,13 @@ def _driver_keys(bidx: BlockIndex, docids: np.ndarray, values: dict[str, np.ndar
     )
 
 
+def _check_k(k: int) -> None:
+    """Reject a negative k before the driver/Spark split, so that both
+    serving paths fail the same way, at call time."""
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+
+
 def _driver_topk(
     bidx: BlockIndex,
     idf: dict[str, float],
@@ -876,7 +868,7 @@ def _driver_topk(
     excluded = tidx >= len(terms)
     dead = d[excluded]
     tidx, d, tf, ln = tidx[~excluded], d[~excluded], tf[~excluded], ln[~excluded]
-    if k <= 0 or not len(d):
+    if not len(d):
         return _local_frame(spark, schema)
     term_idf = np.array([idf.get(t, 0.0) for t in terms])
     docs, inv = np.unique(d, return_inverse=True)
@@ -974,8 +966,9 @@ def bm25_topk_blocks(
     pruning bar θ — include via semi-join, exclude via the dead-docid
     union — so pruning stays exact under any boolean combination.
     """
+    _check_k(k)
     terms = _query_terms(query, stem)
-    if not terms:
+    if not terms or k == 0:
         return _empty_topk(bidx)
     ex_terms = list(
         dict.fromkeys(t for q in (exclude_terms or []) for t in _query_terms(q, stem))
@@ -1093,11 +1086,12 @@ def bm25_topk_many_blocks(
     and huge — the exhaustive-decode choice here mirrors the
     min_prune_postings reasoning in _prune_live_blocks.
     """
+    _check_k(k)
     pairs = []
     for qid, q in queries.items():
         for t in _query_terms(q, stem):
             pairs.append((qid, t))
-    if not pairs:
+    if not pairs or k == 0:
         schema = _result_schema(bidx, T.StructField("score", T.DoubleType()))
         qid = T.StructField("qid", T.StringType())
         return _local_frame(bidx.blocks.sparkSession, T.StructType([qid, *schema.fields]))
@@ -2241,9 +2235,10 @@ def proximity_topk_blocks(
     from .query_ops import _min_cross_gap
     from .scoring import bm25_score_col
 
+    _check_k(k)
     ta = _query_terms(term_a, stem)
     tb = _query_terms(term_b, stem)
-    if not ta or not tb:
+    if not ta or not tb or k == 0:
         schema = _result_schema(
             bidx, T.StructField("min_gap", T.LongType()), T.StructField("score", T.DoubleType())
         )
@@ -2331,6 +2326,7 @@ def boolean_topk_blocks(
     """
     from .query_ops import parse_boolean_query
 
+    _check_k(k)
     p = parse_boolean_query(query)
     include = None
     for ph in p["phrases"]:

@@ -114,60 +114,6 @@ def incremental_index_build(
     return writer.start()
 
 
-def streaming_decontaminate(
-    stream: DataFrame,
-    eval_dict_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    n: int = 3,
-    available_now: bool = True,
-):
-    """Flag ARRIVING transcript turns that overlap the persisted eval
-    dictionary (`decontam.write_eval_dict`) — contamination screening as
-    an ingest step, so flagged turns never reach the index/training set.
-
-    Shape: the eval dictionary is a STATIC frame read once; each
-    micro-batch runs the same batch operator
-    (`decontam.decontaminate_against` — one spec, two execution modes,
-    the module-wide pattern) via foreachBatch, writing
-    `<out>/flagged/epoch=<id>/` with mode=overwrite: re-delivered epochs
-    rewrite their own directory, so output is idempotent per epoch and
-    the streaming checkpoint gives exactly-once file consumption. Doc
-    identity is the turn key serialized as `conv_id:turn_idx`.
-    """
-    spark = stream.sparkSession
-    from ..operators.decontam import decontaminate_against, read_eval_dict
-
-    # stage the static side ONCE: every micro-batch joins the same
-    # dictionary, and un-staged each epoch re-scans the dict parquet.
-    # localCheckpoint, NOT .cache(): the blocks release when the query's
-    # closure is GC'd after termination — a named cache entry would pin
-    # one copy per invocation for the session lifetime (the round-1
-    # leak pattern this repo's reviews keep hunting).
-    ev = read_eval_dict(spark, eval_dict_path).localCheckpoint(eager=True)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        keyed = batch_df.select(
-            F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string")).alias("doc_id"),
-            "text",
-        )
-        flagged = decontaminate_against(keyed, ev, n=n)
-        flagged.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "flagged", f"epoch={epoch_id}")
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def streaming_index_maintenance(
     stream: DataFrame,
     index_path: str,

@@ -1,9 +1,7 @@
-"""Training-pipeline operators: decontamination, repetition signals,
-stratified + temperature sampling, DSIR importance resampling, facet
-counts, passage dedup + removal, Zipf diagnostics, and the composed
-pipeline job — each vs a
-pure-Python/numpy oracle plus edge cases the driver's sf0.01 data may
-not exercise."""
+"""Training-pipeline operators: repetition signals, stratified +
+temperature sampling, DSIR importance resampling, facet counts, passage
+dedup + removal, Zipf diagnostics — each vs a pure-Python/numpy oracle
+plus edge cases the driver's sf0.01 data may not exercise."""
 
 from __future__ import annotations
 
@@ -22,65 +20,6 @@ def docs_sdf(spark):
 @pytest.fixture(scope="module")
 def docs_rows(docs_sdf):
     return [(r["doc_id"], r["text"]) for r in docs_sdf.select("doc_id", "text").collect()]
-
-
-def _shingles(text: str, n: int = 3) -> set[str]:
-    toks = text.split()
-    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-
-
-# ------------------------------------------------------- decontaminate
-
-
-def test_decontaminate_matches_oracle(spark, docs_sdf, docs_rows):
-    from pyspark.sql import functions as F
-
-    from cis555_search_engine_spark.operators.decontam import decontaminate
-
-    train = docs_sdf.filter(F.col("doc_id") % 7 != 0)
-    ev = docs_sdf.filter(F.col("doc_id") % 7 == 0)
-
-    ev_sh = set().union(*(_shingles(t) for i, t in docs_rows if i % 7 == 0))
-    want = {}
-    for i, t in docs_rows:
-        if i % 7 == 0:
-            continue
-        sh = _shingles(t)
-        hits = len(sh & ev_sh)
-        if hits:
-            want[i] = (hits, len(sh), round(hits / len(sh), 6))
-
-    got = {
-        r["id"]: (r["n_hits"], r["n_shingles"], r["overlap_frac"])
-        for r in decontaminate(train, ev).collect()
-    }
-    assert got == want
-    assert want, "fixture corpus must actually overlap or the test is vacuous"
-
-
-def test_decontaminate_broadcast_mode_identical(spark, docs_sdf):
-    from pyspark.sql import functions as F
-
-    from cis555_search_engine_spark.operators.decontam import decontaminate
-
-    train = docs_sdf.filter(F.col("doc_id") % 7 != 0)
-    ev = docs_sdf.filter(F.col("doc_id") % 7 == 0)
-    a = sorted(map(tuple, decontaminate(train, ev, broadcast_eval=False).collect()))
-    b = sorted(map(tuple, decontaminate(train, ev, broadcast_eval=True).collect()))
-    assert a == b
-
-
-def test_decontaminate_short_docs_never_flagged(spark):
-    from cis555_search_engine_spark.operators.decontam import decontaminate
-
-    train = spark.createDataFrame(
-        [(1, "too short"), (2, "alpha beta gamma delta")], ["doc_id", "text"]
-    )
-    ev = spark.createDataFrame([(9, "too short alpha beta gamma")], ["doc_id", "text"])
-    got = {r["id"]: r["n_hits"] for r in decontaminate(train, ev).collect()}
-    # doc 1 has < 3 tokens -> no shingles -> cannot be flagged;
-    # doc 2 shares "alpha beta gamma"
-    assert got == {2: 1}
 
 
 # ----------------------------------------------------- repetition_stats
@@ -221,41 +160,6 @@ def test_facet_counts_empty_query(spark, docs_sdf):
     assert out.columns == ["facet", "n_docs", "max_score", "min_score"]
 
 
-def test_decontaminate_randomized_cross_check(spark):
-    """Seeded random corpus from a tiny vocabulary (forces heavy shingle
-    sharing) vs the pure-Python string-shingle oracle — exercises
-    overlap shapes the fixture corpus doesn't (repeats, near-total
-    overlap, sub-3-token docs)."""
-    import random
-
-    from cis555_search_engine_spark.operators.decontam import decontaminate
-
-    rng = random.Random(20200553)
-    vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
-    rows = [
-        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 12))))
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    train = df.filter("doc_id % 5 != 0")
-    ev = df.filter("doc_id % 5 = 0")
-
-    ev_sh = set().union(*(_shingles(t) for i, t in rows if i % 5 == 0))
-    want = {}
-    for i, t in rows:
-        if i % 5 == 0:
-            continue
-        sh = _shingles(t)
-        hits = len(sh & ev_sh)
-        if hits:
-            want[i] = (hits, len(sh), round(hits / len(sh), 6))
-    got = {
-        r["id"]: (r["n_hits"], r["n_shingles"], r["overlap_frac"])
-        for r in decontaminate(train, ev).collect()
-    }
-    assert got == want
-
-
 def test_sample_stratified_threshold_math(spark):
     """Random rates: kept fraction matches the exact md5-threshold count
     computed in Python (no statistical tolerance — the sampler is a
@@ -371,90 +275,6 @@ def test_sample_temperature_nested_stable_and_clamped(spark):
     twice = sample_temperature(once, target_frac=0.25)
     assert twice.columns.count("sample_rate") == 1
     assert {r["doc_id"] for r in twice.collect()} <= big
-
-
-# ---------------------------------------------------------- pipeline_job
-
-
-def test_pipeline_job_end_to_end(spark, tmp_path, monkeypatch):
-    """The composed spark-submit pipeline entry: stage counts are
-    monotone non-increasing through the funnel, metrics.json is written,
-    and re-running is idempotent (same counts)."""
-    import json
-    import runpy
-    import sys as _sys
-
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    src = str(tmp_path / "docs")
-    ev = str(tmp_path / "eval")
-    docs.filter(F.col("doc_id") % 11 != 0).write.parquet(src)
-    docs.filter(F.col("doc_id") % 11 == 0).write.parquet(ev)
-    out = str(tmp_path / "out")
-
-    argv = [
-        "pipeline_job.py", "--docs", src, "--out", out,
-        "--eval-docs", ev, "--rates", "en=0.9,de=0.9,es=0.9,fr=0.9,zh=0.9",
-        "--min-score", "0.3",
-    ]
-
-    def run():
-        monkeypatch.setattr(_sys, "argv", argv)
-        runpy.run_path("tools/pipeline_job.py", run_name="__main__")
-        with open(f"{out}/metrics.json") as f:
-            return json.load(f)
-
-    m1 = run()
-    c = m1["counts"]
-    assert c["input"] >= c["curated"] >= c["decontaminated"] >= c["sampled"]
-    assert c["sampled"] == c["packed_docs"] > 0
-    assert c["chunks"] >= 1
-    assert set(m1["phases"]) == {
-        "curate", "passage_dedup", "pii_scrub", "decontaminate", "sample", "pack"
-    }
-    assert m1["counts"]["passage_tokens_removed"] >= 0
-    assert m1["counts"]["pii_redactions"] >= 0
-    # the scrub stage rewrites text in place and drops its scratch column
-    survivors = spark.read.parquet(f"{out}/sampled")
-    assert "n_pii" not in survivors.columns
-    m2 = run()  # idempotent re-run: every stage overwrites its own dir
-    assert m2["counts"] == m1["counts"]
-
-
-def test_pipeline_job_temperature_mode(spark, tmp_path, monkeypatch):
-    """--temperature replaces the explicit --rates with p^alpha-derived
-    per-language rates; the sampled stage carries sample_rate and the
-    funnel stays monotone. --rates and --temperature together error."""
-    import json
-    import runpy
-    import sys as _sys
-
-    import pytest as _pytest
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    src = str(tmp_path / "docs")
-    docs.write.parquet(src)
-    out = str(tmp_path / "out")
-
-    argv = [
-        "pipeline_job.py", "--docs", src, "--out", out,
-        "--temperature", "0.5:0.8", "--min-score", "0.3", "--passage-w", "0",
-    ]
-    monkeypatch.setattr(_sys, "argv", argv)
-    runpy.run_path("tools/pipeline_job.py", run_name="__main__")
-    with open(f"{out}/metrics.json") as f:
-        m = json.load(f)
-    c = m["counts"]
-    assert c["input"] >= c["curated"] >= c["sampled"] == c["packed_docs"] > 0
-    sampled = spark.read.parquet(f"{out}/sampled")
-    assert "sample_rate" in sampled.columns
-    # both sampling modes at once is a usage error
-    monkeypatch.setattr(
-        _sys, "argv", argv + ["--rates", "en=0.5"]
-    )
-    with _pytest.raises(SystemExit):
-        runpy.run_path("tools/pipeline_job.py", run_name="__main__")
 
 
 # ------------------------------------------------------- dup_passages
@@ -971,46 +791,6 @@ def test_unigram_drift_exact_order_boundary(spark):
     assert got == ["aaa", "bbb"]
 
 
-def test_pipeline_job_ppl_filter_stage(spark, tmp_path, monkeypatch):
-    """--ppl-quantile inserts the perplexity-filter stage: the kept count
-    shrinks by roughly the cut tail, every surviving doc's audit ppl is
-    at or below the recorded threshold, and an out-of-range quantile is
-    a usage error."""
-    import json
-    import runpy
-    import sys as _sys
-
-    import pytest as _pytest
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    src = str(tmp_path / "docs")
-    docs.write.parquet(src)
-    out = str(tmp_path / "out")
-
-    argv = [
-        "pipeline_job.py", "--docs", src, "--out", out,
-        "--min-score", "0.3", "--passage-w", "0", "--no-pii-scrub",
-        "--ppl-quantile", "0.9",
-    ]
-    monkeypatch.setattr(_sys, "argv", argv)
-    runpy.run_path("tools/pipeline_job.py", run_name="__main__")
-    with open(f"{out}/metrics.json") as f:
-        m = json.load(f)
-    c = m["counts"]
-    assert c["curated"] >= c["ppl_kept"] == c["packed_docs"] > 0
-    assert c["ppl_kept"] < c["curated"], "a 0.9 quantile must cut a tail"
-    filt = spark.read.parquet(f"{out}/ppl_filtered")
-    audit = filt.agg({"ppl": "max"}).collect()[0][0]
-    assert audit is None or audit <= c["ppl_threshold"]
-    assert "ppl_filter" in m["phases"]
-
-    monkeypatch.setattr(
-        _sys, "argv", argv[:-1] + ["1.5"]
-    )
-    with _pytest.raises(SystemExit):
-        runpy.run_path("tools/pipeline_job.py", run_name="__main__")
-
-
 # ------------------------------------------------------ vocab_coverage
 
 
@@ -1187,45 +967,3 @@ def test_dsir_select_plan_is_take_ordered(spark, docs_sdf):
     )._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
 
-
-def test_pipeline_job_dsir_stage(spark, tmp_path, monkeypatch):
-    """--dsir-target/--dsir-frac inserts the DSIR selection stage: the
-    kept count shrinks to ~frac, every surviving weighted doc's audit
-    logw is at or above the recorded threshold, and an out-of-range
-    frac is a usage error."""
-    import json
-    import runpy
-    import sys as _sys
-
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    src = str(tmp_path / "docs")
-    docs.write.parquet(src)
-    tgt = str(tmp_path / "tgt")
-    docs.filter(F.col("doc_id") % 10 == 0).write.parquet(tgt)
-    out = str(tmp_path / "out")
-
-    argv = [
-        "pipeline_job.py", "--docs", src, "--out", out,
-        "--min-score", "0.3", "--passage-w", "0", "--no-pii-scrub",
-        "--dsir-target", tgt, "--dsir-frac", "0.5",
-    ]
-    monkeypatch.setattr(_sys, "argv", argv)
-    runpy.run_path("tools/pipeline_job.py", run_name="__main__")
-    with open(f"{out}/metrics.json") as f:
-        m = json.load(f)
-    c = m["counts"]
-    assert c["curated"] >= c["dsir_kept"] == c["packed_docs"] > 0
-    assert c["dsir_kept"] < c["curated"], "a 0.5 frac must cut"
-    # roughly half survive (quantile cut; ties can move the count a bit)
-    assert 0.3 * c["curated"] <= c["dsir_kept"] <= 0.7 * c["curated"]
-    sel = spark.read.parquet(f"{out}/dsir_selected")
-    audit = sel.agg({"logw": "min"}).collect()[0][0]
-    assert audit is None or audit >= c["dsir_threshold"]
-    assert "dsir_select" in m["phases"]
-
-    monkeypatch.setattr(_sys, "argv", argv[:-1] + ["1.5"])
-    with _pytest.raises(SystemExit):
-        runpy.run_path("tools/pipeline_job.py", run_name="__main__")

@@ -130,24 +130,6 @@ def test_sample_stratified_is_scan_fused(spark):
         assert op not in plan, plan
 
 
-def test_decontaminate_plan_shape(spark):
-    """No cartesian/nested-loop anywhere (the join is keyed by shingle
-    hash), and no forced broadcast of the big training side; the eval
-    side broadcast is opt-in."""
-    from pyspark.sql import functions as F
-
-    from cis555_search_engine_spark.operators.decontam import decontaminate
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    train = docs.filter(F.col("doc_id") % 7 != 0)
-    ev = docs.filter(F.col("doc_id") % 7 == 0)
-    plan = explain_str(decontaminate(train, ev, broadcast_eval=True))
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan  # the opted-in eval side
-    plan_shuffle = explain_str(decontaminate(train, ev, broadcast_eval=False))
-    assert "CartesianProduct" not in plan_shuffle
-
-
 def test_facet_counts_single_agg_after_join(spark_index, corpus_sdf):
     """Facet agg stays one hash aggregate pair (partial+final) over the
     match-set join — no window, no sort, no Python."""

@@ -1513,7 +1513,8 @@ def test_driver_path_matches_spark_path_and_oracle(
 
 def test_empty_results_run_no_spark_job(spark_index, block_index, spark_jobs):
     """Empty results are local relations: no Python-worker job to build
-    an empty frame, with the same schemas as non-empty results."""
+    an empty frame, with the same schemas as non-empty results. Building
+    the frame counts too, so k=0 must not reach pruning or decode."""
     from cis555_search_engine_spark.operators.postings_codec import (
         bm25_topk_blocks,
         bm25_topk_many_blocks,
@@ -1522,14 +1523,46 @@ def test_empty_results_run_no_spark_job(spark_index, block_index, spark_jobs):
     )
 
     cases = [
-        (bm25_topk_blocks(block_index, "", k=5), ["conv_id", "turn_idx", "score"]),
-        (phrase_match_blocks(block_index, "1234!@#"), ["conv_id", "turn_idx", "n_occurrences"]),
-        (proximity_topk_blocks(block_index, "", "rice"),
+        (lambda: bm25_topk_blocks(block_index, "", k=5), ["conv_id", "turn_idx", "score"]),
+        (lambda: bm25_topk_blocks(block_index, "rice", k=0), ["conv_id", "turn_idx", "score"]),
+        (lambda: phrase_match_blocks(block_index, "1234!@#"),
+         ["conv_id", "turn_idx", "n_occurrences"]),
+        (lambda: proximity_topk_blocks(block_index, "", "rice"),
          ["conv_id", "turn_idx", "min_gap", "score"]),
-        (bm25_topk_many_blocks(block_index, {"q": "!!"}), ["qid", "conv_id", "turn_idx", "score"]),
+        (lambda: bm25_topk_many_blocks(block_index, {"q": "!!"}),
+         ["qid", "conv_id", "turn_idx", "score"]),
     ]
-    for df, cols in cases:
+    for make, cols in cases:
         with spark_jobs() as jobs:
+            df = make()
             assert df.collect() == []
         assert jobs.n == 0, cols
         assert df.columns == cols
+
+
+def test_negative_k_raises_on_every_path(spark, block_index, tmp_path):
+    """k < 0 is misuse: the driver path (a loaded store under the gate)
+    and the Spark path (an in-memory index) both raise ValueError when
+    the query is built, instead of returning [] or failing at collect."""
+    from cis555_search_engine_spark.operators.postings_codec import (
+        bm25_topk_blocks,
+        bm25_topk_many_blocks,
+        boolean_topk_blocks,
+        load_blocks,
+        proximity_topk_blocks,
+        write_blocks,
+    )
+
+    path = str(tmp_path / "bidx")
+    write_blocks(block_index, path, n_buckets=8)
+    loaded = load_blocks(spark, path)
+    for bidx in (loaded, block_index):
+        with pytest.raises(ValueError, match="k must be >= 0"):
+            bm25_topk_blocks(bidx, "rice", k=-1)
+        with pytest.raises(ValueError, match="k must be >= 0"):
+            # an untokenizable required phrase returns before any scoring
+            boolean_topk_blocks(bidx, 'rice "1234!@#"', k=-1)
+        with pytest.raises(ValueError, match="k must be >= 0"):
+            bm25_topk_many_blocks(bidx, {"q": "rice"}, k=-1)
+        with pytest.raises(ValueError, match="k must be >= 0"):
+            proximity_topk_blocks(bidx, "rice", "noodle", k=-1)

@@ -1,8 +1,7 @@
-"""Text-analysis + multimodal + pagerank operator tests."""
+"""Text-analysis + pagerank operator tests."""
 
 from __future__ import annotations
 
-import hashlib
 import re
 
 import numpy as np
@@ -95,146 +94,6 @@ def test_fingerprint_matches_oracle_and_is_order_sensitive(spark, docs_sdf, docs
     )
     two = {r["id"]: r["fp"] for r in fingerprint(df).collect()}
     assert two[0] != two[1]
-
-
-# ------------------------------------------------------------ multimodal
-
-def test_multimodal_meta_roundtrip(docs_sdf, docs_rows):
-    from cis555_search_engine_spark.operators.multimodal import extract_meta, with_payload
-
-    got = {r["id"]: r for r in extract_meta(with_payload(docs_sdf)).collect()}
-    for i, t in docs_rows:
-        b = t.encode("utf-8")
-        r = got[i]
-        assert r["n_bytes"] == len(b)
-        assert r["digest"] == hashlib.md5(b).hexdigest()
-        assert r["sha"] == hashlib.sha256(b).hexdigest()
-        assert r["head_byte"] == b[0]
-
-
-def test_multimodal_frame_sampling(spark):
-    from cis555_search_engine_spark.operators.multimodal import sample_frames, with_payload
-
-    df = spark.createDataFrame([(0, "x" * 1000), (1, "y" * 10)], "doc_id long, text string")
-    frames = sample_frames(with_payload(df), frame_size=64, stride=256).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r["id"], []).append(r)
-    assert len(by_doc[0]) == 4  # ceil(1000/256)
-    assert len(by_doc[1]) == 1
-    f0 = sorted(by_doc[0], key=lambda r: r["frame_idx"])
-    assert bytes(f0[0]["frame"]) == b"x" * 64
-    assert bytes(f0[3]["frame"]) == b"x" * 64  # offset 768, 64 bytes remain
-
-
-def test_decode_media_all_formats_real_byte_parses():
-    """PNG/JPEG/WAV/MP4 decode are REAL byte-level container parses
-    (round-trip + CRC/chunk/box verification + garbage rejection);
-    codec-requiring formats stay NotImplementedError behind the same
-    dispatch."""
-    from cis555_search_engine_spark.operators.multimodal import (
-        decode_media,
-        make_jpeg,
-        make_mp4,
-        make_png,
-        make_wav,
-    )
-
-    png = decode_media(make_png(640, 480), "image/png")
-    assert (png["fmt"], png["width"], png["height"]) == ("png", 640, 480)
-    assert png["sample_rate"] is None and png["duration_ms"] is None
-    jpg = decode_media(make_jpeg(1920, 1080), "image/jpeg")
-    assert (jpg["fmt"], jpg["width"], jpg["height"]) == ("jpeg", 1920, 1080)
-    wav = decode_media(make_wav(16000, 2, 16000 * 3), "audio/wav")
-    assert (wav["fmt"], wav["sample_rate"], wav["channels"], wav["duration_ms"]) == (
-        "wav", 16000, 2, 3000,
-    )
-    assert wav["width"] is None
-    mp4 = decode_media(make_mp4(1280, 720, 2500), "video/mp4")
-    assert (mp4["fmt"], mp4["width"], mp4["height"], mp4["duration_ms"]) == (
-        "mp4", 1280, 720, 2500,
-    )
-    with pytest.raises(ValueError):
-        decode_media(b"\x89PNG garbage", "image/png")
-    with pytest.raises(ValueError):
-        decode_media(make_png(2, 2), "image/jpeg")  # wrong container for type
-    with pytest.raises(ValueError):
-        decode_media(b"RIFFxxxxNOPE", "audio/wav")
-    with pytest.raises(ValueError):
-        decode_media(make_png(2, 2), "video/mp4")
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\x00" * 16, "audio/mpeg")  # codec-requiring format
-
-
-def test_decode_media_truncated_wav_raises_value_error():
-    """A truncated container must raise ValueError (the rejection
-    contract) — not struct.error — and a data chunk whose declared size
-    overruns the payload must error rather than inflate duration."""
-    from cis555_search_engine_spark.operators.multimodal import decode_media, make_wav
-
-    wav = make_wav(8000, 1, 100)
-    with pytest.raises(ValueError):
-        decode_media(wav[:24], "audio/wav")  # cut inside the fmt chunk
-    # corrupt the data chunk's declared size to 10x the real bytes
-    import struct
-
-    di = wav.find(b"data")
-    (real,) = struct.unpack("<I", wav[di + 4 : di + 8])
-    bad = wav[: di + 4] + struct.pack("<I", real * 10) + wav[di + 8 :]
-    with pytest.raises(ValueError):
-        decode_media(bad, "audio/wav")
-    # ...but a truncated TRAILING metadata chunk after intact fmt+data
-    # (sloppy-tagger junk) is tolerated, not rejected
-    junky = wav + b"LIST" + struct.pack("<I", 9999) + b"xx"
-    ok = decode_media(junky, "audio/wav")
-    assert (ok["sample_rate"], ok["channels"]) == (8000, 1)
-
-
-def test_media_decoder_registry_accepts_legacy_tuple_contract():
-    """A decoder registered under the round-2 bytes->(w,h) contract
-    still works: decode_media normalizes tuple returns."""
-    from cis555_search_engine_spark.operators.multimodal import (
-        MEDIA_DECODERS,
-        decode_media,
-    )
-
-    MEDIA_DECODERS["image/x-legacy"] = lambda payload: (12, 34)
-    try:
-        out = decode_media(b"whatever", "image/x-legacy")
-        assert (out["fmt"], out["width"], out["height"]) == ("x-legacy", 12, 34)
-        assert out["duration_ms"] is None
-    finally:
-        del MEDIA_DECODERS["image/x-legacy"]
-
-
-def test_decode_media_meta_spark(spark, docs_sdf):
-    """End-to-end Spark decode: payload gen UDF -> mapInPandas parse of
-    the 4-way PNG/JPEG/WAV/MP4 mix."""
-    from cis555_search_engine_spark.operators.multimodal import (
-        decode_media_meta,
-        with_media_payload,
-    )
-
-    rows = decode_media_meta(with_media_payload(docs_sdf)).collect()
-    assert rows
-    for r in rows:
-        i = r["id"]
-        m = i % 4
-        if m in (0, 1):
-            assert (r["fmt"], r["width"], r["height"]) == (
-                "png" if m == 0 else "jpeg", i % 300 + 1, i % 200 + 1,
-            )
-            assert r["sample_rate"] is None and r["duration_ms"] is None
-        elif m == 2:
-            rate = 8000 + (i % 5) * 8000
-            assert (r["fmt"], r["sample_rate"], r["channels"]) == (
-                "wav", rate, (i // 4) % 2 + 1,
-            )
-            assert r["duration_ms"] == (i % 100 + 1) * 1000 // rate
-        else:
-            assert (r["fmt"], r["width"], r["height"], r["duration_ms"]) == (
-                "mp4", i % 300 + 1, i % 200 + 1, i % 5000 + 500,
-            )
 
 
 # -------------------------------------------------------------- pagerank
