@@ -43,27 +43,30 @@ Design decisions, all for 10^12-doc scale:
   from the term dictionary) below ``min_prune_postings``, or a store of
   at most max(seed_blocks, 4) blocks — is served in the driver from
   that manifest snapshot: pyarrow reads the terms' bucket dirs, numpy
-  decodes, scores and takes the top-k, and the result is a local
-  relation (0 Spark jobs). Everything else runs as Spark jobs, its
-  Python inside Arrow-batched pandas UDFs. Both paths decode with
-  `decode_blocks_arrays` and score with `_bm25_impact`, over whole
-  blocks — no per-row Python (north rule).
+  decodes, scores and takes the top-k, and the result is a driver-held
+  frame whose collect() never enters the JVM (0 Spark jobs). Everything
+  else runs as Spark jobs, its Python inside Arrow-batched pandas UDFs.
+  Both paths decode with `decode_blocks_arrays` and score with
+  `_bm25_impact`, over whole blocks — no per-row Python (north rule).
 """
 
 from __future__ import annotations
 
 import functools
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as ds
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.porter import porter_stem
 from ..functions.tokenizer import tokenize_py
@@ -439,6 +442,12 @@ class BlockIndex:
     manifest: dict | None = None  # read: the snapshot the driver-side
     #                               serving path reads from (None for
     #                               in-memory build_blocks indexes)
+    datasets: dict[str, ds.Dataset | None] = field(
+        default_factory=dict, repr=False, compare=False
+    )                             # the driver path's pyarrow dataset per
+    #                               manifest dir (None: no part files),
+    #                               opened on first read; sound because
+    #                               commits only add fresh uuid-named dirs
 
     def cache(self) -> "BlockIndex":
         self.blocks = self.blocks.cache()
@@ -699,9 +708,10 @@ def _prune_live_blocks(
 # A query the Spark path would decode in full anyway (see the gate in
 # `_driver_idf`) is answered in the driver process straight from the
 # loaded store's committed files: the term dictionary gives df/idf, the
-# terms' bucket directories give the blobs, and the result becomes a
-# local relation — a collect() runs no Spark job. Decode and the BM25
-# partial are the same functions the Spark path runs in its tasks.
+# terms' bucket directories give the blobs, and the result is a
+# driver-held frame (`_DriverFrame`) — its collect() crosses no JVM
+# boundary and runs no Spark job. Decode and the BM25 partial are the
+# same functions the Spark path runs in its tasks.
 
 
 def _result_schema(bidx: BlockIndex, *extra: T.StructField) -> T.StructType:
@@ -710,16 +720,55 @@ def _result_schema(bidx: BlockIndex, *extra: T.StructField) -> T.StructType:
     return T.StructType([key_schema[c] for c in bidx.doc_key] + list(extra))
 
 
-def _local_frame(spark, schema: T.StructType, table: pa.Table | None = None) -> DataFrame:
-    """A DataFrame over driver-held rows (``None``: no rows). Built from
-    a pyarrow table it is a local relation whose collect() runs no Spark
-    job; ``createDataFrame`` over a Python list or an EMPTY pandas frame
-    instead runs a Python-worker job (~0.5 s)."""
-    if table is None:
-        from pyspark.sql.pandas.types import to_arrow_schema
+class _DriverFrame(ClassicDataFrame):
+    """A classic-session DataFrame (like every frame `get_spark` makes)
+    over a driver-held pyarrow table.
 
-        table = to_arrow_schema(schema).empty_table()
-    return spark.createDataFrame(table, schema=schema)
+    ``collect()`` converts the table with pyspark's own Arrow → Row
+    converter (the one Spark Connect's collect uses), ``toArrow()``
+    returns it, and ``schema``/``columns`` come from the held StructType:
+    none of them touches the JVM. Every other use (join, orderBy, count,
+    toPandas, ...) reaches ``_jdf``, which builds the JVM frame on first
+    access with ``createDataFrame`` over the same table — a local
+    relation, so those results are the JVM's own."""
+
+    def __new__(cls, *args, **kwargs):
+        # the classic __new__ takes (jdf, session) and runs __init__ itself
+        return object.__new__(cls)
+
+    def __init__(self, spark, schema: T.StructType, table: pa.Table):
+        # the classic __init__'s attributes, minus _jdf (built lazily)
+        self._session = spark
+        self._sc = spark._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self._schema = schema
+        self._table = table
+
+    @property
+    def schema(self) -> T.StructType:
+        return self._schema
+
+    @functools.cached_property
+    def _jdf(self):
+        return self._session.createDataFrame(self._table, schema=self._schema)._jdf
+
+    def collect(self) -> list[Row]:
+        return ArrowTableToRowsConversion.convert(self._table, self._schema)
+
+    def toArrow(self) -> pa.Table:
+        return self._table
+
+
+def _local_frame(spark, schema: T.StructType, table: pa.Table | None = None) -> DataFrame:
+    """A `_DriverFrame` over driver-held rows (``None``: no rows), cast
+    once to the Arrow form of ``schema``. Its JVM frame, if a caller
+    needs one, is built from this Arrow table: ``createDataFrame`` over
+    a Python list or an EMPTY pandas frame would run a Python-worker
+    job (~0.5 s)."""
+    arrow_schema = to_arrow_schema(schema)
+    table = arrow_schema.empty_table() if table is None else table.cast(arrow_schema)
+    return _DriverFrame(spark, schema, table)
 
 
 def _store_root(bidx: BlockIndex) -> str | None:
@@ -742,24 +791,33 @@ def _store_root(bidx: BlockIndex) -> str | None:
     return root if os.path.isdir(root) else None
 
 
-def _arrow_read(dirs: list[str], columns: list[str], filt) -> pa.Table | None:
-    """One pyarrow scan of the parquet part files under ``dirs`` (missing
-    dirs skipped; None when there are no files). Fields are read as
-    nullable: `write_blocks` and `append_blocks` segments disagree on
-    the nullability of e.g. docid_map.docid, which a plain
-    ``pa.concat_tables`` rejects."""
-    files = [
-        os.path.join(d, f)
-        for d in dirs if os.path.isdir(d)
-        for f in sorted(os.listdir(d)) if not f.startswith((".", "_"))
-    ]
-    if not files:
-        return None
-    import pyarrow.parquet as pq
+def _snapshot_dataset(bidx: BlockIndex, d: str) -> ds.Dataset | None:
+    """The pyarrow dataset over the parquet part files of manifest dir
+    ``d`` (None: a missing or empty dir), opened once per loaded index.
+    A snapshot's dirs never change — every commit writes fresh uuid-named
+    dirs — so the file list, schema and fragment metadata stay valid
+    for the index's lifetime. Two threads missing at once each open an
+    equal dataset; either may stay."""
+    if d not in bidx.datasets:
+        files = [
+            os.path.join(d, f)
+            for f in (sorted(os.listdir(d)) if os.path.isdir(d) else [])
+            if not f.startswith((".", "_"))
+        ]
+        bidx.datasets[d] = ds.dataset(files, format="parquet") if files else None
+    return bidx.datasets[d]
 
-    schema = pq.read_schema(files[0])
-    schema = pa.schema([schema.field(c).with_nullable(True) for c in columns])
-    return ds.dataset(files, schema=schema, format="parquet").to_table(filter=filt)
+
+def _arrow_read(bidx: BlockIndex, dirs: list[str], columns: list[str], filt) -> pa.Table | None:
+    """One pyarrow scan of the union of ``dirs``' datasets (None when
+    none has files). Fields are read as nullable: `write_blocks` and
+    `append_blocks` segments disagree on the nullability of e.g.
+    docid_map.docid, which a plain ``pa.concat_tables`` rejects."""
+    parts = [p for p in (_snapshot_dataset(bidx, d) for d in dirs) if p is not None]
+    if not parts:
+        return None
+    schema = pa.schema([parts[0].schema.field(c).with_nullable(True) for c in columns])
+    return ds.dataset(parts, schema=schema).to_table(filter=filt)
 
 
 def _driver_idf(
@@ -779,7 +837,7 @@ def _driver_idf(
     if root is None:
         return None
     got = _arrow_read(
-        [f"{root}/{bidx.manifest['stats_dir']}"], ["term", "df", "idf_bm25"],
+        bidx, [f"{root}/{bidx.manifest['stats_dir']}"], ["term", "df", "idf_bm25"],
         ds.field("term").isin(terms),
     )
     rows = got.to_pydict() if got is not None else {"term": [], "df": [], "idf_bm25": []}
@@ -800,7 +858,7 @@ def _driver_postings(bidx: BlockIndex, terms: list[str], with_positions: bool):
         f"{root}/{d}/blocks/bucket={b}"
         for d in bidx.manifest["data_dirs"] for b in buckets
     ]
-    tab = _arrow_read(dirs, ["term", "block_id", "blob"], ds.field("term").isin(terms))
+    tab = _arrow_read(bidx, dirs, ["term", "block_id", "blob"], ds.field("term").isin(terms))
     if tab is None or tab.num_rows == 0:
         e = np.empty(0, dtype=np.int64)
         return e, e.copy(), e.copy(), e.copy(), (e.copy(), e.copy())
@@ -823,7 +881,7 @@ def _driver_dead(bidx: BlockIndex, docids: np.ndarray) -> np.ndarray:
         return np.empty(0, dtype=np.int64)
     root = _store_root(bidx)
     got = _arrow_read(
-        [f"{root}/{t}" for t in tdirs], ["docid"], ds.field("docid").isin(docids)
+        bidx, [f"{root}/{t}" for t in tdirs], ["docid"], ds.field("docid").isin(docids)
     )
     return np.empty(0, dtype=np.int64) if got is None else got.column("docid").to_numpy()
 
@@ -835,7 +893,7 @@ def _driver_keys(bidx: BlockIndex, docids: np.ndarray, values: dict[str, np.ndar
     root = _store_root(bidx)
     key = list(bidx.doc_key)
     got = _arrow_read(
-        [f"{root}/{d}/docid_map" for d in bidx.manifest["data_dirs"]],
+        bidx, [f"{root}/{d}/docid_map" for d in bidx.manifest["data_dirs"]],
         [*key, "docid"], ds.field("docid").isin(docids),
     )
     if got is None:
@@ -939,7 +997,8 @@ def bm25_topk_blocks(
     max(``seed_blocks``, 4) blocks, exactly when `_prune_live_blocks`
     would decode every block anyway — is answered in the driver from
     the manifest snapshot the index was loaded with (`_driver_topk`):
-    0 Spark jobs, a local-relation result. Every other query (past the
+    0 Spark jobs, and a driver-held result (`_DriverFrame`) whose
+    collect()/toArrow() never enter the JVM. Every other query (past the
     gate, boolean frames, in-memory `build_blocks` indexes, legacy or
     non-crc32 layouts, non-local paths) takes the Spark path below.
 
@@ -2193,10 +2252,10 @@ def phrase_match_blocks(
     terms pass the driver gate (`_driver_idf`: Σdf below
     DEFAULT_MIN_PRUNE_POSTINGS, or a store of at most
     max(DEFAULT_SEED_BLOCKS, 4) blocks) is matched in the driver with
-    numpy over the manifest snapshot's files and returned as a local
-    relation (0 Spark jobs). Every other index takes the Spark path,
-    which decodes the terms' blocks in a pandas UDF and joins them on
-    docid (`_phrase_docids`)."""
+    numpy over the manifest snapshot's files and returned as a
+    driver-held frame (0 Spark jobs; collect() never enters the JVM).
+    Every other index takes the Spark path, which decodes the terms'
+    blocks in a pandas UDF and joins them on docid (`_phrase_docids`)."""
     terms = _phrase_terms(phrase, stem)
     if not terms:
         # same schema as the non-empty path: an untokenizable phrase

@@ -1367,6 +1367,13 @@ def _oracle_state(docs, dead=frozenset()):
     return bm25, phrase
 
 
+def _check_ranked(got, want, what):
+    """Same ranked keys; scores (BM25) or occurrences (phrase) equal."""
+    assert [r[:2] for r in got] == [r[:2] for r in want], what
+    for g, w in zip(got, want):
+        assert math.isclose(g[2], w[2], rel_tol=1e-9, abs_tol=1e-9), what
+
+
 def test_driver_path_matches_spark_path_and_oracle(
     spark, corpus_pdf, corpus_sdf, spark_index, block_index, spark_jobs, tmp_path
 ):
@@ -1426,22 +1433,21 @@ def test_driver_path_matches_spark_path_and_oracle(
         assert out[3][3] and not out[4][3], "one phrase matches, one matches nothing"
         return out
 
-    def check(got, want, what):
-        """Same ranked keys; scores (BM25) or occurrences (phrase) equal."""
-        assert [r[:2] for r in got] == [r[:2] for r in want], what
-        for g, w in zip(got, want):
-            assert math.isclose(g[2], w[2], rel_tol=1e-9, abs_tol=1e-9), what
-
     def check_state(name, loaded, memory, oracle):
-        """The driver path on ``loaded`` (0 jobs) and the Spark path on
-        the in-memory twin ``memory`` each equal the oracle."""
+        """The driver path on ``loaded`` (0 jobs, no JVM frame) and the
+        Spark path on the in-memory twin ``memory`` each equal the
+        oracle."""
         assert loaded.manifest is not None
         todo = cases(oracle)
         for fn, q, kw, want in todo:
             with spark_jobs() as jobs:
-                got = [tuple(r) for r in fn(loaded, q, **kw).collect()]
+                df = fn(loaded, q, **kw)
+                got = [tuple(r) for r in df.collect()]
             assert jobs.n == 0, (name, q, kw)
-            check(got, want, (name, q, kw, "driver path"))
+            # a local relation's collect runs 0 jobs too: only the absent
+            # JVM frame shows the rows never crossed into the JVM
+            assert "_jdf" not in df.__dict__, (name, q, kw)
+            _check_ranked(got, want, (name, q, kw, "driver path"))
         if memory is None:
             return
         assert memory.manifest is None
@@ -1452,8 +1458,8 @@ def test_driver_path_matches_spark_path_and_oracle(
                 lambda c: [tuple(r) for r in c[0](memory, c[1], **c[2]).collect()], todo
             ))
         for (fn, q, kw, want), rows in zip(todo, served):
-            check(sorted(rows) if fn is phrase_match_blocks else rows, want,
-                  (name, q, kw, "spark path"))
+            _check_ranked(sorted(rows) if fn is phrase_match_blocks else rows, want,
+                          (name, q, kw, "spark path"))
 
     # fresh: the store is written from its cached in-memory twin
     docs_a = [d for d in docs if in_a(d[0])]
@@ -1506,15 +1512,16 @@ def test_driver_path_matches_spark_path_and_oracle(
         got = [tuple(r) for r in
                bm25_topk_blocks(compacted, "zoom", k=2, min_prune_postings=0).collect()]
     assert jobs.n >= 1
-    check(got, bm25("zoom", 2), "gate crossed")
+    _check_ranked(got, bm25("zoom", 2), "gate crossed")
     live, total = count_live_blocks(compacted, "zoom", k=2)
     assert live < total, (live, total)
 
 
 def test_empty_results_run_no_spark_job(spark_index, block_index, spark_jobs):
-    """Empty results are local relations: no Python-worker job to build
-    an empty frame, with the same schemas as non-empty results. Building
-    the frame counts too, so k=0 must not reach pruning or decode."""
+    """Empty results are driver-held frames: no Python-worker job to
+    build an empty frame and no JVM frame to collect it, with the same
+    schemas as non-empty results. Building the frame counts too, so k=0
+    must not reach pruning or decode."""
     from cis555_search_engine_spark.operators.postings_codec import (
         bm25_topk_blocks,
         bm25_topk_many_blocks,
@@ -1538,6 +1545,7 @@ def test_empty_results_run_no_spark_job(spark_index, block_index, spark_jobs):
             assert df.collect() == []
         assert jobs.n == 0, cols
         assert df.columns == cols
+        assert "_jdf" not in df.__dict__, cols
 
 
 def test_negative_k_raises_on_every_path(spark, block_index, tmp_path):
@@ -1566,3 +1574,176 @@ def test_negative_k_raises_on_every_path(spark, block_index, tmp_path):
             bm25_topk_many_blocks(bidx, {"q": "rice"}, k=-1)
         with pytest.raises(ValueError, match="k must be >= 0"):
             proximity_topk_blocks(bidx, "rice", "noodle", k=-1)
+
+
+# ------------------------------------------- driver-held result frames
+
+
+def test_driver_frame_matches_jvm_frame(spark, block_index):
+    """The driver-held result frame answers collect(), columns and
+    toArrow() from its pyarrow table without building a JVM frame, and
+    gives the same rows as ``createDataFrame`` over that table: for every
+    result schema the module builds (score, n_occurrences, min_gap +
+    score, the batch qid), empty, with nulls, and with a timestamp and a
+    date in the doc key. Every other use goes through the JVM frame and
+    agrees too. Fails loudly if pyspark moves the private attributes the
+    frame relies on."""
+    import datetime as dt
+
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from cis555_search_engine_spark.operators.postings_codec import (
+        _local_frame,
+        _result_schema,
+    )
+
+    score = T.StructField("score", T.DoubleType())
+    n_occ = T.StructField("n_occurrences", T.LongType())
+    min_gap = T.StructField("min_gap", T.LongType())
+    qid = T.StructField("qid", T.StringType())
+    keys = block_index.docid_map.orderBy("docid").limit(4).toArrow()
+    conv, turn = keys.column("conv_id"), keys.column("turn_idx")
+    docid_map = block_index.docid_map
+    key = ["conv_id", "turn_idx"]
+
+    ts_key = T.StructType([
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("day", T.DateType()),
+    ])
+    ts_vals = [dt.datetime(2020, 3, 1, 12, 30, 5, 123456), None, dt.datetime(1999, 12, 31)]
+    day_vals = [dt.date(2020, 3, 1), dt.date(1970, 1, 1), None]
+    ts_map = spark.createDataFrame(
+        pa.table({"conv_id": ["a", "b", "c"], "ts": ts_vals, "day": day_vals,
+                  "docid": [0, 1, 2]}),
+        schema=T.StructType([*ts_key.fields, T.StructField("docid", T.LongType())]),
+    )
+
+    cases = [
+        ("score", _result_schema(block_index, score),
+         pa.table({"conv_id": conv, "turn_idx": turn, "score": [3.5, 2.25, None, -0.0]}),
+         docid_map, key),
+        ("n_occurrences", _result_schema(block_index, n_occ),
+         pa.table({"conv_id": conv, "turn_idx": turn, "n_occurrences": [1, None, 7, 2**40]}),
+         docid_map, key),
+        ("min_gap+score", _result_schema(block_index, min_gap, score),
+         pa.table({"conv_id": conv, "turn_idx": turn, "min_gap": [0, 3, None, 1],
+                   "score": [1.5, None, 0.25, 9.0]}),
+         docid_map, key),
+        ("qid", T.StructType([qid, *_result_schema(block_index, score).fields]),
+         pa.table({"qid": ["q1", "q1", None, "q2"], "conv_id": conv, "turn_idx": turn,
+                   "score": [2.0, 1.0, 0.5, 4.0]}),
+         docid_map, key),
+        ("timestamp+date key", T.StructType([*ts_key.fields, score]),
+         pa.table({"conv_id": ["a", "b", "c"], "ts": ts_vals, "day": day_vals,
+                   "score": [1.0, None, 2.0]}),
+         ts_map, ["conv_id", "ts", "day"]),
+    ]
+    # every schema empty too
+    cases += [(f"{name}, empty", schema, None, m, k) for name, schema, _, m, k in cases]
+
+    for name, schema, table, key_map, on in cases:
+        src = to_arrow_schema(schema).empty_table() if table is None else table
+        drv = _local_frame(spark, schema, table)
+        jvm = spark.createDataFrame(src, schema=schema)
+
+        rows, want = drv.collect(), jvm.collect()
+        assert rows == want, name
+        assert [r.asDict() for r in rows] == [r.asDict() for r in want], name
+        assert drv.columns == jvm.columns == schema.names, name
+        assert drv.toArrow().equals(jvm.toArrow()), name
+        assert "_jdf" not in drv.__dict__, name
+
+        # every other use builds the JVM frame once and agrees with it
+        assert drv.count() == jvm.count(), name
+        assert "_jdf" in drv.__dict__, name
+        order = schema.names
+        assert drv.orderBy(*order).collect() == jvm.orderBy(*order).collect(), name
+        pd.testing.assert_frame_equal(drv.toPandas(), jvm.toPandas(), obj=name)
+        joined = [sorted(df.join(key_map, on).collect()) for df in (drv, jvm)]
+        assert joined[0] == joined[1], name
+
+
+def test_snapshot_datasets_stay_inside_their_snapshot(spark, corpus_pdf, corpus_sdf, tmp_path):
+    """A loaded index caches one pyarrow dataset per manifest dir. Across
+    append_blocks, delete_docs, tiered_merge and compact_blocks (without
+    vacuum), an index loaded before each op keeps answering from its own
+    snapshot, and a fresh load_blocks answers from the new one — both
+    equal to the oracle of their state. Indexes over two stores share no
+    cache entry."""
+    import zlib
+
+    from pyspark.sql import functions as F
+
+    from cis555_search_engine_spark.operators.index_build import build_index
+    from cis555_search_engine_spark.operators.postings_codec import (
+        append_blocks,
+        bm25_topk_blocks,
+        build_blocks,
+        compact_blocks,
+        delete_docs,
+        load_blocks,
+        phrase_match_blocks,
+        tiered_merge,
+        write_blocks,
+    )
+
+    docs = list(corpus_pdf[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None))
+    a_pred = F.crc32(F.col("conv_id").cast("binary")) % 2 == 0
+    dead_pred = F.col("turn_idx") % 7 == 3
+    docs_a = [d for d in docs if zlib.crc32(d[0].encode()) % 2 == 0]
+    dead = {(c, t) for c, t, _ in docs if t % 7 == 3}
+    live_docs = [d for d in docs if (d[0], d[1]) not in dead]
+    path = str(tmp_path / "store")
+    write_blocks(
+        build_blocks(build_index(corpus_sdf.filter(a_pred), cache=False), 64), path, n_buckets=8
+    )
+
+    def serve(bidx, oracle, what):
+        """Driver-path answers (no JVM frame) equal the oracle's."""
+        bm25, phrase = oracle
+        for fn, q, kw, want in [
+            (bm25_topk_blocks, "rice noodle", dict(k=10), bm25("rice noodle", 10)),
+            (bm25_topk_blocks, "presidential election", dict(k=5),
+             bm25("presidential election", 5)),
+            (phrase_match_blocks, "waaaa waaaa", {}, phrase("waaaa waaaa")),
+        ]:
+            df = fn(bidx, q, **kw)
+            _check_ranked([tuple(r) for r in df.collect()], want, (what, q))
+            assert "_jdf" not in df.__dict__, (what, q)
+        assert bidx.datasets, what
+
+    oracle = _oracle_state(docs_a)
+    before = load_blocks(spark, path)
+    serve(before, oracle, "fresh")
+    ops = [
+        ("append", lambda: append_blocks(
+            spark, path, build_index(corpus_sdf.filter(~a_pred), cache=False)),
+         _oracle_state(docs)),
+        ("delete", lambda: delete_docs(
+            spark, path, corpus_sdf.filter(dead_pred).select("conv_id", "turn_idx")),
+         _oracle_state(docs, dead)),
+        ("merge", lambda: tiered_merge(spark, path, merge_at=2, vacuum=False),
+         _oracle_state(docs, dead)),
+        ("compact", lambda: compact_blocks(spark, path, vacuum=False),
+         _oracle_state(live_docs)),
+    ]
+    for name, op, post in ops:
+        op()
+        serve(before, oracle, f"loaded before {name}")
+        after = load_blocks(spark, path)
+        assert after.manifest != before.manifest, name
+        serve(after, post, f"loaded after {name}")
+        before, oracle = after, post
+
+    # a second store holding the same documents
+    write_blocks(
+        build_blocks(build_index(corpus_sdf.filter(~dead_pred), cache=False), 64),
+        str(tmp_path / "twin"), n_buckets=8,
+    )
+    twin = load_blocks(spark, str(tmp_path / "twin"))
+    serve(twin, oracle, "second store")
+    assert twin.datasets.keys().isdisjoint(before.datasets)
