@@ -148,9 +148,10 @@ class SearchEngine:
 
     # ------------------------------------- persisted block-index store
 
-    def save_block_store(self, path: str, n_buckets: int = 64) -> None:
+    def save_block_store(self, path: str, n_buckets: int | None = None) -> None:
         """Persist the compressed block index bucket-partitioned by term
-        (the index-once/query-many serving layout)."""
+        (the index-once/query-many serving layout); ``n_buckets=None``
+        sizes the fan-out to the store (`write_blocks`)."""
         write_blocks(self.blocks(), path, n_buckets=n_buckets)
 
     def open_block_store(self, path: str) -> "SearchEngine":

@@ -37,6 +37,12 @@ Design decisions, all for 10^12-doc scale:
   all in the blob, `max_impact` precomputed at build (BM25 impact is
   query-independent) — the query path never joins doc_stats.
 
+- **A layout sized to its postings**: `write_blocks` fans a store out
+  to one crc32 bucket per 2,500 postings (between 1 and 64) and writes
+  its docid map as one file per 5M docids, so the fixed parquet cost of
+  a file (~2 KB, mostly footer) stays near a tenth of the store; inputs
+  of up to 2M docs mint their docids with one window rank.
+
 - **Two serving paths, one kernel.** A store opened by `load_blocks`
   keeps its path and the manifest it read. A query whose terms the
   Spark path would decode in full anyway — Σdf over the terms (read
@@ -148,6 +154,26 @@ def _range_boundaries(
     return bounds
 
 
+# inputs of at most this many docs get their docids from ONE single-
+# partition window rank (one job; the one-task sort is a few MB at the
+# bound) instead of the range-boundary machinery's sample, bucket-count
+# and rank jobs
+SMALL_MINT_DOCS = 2_000_000
+
+
+def _rank_docids(
+    keyed: DataFrame, doc_key: Sequence[str], sort_cols: Sequence[str], offset: int = 0
+) -> DataFrame:
+    """(doc_key..., docid) with docid = offset + rank in the total
+    ``sort_cols`` order — the small-input mint of `mint_doc_ids` and
+    `append_blocks`. Equal to the range path's docids: both rank the same
+    total order, this one without cutting it into ranges."""
+    w = Window.orderBy(*[F.asc(c) for c in sort_cols])
+    return keyed.select(
+        *doc_key, ((F.row_number().over(w) - 1).cast("long") + offset).alias("docid")
+    )
+
+
 def mint_doc_ids(
     docs: DataFrame,
     doc_key: Sequence[str] = DOC_KEY,
@@ -169,6 +195,11 @@ def mint_doc_ids(
     uniform corpus the maxima are flat and block-max cannot prune no
     matter how it is implemented. Callers using this must serve with
     ``key_ordered=False`` (docid order no longer equals key order).
+
+    Small path: after the count and null-key job, an input of at most
+    ``SMALL_MINT_DOCS`` docs is ranked by one single-partition window
+    (`_rank_docids`) — the same docids, without the range path's
+    boundary-sample and bucket-count jobs.
 
     Scale path: explicit range boundaries (collected once, embedded as
     literals) assign each row a deterministic range bucket ``_pid`` as a
@@ -192,10 +223,11 @@ def mint_doc_ids(
     ]
     sel_cols = list(dict.fromkeys([*doc_key, *sort_cols]))
     # persist is a pure PERFORMANCE hint here (the distinct subplan feeds
-    # four jobs: boundary count, boundary sample, bucket counts, rank
-    # pass) — unlike round 1, CORRECTNESS no longer depends on retention:
-    # the bucket expression is a literal function of the row key, so an
-    # evicted+recomputed partition produces the same buckets
+    # the count and rank jobs, plus the boundary sample and bucket counts
+    # on the range path) — unlike round 1, CORRECTNESS no longer depends
+    # on retention: the bucket expression is a literal function of the
+    # row key, so an evicted+recomputed partition produces the same
+    # buckets
     extra_order = [c for c in (order_cols or []) if c not in doc_key]
     if extra_order:
         # one docid per doc_key even when the input has several rows per
@@ -231,35 +263,39 @@ def mint_doc_ids(
             f"mint_doc_ids: {counts['n_null']} rows have null ordering "
             f"components {tuple(sort_cols)}; drop or repair them upstream"
         )
-    bounds = _range_boundaries(keyed, sort_cols, n_part, cnt=int(counts["n"]))
-    fields_by_name = {f.name: f for f in keyed.schema.fields}
-    key_fields = [fields_by_name[c] for c in sort_cols]
-    key_struct = F.struct(*[F.col(c) for c in sort_cols])
-    pid = F.lit(0)
-    for b in bounds:
-        # cast literal fields to the key columns' exact types (struct
-        # comparison requires identical field types)
-        lit_b = F.struct(
-            *[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(b, key_fields)]
+    n = int(counts["n"])
+    if n <= SMALL_MINT_DOCS:
+        out = _rank_docids(keyed, doc_key, sort_cols)
+    else:
+        bounds = _range_boundaries(keyed, sort_cols, n_part, cnt=n)
+        fields_by_name = {f.name: f for f in keyed.schema.fields}
+        key_fields = [fields_by_name[c] for c in sort_cols]
+        key_struct = F.struct(*[F.col(c) for c in sort_cols])
+        pid = F.lit(0)
+        for b in bounds:
+            # cast literal fields to the key columns' exact types (struct
+            # comparison requires identical field types)
+            lit_b = F.struct(
+                *[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(b, key_fields)]
+            )
+            pid = pid + F.when(key_struct >= lit_b, 1).otherwise(0)
+        bucketed = keyed.withColumn("_pid", pid.cast("int"))
+        counts = bucketed.groupBy("_pid").count().collect()  # ≤ n_part rows
+        acc = 0
+        offsets = []
+        for row in sorted(counts, key=lambda r: r["_pid"]):
+            offsets.append((int(row["_pid"]), acc))
+            acc += int(row["count"])
+        if not offsets:
+            offsets = [(0, 0)]
+        off_df = spark.createDataFrame(offsets, "_pid int, _off long")
+        w = Window.partitionBy("_pid").orderBy(*[F.asc(c) for c in sort_cols])
+        out = (
+            bucketed.repartition(max(len(offsets), 1), "_pid")
+            .withColumn("_rn", F.row_number().over(w))
+            .join(F.broadcast(off_df), "_pid")
+            .select(*doc_key, (F.col("_off") + F.col("_rn") - 1).alias("docid"))
         )
-        pid = pid + F.when(key_struct >= lit_b, 1).otherwise(0)
-    bucketed = keyed.withColumn("_pid", pid.cast("int"))
-    counts = bucketed.groupBy("_pid").count().collect()  # ≤ n_part rows
-    acc = 0
-    offsets = []
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets.append((int(row["_pid"]), acc))
-        acc += int(row["count"])
-    if not offsets:
-        offsets = [(0, 0)]
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
-    w = Window.partitionBy("_pid").orderBy(*[F.asc(c) for c in sort_cols])
-    out = (
-        bucketed.repartition(max(len(offsets), 1), "_pid")
-        .withColumn("_rn", F.row_number().over(w))
-        .join(F.broadcast(off_df), "_pid")
-        .select(*doc_key, (F.col("_off") + F.col("_rn") - 1).alias("docid"))
-    )
     # materialize the (small) docid map eagerly so the keyed cache can be
     # RELEASED before returning — a named persist left behind would leak
     # one dataset per call (unbounded under streaming maintenance, which
@@ -791,33 +827,53 @@ def _store_root(bidx: BlockIndex) -> str | None:
     return root if os.path.isdir(root) else None
 
 
+def _vacuumed(d: str) -> FileNotFoundError:
+    return FileNotFoundError(
+        f"{d} is gone: a later commit vacuumed this index's snapshot; "
+        f"reload the index with load_blocks"
+    )
+
+
 def _snapshot_dataset(bidx: BlockIndex, d: str) -> ds.Dataset | None:
     """The pyarrow dataset over the parquet part files of manifest dir
-    ``d`` (None: a missing or empty dir), opened once per loaded index.
+    ``d`` (None: an empty dir, or the absent ``bucket=b`` dir of a
+    segment where no term hashes to b), opened once per loaded index.
     A snapshot's dirs never change — every commit writes fresh uuid-named
     dirs — so the file list, schema and fragment metadata stay valid
-    for the index's lifetime. Two threads missing at once each open an
-    equal dataset; either may stay."""
+    for the index's lifetime, until a vacuum deletes them: any other
+    missing dir raises `FileNotFoundError` rather than reading as empty.
+    Two threads missing at once each open an equal dataset; either may
+    stay."""
     if d not in bidx.datasets:
-        files = [
-            os.path.join(d, f)
-            for f in (sorted(os.listdir(d)) if os.path.isdir(d) else [])
-            if not f.startswith((".", "_"))
-        ]
+        if os.path.isdir(d):
+            files = [os.path.join(d, f) for f in sorted(os.listdir(d))
+                     if not f.startswith((".", "_"))]
+        elif os.path.basename(d).startswith("bucket=") and os.path.isdir(os.path.dirname(d)):
+            files = []
+        else:
+            raise _vacuumed(d)
         bidx.datasets[d] = ds.dataset(files, format="parquet") if files else None
     return bidx.datasets[d]
 
 
 def _arrow_read(bidx: BlockIndex, dirs: list[str], columns: list[str], filt) -> pa.Table | None:
     """One pyarrow scan of the union of ``dirs``' datasets (None when
-    none has files). Fields are read as nullable: `write_blocks` and
-    `append_blocks` segments disagree on the nullability of e.g.
-    docid_map.docid, which a plain ``pa.concat_tables`` rejects."""
+    none has files). Fields are read as nullable: segments may disagree
+    on the nullability of e.g. docid_map.docid (range-minted maps and
+    maps written before the window-rank mint are nullable, window-ranked
+    ones are not), which a plain ``pa.concat_tables`` rejects. A dataset
+    opened before a vacuum deleted its files raises like a missing dir."""
     parts = [p for p in (_snapshot_dataset(bidx, d) for d in dirs) if p is not None]
     if not parts:
         return None
     schema = pa.schema([parts[0].schema.field(c).with_nullable(True) for c in columns])
-    return ds.dataset(parts, schema=schema).to_table(filter=filt)
+    try:
+        return ds.dataset(parts, schema=schema).to_table(filter=filt)
+    except FileNotFoundError as e:
+        gone = next((d for d in dirs if not os.path.isdir(d)), None)
+        if gone is None:
+            raise
+        raise _vacuumed(gone) from e
 
 
 def _driver_idf(
@@ -1262,6 +1318,24 @@ def _bucket_col(n_buckets: int):
     return F.pmod(F.crc32(F.encode("term", "utf-8")), F.lit(n_buckets)).alias("bucket")
 
 
+# one crc32 bucket per this many postings, at most MAX_BUCKETS (see
+# write_blocks)
+POSTINGS_PER_BUCKET = 2_500
+MAX_BUCKETS = 64
+
+
+def _derived_buckets(n_postings: int) -> int:
+    """The bucket fan-out of a store holding ``n_postings`` postings."""
+    return max(1, min(n_postings // POSTINGS_PER_BUCKET, MAX_BUCKETS))
+
+
+def _write_docid_map(docid_map: DataFrame, n_docs: int, dest: str) -> None:
+    """Write a docid map as one file per ~5M docids, not one per shuffle
+    partition: a map of a few thousand docs otherwise lands as a handful
+    of near-empty files, each a footer to open at every key lookup."""
+    docid_map.coalesce(n_docs // 5_000_000 + 1).write.mode("overwrite").parquet(dest)
+
+
 def _read_meta(spark, path: str) -> dict:
     import json
 
@@ -1357,7 +1431,7 @@ def _write_stats(stats: DataFrame, dest: str, n_terms_hint: int | None = None) -
 def write_blocks(
     bidx: BlockIndex,
     path: str,
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
     extra_meta: dict | None = None,
     vacuum: bool = True,
 ) -> None:
@@ -1367,7 +1441,21 @@ def write_blocks(
     to a handful of buckets, so the scan reads ~len(terms)/n_buckets of
     the index (directory-level partition pruning — `load_blocks` pushes
     the bucket filter into the parquet source). The docid map rides
-    along range-partitioned by docid.
+    along, one file per ~5M docids.
+
+    The fan-out is sized to the store: ``n_buckets=None`` (the default)
+    derives one bucket per ``POSTINGS_PER_BUCKET`` (2,500) postings,
+    clamped to [1, ``MAX_BUCKETS``] — the Σdf the manifest records
+    anyway, so the rule costs no job. Every bucket file carries ~2 KB of
+    fixed parquet overhead (mostly its footer) against 6–8 B a posting:
+    at 2,500 postings a file that overhead is about a tenth of it, where
+    a fixed 64 buckets over a 42k-posting store made the footers a third
+    of the store. Coarser buckets make each query read more postings
+    beside its own terms' (8 buckets of 5,000 slowed the driver's read).
+    The cap keeps every store of ≥160k postings at 64 buckets. An
+    explicit ``n_buckets`` is honoured; appends and segment merges keep
+    the manifest's value (`term_bucket` needs one fan-out per store),
+    and `compact_blocks`, a full rewrite, derives it afresh.
 
     Layout 2 (manifest store): data lands in a FRESH uniquely-named
     segment dir + stats dir, then ONE atomic manifest commit
@@ -1383,14 +1471,20 @@ def write_blocks(
     spark = bidx.blocks.sparkSession
     data_dir = fsio.new_segment_name("seg", 0)
     stats_dir = fsio.new_segment_name("stats", 0)
-    bucket = _bucket_col(n_buckets)
+    # one Σdf agg here sizes the fan-out and saves every future append
+    # an old-stats scan + agg job (the manifest, not the stats parquet,
+    # is the running total's source of truth; append/compact keep it
+    # current)
+    n_postings = int(bidx.corpus_stats.agg(F.sum("df")).collect()[0][0] or 0)
+    if n_buckets is None:
+        n_buckets = _derived_buckets(n_postings)
     (
-        bidx.blocks.withColumn("bucket", bucket)
+        bidx.blocks.withColumn("bucket", _bucket_col(n_buckets))
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(f"{path}/{data_dir}/blocks")
     )
-    bidx.docid_map.write.mode("overwrite").parquet(f"{path}/{data_dir}/docid_map")
+    _write_docid_map(bidx.docid_map, bidx.n_docs, f"{path}/{data_dir}/docid_map")
     _write_stats(bidx.corpus_stats, f"{path}/{stats_dir}")
 
     tombstone_dirs: list[str] = []
@@ -1416,12 +1510,7 @@ def write_blocks(
         "data_dirs": [data_dir],
         "stats_dir": stats_dir,
         "n_docs": bidx.n_docs,
-        # one Σdf agg here saves every future append an old-stats scan +
-        # agg job (the manifest, not the stats parquet, is the running
-        # total's source of truth; append/compact keep it current)
-        "n_postings": int(
-            bidx.corpus_stats.agg(F.sum("df")).collect()[0][0] or 0
-        ),
+        "n_postings": n_postings,
         "avg_doc_len": bidx.avg_doc_len,
         "block_span": bidx.block_span,
         "n_buckets": n_buckets,
@@ -1550,24 +1639,16 @@ def append_blocks(
     offset = int(meta["n_docs"])
     key_cols = list(new_index.doc_key)
     null_probe = None
-    if 0 < new_index.n_docs <= 2_000_000:
-        # epoch-scale fast path (round-4 verdict item 7): a streaming
-        # micro-batch / small bulk append does not need mint_doc_ids'
-        # distributed range machinery (~4 scheduled jobs per call — half
-        # the drain's per-epoch fixed cost). A single-partition window
-        # rank over the key order produces the SAME dense key-ordered
-        # ids in ONE job; bounded by the threshold, so the one-task sort
-        # is a few MB. Large bulk appends keep the distributed path.
-        w = Window.orderBy(*[F.asc(c) for c in key_cols])
-        # LAZY stage: whichever concurrent phase below touches the map
-        # first materializes it (ONE partition by construction; Spark
-        # persists whole partitions on first compute) — no separate
-        # staging job on the drain's per-epoch fixed cost
+    if 0 < new_index.n_docs <= SMALL_MINT_DOCS:
+        # epoch-scale fast path: mint_doc_ids' small-input rank, without
+        # its count job — the index already knows n_docs, and the
+        # null-key check runs as a concurrent phase below. LAZY stage:
+        # whichever concurrent phase touches the map first materializes
+        # it (ONE partition by construction; Spark persists whole
+        # partitions on first compute) — no separate staging job on the
+        # drain's per-epoch fixed cost
         new_map = _stage(
-            new_index.doc_stats.select(*key_cols).withColumn(
-                "docid", (F.row_number().over(w) - 1).cast("long") + offset
-            ),
-            eager=False,
+            _rank_docids(new_index.doc_stats, key_cols, key_cols, offset), eager=False
         )
         # same null-key contract as mint_doc_ids (a null key has no
         # place in the total order); runs as one of the concurrent
@@ -1634,12 +1715,7 @@ def append_blocks(
         )
 
     def _write_seg_map() -> None:
-        # size the map files to the segment (one file per ~5M docids), not
-        # to shuffle_partitions — an epoch of a few thousand docs otherwise
-        # writes 32 near-empty files per append
-        new_map.coalesce(max(1, new_index.n_docs // 5_000_000 + 1)).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/{seg_dir}/docid_map")
+        _write_docid_map(new_map, new_index.n_docs, f"{path}/{seg_dir}/docid_map")
 
     # stats-level merge (never re-aggregates posting rows)
     n_docs = offset + new_index.n_docs
@@ -1892,17 +1968,17 @@ def compact_blocks(spark, path: str, vacuum: bool = True) -> None:
         )
     )
     blocks = _encode_posting_blocks(enriched, avg_len, span)
-    n_buckets = int(bidx.n_buckets or 16)
-    bucket = _bucket_col(n_buckets)
+    # a full rewrite: the fan-out is sized to what survives (write_blocks)
+    n_buckets = _derived_buckets(n_postings)
     new_dir = fsio.new_segment_name("seg", 0)
     (
-        blocks.withColumn("bucket", bucket)
+        blocks.withColumn("bucket", _bucket_col(n_buckets))
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(f"{path}/{new_dir}/blocks")
     )
     # consolidated re-minted docid map lands in the compacted dir
-    new_map.write.mode("overwrite").parquet(f"{path}/{new_dir}/docid_map")
+    _write_docid_map(new_map, n_docs, f"{path}/{new_dir}/docid_map")
     stats_dir = fsio.new_segment_name("stats", 0)
     _write_stats(stats, f"{path}/{stats_dir}", n_terms_hint=n_postings)
     meta.update(
@@ -2013,9 +2089,7 @@ def merge_segments(
         .partitionBy("bucket")
         .parquet(f"{path}/{new_dir}/blocks")
     )
-    maps.coalesce(max(1, merged_docs // 5_000_000 + 1)).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/{new_dir}/docid_map")
+    _write_docid_map(maps, merged_docs, f"{path}/{new_dir}/docid_map")
 
     # replace the FIRST merged dir in place (order preserved), drop the
     # rest — reader unions are order-insensitive, but a stable order

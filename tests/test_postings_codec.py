@@ -76,23 +76,41 @@ def block_index(spark_index):
     return build_blocks(spark_index, block_span=64).cache()
 
 
-def test_mint_doc_ids_dense_and_ordered(spark_index):
+def _each_mint_path(monkeypatch):
+    """Run the loop body once per `mint_doc_ids` path, yielding its name:
+    the single-partition window rank (every test corpus is below
+    SMALL_MINT_DOCS), then the range-boundary path, forced by setting
+    the shared threshold to 0."""
+    from cis555_search_engine_spark.operators import postings_codec as pc
+
+    for name, limit in (("window", pc.SMALL_MINT_DOCS), ("range", 0)):
+        monkeypatch.setattr(pc, "SMALL_MINT_DOCS", limit)
+        yield name
+    monkeypatch.undo()
+
+
+def test_mint_doc_ids_dense_and_ordered(spark_index, monkeypatch):
     from cis555_search_engine_spark.operators.postings_codec import mint_doc_ids
 
-    m = mint_doc_ids(spark_index.doc_stats).collect()
-    rows = sorted(((r["conv_id"], r["turn_idx"]), r["docid"]) for r in m)
-    ids = [d for _, d in rows]
-    assert ids == list(range(len(rows)))  # dense, 0-based, key-ordered
+    minted = {}
+    for path in _each_mint_path(monkeypatch):
+        m = mint_doc_ids(spark_index.doc_stats).collect()
+        rows = sorted(((r["conv_id"], r["turn_idx"]), r["docid"]) for r in m)
+        ids = [d for _, d in rows]
+        assert ids == list(range(len(rows))), path  # dense, 0-based, key-ordered
+        minted[path] = rows
+    assert minted["window"] == minted["range"]  # both paths mint the same docids
 
 
-def test_mint_doc_ids_deterministic_across_parallelism(spark_index):
+def test_mint_doc_ids_deterministic_across_parallelism(spark_index, monkeypatch):
     from cis555_search_engine_spark.operators.postings_codec import mint_doc_ids
 
-    a = {(r["conv_id"], r["turn_idx"]): r["docid"]
-         for r in mint_doc_ids(spark_index.doc_stats, num_partitions=2).collect()}
-    b = {(r["conv_id"], r["turn_idx"]): r["docid"]
-         for r in mint_doc_ids(spark_index.doc_stats, num_partitions=13).collect()}
-    assert a == b
+    for path in _each_mint_path(monkeypatch):
+        a = {(r["conv_id"], r["turn_idx"]): r["docid"]
+             for r in mint_doc_ids(spark_index.doc_stats, num_partitions=2).collect()}
+        b = {(r["conv_id"], r["turn_idx"]): r["docid"]
+             for r in mint_doc_ids(spark_index.doc_stats, num_partitions=13).collect()}
+        assert a == b, path
 
 
 def test_decode_blocks_matches_long_postings(spark_index, block_index):
@@ -226,10 +244,29 @@ def test_hot_term_spreads_across_blocks(spark_index, block_index):
     assert max(per_term.values()) > 1, "corpus must have a term spanning blocks"
 
 
-def test_write_load_blocks_bucketed(spark, spark_index, block_index, tmp_path):
+def test_write_load_blocks_bucketed(
+    spark, spark_index, block_index, corpus_pdf, corpus_sdf, tmp_path
+):
+    """An explicit n_buckets is honoured. By default write_blocks sizes
+    the bucket fan-out to the store's postings and writes one docid-map
+    file; append_blocks keeps the manifest's fan-out and compact_blocks
+    derives it afresh. On each store the driver path and the Spark path
+    over the persisted buckets answer as the oracle does."""
+    import dataclasses
+    import glob
+    import zlib
+
+    from pyspark.sql import functions as F
+
+    from cis555_search_engine_spark.operators.index_build import build_index
     from cis555_search_engine_spark.operators.postings_codec import (
+        _derived_buckets,
+        append_blocks,
         bm25_topk_blocks,
+        build_blocks,
+        compact_blocks,
         load_blocks,
+        phrase_match_blocks,
         write_blocks,
     )
     from cis555_search_engine_spark.operators.scoring import bm25_topk
@@ -243,6 +280,40 @@ def test_write_load_blocks_bucketed(spark, spark_index, block_index, tmp_path):
     want = [(r["conv_id"], r["turn_idx"]) for r in
             bm25_topk(spark_index, "warren buffett", k=10).collect()]
     assert got == want
+
+    docs = list(corpus_pdf[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None))
+    a_pred = F.crc32(F.col("conv_id").cast("binary")) % 2 == 0
+    idx_a = build_index(corpus_sdf.filter(a_pred), cache=False)
+    path = str(tmp_path / "derived")
+
+    def check(n_buckets, docs_in, what):
+        """The store's manifest fan-out, its segments' bucket dirs and
+        docid-map files, and both serving paths against the oracle."""
+        bidx = load_blocks(spark, path)
+        assert bidx.n_buckets == bidx.manifest["n_buckets"] == n_buckets, what
+        for seg in bidx.manifest["data_dirs"]:
+            assert 1 <= len(glob.glob(f"{path}/{seg}/blocks/bucket=*")) <= n_buckets, what
+            assert len(glob.glob(f"{path}/{seg}/docid_map/*.parquet")) == 1, what
+        bm25, phrase = _oracle_state(docs_in)
+        for served in (bidx, dataclasses.replace(bidx, manifest=None)):
+            _check_ranked([tuple(r) for r in
+                           bm25_topk_blocks(served, "rice noodle", k=10).collect()],
+                          bm25("rice noodle", 10), what)
+            _check_ranked(sorted(tuple(r) for r in
+                                 phrase_match_blocks(served, "waaaa waaaa").collect()),
+                          phrase("waaaa waaaa"), what)
+
+    assert [_derived_buckets(n) for n in (0, 4_999, 5_000, 159_999, 160_000, 10**9)] == [
+        1, 1, 2, 63, 64, 64
+    ]
+    write_blocks(build_blocks(idx_a, 64), path)
+    fresh = _derived_buckets(idx_a.n_postings)
+    assert 1 < fresh < _derived_buckets(spark_index.n_postings) < 64
+    check(fresh, [d for d in docs if zlib.crc32(d[0].encode()) % 2 == 0], "fresh")
+    append_blocks(spark, path, build_index(corpus_sdf.filter(~a_pred), cache=False))
+    check(fresh, docs, "appended")
+    compact_blocks(spark, path)
+    check(_derived_buckets(spark_index.n_postings), docs, "compacted")
 
 
 def test_bucket_filter_prunes_partitions(spark, block_index, tmp_path):
@@ -266,22 +337,23 @@ def test_bucket_filter_prunes_partitions(spark, block_index, tmp_path):
     assert "PushedFilters: [In(term" in plan, plan
 
 
-def test_mint_doc_ids_stable_across_recompute(spark, spark_index):
+def test_mint_doc_ids_stable_across_recompute(spark, spark_index, monkeypatch):
     """docids must be a pure function of the key order — identical across
     independent recomputations with all caches dropped in between
     (regression: round-1 minting depended on repartitionByRange keeping
     its sampled boundaries cached between the count and rank jobs)."""
     from cis555_search_engine_spark.operators.postings_codec import mint_doc_ids
 
-    out = mint_doc_ids(spark_index.doc_stats, num_partitions=7)
-    a = {(r["conv_id"], r["turn_idx"]): r["docid"] for r in out.collect()}
-    spark.catalog.clearCache()  # evict everything: force full recompute
-    b = {(r["conv_id"], r["turn_idx"]): r["docid"] for r in out.collect()}
-    # doc_stats/postings caches are session-scoped fixtures - restore them
-    spark_index.postings.cache(); spark_index.doc_stats.cache(); spark_index.corpus_stats.cache()
-    assert a == b
-    ids = sorted(b.values())
-    assert ids == list(range(len(ids)))
+    for path in _each_mint_path(monkeypatch):
+        out = mint_doc_ids(spark_index.doc_stats, num_partitions=7)
+        a = {(r["conv_id"], r["turn_idx"]): r["docid"] for r in out.collect()}
+        spark.catalog.clearCache()  # evict everything: force full recompute
+        b = {(r["conv_id"], r["turn_idx"]): r["docid"] for r in out.collect()}
+        # doc_stats/postings caches are session-scoped fixtures - restore them
+        spark_index.postings.cache(); spark_index.doc_stats.cache(); spark_index.corpus_stats.cache()
+        assert a == b, path
+        ids = sorted(b.values())
+        assert ids == list(range(len(ids))), path
 
 
 def test_append_blocks_exact_vs_full_build(spark, corpus_sdf, tmp_path):
@@ -879,24 +951,34 @@ def test_impact_ordered_build_same_results_better_pruning(spark, spark_index, bl
     assert ti == tk and li < lk, (li, ti, lk, tk)
 
 
-def test_mint_doc_ids_order_cols_dedupes_per_key(spark):
+def test_mint_doc_ids_order_cols_dedupes_per_key(spark, monkeypatch):
     """order_cols minting must assign ONE docid per doc_key even when
     the input has several rows per key with differing order-col values
     (e.g. a postings frame instead of doc_stats) — min(order_col) per
     key, then rank. A distinct over key+order_cols would mint duplicate
-    docids for one document."""
+    docids for one document. A null ordering component fails the same
+    way on both paths."""
     from cis555_search_engine_spark.operators.postings_codec import mint_doc_ids
 
     rows = [  # doc "b" appears with two different doc_len values
         ("a", 0, 10), ("b", 0, 5), ("b", 0, 99), ("c", 0, 1), ("a", 0, 10),
     ]
     df = spark.createDataFrame(rows, ["conv_id", "turn_idx", "doc_len"])
-    m = mint_doc_ids(df, order_cols=("doc_len",)).collect()
-    assert len(m) == 3  # one row per distinct key
-    by_key = {(r["conv_id"], r["turn_idx"]): r["docid"] for r in m}
-    assert sorted(by_key.values()) == [0, 1, 2]  # dense, no duplicates
-    # order: min(doc_len) per key -> c(1) < b(5) < a(10)
-    assert by_key[("c", 0)] == 0 and by_key[("b", 0)] == 1 and by_key[("a", 0)] == 2
+    nulls = spark.createDataFrame(
+        [*rows, (None, 1, 3)], "conv_id string, turn_idx int, doc_len int"
+    )
+    errors = {}
+    for path in _each_mint_path(monkeypatch):
+        m = mint_doc_ids(df, order_cols=("doc_len",)).collect()
+        assert len(m) == 3, path  # one row per distinct key
+        by_key = {(r["conv_id"], r["turn_idx"]): r["docid"] for r in m}
+        assert sorted(by_key.values()) == [0, 1, 2], path  # dense, no duplicates
+        # order: min(doc_len) per key -> c(1) < b(5) < a(10)
+        assert by_key == {("c", 0): 0, ("b", 0): 1, ("a", 0): 2}, path
+        with pytest.raises(ValueError, match="null ordering components") as err:
+            mint_doc_ids(nulls, order_cols=("doc_len",))
+        errors[path] = str(err.value)
+    assert errors["window"] == errors["range"]
 
 
 def test_append_blocks_internal_idempotence_and_key_guard(spark, corpus_sdf, tmp_path):
@@ -1461,10 +1543,15 @@ def test_driver_path_matches_spark_path_and_oracle(
             _check_ranked(sorted(rows) if fn is phrase_match_blocks else rows, want,
                           (name, q, kw, "spark path"))
 
-    # fresh: the store is written from its cached in-memory twin
+    # fresh: the store is written from its cached in-memory twin, with a
+    # nullable docid as range-minted maps and stores written before the
+    # window-rank mint have it
     docs_a = [d for d in docs if in_a(d[0])]
     twin = build_blocks(build_index(corpus_sdf.filter(a_pred), cache=False), 64).cache()
-    write_blocks(twin, path, n_buckets=8)
+    nullable_map = twin.docid_map.withColumn(
+        "docid", F.when(F.col("docid") >= 0, F.col("docid"))
+    )
+    write_blocks(dataclasses.replace(twin, docid_map=nullable_map), path, n_buckets=8)
     check_state("fresh", load_blocks(spark, path), twin, _oracle_state(docs_a))
     twin.blocks.unpersist()
 
@@ -1673,7 +1760,9 @@ def test_snapshot_datasets_stay_inside_their_snapshot(spark, corpus_pdf, corpus_
     vacuum), an index loaded before each op keeps answering from its own
     snapshot, and a fresh load_blocks answers from the new one — both
     equal to the oracle of their state. Indexes over two stores share no
-    cache entry."""
+    cache entry. Once a vacuum deletes a snapshot, an index still holding
+    it raises FileNotFoundError, whether it had read the deleted dirs or
+    not, instead of answering []."""
     import zlib
 
     from pyspark.sql import functions as F
@@ -1747,3 +1836,13 @@ def test_snapshot_datasets_stay_inside_their_snapshot(spark, corpus_pdf, corpus_
     twin = load_blocks(spark, str(tmp_path / "twin"))
     serve(twin, oracle, "second store")
     assert twin.datasets.keys().isdisjoint(before.datasets)
+
+    # compaction with its default vacuum deletes the snapshot both the
+    # queried twin and an unqueried index hold
+    unqueried = load_blocks(spark, str(tmp_path / "twin"))
+    compact_blocks(spark, str(tmp_path / "twin"))
+    for stale in (twin, unqueried):
+        for fn, q in ((bm25_topk_blocks, "rice noodle"), (phrase_match_blocks, "waaaa waaaa")):
+            with pytest.raises(FileNotFoundError, match="vacuumed.*reload the index"):
+                fn(stale, q).collect()
+    serve(load_blocks(spark, str(tmp_path / "twin")), oracle, "reloaded after vacuum")

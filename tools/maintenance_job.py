@@ -55,7 +55,9 @@ def main() -> None:
     ap.add_argument("--no-vacuum", action="store_true",
                     help="defer the post-drain vacuum (in-flight readers)")
     ap.add_argument("--block-span", type=int, default=4096)
-    ap.add_argument("--n-buckets", type=int, default=64)
+    ap.add_argument("--n-buckets", type=int, default=None,
+                    help="term buckets of a new store (default: one per "
+                         "2,500 postings, 1 to 64)")
     args = ap.parse_args()
     if args.compact and args.tier_merge:
         # compaction rewrites every segment into one, so a tiered merge
