@@ -1769,6 +1769,7 @@ def test_snapshot_datasets_stay_inside_their_snapshot(spark, corpus_pdf, corpus_
 
     from cis555_search_engine_spark.operators.index_build import build_index
     from cis555_search_engine_spark.operators.postings_codec import (
+        _gone,
         append_blocks,
         bm25_topk_blocks,
         build_blocks,
@@ -1843,6 +1844,8 @@ def test_snapshot_datasets_stay_inside_their_snapshot(spark, corpus_pdf, corpus_
     compact_blocks(spark, str(tmp_path / "twin"))
     for stale in (twin, unqueried):
         for fn, q in ((bm25_topk_blocks, "rice noodle"), (phrase_match_blocks, "waaaa waaaa")):
-            with pytest.raises(FileNotFoundError, match="vacuumed.*reload the index"):
+            with pytest.raises(FileNotFoundError, match="vacuumed.*reload the index") as err:
                 fn(stale, q).collect()
+            # the error names a dir the vacuum deleted
+            assert _gone(str(err.value).split(" is gone:")[0])
     serve(load_blocks(spark, str(tmp_path / "twin")), oracle, "reloaded after vacuum")
