@@ -7,20 +7,23 @@ row-per-posting INSERTs into MySQL, tf/weight backfilled by SQL post-pass.
 Spark-first redesign — one declarative job:
 
     corpus
-      -> tokenize (native regexp codegen, or Arrow pandas UDF)     [P2,P3]
-      -> posexplode -> (doc, pos, raw_token)
-      -> Porter stem via DISTINCT-vocab pandas UDF + broadcast join [P4,J8]
-         (the reference's `stemmer` dictionary trick, stem.java:74-157 —
-          stemming cost is O(|vocab|), not O(|tokens|))
-      -> groupBy(doc, term):  tf = count, positions = collect_list   [A1]
+      -> postings kernel: one Arrow-batched Python UDF per turn      [P2,P3,A1]
+           tokenize (tokenize_py) -> Porter via a per-batch memo dict
+           -> term -> positions dict in first-occurrence order
+           (the reference's per-doc LinkedHashMap, Indexer.java:340-360)
+      -> explode -> (doc, term, tf, positions)   (narrow: no shuffle)
       -> doc_stats:    groupBy(doc): doc_len, max_tf                 [A2]
       -> corpus_stats: groupBy(term): df (exact), idf columns        [A4,F5]
 
+The explode + groupBy(doc, term) form (`build_postings_long`: native
+regexp tokenizer, Porter over the DISTINCT vocab joined back — the
+reference's `stemmer` dictionary trick, stem.java:74-157) is kept as the
+independent twin the kernel is property-tested against, and as the
+streaming and checkpointed builds' postings step.
+
 Scale notes (100 TB / 10^12 turns):
-- tokenize+explode is narrow (no shuffle); the only shuffles are the two
-  aggregations, both with map-side partial aggregation.
-- groupBy(doc, term) is keyed by (doc, term) — never skewed by hot terms
-  because the doc key spreads them.
+- the postings kernel is narrow (no shuffle); the only shuffles are the
+  two aggregations, both with map-side partial aggregation.
 - groupBy(term) for df is a count-aggregate: partial aggregation already
   collapses each map partition to one row per term, so a hot term costs
   #partitions rows in the shuffle, not #postings. An explicitly salted
@@ -35,12 +38,13 @@ from dataclasses import dataclass
 from typing import Sequence
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.porter import porter_stem
-from ..functions.tokenizer import tokenize_col, tokenize_udf
+from ..functions.tokenizer import tokenize_col, tokenize_py, tokenize_udf
 
 DOC_KEY: tuple[str, ...] = ("conv_id", "turn_idx")
 
@@ -49,32 +53,6 @@ DOC_KEY: tuple[str, ...] = ("conv_id", "turn_idx")
 def porter_stem_udf(terms: pd.Series) -> pd.Series:
     """Vectorized Porter stem; only ever applied to the distinct vocab."""
     return terms.map(lambda t: porter_stem(t) if isinstance(t, str) else t)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def stem_tokens_udf(tok_arrays: pd.Series) -> pd.Series:
-    """Arrow-vectorized per-array stemming with a per-batch memo dict —
-    effective cost is one Porter run per distinct token per batch (the
-    `stemmer`-dictionary trick, stem.java:74-157, without the join)."""
-    cache: dict[str, str] = {}
-
-    def stem_list(toks):
-        if toks is None:
-            # null text -> null token array (tokenize_col of NULL); the
-            # null must pass through like the stem=False and long-form
-            # paths, not crash the batch (a tool-only turn has text=NULL
-            # under TRANSCRIPT_SCHEMA)
-            return None
-        out = []
-        for t in toks:
-            s = cache.get(t)
-            if s is None:
-                s = porter_stem(t)
-                cache[t] = s
-            out.append(s)
-        return out
-
-    return tok_arrays.map(stem_list)
 
 
 def tokenize_turns(
@@ -136,12 +114,61 @@ def build_postings_long(
     return toks.groupBy(*doc_key, "term").agg(*aggs)
 
 
+_POSTING = T.StructType(
+    [T.StructField("term", T.StringType()), T.StructField("tf", T.IntegerType())]
+)
+_POSTING_POS = T.StructType(
+    _POSTING.fields + [T.StructField("positions", T.ArrayType(T.IntegerType()))]
+)
+
+
+def _doc_postings(texts: pa.Array, stem: bool, with_positions: bool) -> pa.Array:
+    """The postings kernel: one Arrow batch of texts -> one
+    list<struct<term, tf[, positions]>> per text, in one linear pass per
+    text. Porter runs once per distinct token per batch (memo dict —
+    the `stemmer`-dictionary trick, stem.java:74-157, without the join);
+    terms come out in first-occurrence order with ascending positions.
+    A null or token-less text yields an empty list (no posting rows)."""
+    memo: dict[str, str] = {}
+    terms: list[str] = []
+    tfs: list[int] = []
+    pos: list[int] = []
+    pos_off = [0]
+    doc_off = [0]
+    for text in texts.to_pylist():
+        occ: dict[str, list[int]] = {}
+        for i, tok in enumerate(tokenize_py(text)):
+            if stem:
+                s = memo.get(tok)
+                if s is None:
+                    s = memo[tok] = porter_stem(tok)
+                tok = s
+            p = occ.get(tok)
+            if p is None:
+                occ[tok] = [i]
+            else:
+                p.append(i)
+        for t, p in occ.items():
+            terms.append(t)
+            tfs.append(len(p))
+            if with_positions:
+                pos.extend(p)
+                pos_off.append(len(pos))
+        doc_off.append(len(terms))
+    fields = [pa.array(terms, pa.string()), pa.array(tfs, pa.int32())]
+    if with_positions:
+        fields.append(
+            pa.ListArray.from_arrays(pa.array(pos_off, pa.int32()), pa.array(pos, pa.int32()))
+        )
+    postings = pa.StructArray.from_arrays(fields, names=["term", "tf", "positions"][: len(fields)])
+    return pa.ListArray.from_arrays(pa.array(doc_off, pa.int32()), postings)
+
+
 def build_postings_doclocal(
     corpus: DataFrame,
     doc_key: Sequence[str] = DOC_KEY,
     text_col: str = "text",
     stem: bool = True,
-    use_pandas_udf: bool = False,
     with_positions: bool = True,
 ) -> DataFrame:
     """Shuffle-free postings build — the scale path.
@@ -149,44 +176,31 @@ def build_postings_doclocal(
     TF and positions are doc-local facts: instead of explode +
     groupBy(doc, term) (which shuffles every token occurrence —
     ~10^13 rows at the 10^12-turn target), compute them per document
-    with native higher-order array functions inside ONE narrow map:
+    inside ONE narrow map — the reference indexer's per-doc word-count
+    hash map (Indexer.java:340,356-360):
 
-        toks      = tokenize (native) [+ stem via Arrow UDF]
-        terms     = array_distinct(toks)
-        per term  : tf = |filter(toks, = t)|,
-                    positions = filter(indexes, toks[i] = t)
+        postings  = _doc_postings(text)   (Arrow-batched Python UDF:
+                    tokenize_py -> Porter memo -> term -> positions dict)
         explode the per-doc posting structs -> final long rows
 
-    No shuffle anywhere; the only later shuffles in an index build are
-    the (tiny, partially-aggregated) df/corpus-stats rollups. Per-doc
-    cost is O(|distinct| * |toks|) — fine for transcript-turn-sized
-    docs; for book-length docs prefer `build_postings_long`.
+    The work is linear in each turn's tokens, and the build tokenizes
+    and stems with the same `tokenize_py` and `porter_stem` the query
+    path (`_query_terms`) and the oracle use. No shuffle anywhere; the
+    only later shuffles in an index build are the (tiny,
+    partially-aggregated) df/corpus-stats rollups.
 
-    Property-tested identical to `build_postings_long`
+    Property-tested identical to `build_postings_long`, the native
+    tokenizer plus the stem-dictionary join
     (tests/test_index_parity.py::test_doclocal_equals_groupby).
     """
-    tok = tokenize_udf(F.col(text_col)) if use_pandas_udf else tokenize_col(F.col(text_col))
-    if stem:
-        tok = stem_tokens_udf(tok)
-    doc = corpus.select(*doc_key, tok.alias("toks"))
-    idx = F.sequence(F.lit(0), F.size("toks") - 1)
-    post_struct = lambda t: F.struct(  # noqa: E731
-        t.alias("term"),
-        F.size(F.filter("toks", lambda x: x == t)).cast("int").alias("tf"),
-        *(
-            [
-                F.filter(idx, lambda i: F.element_at("toks", i + 1) == t)
-                .cast("array<int>")
-                .alias("positions")
-            ]
-            if with_positions
-            else []
-        ),
-    )
-    parr = F.transform(F.array_distinct("toks"), post_struct)
-    out = doc.select(*doc_key, F.explode(parr).alias("p"))
-    cols = [*doc_key, "p.term", "p.tf"] + (["p.positions"] if with_positions else [])
-    return out.select(*cols)
+    rtype = T.ArrayType(_POSTING_POS if with_positions else _POSTING)
+
+    @F.arrow_udf(rtype)
+    def postings(texts: pa.Array) -> pa.Array:
+        return _doc_postings(texts, stem, with_positions)
+
+    out = corpus.select(*doc_key, F.explode(postings(F.col(text_col))).alias("p"))
+    return out.select(*doc_key, *(f"p.{f.name}" for f in rtype.elementType.fields))
 
 
 def doc_stats(postings: DataFrame, doc_key: Sequence[str] = DOC_KEY) -> DataFrame:
@@ -311,14 +325,11 @@ def build_index(
     doc_key: Sequence[str] = DOC_KEY,
     text_col: str = "text",
     stem: bool = True,
-    use_pandas_udf: bool = False,
     cache: bool | str = True,
-    doc_local: bool = True,
 ) -> InvertedIndex:
-    """End-to-end batch index build (SURVEY.md §7 step 2/3).
-
-    ``doc_local=True`` (default) uses the shuffle-free postings build;
-    both paths are property-tested identical.
+    """End-to-end batch index build (SURVEY.md §7 step 2/3): the
+    shuffle-free `build_postings_doclocal` postings, then the doc and
+    corpus statistics.
 
     ``cache``: True pins postings/stats with .cache() (session-lived —
     right for a serving index); ``"checkpoint"`` stages them with an
@@ -328,8 +339,7 @@ def build_index(
     would accumulate for the stream's lifetime); False leaves the plan
     lazy (every downstream consumer re-tokenizes — the round-3 drain
     paid the tokenize pipeline ~5x per epoch this way)."""
-    build = build_postings_doclocal if doc_local else build_postings_long
-    postings = build(corpus, doc_key, text_col, stem, use_pandas_udf)
+    postings = build_postings_doclocal(corpus, doc_key, text_col, stem)
     if cache == "checkpoint":
         # LAZY checkpoint: the totals agg below is the materializing
         # action, so ONE job tokenizes + persists + aggregates — the

@@ -448,6 +448,7 @@ def build_blocks(
         corpus_stats=index.corpus_stats,
         doc_key=tuple(doc_key),
         n_docs=index.n_docs,
+        n_postings=index.n_postings,
         avg_doc_len=avg_len,
         block_span=block_span,
         key_ordered=not impact_ordered,
@@ -461,6 +462,7 @@ class BlockIndex:
     corpus_stats: DataFrame  # (term, df, idf_ref, idf_bm25)
     doc_key: tuple[str, ...]
     n_docs: int
+    n_postings: int          # posting rows = Σdf; the manifest records it
     avg_doc_len: float
     block_span: int
     n_buckets: int | None = None  # set when loaded from bucketed storage
@@ -1481,11 +1483,12 @@ def write_blocks(
     spark = bidx.blocks.sparkSession
     data_dir = fsio.new_segment_name("seg", 0)
     stats_dir = fsio.new_segment_name("stats", 0)
-    # one Σdf agg here sizes the fan-out and saves every future append
-    # an old-stats scan + agg job (the manifest, not the stats parquet,
-    # is the running total's source of truth; append/compact keep it
-    # current)
-    n_postings = int(bidx.corpus_stats.agg(F.sum("df")).collect()[0][0] or 0)
+    # the index already knows Σdf (the build counted its posting rows;
+    # a loaded index read it from its manifest): it sizes the fan-out
+    # and the stats files, and the manifest records it for every future
+    # append (the manifest, not the stats parquet, is the running
+    # total's source of truth; append/compact keep it current)
+    n_postings = bidx.n_postings
     if n_buckets is None:
         n_buckets = _derived_buckets(n_postings)
     (
@@ -1495,7 +1498,7 @@ def write_blocks(
         .parquet(f"{path}/{data_dir}/blocks")
     )
     _write_docid_map(bidx.docid_map, bidx.n_docs, f"{path}/{data_dir}/docid_map")
-    _write_stats(bidx.corpus_stats, f"{path}/{stats_dir}")
+    _write_stats(bidx.corpus_stats, f"{path}/{stats_dir}", n_terms_hint=n_postings)
 
     tombstone_dirs: list[str] = []
     n_deleted = 0
@@ -1641,10 +1644,7 @@ def append_blocks(
         f"{path}/{old_stats_dir}" if old_stats_dir else f"{path}/corpus_stats"
     )
     old_stats = spark.read.parquet(old_stats_path)
-    if "n_postings" in meta:
-        n_old_postings = int(meta["n_postings"])
-    else:  # legacy store (pre-round-4 manifest): recover via one agg
-        n_old_postings = int(old_stats.agg(F.sum("df")).collect()[0][0] or 0)
+    n_old_postings = _manifest_postings(meta, old_stats)
 
     offset = int(meta["n_docs"])
     key_cols = list(new_index.doc_key)
@@ -2193,6 +2193,15 @@ def tiered_merge(
     return done
 
 
+def _manifest_postings(meta: dict, stats: DataFrame) -> int:
+    """The store's posting total: the manifest's ``n_postings``, or —
+    for a legacy (pre-round-4) manifest without it — Σdf over its stats,
+    one agg."""
+    if "n_postings" in meta:
+        return int(meta["n_postings"])
+    return int(stats.agg(F.sum("df")).collect()[0][0] or 0)
+
+
 def load_blocks(spark, path: str) -> "BlockIndex":
     """Reopen a persisted block index. The returned BlockIndex's
     `blocks` carry the `bucket` column; `bm25_topk_blocks` adds a
@@ -2252,12 +2261,14 @@ def load_blocks(spark, path: str) -> "BlockIndex":
             # construction (delete_docs anti-joins already-tombstoned
             # ids), so no distinct is needed.
             tombstones = _stage(tombstones)
+    stats = spark.read.parquet(stats_path)
     return BlockIndex(
         blocks=union_read("blocks"),
         docid_map=union_read("docid_map"),
-        corpus_stats=spark.read.parquet(stats_path),
+        corpus_stats=stats,
         doc_key=tuple(meta["doc_key"]),
         n_docs=meta["n_docs"],
+        n_postings=_manifest_postings(meta, stats),
         avg_doc_len=meta["avg_doc_len"],
         block_span=meta["block_span"],
         n_buckets=n_buckets,

@@ -6,6 +6,8 @@ from __future__ import annotations
 import math
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from cis555_search_engine_spark.oracle import (
@@ -112,25 +114,71 @@ def test_salted_df_equals_plain(spark_index):
     assert plain == salted
 
 
+# words that each keep >= 1 token, for the long-turn case
+_LONG_WORDS = ["rice", "Noodles", "noodle", "İstanbul", "\u212aelvin", "don't", "covid-19",
+               "--zoom--", "a", "re-re-run", "caresses"]
+# separators and case-mapping traps; repeated letters weight tokens up
+_ODD_CHARS = "aZ -'09İ\u212aıßé\u0307\t\n,.!" + "x" * 4
+
+
+def _doc_texts():
+    """Turn texts beyond ASCII: unicode (İ, the Kelvin sign, ...),
+    hyphen runs, digits, apostrophes, empty and null texts, and a
+    >=2,000-token turn with repeated terms."""
+    text = st.one_of(
+        st.none(),
+        st.just(""),
+        st.text(alphabet=_ODD_CHARS, max_size=60),
+        st.text(alphabet=st.characters(exclude_categories=("Cs",)), max_size=40),
+        st.tuples(
+            st.lists(st.sampled_from(_LONG_WORDS), min_size=20, max_size=30),
+            st.integers(100, 120),
+        ).map(lambda t: " ".join(t[0] * t[1])),
+    )
+    return st.lists(text, min_size=1, max_size=12)
+
+
 @pytest.mark.parametrize("stem", [True, False])
-def test_doclocal_equals_groupby(corpus_sdf, stem):
-    """The shuffle-free doc-local build (native higher-order array ops)
-    must produce exactly the explode+groupBy postings."""
+def test_doclocal_equals_groupby(spark, corpus_sdf, stem):
+    """The shuffle-free doc-local build (the Arrow-batched postings
+    kernel: tokenize_py + Porter memo + per-turn hash map) must produce
+    exactly the explode+groupBy postings of `build_postings_long` (the
+    native regexp tokenizer + the stem-dictionary join) — on the corpus,
+    and on generated texts beyond ASCII. A mismatch is a tokenizer
+    defect, never a test tolerance."""
     from cis555_search_engine_spark.operators.index_build import (
         build_postings_doclocal,
         build_postings_long,
     )
 
-    key = lambda r: (r["conv_id"], r["turn_idx"], r["term"])  # noqa: E731
-    a = {
-        key(r): (r["tf"], tuple(r["positions"]))
-        for r in build_postings_long(corpus_sdf, stem=stem).collect()
-    }
-    b = {
-        key(r): (r["tf"], tuple(r["positions"]))
-        for r in build_postings_doclocal(corpus_sdf, stem=stem).collect()
-    }
-    assert a == b
+    def same(df):
+        a, b = (
+            {
+                (r["conv_id"], r["turn_idx"], r["term"]): (r["tf"], tuple(r["positions"]))
+                for r in build(df, stem=stem).collect()
+            }
+            for build in (build_postings_long, build_postings_doclocal)
+        )
+        assert a == b
+
+    same(corpus_sdf)
+
+    @given(texts=_doc_texts())
+    @example(texts=[
+        "İstanbul \u212aELVIN kelvin ıi",
+        "--rice--noodle-- -- x-y-z 123 4-5 covid-19 don't rock'n'roll",
+        " ".join(["Noodles rice noodle caresses"] * 600),
+        "",
+        None,
+    ])
+    @settings(max_examples=8, deadline=None)
+    def generated(texts):
+        same(spark.createDataFrame(
+            [("c", i, t) for i, t in enumerate(texts)],
+            "conv_id string, turn_idx int, text string",
+        ))
+
+    generated()
 
 
 @pytest.mark.parametrize("query", REFERENCE_QUERIES[:8])

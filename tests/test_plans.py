@@ -24,6 +24,10 @@ def test_doclocal_build_has_no_shuffle(spark, corpus_sdf):
 
     plan = explain_str(build_postings_doclocal(corpus_sdf, stem=True))
     assert "Exchange" not in plan  # narrow map end-to-end
+    # the postings kernel is evaluated through Arrow batches, never
+    # row-at-a-time Python
+    assert "ArrowEvalPython" in plan
+    assert "BatchEvalPython" not in plan
     # and the groupBy variant DOES shuffle (sanity of the assertion)
     from cis555_search_engine_spark.operators.index_build import build_postings_long
 

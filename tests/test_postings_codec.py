@@ -1849,3 +1849,74 @@ def test_snapshot_datasets_stay_inside_their_snapshot(spark, corpus_pdf, corpus_
             # the error names a dir the vacuum deleted
             assert _gone(str(err.value).split(" is gone:")[0])
     serve(load_blocks(spark, str(tmp_path / "twin")), oracle, "reloaded after vacuum")
+
+
+def test_n_postings_on_every_store_shape(spark, corpus_sdf, spark_jobs, tmp_path):
+    """``BlockIndex.n_postings`` is the store's posting total on every
+    store shape — in memory, fresh, appended, tombstoned, tiered-merged,
+    compacted, reloaded from a legacy manifest without the field, and
+    re-persisted from a loaded index: it equals Σdf of the store's stats
+    and the manifest's ``n_postings``. write_blocks reads it instead of
+    re-aggregating, so it runs no Σdf job and no range-sampling job for
+    a small term dictionary: over staged blocks it runs one job per file
+    set it writes."""
+    from pyspark.sql import functions as F
+
+    from cis555_search_engine_spark.operators.index_build import build_index
+    from cis555_search_engine_spark.operators.postings_codec import (
+        _commit_meta,
+        _read_meta,
+        append_blocks,
+        build_blocks,
+        compact_blocks,
+        delete_docs,
+        load_blocks,
+        tiered_merge,
+        write_blocks,
+    )
+
+    def sum_df(bidx) -> int:
+        return int(bidx.corpus_stats.agg(F.sum("df")).collect()[0][0])
+
+    def check(where, what):
+        bidx = load_blocks(spark, where)
+        assert bidx.n_postings == sum_df(bidx) == bidx.manifest["n_postings"], what
+        return bidx
+
+    a_pred = F.crc32(F.col("conv_id").cast("binary")) % 2 == 0
+    idx_a = build_index(corpus_sdf.filter(a_pred))
+    memory = build_blocks(idx_a, 64)
+    assert memory.n_postings == idx_a.n_postings == sum_df(memory) > 0
+    memory.blocks = memory.blocks.cache()
+    memory.blocks.count()
+    path = str(tmp_path / "store")
+    with spark_jobs() as jobs:
+        write_blocks(memory, path)
+    assert jobs.n == 3, jobs.n  # one write each: blocks, docid map, stats
+    check(path, "fresh")
+
+    append_blocks(spark, path, build_index(corpus_sdf.filter(~a_pred), cache=False))
+    check(path, "appended")
+    delete_docs(
+        spark, path, corpus_sdf.filter(F.col("turn_idx") % 7 == 3).select("conv_id", "turn_idx")
+    )
+    tombstoned = check(path, "tombstoned")
+    assert tombstoned.tombstones is not None
+    assert tiered_merge(spark, path, merge_at=2) == 1
+    check(path, "merged")
+
+    # re-persisting a loaded (tombstoned, merged) index records its total
+    copy = str(tmp_path / "copy")
+    write_blocks(load_blocks(spark, path), copy)
+    assert check(copy, "re-persisted").n_postings == tombstoned.n_postings
+
+    compact_blocks(spark, path)
+    compacted = check(path, "compacted")
+    assert compacted.n_postings < tombstoned.n_postings  # tombstones purged
+
+    # a legacy manifest without the field: recovered as Σdf on load
+    meta = _read_meta(spark, path)
+    del meta["n_postings"]
+    _commit_meta(spark, path, meta)
+    legacy = load_blocks(spark, path)
+    assert legacy.n_postings == sum_df(legacy) == compacted.n_postings
