@@ -48,10 +48,12 @@ Design decisions, all for 10^12-doc scale:
   Spark path would decode in full anyway — Σdf over the terms (read
   from the term dictionary) below ``min_prune_postings``, or a store of
   at most max(seed_blocks, 4) blocks — is served in the driver from
-  that manifest snapshot: pyarrow reads the terms' bucket dirs, numpy
-  decodes, scores and takes the top-k, and the result is a driver-held
-  frame whose collect() never enters the JVM (0 Spark jobs). Everything
-  else runs as Spark jobs, its Python inside Arrow-batched pandas UDFs.
+  that manifest snapshot: pyarrow reads the row groups of the terms'
+  bucket files that their parquet footers (parsed once per loaded
+  index) say may hold the terms, numpy decodes, scores and takes the
+  top-k, and the result is a driver-held frame whose collect() never
+  enters the JVM (0 Spark jobs). Everything else runs as Spark jobs,
+  its Python inside Arrow-batched pandas UDFs.
   Both paths decode with `decode_blocks_arrays` and score with
   `_bm25_impact`, over whole blocks — no per-row Python (north rule).
 """
@@ -60,13 +62,15 @@ from __future__ import annotations
 
 import functools
 import os
+from bisect import bisect_left
 from dataclasses import dataclass, field
-from typing import Iterator, Sequence
+from typing import Iterator, NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.dataset as ds
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -484,12 +488,14 @@ class BlockIndex:
     manifest: dict | None = None  # read: the snapshot the driver-side
     #                               serving path reads from (None for
     #                               in-memory build_blocks indexes)
-    datasets: dict[str, ds.Dataset | None] = field(
+    footers: dict[tuple[str, str], list["_Footer"]] = field(
         default_factory=dict, repr=False, compare=False
-    )                             # the driver path's pyarrow dataset per
-    #                               manifest dir (None: no part files),
-    #                               opened on first read; sound because
-    #                               commits only add fresh uuid-named dirs
+    )                             # the driver path's parsed parquet
+    #                               footers per (manifest dir, filter
+    #                               column), read on first use: metadata
+    #                               only, never row data or open files;
+    #                               sound because commits only add fresh
+    #                               uuid-named dirs
 
     def cache(self) -> "BlockIndex":
         self.blocks = self.blocks.cache()
@@ -752,8 +758,11 @@ def _prune_live_blocks(
 # loaded store's committed files: the term dictionary gives df/idf, the
 # terms' bucket directories give the blobs, and the result is a
 # driver-held frame (`_DriverFrame`) — its collect() crosses no JVM
-# boundary and runs no Spark job. Decode and the BM25 partial are the
-# same functions the Spark path runs in its tasks.
+# boundary and runs no Spark job. Each read opens the snapshot's parquet
+# files directly, through footers parsed once per loaded index
+# (`_snapshot_footers`), and skips the files and row groups whose
+# min/max statistics exclude every wanted term or docid. Decode and the
+# BM25 partial are the same functions the Spark path runs in its tasks.
 
 
 def _result_schema(bidx: BlockIndex, *extra: T.StructField) -> T.StructType:
@@ -849,50 +858,102 @@ def _vacuumed(d: str) -> FileNotFoundError:
     )
 
 
-def _snapshot_dataset(bidx: BlockIndex, d: str) -> ds.Dataset | None:
-    """The pyarrow dataset over the parquet part files of manifest dir
-    ``d`` (None: an empty dir, or the absent ``bucket=b`` dir of a
-    segment where no term hashes to b), opened once per loaded index.
-    A snapshot's dirs never change — every commit writes fresh uuid-named
-    dirs — so the file list, schema and fragment metadata stay valid
-    for the index's lifetime, until a vacuum deletes them: any other
-    missing dir raises `FileNotFoundError` rather than reading as empty.
-    Two threads missing at once each open an equal dataset; either may
-    stay."""
-    if d not in bidx.datasets:
+class _Footer(NamedTuple):
+    """One part file of a snapshot dir: its path, its parsed parquet
+    footer, and per row group the [min, max] of the dir's filter column
+    (None: the row group has no statistics for it)."""
+
+    path: str
+    md: pq.FileMetaData
+    bounds: list[tuple | None]
+
+
+def _row_group_bounds(md: pq.FileMetaData, col: str) -> list[tuple | None]:
+    j = md.schema.names.index(col)
+    out = []
+    for i in range(md.num_row_groups):
+        st = md.row_group(i).column(j).statistics
+        out.append((st.min, st.max) if st is not None and st.has_min_max else None)
+    return out
+
+
+def _snapshot_footers(bidx: BlockIndex, d: str, col: str) -> list[_Footer]:
+    """The footers of manifest dir ``d``'s parquet part files, with the
+    row-group bounds of ``col`` (empty: an empty dir, or the absent
+    ``bucket=b`` dir of a segment where no term hashes to b), parsed once
+    per loaded index. A snapshot's dirs never change — every commit
+    writes fresh uuid-named dirs — so the file list and footers stay
+    valid for the index's lifetime, until a vacuum deletes them: any
+    other missing dir raises `FileNotFoundError` rather than reading as
+    empty. Two threads missing at once each parse equal footers; either
+    may stay."""
+    key = (d, col)
+    if key not in bidx.footers:
         if _gone(d):
             raise _vacuumed(d)
         files = [os.path.join(d, f) for f in sorted(os.listdir(d))
                  if not f.startswith((".", "_"))] if os.path.isdir(d) else []
-        bidx.datasets[d] = ds.dataset(files, format="parquet") if files else None
-    return bidx.datasets[d]
+        mds = [pq.read_metadata(f) for f in files]
+        bidx.footers[key] = [
+            _Footer(f, md, _row_group_bounds(md, col)) for f, md in zip(files, mds)
+        ]
+    return bidx.footers[key]
 
 
-def _arrow_read(bidx: BlockIndex, dirs: list[str], columns: list[str], filt) -> pa.Table | None:
-    """One pyarrow scan of the union of ``dirs``' datasets (None when
-    none has files). Fields are read as nullable: segments may disagree
-    on the nullability of e.g. docid_map.docid (range-minted maps and
-    maps written before the window-rank mint are nullable, window-ranked
-    ones are not), which a plain ``pa.concat_tables`` rejects. A dataset
-    opened before a vacuum deleted its files raises like a missing dir."""
-    parts = [p for p in (_snapshot_dataset(bidx, d) for d in dirs) if p is not None]
-    if not parts:
+def _holds(vals, bound: tuple | None) -> bool:
+    """Whether a row group with [min, max] ``bound`` may hold one of the
+    sorted ``vals`` (a row group without statistics may)."""
+    if bound is None:
+        return True
+    i = bisect_left(vals, bound[0])
+    return i < len(vals) and vals[i] <= bound[1]
+
+
+def _arrow_read(
+    bidx: BlockIndex, dirs: list[str], columns: list[str], col: str, values
+) -> pa.Table | None:
+    """The rows of ``dirs``' part files whose ``col`` is one of
+    ``values`` (a list of str or an int64 array), as one table of
+    ``columns`` (which include ``col``); None when no dir has files.
+
+    Each file is read directly with its cached footer: only the row
+    groups whose [min, max] of ``col`` may hold a value are read, a file
+    with none is not opened, and the file is closed after the read.
+    Fields are read as nullable: segments may disagree on the
+    nullability of e.g. docid_map.docid (range-minted maps and maps
+    written before the window-rank mint are nullable, window-ranked ones
+    are not), which a plain ``pa.concat_tables`` rejects. A footer
+    parsed before a vacuum deleted its file raises like a missing dir."""
+    footers = [f for d in dirs for f in _snapshot_footers(bidx, d, col)]
+    if not footers:
         return None
-    schema = pa.schema([parts[0].schema.field(c).with_nullable(True) for c in columns])
+    vals = np.unique(values) if isinstance(values, np.ndarray) else sorted(set(values))
+    parts = []
     try:
-        return ds.dataset(parts, schema=schema).to_table(filter=filt)
+        for path, md, bounds in footers:
+            kept = [i for i, b in enumerate(bounds) if _holds(vals, b)]
+            if kept:
+                with pq.ParquetFile(path, metadata=md, pre_buffer=False) as f:
+                    parts.append(f.read_row_groups(kept, columns=columns, use_threads=False))
     except FileNotFoundError as e:
         gone = next((d for d in dirs if _gone(d)), None)
         if gone is None:
             raise
         raise _vacuumed(gone) from e
+    first = parts[0].schema if parts else footers[0].md.schema.to_arrow_schema()
+    schema = pa.schema([first.field(c).with_nullable(True) for c in columns])
+    if not parts:
+        return schema.empty_table()
+    tab = pa.concat_tables([pa.Table.from_arrays(p.columns, schema=schema) for p in parts])
+    return tab.filter(pc.is_in(tab.column(col), value_set=pa.array(vals, schema.field(col).type)))
 
 
 def _driver_idf(
-    bidx: BlockIndex, terms: list[str], min_prune_postings: int, seed_blocks: int
+    bidx: BlockIndex, root: str, terms: list[str], min_prune_postings: int, seed_blocks: int
 ) -> dict[str, float] | None:
-    """{term: idf_bm25} from the store's term dictionary when the driver
-    path serves a query over ``terms``; None routes it to Spark.
+    """{term: idf_bm25} from the term dictionary of the store at
+    ``root`` (`_store_root`) when the driver path serves a query over
+    ``terms``; None routes it to Spark.
 
     The gate is the one `_prune_live_blocks` applies, decided from store
     metadata: Σdf over the terms equals the posting total that function
@@ -901,12 +962,9 @@ def _driver_idf(
     bounds the number of distinct blocks. Either bound below its limit
     means Spark would decode every block of the terms anyway — and it
     caps what the driver reads."""
-    root = _store_root(bidx)
-    if root is None:
-        return None
     got = _arrow_read(
         bidx, [f"{root}/{bidx.manifest['stats_dir']}"], ["term", "df", "idf_bm25"],
-        ds.field("term").isin(terms),
+        "term", terms,
     )
     rows = got.to_pydict() if got is not None else {"term": [], "df": [], "idf_bm25": []}
     n_store_blocks = -(-int(bidx.n_docs) // int(bidx.block_span))
@@ -915,18 +973,17 @@ def _driver_idf(
     return None
 
 
-def _driver_postings(bidx: BlockIndex, terms: list[str], with_positions: bool):
+def _driver_postings(bidx: BlockIndex, root: str, terms: list[str], with_positions: bool):
     """Decode every block of ``terms`` from the snapshot's segments ->
     (term index per posting, docids, tfs, doc_lens, (npos, flat positions)).
     Blocks are decoded in ``terms`` order, so each doc's partials are
     summed in one fixed order and exact ties stay exact."""
-    root = _store_root(bidx)
     buckets = sorted({term_bucket(t, bidx.n_buckets) for t in terms})
     dirs = [
         f"{root}/{d}/blocks/bucket={b}"
         for d in bidx.manifest["data_dirs"] for b in buckets
     ]
-    tab = _arrow_read(bidx, dirs, ["term", "block_id", "blob"], ds.field("term").isin(terms))
+    tab = _arrow_read(bidx, dirs, ["term", "block_id", "blob"], "term", terms)
     if tab is None or tab.num_rows == 0:
         e = np.empty(0, dtype=np.int64)
         return e, e.copy(), e.copy(), e.copy(), (e.copy(), e.copy())
@@ -941,28 +998,26 @@ def _driver_postings(bidx: BlockIndex, terms: list[str], with_positions: bool):
     return np.repeat(tidx[order], counts), d, tf, ln, pos
 
 
-def _driver_dead(bidx: BlockIndex, docids: np.ndarray) -> np.ndarray:
+def _driver_dead(bidx: BlockIndex, root: str, docids: np.ndarray) -> np.ndarray:
     """The tombstoned members of ``docids`` (a docid-filtered read of the
     snapshot's tombstone dirs)."""
     tdirs = bidx.manifest.get("tombstone_dirs", [])
     if not tdirs or not len(docids):
         return np.empty(0, dtype=np.int64)
-    root = _store_root(bidx)
-    got = _arrow_read(
-        bidx, [f"{root}/{t}" for t in tdirs], ["docid"], ds.field("docid").isin(docids)
-    )
+    got = _arrow_read(bidx, [f"{root}/{t}" for t in tdirs], ["docid"], "docid", docids)
     return np.empty(0, dtype=np.int64) if got is None else got.column("docid").to_numpy()
 
 
-def _driver_keys(bidx: BlockIndex, docids: np.ndarray, values: dict[str, np.ndarray]) -> pa.Table:
+def _driver_keys(
+    bidx: BlockIndex, root: str, docids: np.ndarray, values: dict[str, np.ndarray]
+) -> pa.Table:
     """(doc_key..., *values) for sorted unique ``docids`` — a docid-
     filtered read of the snapshot's docid maps; ``values`` are aligned
     with ``docids``."""
-    root = _store_root(bidx)
     key = list(bidx.doc_key)
     got = _arrow_read(
         bidx, [f"{root}/{d}/docid_map" for d in bidx.manifest["data_dirs"]],
-        [*key, "docid"], ds.field("docid").isin(docids),
+        [*key, "docid"], "docid", docids,
     )
     if got is None:
         got = pa.table({c: [] for c in [*key, "docid"]})
@@ -981,6 +1036,7 @@ def _check_k(k: int) -> None:
 
 def _driver_topk(
     bidx: BlockIndex,
+    root: str,
     idf: dict[str, float],
     terms: list[str],
     ex_terms: list[str],
@@ -990,7 +1046,7 @@ def _driver_topk(
     """`bm25_topk_blocks` on the driver (same results, same schema)."""
     schema = _result_schema(bidx, T.StructField("score", T.DoubleType()))
     spark = bidx.docid_map.sparkSession
-    tidx, d, tf, ln, _ = _driver_postings(bidx, terms + ex_terms, with_positions=False)
+    tidx, d, tf, ln, _ = _driver_postings(bidx, root, terms + ex_terms, with_positions=False)
     excluded = tidx >= len(terms)
     dead = d[excluded]
     tidx, d, tf, ln = tidx[~excluded], d[~excluded], tf[~excluded], ln[~excluded]
@@ -999,7 +1055,7 @@ def _driver_topk(
     term_idf = np.array([idf.get(t, 0.0) for t in terms])
     docs, inv = np.unique(d, return_inverse=True)
     scores = np.bincount(inv, weights=_bm25_impact(tf, ln, term_idf[tidx], bidx.avg_doc_len))
-    keep = ~np.isin(docs, np.concatenate([dead, _driver_dead(bidx, docs)]))
+    keep = ~np.isin(docs, np.concatenate([dead, _driver_dead(bidx, root, docs)]))
     if conjunctive:
         keep &= np.bincount(inv) == len(terms)
     docs, scores = docs[keep], scores[keep]
@@ -1009,19 +1065,19 @@ def _driver_topk(
         kth = np.partition(scores, len(scores) - k)[len(scores) - k]
         cand = scores >= kth
         docs, scores = docs[cand], scores[cand]
-    keyed = _driver_keys(bidx, docs, {"score": scores})
+    keyed = _driver_keys(bidx, root, docs, {"score": scores})
     order = [("score", "descending")] + [(c, "ascending") for c in bidx.doc_key]
     return _local_frame(spark, schema, keyed.sort_by(order).slice(0, k))
 
 
-def _driver_phrase(bidx: BlockIndex, terms: list[str]) -> DataFrame:
+def _driver_phrase(bidx: BlockIndex, root: str, terms: list[str]) -> DataFrame:
     """`phrase_match_blocks` on the driver: a phrase starts at p in a doc
     when term i sits at p + i for every i — the intersection, over i, of
     term i's (doc, position − i) keys, computed with numpy set ops."""
     schema = _result_schema(bidx, T.StructField("n_occurrences", T.LongType()))
     spark = bidx.docid_map.sparkSession
     uniq = list(dict.fromkeys(terms))
-    tidx, d, _, _, (npos, flat) = _driver_postings(bidx, uniq, with_positions=True)
+    tidx, d, _, _, (npos, flat) = _driver_postings(bidx, root, uniq, with_positions=True)
     if not len(flat):
         return _local_frame(spark, schema)
     # docs ranked densely so (rank, start) packs into one int64 key
@@ -1036,8 +1092,10 @@ def _driver_phrase(bidx: BlockIndex, terms: list[str]) -> DataFrame:
         starts = keys if starts is None else starts[np.isin(starts, keys)]
     hit, n_occ = np.unique(starts // width, return_counts=True)
     hit_docs = docs[hit]
-    live = ~np.isin(hit_docs, _driver_dead(bidx, hit_docs))
-    keyed = _driver_keys(bidx, hit_docs[live], {"n_occurrences": n_occ[live].astype(np.int64)})
+    live = ~np.isin(hit_docs, _driver_dead(bidx, root, hit_docs))
+    keyed = _driver_keys(
+        bidx, root, hit_docs[live], {"n_occurrences": n_occ[live].astype(np.int64)}
+    )
     return _local_frame(spark, schema, keyed.sort_by([(c, "ascending") for c in bidx.doc_key]))
 
 
@@ -1103,10 +1161,11 @@ def bm25_topk_blocks(
     terms = [t for t in terms if t not in set(ex_terms)]
     if not terms:
         return _empty_topk(bidx)
-    if include_docs is None and exclude_docs is None:
-        idf = _driver_idf(bidx, terms + ex_terms, min_prune_postings, seed_blocks)
+    root = _store_root(bidx) if include_docs is None and exclude_docs is None else None
+    if root is not None:
+        idf = _driver_idf(bidx, root, terms + ex_terms, min_prune_postings, seed_blocks)
         if idf is not None:
-            return _driver_topk(bidx, idf, terms, ex_terms, k, conjunctive)
+            return _driver_topk(bidx, root, idf, terms, ex_terms, k, conjunctive)
 
     dead = bidx.tombstones
     if exclude_docs is not None:
@@ -2357,11 +2416,11 @@ def phrase_match_blocks(
         # must not surprise unionByName / column-referencing callers
         schema = _result_schema(bidx, T.StructField("n_occurrences", T.LongType()))
         return _local_frame(bidx.docid_map.sparkSession, schema)
-    gate = _driver_idf(
-        bidx, list(dict.fromkeys(terms)), DEFAULT_MIN_PRUNE_POSTINGS, DEFAULT_SEED_BLOCKS
-    )
-    if gate is not None:
-        return _driver_phrase(bidx, terms)
+    root = _store_root(bidx)
+    if root is not None and _driver_idf(
+        bidx, root, list(dict.fromkeys(terms)), DEFAULT_MIN_PRUNE_POSTINGS, DEFAULT_SEED_BLOCKS
+    ) is not None:
+        return _driver_phrase(bidx, root, terms)
     out = _phrase_docids(bidx, phrase, stem)
     key = list(bidx.doc_key)
     return (

@@ -9,6 +9,7 @@
 from __future__ import annotations
 
 import math
+import os
 
 import numpy as np
 import pytest
@@ -1804,7 +1805,7 @@ def test_snapshot_datasets_stay_inside_their_snapshot(spark, corpus_pdf, corpus_
             df = fn(bidx, q, **kw)
             _check_ranked([tuple(r) for r in df.collect()], want, (what, q))
             assert "_jdf" not in df.__dict__, (what, q)
-        assert bidx.datasets, what
+        assert bidx.footers, what
 
     oracle = _oracle_state(docs_a)
     before = load_blocks(spark, path)
@@ -1836,7 +1837,7 @@ def test_snapshot_datasets_stay_inside_their_snapshot(spark, corpus_pdf, corpus_
     )
     twin = load_blocks(spark, str(tmp_path / "twin"))
     serve(twin, oracle, "second store")
-    assert twin.datasets.keys().isdisjoint(before.datasets)
+    assert twin.footers.keys().isdisjoint(before.footers)
 
     # compaction with its default vacuum deletes the snapshot both the
     # queried twin and an unqueried index hold
@@ -1920,3 +1921,221 @@ def test_n_postings_on_every_store_shape(spark, corpus_sdf, spark_jobs, tmp_path
     _commit_meta(spark, path, meta)
     legacy = load_blocks(spark, path)
     assert legacy.n_postings == sum_df(legacy) == compacted.n_postings
+
+
+# ------------------------------------------------- direct parquet reads
+
+
+def test_arrow_read_matches_dataset_scan(tmp_path, monkeypatch):
+    """`_arrow_read` (direct reads of the part files through their cached
+    footers) returns the rows a pyarrow dataset scan with the same filter
+    returns: term (string, non-ASCII included) and docid (int64) filters;
+    values below, between and above every row group's range; an empty
+    value list; a row group written without statistics; a nullable and a
+    non-null docid segment read together. A file none of whose row
+    groups may hold a value is not opened."""
+    import types
+
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    from cis555_search_engine_spark.operators.postings_codec import _arrow_read
+
+    def write(d, name, table, **kw):
+        d.mkdir(exist_ok=True)
+        pq.write_table(table, str(d / name), row_group_size=3, **kw)
+
+    # sorted within a file, so each row group of three covers its own range
+    terms = tmp_path / "terms"
+    write(terms, "a.parquet", pa.table({
+        "term": ["apple", "banana", "cherry", "éclair", "élan", "über"],
+        "df": [1, 2, 3, 4, 5, 6],
+    }))
+    write(terms, "b.parquet", pa.table({
+        "term": ["kiwi", "lemon", "mango", "nut", "olive", "pear"], "df": [7, 8, 9, 10, 11, 12],
+    }))
+    write(terms, "c.parquet", pa.table({"term": ["zeta", "zoom", "ß"], "df": [13, 14, 15]}),
+          write_statistics=False)
+    nullable = tmp_path / "seg_nullable"
+    write(nullable, "part-0.parquet", pa.table({
+        "key": ["n0", "n1", "n2", "nx", "n4", "n5"],
+        "docid": pa.array([0, 1, 2, None, 4, 5], pa.int64()),
+    }))
+    required = tmp_path / "seg_required"
+    write(required, "part-0.parquet", pa.table(
+        {"key": ["r10", "r11", "r12", "r13", "r14", "r15"], "docid": list(range(10, 16))},
+        schema=pa.schema([("key", pa.string(), False), ("docid", pa.int64(), False)]),
+    ))
+    assert not pq.read_schema(str(required / "part-0.parquet")).field("docid").nullable
+
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(path, *args, **kwargs):
+        opened.append(os.path.relpath(path, tmp_path))
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    bidx = types.SimpleNamespace(footers={})
+    cases = [
+        # (dirs, columns, filter column, values, files the read opens)
+        ([terms], ["term", "df"], "term", ["aardvark"], ["terms/c.parquet"]),
+        ([terms], ["term", "df"], "term", ["date", "zzz"], ["terms/c.parquet"]),
+        ([terms], ["term", "df"], "term", ["ÿ", "\U0001f600"], ["terms/c.parquet"]),
+        ([terms], ["term", "df"], "term", ["élan", "lemon", "zoom", "nope", "banana"],
+         ["terms/a.parquet", "terms/b.parquet", "terms/c.parquet"]),
+        ([terms], ["df", "term"], "term", ["über"], ["terms/a.parquet", "terms/c.parquet"]),
+        ([terms], ["term", "df"], "term", [], ["terms/c.parquet"]),
+        ([nullable, required], ["key", "docid"], "docid", np.array([-5]), []),
+        ([nullable, required], ["key", "docid"], "docid", np.array([3, 7]), []),
+        ([nullable, required], ["key", "docid"], "docid", np.array([100]), []),
+        ([nullable, required], ["key", "docid"], "docid", np.array([1, 4, 12]),
+         ["seg_nullable/part-0.parquet", "seg_required/part-0.parquet"]),
+        ([required, nullable], ["docid"], "docid", np.array([13, 15]),
+         ["seg_required/part-0.parquet"]),
+        ([nullable, required], ["key", "docid"], "docid", np.empty(0, np.int64), []),
+    ]
+    for dirs, columns, col, values, want_opened in cases:
+        files = sorted(str(f) for d in dirs for f in d.glob("*.parquet"))
+        schema = pa.schema(
+            [pq.read_schema(files[0]).field(c).with_nullable(True) for c in columns]
+        )
+        value_set = pa.array(values, schema.field(col).type)
+        want = pads.dataset(files, schema=schema).to_table(filter=pads.field(col).isin(value_set))
+        _arrow_read(bidx, [str(d) for d in dirs], columns, col, values)  # footers parsed
+        opened.clear()
+        got = _arrow_read(bidx, [str(d) for d in dirs], columns, col, values)
+        what = (col, list(values))
+        assert sorted(opened) == want_opened, what
+        assert got.schema.equals(schema), what
+        order = [(c, "ascending") for c in columns]
+        assert got.sort_by(order).equals(want.sort_by(order)), what
+    (tmp_path / "empty").mkdir()
+    assert _arrow_read(bidx, [str(tmp_path / "empty")], ["docid"], "docid", np.array([1])) is None
+
+
+def test_driver_state_stays_bounded(spark, block_index, spark_jobs, tmp_path):
+    """Fifty driver-path queries over two loaded indexes leave no file
+    open: afterwards the process has as many open descriptors as before
+    them and none into either store. The per-snapshot cache holds parsed
+    parquet footers, not row data."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cis555_search_engine_spark.operators.postings_codec import (
+        _Footer,
+        bm25_topk_blocks,
+        load_blocks,
+        phrase_match_blocks,
+        write_blocks,
+    )
+
+    paths = [str(tmp_path / name) for name in ("one", "two")]
+    for path in paths:
+        write_blocks(block_index, path, n_buckets=8)
+    loaded = [load_blocks(spark, path) for path in paths]
+    queries = [
+        (bm25_topk_blocks, "rice noodle", dict(k=10)),
+        (bm25_topk_blocks, "presidential election", dict(k=5)),
+        (phrase_match_blocks, "waaaa waaaa", {}),
+    ]
+
+    def serve(i):
+        fn, q, kw = queries[i % len(queries)]
+        df = fn(loaded[i % len(loaded)], q, **kw)
+        assert df.collect() and "_jdf" not in df.__dict__, (i, q)
+
+    def open_fds():
+        fds = {}
+        for fd in os.listdir("/proc/self/fd"):
+            try:
+                fds[fd] = os.readlink(f"/proc/self/fd/{fd}")
+            except OSError:  # the listing's own descriptor, closed since
+                pass
+        return fds
+
+    for i in range(len(queries) * len(loaded)):
+        serve(i)  # every footer parsed, every frame schema resolved
+    with spark_jobs() as jobs:
+        before = open_fds()
+        for i in range(50):
+            serve(i)
+        after = open_fds()
+    assert jobs.n == 0
+    assert len(after) == len(before), (before, after)
+    assert not [t for t in after.values() if t.startswith(str(tmp_path))], after
+    for bidx in loaded:
+        assert bidx.footers
+        for footers in bidx.footers.values():
+            for f in footers:
+                assert isinstance(f, _Footer) and isinstance(f.md, pq.FileMetaData)
+                assert not any(isinstance(x, (pa.Table, pa.RecordBatch)) for x in f)
+
+
+def test_footer_pruning_skips_other_segments(
+    spark, corpus_pdf, corpus_sdf, tmp_path, monkeypatch
+):
+    """On an appended and tombstoned store — two segments and a tombstone
+    dir, the maintain workload's shape — a driver-path query whose hits
+    all lie in the first segment equals the oracle and opens fewer docid
+    map files than the store has segments: the appended segment's docid
+    range, read from its footer, holds none of the candidates."""
+    import zlib
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from cis555_search_engine_spark.functions.porter import porter_stem
+    from cis555_search_engine_spark.functions.tokenizer import tokenize_py
+    from cis555_search_engine_spark.operators.index_build import build_index
+    from cis555_search_engine_spark.operators.postings_codec import (
+        append_blocks,
+        bm25_topk_blocks,
+        build_blocks,
+        delete_docs,
+        load_blocks,
+        write_blocks,
+    )
+
+    docs = list(corpus_pdf[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None))
+    in_a = lambda c: zlib.crc32(c.encode()) % 2 == 0  # noqa: E731
+    a_pred = F.crc32(F.col("conv_id").cast("binary")) % 2 == 0
+    dead_pred = F.col("turn_idx") % 7 == 3
+    dead = {(c, t) for c, t, _ in docs if t % 7 == 3}
+    path = str(tmp_path / "store")
+    write_blocks(
+        build_blocks(build_index(corpus_sdf.filter(a_pred), cache=False), 64), path, n_buckets=8
+    )
+    append_blocks(spark, path, build_index(corpus_sdf.filter(~a_pred), cache=False))
+    delete_docs(spark, path, corpus_sdf.filter(dead_pred).select("conv_id", "turn_idx"))
+    bidx = load_blocks(spark, path)
+    assert len(bidx.manifest["data_dirs"]) == 2 and bidx.manifest["tombstone_dirs"]
+
+    # the word of the first segment's docs, absent from the appended
+    # ones, with the most live hits
+    b_stems = {porter_stem(w) for c, _, x in docs if not in_a(c) for w in tokenize_py(x)}
+    hits = {}
+    for c, t, x in docs:
+        for w in set(tokenize_py(x)):
+            if in_a(c) and (c, t) not in dead and porter_stem(w) not in b_stems:
+                hits[w] = hits.get(w, 0) + 1
+    word = max(sorted(hits), key=hits.get)
+    bm25, _ = _oracle_state(docs, dead)
+    want = bm25(word, 10)
+    assert want and all(in_a(c) for c, _, _ in want), word
+
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(source, *args, **kwargs):
+        opened.append(str(source))
+        return real(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    for run in ("footers parsed", "footers cached"):
+        opened.clear()
+        got = [tuple(r) for r in bm25_topk_blocks(bidx, word, k=10).collect()]
+        _check_ranked(got, want, (word, run))
+    maps = [p for p in opened if "/docid_map/" in p]
+    assert 0 < len(maps) < len(bidx.manifest["data_dirs"]), opened
