@@ -847,10 +847,9 @@ def ensure_block_index(spark: SparkSession, sf_dir: str):
     metadata. The returned BlockIndex reads from the bucket-partitioned
     parquet, so each query's scan is pruned to its terms' buckets.
     """
-    import json
     import os
 
-    from .operators.postings_codec import build_blocks, load_blocks, write_blocks
+    from .operators.postings_codec import _read_meta, build_blocks, load_blocks, write_blocks
 
     path = _block_index_path(sf_dir)
     src_mtime = os.path.getmtime(f"{sf_dir}/documents.parquet")
@@ -858,16 +857,14 @@ def ensure_block_index(spark: SparkSession, sf_dir: str):
     cached, cached_mtime = _BLOCK_CACHE.get(skey, (None, None))
     if cached is not None and cached_mtime == src_mtime:
         return cached
-    # mode-agnostic manifest read (fsio): a local open("_meta.json")
-    # would judge a log-mode or non-local (hdfs://, s3a://) store stale
-    # every session and rebuild the whole index per process
-    from . import fsio
-
+    # mode-agnostic manifest read (fsio, through the store's manifest
+    # contract): a local open("_meta.json") would judge a log-mode or
+    # non-local (hdfs://, s3a://) store stale every session and rebuild
+    # the whole index per process; a store written before the segment
+    # layout is stale too, and gets rebuilt
     fresh = False
     try:
-        fresh = json.loads(fsio.read_manifest(spark, path)).get(
-            "source_mtime"
-        ) == src_mtime
+        fresh = _read_meta(spark, path).get("source_mtime") == src_mtime
     except Exception:
         fresh = False
     if not fresh:

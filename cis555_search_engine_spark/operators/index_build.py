@@ -268,6 +268,22 @@ def corpus_stats(
     return stats_from_df(document_frequency(postings), n_docs, n_postings)
 
 
+def merge_corpus_stats(
+    a: DataFrame, b: DataFrame, n_docs: int, n_postings: int
+) -> DataFrame:
+    """The corpus stats of two DISJOINT document sets, merged at the
+    STATS level: df = df_a + df_b over one outer join of the (small)
+    vocabularies, never re-aggregating posting rows, and the idfs
+    recomputed from the merged totals. Shared by merge_indexes and
+    postings_codec.append_blocks."""
+    dfa = a.select("term", F.col("df").alias("dfa"))
+    dfb = b.select("term", F.col("df").alias("dfb"))
+    merged_df = dfa.join(dfb, "term", "full_outer").select(
+        "term", (F.coalesce("dfa", F.lit(0)) + F.coalesce("dfb", F.lit(0))).alias("df")
+    )
+    return stats_from_df(merged_df, n_docs, n_postings)
+
+
 @dataclass
 class InvertedIndex:
     """Materialized index artifacts (all Spark DataFrames) + scalars."""
@@ -299,20 +315,10 @@ def merge_indexes(a: InvertedIndex, b: InvertedIndex) -> InvertedIndex:
     n_postings = a.n_postings + b.n_postings
     total_len = a.avg_doc_len * a.n_docs + b.avg_doc_len * b.n_docs
     avg_len = total_len / n_docs if n_docs else 0.0
-    dfa = a.corpus_stats.select("term", F.col("df").alias("dfa"))
-    dfb = b.corpus_stats.select("term", F.col("df").alias("dfb"))
-    merged_df = (
-        dfa.join(dfb, "term", "full_outer")
-        .select(
-            "term",
-            (F.coalesce("dfa", F.lit(0)) + F.coalesce("dfb", F.lit(0))).alias("df"),
-        )
-    )
-    cstats = stats_from_df(merged_df, n_docs, n_postings)
     return InvertedIndex(
         postings=postings,
         doc_stats=stats,
-        corpus_stats=cstats,
+        corpus_stats=merge_corpus_stats(a.corpus_stats, b.corpus_stats, n_docs, n_postings),
         doc_key=a.doc_key,
         n_docs=n_docs,
         n_postings=n_postings,

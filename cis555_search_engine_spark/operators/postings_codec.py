@@ -43,6 +43,17 @@ Design decisions, all for 10^12-doc scale:
   a file (~2 KB, mostly footer) stays near a tenth of the store; inputs
   of up to 2M docs mint their docids with one window rank.
 
+- **One segment writer, one manifest contract.** `write_blocks`,
+  `append_blocks`, `merge_segments` and `compact_blocks` each write a
+  segment (bucketed blocks + docid map) through `_write_segment` and
+  commit through `_commit`; `_write_segment` refuses a segment without
+  postings before it writes anything (an empty partitioned write leaves
+  a schema-less, unreadable dir). Every reader and op reads the
+  manifest through `_read_meta`, which serves only layout-2 stores
+  with crc32 buckets and every field today's writers record
+  (`data_dirs`, `stats_dir`, `segment_docs`, `n_postings`); an older
+  store raises ValueError naming the field — rebuild it.
+
 - **Two serving paths, one kernel.** A store opened by `load_blocks`
   keeps its path and the manifest it read. A query whose terms the
   Spark path would decode in full anyway — Σdf over the terms (read
@@ -96,8 +107,8 @@ DEFAULT_BLOCK_SPAN = 4096  # docids per block (tune: posting rows per group)
 def _run_concurrent(phases):
     """Run independent Spark jobs concurrently from driver threads.
 
-    ONE definition of the concurrent-phase pattern (append_blocks'
-    segment writes, bm25_topk_blocks' dead/include staging — review r5):
+    ONE definition of the concurrent-phase pattern (`_write_segment`'s
+    writes and its op's phases, bm25_topk_blocks' dead/include staging):
     submits every phase to its own thread, waits for ALL to finish
     (Spark job submission is thread-safe; phases must not share mutable
     driver state), re-raises the first failure after every phase has
@@ -336,14 +347,26 @@ def _bm25_impact(
     return idf * tf * (K1 + 1.0) / denom
 
 
-def _encode_posting_blocks(enriched: DataFrame, avg_len: float, span: int) -> DataFrame:
-    """(term, block_id, docid, tf, doc_len, positions, idf_bm25) rows ->
-    encoded blocks. Native agg first: one row per (term, block) holding
-    the sorted posting structs (sort_array on struct<docid,...> orders by
-    docid). The Python encoder then runs ONCE PER ARROW BATCH over many
-    blocks — a per-group applyInPandas paid one Python roundtrip per
-    block and was ~50x slower at 700k blocks. Shared by build_blocks and
-    compact_blocks so the codec/bounds logic cannot drift."""
+def _encode_posting_blocks(
+    postings: DataFrame, stats: DataFrame, avg_len: float, span: int
+) -> DataFrame:
+    """(term, docid, tf, doc_len, positions) rows + the term stats ->
+    encoded blocks; build_blocks and compact_blocks both hand it this
+    frame, so the codec/bounds logic cannot drift. Each posting gets its
+    term's idf_bm25 (a plain equi-join on the vocab-sized stats: NO
+    forced broadcast — at 100 TB with a permissive tokenizer the
+    vocabulary is ~10^8 terms, multi-GB, and AQE broadcasts it when it
+    is genuinely small) and its block, docid // span. Native agg first:
+    one row per (term, block) holding the sorted posting structs
+    (sort_array on struct<docid,...> orders by docid). The Python
+    encoder then runs ONCE PER ARROW BATCH over many blocks — a
+    per-group applyInPandas paid one Python roundtrip per block and was
+    ~50x slower at 700k blocks."""
+    enriched = postings.join(stats.select("term", "idf_bm25"), "term").select(
+        "term",
+        F.floor(F.col("docid") / span).alias("block_id"),
+        "docid", "tf", "doc_len", "positions", "idf_bm25",
+    )
     grouped = enriched.groupBy("term", "block_id").agg(
         F.sort_array(
             F.collect_list(F.struct("docid", "tf", "doc_len", "positions"))
@@ -420,34 +443,13 @@ def build_blocks(
     has_pos = "positions" in index.postings.columns
     pos_col = F.col("positions") if has_pos else F.array().cast("array<int>")
 
-    enriched = (
+    postings = (
         index.postings.join(docid_map, doc_key)
-        .join(
-            index.doc_stats.select(*doc_key, "doc_len"), doc_key
-        )
-        # NO forced broadcast: corpus_stats is vocab-sized (Heaps' law at
-        # 100 TB with a permissive tokenizer -> ~10^8 terms, multi-GB) —
-        # an unconditional hint would ship it to every task of the
-        # biggest build job. Plain equi-join on term: AQE broadcasts it
-        # when genuinely small, shuffles otherwise (same discipline as
-        # query_ops.py "10^8-term vocabulary" note; serving-path idf
-        # broadcasts stay hinted because they are filtered to the
-        # handful of query terms first).
-        .join(index.corpus_stats.select("term", "idf_bm25"), "term")
-        .select(
-            "term",
-            F.floor(F.col("docid") / block_span).alias("block_id"),
-            "docid",
-            "tf",
-            "doc_len",
-            pos_col.alias("positions"),
-            "idf_bm25",
-        )
+        .join(index.doc_stats.select(*doc_key, "doc_len"), doc_key)
+        .select("term", "docid", "tf", "doc_len", pos_col.alias("positions"))
     )
-
-    blocks = _encode_posting_blocks(enriched, avg_len, block_span)
     return BlockIndex(
-        blocks=blocks,
+        blocks=_encode_posting_blocks(postings, index.corpus_stats, avg_len, block_span),
         docid_map=docid_map,
         corpus_stats=index.corpus_stats,
         doc_key=tuple(doc_key),
@@ -824,16 +826,11 @@ def _local_frame(spark, schema: T.StructType, table: pa.Table | None = None) -> 
 
 def _store_root(bidx: BlockIndex) -> str | None:
     """Local directory of a store the driver path can read, or None: the
-    index was not opened by load_blocks, its manifest predates the
-    segment layout, its buckets are not crc32 (n_buckets is None), or
-    its path is not on the local filesystem (hdfs://, s3a://, ...)."""
+    index was not opened by load_blocks, or its path is not on the local
+    filesystem (hdfs://, s3a://, ...)."""
     from urllib.parse import urlparse
 
-    meta = bidx.manifest
-    if bidx.path is None or meta is None or not bidx.n_buckets:
-        return None
-    dirs = meta.get("data_dirs")
-    if not dirs or "." in dirs or not meta.get("stats_dir"):
+    if bidx.path is None or bidx.manifest is None:
         return None
     url = urlparse(bidx.path)
     if url.scheme not in ("", "file"):
@@ -1125,8 +1122,8 @@ def bm25_topk_blocks(
     the manifest snapshot the index was loaded with (`_driver_topk`):
     0 Spark jobs, and a driver-held result (`_DriverFrame`) whose
     collect()/toArrow() never enter the JVM. Every other query (past the
-    gate, boolean frames, in-memory `build_blocks` indexes, legacy or
-    non-crc32 layouts, non-local paths) takes the Spark path below.
+    gate, boolean frames, in-memory `build_blocks` indexes, non-local
+    paths) takes the Spark path below.
 
     On the Spark path, ``prune=False`` decodes every block
     of every query term (the exhaustive baseline the pruned path is
@@ -1380,12 +1377,11 @@ def _stage(df: DataFrame, eager: bool = True) -> DataFrame:
 
 
 def _bucket_col(n_buckets: int):
-    """The executor-side twin of :func:`term_bucket` — the ONE bucket
-    column expression shared by write_blocks / append_blocks /
-    compact_blocks. Editing the hash or encoding in one writer but not
-    the others (it happened once: xxhash64 -> crc32) desynchronizes the
-    layouts and makes `_term_filter` prune to the wrong partitions —
-    silently empty query results."""
+    """The executor-side twin of :func:`term_bucket`: the one bucket
+    column, which `_write_segment` (the store's one segment writer)
+    partitions by. A writer hashing differently from `term_bucket` (it
+    happened once: xxhash64 -> crc32) makes `_term_filter` prune to the
+    wrong partitions — silently empty query results."""
     return F.pmod(F.crc32(F.encode("term", "utf-8")), F.lit(n_buckets)).alias("bucket")
 
 
@@ -1400,19 +1396,119 @@ def _derived_buckets(n_postings: int) -> int:
     return max(1, min(n_postings // POSTINGS_PER_BUCKET, MAX_BUCKETS))
 
 
-def _write_docid_map(docid_map: DataFrame, n_docs: int, dest: str) -> None:
-    """Write a docid map as one file per ~5M docids, not one per shuffle
-    partition: a map of a few thousand docs otherwise lands as a handful
-    of near-empty files, each a footer to open at every key lookup."""
-    docid_map.coalesce(n_docs // 5_000_000 + 1).write.mode("overwrite").parquet(dest)
+def _segment_tasks(spark, n_buckets: int, n_docs: int, encoded: bool) -> int | None:
+    """Write tasks for the blocks of a segment ADDED to a store
+    (append_blocks, merge_segments); None keeps the source's partitions.
+
+    Added segments are small next to the store (that is why they are
+    added): one task per ~25k docs, at most one per bucket, gives the
+    layout n_buckets files, not shuffle_partitions x n_buckets near-empty
+    ones — per-epoch file-system overhead was a third of the round-3
+    drain's 10x per-doc penalty. The full rewrites (write_blocks,
+    compact_blocks) pass None to `_write_segment` instead and keep many
+    files per bucket on purpose.
+
+    One case keeps its partitions: a one-task segment fresh out of the
+    block ``encoded`` shuffle (an append epoch) while AQE coalesces
+    partitions — the engine folds the tiny post-shuffle stage to a task
+    or two on its own, with the encode still wide. A forced shuffle
+    there is one more job per epoch, and coalesce(1) is a TRAP: it is
+    narrow, so it collapses the groupBy-agg reduce AND the Python block
+    encode into one serial task (measured 0.85 s vs 1.1-2.0 s per drain
+    epoch). A merge's source is a union of file scans, with a partition
+    per file set, so it is always shuffled to its bound."""
+    n_tasks = max(1, min(n_buckets, n_docs // 25_000))
+    aqe = (
+        spark.conf.get("spark.sql.adaptive.enabled", "false").lower(),
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true").lower(),
+    )
+    return None if n_tasks == 1 and encoded and aqe == ("true", "true") else n_tasks
+
+
+def _write_segment(
+    spark,
+    path: str,
+    seg_dir: str,
+    blocks: DataFrame,
+    docid_map: DataFrame,
+    n_docs: int,
+    n_postings: int | None,
+    n_buckets: int,
+    n_tasks: int | None,
+    *phases,
+) -> None:
+    """THE segment writer of the block store (write_blocks, append_blocks,
+    compact_blocks and merge_segments all write through it): under
+    ``path/seg_dir`` it writes the segment's blocks, one ``bucket=b`` dir
+    per crc32 bucket (`_bucket_col`), and its docid map, one file per ~5M
+    docids — a map of a few thousand docs would otherwise land as a
+    handful of near-empty files, each a footer to open at every key
+    lookup. The op's other independent ``phases`` (stats write, probes)
+    run concurrently with both writes (`_run_concurrent`); nothing is
+    live until the op's manifest commit (`_commit`).
+
+    ``n_tasks`` bounds the blocks write (`_segment_tasks`); None keeps
+    the source's partitions.
+
+    A segment with no postings is refused before anything is written:
+    Spark writes no part file for an empty frame, and the schema-less
+    ``blocks`` dir would leave the committed store unreadable.
+    ``n_postings`` is None for a merge of committed segments, each one
+    non-empty by this rule."""
+    if n_postings == 0:
+        raise ValueError(
+            f"refusing to write an empty segment to the block store at {path}: "
+            f"the index holds no postings (no document has an indexable token); "
+            f"nothing was written and the store is unchanged"
+        )
+    src = blocks.withColumn("bucket", _bucket_col(n_buckets))
+    if n_tasks is not None:
+        src = src.repartition(n_tasks, "bucket")
+
+    def write_blocks_dir() -> None:
+        src.write.mode("overwrite").partitionBy("bucket").parquet(f"{path}/{seg_dir}/blocks")
+
+    def write_map() -> None:
+        docid_map.coalesce(n_docs // 5_000_000 + 1).write.mode("overwrite").parquet(
+            f"{path}/{seg_dir}/docid_map"
+        )
+
+    _run_concurrent([write_blocks_dir, write_map, *phases])
+
+
+# what every manifest records since the segment layout (layout 2): a
+# manifest without one of these, or with another value where one is
+# given, was written by a layout no reader here serves
+_MANIFEST_CONTRACT = {
+    "layout": 2,
+    "bucket_fn": "crc32",
+    "data_dirs": None,
+    "stats_dir": None,
+    "segment_docs": None,
+    "n_postings": None,
+}
 
 
 def _read_meta(spark, path: str) -> dict:
+    """The store's committed manifest — the one contract every reader and
+    maintenance op reads the store through. A manifest that lacks a
+    field of `_MANIFEST_CONTRACT`, or is not layout 2 with crc32 buckets
+    (a root-layout, xxhash64-bucketed or pre-``n_postings`` store),
+    raises ValueError naming the field, before any op writes a dir."""
     import json
 
     from .. import fsio
 
-    return json.loads(fsio.read_manifest(spark, path))
+    meta = json.loads(fsio.read_manifest(spark, path))
+    for name, want in _MANIFEST_CONTRACT.items():
+        if name not in meta or want not in (None, meta[name]):
+            got = "is missing" if name not in meta else f"is {meta[name]!r}, not {want!r}"
+            raise ValueError(
+                f"block store at {path}: manifest field {name!r} {got}; the store "
+                f"predates the segment layout (layout 2, crc32 buckets) — "
+                f"rebuild it with write_blocks"
+            )
+    return meta
 
 
 def _commit_meta(spark, path: str, meta: dict) -> None:
@@ -1435,10 +1531,39 @@ def _commit_meta(spark, path: str, meta: dict) -> None:
     fsio.write_manifest(spark, path, json.dumps(meta))
 
 
-def _manifest_dirs(meta: dict) -> list[str]:
-    """Data-dir names of a manifest; legacy (round-2, layout 1) stores
-    kept blocks/docid_map at the root, represented here as '.'."""
-    return list(meta.get("data_dirs", ["."]))
+def _applied(meta: dict, marker: str | None) -> bool:
+    """Whether the exactly-once ``marker`` of an epoch is in the
+    manifest: the epoch's op already committed, so a crash-redelivered
+    epoch must change nothing (append_blocks, delete_docs and the
+    streaming sink all check here)."""
+    return marker is not None and marker in meta.get("applied_epochs", [])
+
+
+def _commit(
+    spark, path: str, meta: dict, marker: str | None = None, vacuum: bool = False
+) -> None:
+    """Commit ``meta`` as the store's manifest (`_commit_meta`), with the
+    op's exactly-once ``marker`` in the SAME commit, then vacuum when
+    asked. The marker list keeps the newest APPLIED_EPOCHS_KEEP markers:
+    engine redelivery only replays the latest uncommitted batches, while
+    an unbounded list grows the manifest by one marker per epoch forever
+    (a per-minute stream adds ~525k strings/year, reread and rewritten
+    at every commit)."""
+    if marker is not None:
+        eps = [*meta.get("applied_epochs", []), marker]
+        meta["applied_epochs"] = eps[-APPLIED_EPOCHS_KEEP:]
+    _commit_meta(spark, path, meta)
+    if vacuum:
+        vacuum_blocks(spark, path)
+
+
+def _union_read(spark, dirs: list[str]) -> DataFrame:
+    """One frame over parquet ``dirs``, read dir by dir and unioned by
+    name — NOT one multi-path read: each segment's blocks are their own
+    partitioned (bucket=b) layout, which Spark's multi-root partition
+    discovery rejects as conflicting. Filters push through the union
+    into every child scan."""
+    return functools.reduce(DataFrame.unionByName, [spark.read.parquet(d) for d in dirs])
 
 
 def vacuum_blocks(spark, path: str) -> None:
@@ -1450,18 +1575,13 @@ def vacuum_blocks(spark, path: str) -> None:
     from .. import fsio
 
     meta = _read_meta(spark, path)
-    if "data_dirs" not in meta:
-        return  # legacy layout: root dirs ARE the data; nothing to sweep
     keep = (
         set(meta["data_dirs"])
         | set(meta.get("tombstone_dirs", []))
-        | {meta.get("stats_dir"), "_meta.json"}
+        | {meta["stats_dir"], "_meta.json"}
         # log-mode manifests: keep the newest few for in-flight readers
         | fsio.manifest_log_names_to_keep(spark, path)
     )
-    if "." in keep:
-        # a migrated legacy store serves its original root-level dirs
-        keep |= {"blocks", "docid_map"}
     for child in fsio.list_children(spark, path):
         if child not in keep:
             fsio.delete(spark, f"{path}/{child}")
@@ -1529,13 +1649,18 @@ def write_blocks(
     and `compact_blocks`, a full rewrite, derives it afresh.
 
     Layout 2 (manifest store): data lands in a FRESH uniquely-named
-    segment dir + stats dir, then ONE atomic manifest commit
-    (`_commit_meta`) makes them live — a rebuild over an existing store
-    can never tear it, and readers of the old manifest keep a complete
-    old layout until a vacuum. NOTE: by default this function vacuums
-    immediately after its commit (the single-writer, no-concurrent-
-    reader case); pass ``vacuum=False`` when old-manifest readers may
-    be in flight and run `vacuum_blocks` after a grace period.
+    segment dir (`_write_segment`) + stats dir, then ONE atomic manifest
+    commit (`_commit_meta`) makes them live — a rebuild over an existing
+    store can never tear it, and readers of the old manifest keep a
+    complete old layout until a vacuum. NOTE: by default this function
+    vacuums immediately after its commit (the single-writer,
+    no-concurrent-reader case); pass ``vacuum=False`` when old-manifest
+    readers may be in flight and run `vacuum_blocks` after a grace
+    period.
+
+    An index without postings (e.g. a corpus of turns with no indexable
+    token) raises ValueError before anything is written: a store over
+    an existing path keeps its last committed manifest and data.
     """
     from .. import fsio
 
@@ -1550,13 +1675,14 @@ def write_blocks(
     n_postings = bidx.n_postings
     if n_buckets is None:
         n_buckets = _derived_buckets(n_postings)
-    (
-        bidx.blocks.withColumn("bucket", _bucket_col(n_buckets))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/{data_dir}/blocks")
+    _write_segment(
+        spark, path, data_dir, bidx.blocks, bidx.docid_map, bidx.n_docs, n_postings,
+        n_buckets, None,
     )
-    _write_docid_map(bidx.docid_map, bidx.n_docs, f"{path}/{data_dir}/docid_map")
+    # after the segment, not beside it: the blocks' encode fills a
+    # built index's cached term stats, and a concurrent stats write
+    # would make the build's job plan depend on which job reached that
+    # cache first
     _write_stats(bidx.corpus_stats, f"{path}/{stats_dir}", n_terms_hint=n_postings)
 
     tombstone_dirs: list[str] = []
@@ -1604,9 +1730,7 @@ def write_blocks(
         "segment_docs": {data_dir: bidx.n_docs},
     }
     meta.update(extra_meta or {})
-    _commit_meta(spark, path, meta)
-    if vacuum:
-        vacuum_blocks(spark, path)
+    _commit(spark, path, meta, vacuum=vacuum)
 
 
 def append_blocks(
@@ -1614,7 +1738,6 @@ def append_blocks(
     path: str,
     new_index: InvertedIndex,
     applied_marker: str | None = None,
-    check_new_keys: bool = True,
 ) -> None:
     """Incrementally append a new document segment to a PERSISTED block
     index — the north rule's posting-list merge as index MAINTENANCE,
@@ -1622,13 +1745,13 @@ def append_blocks(
 
     - New docids continue the dense sequence (offset = current n_docs),
       so new postings land in NEW (term, block) groups — no existing
-      blob is touched; the blocks parquet grows by appended bucket
-      files only.
+      blob is touched; the segment is one more dir written by
+      `_write_segment`, at most one write task per ~25k docs.
     - Corpus stats merge at the STATS level (df = df_old + df_new via
-      one vocab outer join, idfs recomputed from merged totals — the
-      same algebra as index_build.merge_indexes, oracle-proved by the
-      `merge_stats` driver query); n_postings is recovered exactly as
-      Σdf.
+      one vocab outer join, idfs recomputed from merged totals —
+      `index_build.merge_corpus_stats`, which merge_indexes shares,
+      oracle-proved by the `merge_stats` driver query); n_postings is
+      the manifest's total plus the segment's.
     - Stored per-block `max_impact` values were computed under the OLD
       global stats, so the metadata records ``stale_bounds``: pruning
       switches to the max_tf-derived bound under current idf (see
@@ -1636,6 +1759,10 @@ def append_blocks(
       EXACT. `compact_blocks` restores the tight bounds; query RESULTS
       are identical either way because scoring always recomputes impacts
       from (tf, doc_len) + merged stats.
+    - Appends are key-disjoint by contract (an update is delete + append
+      + compact): a key already live in the store raises ValueError.
+    - An index without postings adds no segment; only its
+      ``applied_marker``, if any, commits.
 
     ``applied_marker`` (used by streaming_index_maintenance) rides in
     the SAME manifest commit that makes the segment live, so the append
@@ -1648,38 +1775,39 @@ def append_blocks(
     leaves only an orphan that `vacuum_blocks` sweeps.
     """
     from .. import fsio
+    from .index_build import merge_corpus_stats
 
     meta = _read_meta(spark, path)
-    if applied_marker is not None and applied_marker in meta.get("applied_epochs", []):
+    if _applied(meta, applied_marker):
         # crash-redelivered epoch: the append already committed — the
         # exactly-once contract must hold INSIDE this function (a caller
         # retrying after a post-commit failure would otherwise re-append
         # the same docs at a new offset: duplicate docids, doubled
-        # scores). delete_docs has the same guard.
+        # scores)
         return
-    if list(new_index.doc_key) != list(meta["doc_key"]):
-        raise ValueError(f"doc_key mismatch: {new_index.doc_key} vs {meta['doc_key']}")
-    # fail fast on keys already in the store: appends are key-disjoint
-    # by contract (an update is delete + append) — without this check a
-    # re-sent document silently gets a SECOND docid (appears twice in
-    # top-k, double-counted in df/n_docs). Shape: the store's docid map
-    # semi-joined against the broadcast incoming key set, short-circuited
-    # at the first collision — one scan of the map per append.
-    # ``check_new_keys=False`` skips it for callers whose input is
-    # already exactly-once by construction (the streaming maintenance
-    # path: checkpointed file consumption + epoch markers) — there the
-    # per-epoch map scan is pure overhead on the drain's fixed cost.
     key = list(new_index.doc_key)
+    if key != list(meta["doc_key"]):
+        raise ValueError(f"doc_key mismatch: {new_index.doc_key} vs {meta['doc_key']}")
+    if new_index.n_postings == 0:
+        # nothing to add (`_write_segment` refuses an empty segment);
+        # the epoch still counts as applied, like a delete of no new docs
+        if applied_marker is not None:
+            _commit(spark, path, meta, applied_marker)
+        return
 
-    def _collision_scan() -> None:
-        existing_maps = [f"{path}/{d}/docid_map" for d in _manifest_dirs(meta)]
-        live = spark.read.parquet(*existing_maps)
+    def collision_scan() -> None:
+        # fail fast on keys already in the store: without this check a
+        # re-sent document silently gets a SECOND docid (appears twice
+        # in top-k, double-counted in df/n_docs). The store's docid map
+        # semi-joined against the incoming key set, short-circuited at
+        # the first collision — one scan of the map per append
+        live = _union_read(spark, [f"{path}/{d}/docid_map" for d in meta["data_dirs"]])
         tomb_dirs = meta.get("tombstone_dirs", [])
         if tomb_dirs:
             # tombstoned keys stay in the map until compaction but are
             # NOT live — re-appending them is exactly the documented
             # update path (delete -> append -> compact), so no collision
-            dead = spark.read.parquet(*[f"{path}/{d}" for d in tomb_dirs])
+            dead = _union_read(spark, [f"{path}/{d}" for d in tomb_dirs])
             live = live.join(dead.select("docid"), "docid", "left_anti")
         collisions = (
             live.join(
@@ -1698,164 +1826,82 @@ def append_blocks(
                 f"key-disjoint — tombstone the old version first (delete_docs), "
                 f"then append, then compact"
             )
-    old_stats_dir = meta.get("stats_dir")
-    old_stats_path = (
-        f"{path}/{old_stats_dir}" if old_stats_dir else f"{path}/corpus_stats"
-    )
-    old_stats = spark.read.parquet(old_stats_path)
-    n_old_postings = _manifest_postings(meta, old_stats)
 
+    probes = [collision_scan]
     offset = int(meta["n_docs"])
-    key_cols = list(new_index.doc_key)
-    null_probe = None
-    if 0 < new_index.n_docs <= SMALL_MINT_DOCS:
+    if new_index.n_docs <= SMALL_MINT_DOCS:
         # epoch-scale fast path: mint_doc_ids' small-input rank, without
         # its count job — the index already knows n_docs, and the
-        # null-key check runs as a concurrent phase below. LAZY stage:
+        # null-key check runs as a concurrent phase. LAZY stage:
         # whichever concurrent phase touches the map first materializes
         # it (ONE partition by construction; Spark persists whole
         # partitions on first compute) — no separate staging job on the
         # drain's per-epoch fixed cost
-        new_map = _stage(
-            _rank_docids(new_index.doc_stats, key_cols, key_cols, offset), eager=False
-        )
+        new_map = _stage(_rank_docids(new_index.doc_stats, key, key, offset), eager=False)
         # same null-key contract as mint_doc_ids (a null key has no
-        # place in the total order); runs as one of the concurrent
-        # phases below — like the collision guard, it fires before the
-        # manifest commit, so a violation leaves only orphan dirs
-        null_cond = functools.reduce(
-            lambda a, b: a | b, [F.col(c).isNull() for c in key_cols]
-        )
+        # place in the total order); like the collision guard, it fires
+        # before the manifest commit, so a violation leaves only orphan
+        # dirs
+        null_cond = functools.reduce(lambda a, b: a | b, [F.col(c).isNull() for c in key])
 
         def null_probe() -> None:
             if new_map.filter(null_cond).limit(1).count():
                 raise ValueError(
                     f"append_blocks: rows have null doc-key components "
-                    f"{tuple(key_cols)}; drop or repair them upstream"
+                    f"{tuple(key)}; drop or repair them upstream"
                 )
+
+        probes.append(null_probe)
     else:
-        new_map = mint_doc_ids(new_index.doc_stats, new_index.doc_key).withColumn(
+        new_map = mint_doc_ids(new_index.doc_stats, key).withColumn(
             "docid", F.col("docid") + offset
         )
     seg = build_blocks(new_index, block_span=int(meta["block_span"]), docid_map=new_map)
     n_buckets = int(meta["n_buckets"])
-    bucket = _bucket_col(n_buckets)
-    data_dirs = _manifest_dirs(meta)
+    data_dirs = meta["data_dirs"]
     seg_dir = fsio.new_segment_name("seg", len(data_dirs))
-
-    def _write_seg_blocks() -> None:
-        # appended segments are SMALL relative to the store (that is why
-        # they are appends): bound the WRITE tasks by segment size so the
-        # layout gets n_buckets files, not shuffle_partitions x n_buckets
-        # near-empty ones — per-epoch file-system overhead was a third of
-        # the round-3 drain's 10x per-doc penalty. An epoch-sized segment
-        # gets ONE write task emitting all bucket dirs (dynamic
-        # partitionBy); encode parallelism is unaffected (mapInPandas
-        # runs upstream of this shuffle). The full-build path
-        # (write_blocks) keeps many files per bucket on purpose.
-        n_tasks = max(1, min(n_buckets, new_index.n_docs // 25_000))
-        src = seg.blocks.withColumn("bucket", bucket)
-        if n_tasks == 1:
-            # epoch-sized segment. coalesce(1) is a TRAP here: it is
-            # narrow, so it collapses the whole stage ABOVE it — the
-            # groupBy-agg reduce AND the Python block encode run in one
-            # serial task (~1 s of pandas work measured per drain epoch).
-            # With AQE partition-coalescing on, do nothing: the engine
-            # folds the tiny post-shuffle stage to 1-2 tasks on its own
-            # (same file count, encode stays wide — measured 0.85 s vs
-            # 1.1-2.0 s for coalesce(1) on an epoch-sized segment).
-            # Without AQE, shuffle the ENCODED blobs (a few hundred KB)
-            # to one writer — the round-trip is trivial at this size and
-            # the encode keeps its upstream parallelism.
-            aqe = (
-                spark.conf.get("spark.sql.adaptive.enabled", "false").lower(),
-                spark.conf.get(
-                    "spark.sql.adaptive.coalescePartitions.enabled", "true"
-                ).lower(),
-            )
-            if aqe != ("true", "true"):
-                src = src.repartition(1)
-        else:
-            src = src.repartition(n_tasks, "bucket")
-        (
-            src.write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{path}/{seg_dir}/blocks")
-        )
-
-    def _write_seg_map() -> None:
-        _write_docid_map(new_map, new_index.n_docs, f"{path}/{seg_dir}/docid_map")
-
-    # stats-level merge (never re-aggregates posting rows)
-    n_docs = offset + new_index.n_docs
-    n_postings = n_old_postings + new_index.n_postings
-    total_len = float(meta["avg_doc_len"]) * offset + new_index.avg_doc_len * new_index.n_docs
-    avg_len = total_len / n_docs if n_docs else 0.0
     stats_dir = fsio.new_segment_name("stats", len(data_dirs))
+    n_docs = offset + new_index.n_docs
+    n_postings = int(meta["n_postings"]) + new_index.n_postings
+    total_len = float(meta["avg_doc_len"]) * offset + new_index.avg_doc_len * new_index.n_docs
 
-    def _write_seg_stats() -> None:
-        dfa = old_stats.select("term", F.col("df").alias("dfa"))
-        dfb = new_index.corpus_stats.select("term", F.col("df").alias("dfb"))
-        from .index_build import stats_from_df
-
-        merged = stats_from_df(
-            dfa.join(dfb, "term", "full_outer").select(
-                "term",
-                (F.coalesce("dfa", F.lit(0)) + F.coalesce("dfb", F.lit(0))).cast("long").alias("df"),
-            ),
-            n_docs,
-            n_postings,
-        )
-        # merged stats land in a fresh versioned dir; the old version stays
-        # live (and readable by in-flight queries) until the manifest flips
+    def write_stats() -> None:
+        # merged stats land in a fresh versioned dir; the old version
+        # stays live (and readable by in-flight queries) until the
+        # manifest flips
+        old_stats = spark.read.parquet(f"{path}/{meta['stats_dir']}")
+        merged = merge_corpus_stats(old_stats, new_index.corpus_stats, n_docs, n_postings)
         _write_stats(merged, f"{path}/{stats_dir}", n_terms_hint=n_postings)
 
-    # The four phases above are INDEPENDENT Spark jobs that all consume
-    # only staged inputs (postings/new_map are materialized; old stats /
-    # old maps are on disk) — run them concurrently so the append's wall
-    # time is the slowest phase, not the sum (the drain's per-epoch fixed
-    # cost was ~10 serial jobs; round-4 verdict item 7). Nothing is live
-    # until the single manifest commit below, so a phase failure — the
-    # collision guard included — leaves only unlisted orphan dirs, which
-    # the next vacuum sweeps. Disclosed tradeoff vs the old serial order:
-    # the collision guard no longer gates the segment writes, so a
-    # REJECTED append pays the full encode+write before the raise and
-    # strands its seg-*/stats-* dirs until a vacuum (collisions are the
+    # The segment writes, the stats write and the probes are INDEPENDENT
+    # Spark jobs over staged inputs (postings/new_map are materialized;
+    # old stats / old maps are on disk), run concurrently so the append's
+    # wall time is the slowest phase, not the sum (the drain's per-epoch
+    # fixed cost was ~10 serial jobs; round-4 verdict item 7). Nothing is
+    # live until the single manifest commit below, so a phase failure —
+    # the collision guard included — leaves only unlisted orphan dirs,
+    # which the next vacuum sweeps. The tradeoff: a REJECTED append pays
+    # the full encode+write before the raise (collisions are the
     # exceptional path; every clean epoch saves the serial guard's
     # latency). Committed state is untouched either way.
-    phases = [_write_seg_blocks, _write_seg_map, _write_seg_stats]
-    if null_probe is not None:
-        phases.append(null_probe)
-    if check_new_keys:
-        phases.append(_collision_scan)
-    _run_concurrent(phases)
-
-    seg_docs = dict(meta.get("segment_docs", {}))
-    seg_docs[seg_dir] = int(new_index.n_docs)
+    _write_segment(
+        spark, path, seg_dir, seg.blocks, new_map, new_index.n_docs, new_index.n_postings,
+        n_buckets, _segment_tasks(spark, n_buckets, new_index.n_docs, encoded=True),
+        write_stats, *probes,
+    )
     meta.update(
         {
-            "layout": 2,
             "data_dirs": data_dirs + [seg_dir],
             "stats_dir": stats_dir,
             "n_docs": n_docs,
             "n_postings": n_postings,
-            "avg_doc_len": avg_len,
+            "avg_doc_len": total_len / n_docs,
             "stale_bounds": True,
             "key_ordered": False,
-            "segment_docs": seg_docs,
+            "segment_docs": {**meta["segment_docs"], seg_dir: int(new_index.n_docs)},
         }
     )
-    if applied_marker is not None:
-        eps = meta.setdefault("applied_epochs", [])
-        eps.append(applied_marker)
-        # bounded idempotence window: engine redelivery only ever
-        # replays the most recent uncommitted batches, so the newest
-        # markers suffice — an UNBOUNDED list grows the manifest by one
-        # marker per epoch forever (a per-minute stream adds ~525k
-        # strings/year and rereads+rewrites them all every commit)
-        if len(eps) > APPLIED_EPOCHS_KEEP:
-            meta["applied_epochs"] = eps[-APPLIED_EPOCHS_KEEP:]
-    _commit_meta(spark, path, meta)  # the ONE atomic commit
+    _commit(spark, path, meta, applied_marker)  # the ONE atomic commit
     # NO post-commit deletes here: a reader that loaded the OLD manifest
     # keeps a complete layout (including the superseded stats dir) until
     # an explicit vacuum_blocks / compact_blocks — eager deletion would
@@ -1890,11 +1936,11 @@ def delete_docs(spark, path: str, doc_keys: DataFrame, applied_marker: str | Non
     """
     from .. import fsio
 
-    meta = _read_meta(spark, path)
-    if applied_marker is not None and applied_marker in meta.get("applied_epochs", []):
-        return 0  # crash-redelivered epoch: delete already committed
     bidx = load_blocks(spark, path)
-    dk = list(meta["doc_key"])
+    meta = bidx.manifest
+    if _applied(meta, applied_marker):
+        return 0  # crash-redelivered epoch: delete already committed
+    dk = list(bidx.doc_key)
     tomb = (
         bidx.docid_map.join(doc_keys.select(*dk).dropDuplicates(dk), dk, "left_semi")
         .select("docid")
@@ -1912,17 +1958,7 @@ def delete_docs(spark, path: str, doc_keys: DataFrame, applied_marker: str | Non
         tombstone_dirs.append(del_dir)
     meta["tombstone_dirs"] = tombstone_dirs
     meta["n_deleted"] = int(meta.get("n_deleted", 0)) + n_new
-    if applied_marker is not None:
-        eps = meta.setdefault("applied_epochs", [])
-        eps.append(applied_marker)
-        # bounded idempotence window: engine redelivery only ever
-        # replays the most recent uncommitted batches, so the newest
-        # markers suffice — an UNBOUNDED list grows the manifest by one
-        # marker per epoch forever (a per-minute stream adds ~525k
-        # strings/year and rereads+rewrites them all every commit)
-        if len(eps) > APPLIED_EPOCHS_KEEP:
-            meta["applied_epochs"] = eps[-APPLIED_EPOCHS_KEEP:]
-    _commit_meta(spark, path, meta)  # the ONE atomic commit
+    _commit(spark, path, meta, applied_marker)  # the ONE atomic commit
     return n_new
 
 
@@ -1953,7 +1989,12 @@ def compact_blocks(spark, path: str, vacuum: bool = True) -> None:
     postings (Σtf per doc, row counts per term), so a compacted store is
     bit-equal in stats to `build_blocks` over the surviving corpus — not
     merely close (the append path's float stats merge can drift an ULP;
-    this recompute cannot).
+    this recompute cannot). The survivors are re-encoded by the encoder
+    `build_blocks` uses, from the same (term, docid, tf, doc_len,
+    positions) rows, and written by `_write_segment` as one segment.
+
+    A store whose every document is tombstoned, or whose survivors hold
+    no postings, raises ValueError and keeps serving as it is.
 
     The rewritten layout goes live via ONE atomic manifest commit (old
     segments keep serving until it), then `vacuum_blocks` sweeps them —
@@ -1961,9 +2002,9 @@ def compact_blocks(spark, path: str, vacuum: bool = True) -> None:
     readers may be in flight and vacuum after a grace period.
     """
     from .. import fsio
+    from .index_build import stats_from_df
 
     bidx = load_blocks(spark, path)
-    meta = _read_meta(spark, path)
     dk = list(bidx.doc_key)
     span = bidx.block_span
 
@@ -1980,11 +2021,6 @@ def compact_blocks(spark, path: str, vacuum: bool = True) -> None:
     new_map = mint_doc_ids(live_map.select(*dk), dk)
     n_docs = new_map.count()
     if n_docs == 0:
-        # a fully-tombstoned store compacts to NOTHING: Spark writes no
-        # parquet part files for an empty partitioned frame, so the
-        # compacted layout would be unreadable (schema-less dirs). Fail
-        # loudly and keep serving the (empty-by-tombstones) store as-is
-        # instead of bricking it.
         raise ValueError(
             "compact_blocks: every document is tombstoned; an empty store "
             "cannot be compacted in place — keep serving via tombstones or "
@@ -2010,71 +2046,34 @@ def compact_blocks(spark, path: str, vacuum: bool = True) -> None:
         remapped.select("docid", "doc_len").distinct()
         .agg(F.sum("doc_len").alias("tl")).collect()[0]
     )
-    avg_len = (float(tot["tl"] or 0)) / n_docs if n_docs else 0.0
+    avg_len = float(tot["tl"] or 0) / n_docs
     dff = remapped.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
     n_postings = int(dff.agg(F.sum("df")).collect()[0][0] or 0)
-    if n_postings == 0:
-        # same hazard as the n_docs==0 guard above (ADVICE r3): docs may
-        # survive with ZERO postings (every surviving doc empty), and an
-        # empty partitioned blocks frame writes no part files — the
-        # committed layout would be schema-less and unreadable
-        raise ValueError(
-            "compact_blocks: no postings survive compaction; an empty "
-            "blocks layout cannot be written — keep serving via "
-            "tombstones or delete the store directory instead"
-        )
-    from .index_build import stats_from_df
-
     stats = stats_from_df(dff, n_docs, n_postings)
-
-    enriched = (
-        # vocab-sized frame: no forced broadcast (see build_blocks note)
-        remapped.join(stats.select("term", "idf_bm25"), "term")
-        .select(
-            "term",
-            F.floor(F.col("docid") / span).alias("block_id"),
-            "docid", "tf", "doc_len", "positions", "idf_bm25",
-        )
-    )
-    blocks = _encode_posting_blocks(enriched, avg_len, span)
+    new_dir = fsio.new_segment_name("seg", 0)
+    stats_dir = fsio.new_segment_name("stats", 0)
     # a full rewrite: the fan-out is sized to what survives (write_blocks)
     n_buckets = _derived_buckets(n_postings)
-    new_dir = fsio.new_segment_name("seg", 0)
-    (
-        blocks.withColumn("bucket", _bucket_col(n_buckets))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/{new_dir}/blocks")
+    _write_segment(
+        spark, path, new_dir, _encode_posting_blocks(remapped, stats, avg_len, span),
+        new_map, n_docs, n_postings, n_buckets, None,
+        lambda: _write_stats(stats, f"{path}/{stats_dir}", n_terms_hint=n_postings),
     )
-    # consolidated re-minted docid map lands in the compacted dir
-    _write_docid_map(new_map, n_docs, f"{path}/{new_dir}/docid_map")
-    stats_dir = fsio.new_segment_name("stats", 0)
-    _write_stats(stats, f"{path}/{stats_dir}", n_terms_hint=n_postings)
-    meta.update(
-        {
-            "layout": 2,
-            "data_dirs": [new_dir],
-            "stats_dir": stats_dir,
-            "n_docs": n_docs,
-            "n_postings": n_postings,
-            "avg_doc_len": avg_len,
-            "stale_bounds": False,  # bounds recomputed under exact stats
-            "key_ordered": True,    # re-minted in doc_key order
-            "tombstone_dirs": [],   # purged physically
-            "n_deleted": 0,
-            # the bucket metadata must describe what THIS rewrite wrote:
-            # a pre-crc32 store (bucket_fn != crc32 -> n_buckets=None on
-            # load) is re-bucketed crc32 here, and carrying the old
-            # values forward would permanently disable bucket pruning on
-            # correctly bucketed data
-            "n_buckets": n_buckets,
-            "bucket_fn": "crc32",
-            "segment_docs": {new_dir: int(n_docs)},
-        }
-    )
-    _commit_meta(spark, path, meta)
-    if vacuum:
-        vacuum_blocks(spark, path)
+    meta = {
+        **bidx.manifest,
+        "data_dirs": [new_dir],
+        "stats_dir": stats_dir,
+        "n_docs": n_docs,
+        "n_postings": n_postings,
+        "avg_doc_len": avg_len,
+        "stale_bounds": False,  # bounds recomputed under exact stats
+        "key_ordered": True,    # re-minted in doc_key order
+        "tombstone_dirs": [],   # purged physically
+        "n_deleted": 0,
+        "n_buckets": n_buckets,
+        "segment_docs": {new_dir: int(n_docs)},
+    }
+    _commit(spark, path, meta, vacuum=vacuum)
 
 
 def merge_segments(
@@ -2087,12 +2086,13 @@ def merge_segments(
     Docid-neutral and stats-neutral by construction: appended segments
     own disjoint docid ranges and the manifest's stats are already
     global, so a merge only re-writes the subset's blocks + docid_map
-    rows into one consolidated dir (bounded write tasks, one file set
-    instead of one per epoch) and swaps the manifest's data_dirs — no
-    decode, no re-mint, no stats math, tombstones untouched. Duplicate
-    (term, block_id) boundary rows across the merged segments remain
-    separate rows; `decode_blocks` already unions them exactly, and a
-    full `compact_blocks` folds them when tight bounds are wanted.
+    rows into one consolidated dir (`_write_segment`, bounded write
+    tasks, one file set instead of one per epoch) and swaps the
+    manifest's data_dirs — no decode, no re-mint, no stats math,
+    tombstones untouched. Duplicate (term, block_id) boundary rows
+    across the merged segments remain separate rows; `decode_blocks`
+    already unions them exactly, and a full `compact_blocks` folds them
+    when tight bounds are wanted.
 
     Why it matters at scale: a per-minute streaming append creates
     ~525k segment dirs/year; every query's planner lists ALL of them
@@ -2109,74 +2109,38 @@ def merge_segments(
     from .. import fsio
 
     meta = _read_meta(spark, path)
-    data_dirs = _manifest_dirs(meta)
+    data_dirs = meta["data_dirs"]
     dirs = list(seg_dirs)
     if len(dirs) < 2:
         raise ValueError(f"merge needs >= 2 segment dirs, got {dirs}")
-    if "." in dirs:
-        raise ValueError(
-            "legacy root-layout stores cannot merge segments; run "
-            "compact_blocks to migrate to the manifest layout first"
-        )
     missing = [d for d in dirs if d not in data_dirs]
     if missing:
         raise ValueError(f"segment dirs not in manifest: {missing}")
     if len(set(dirs)) != len(dirs):
         raise ValueError(f"duplicate segment dirs in merge set: {dirs}")
 
-    seg_docs = dict(meta.get("segment_docs", {}))
-    merged_docs = 0
-    for d in dirs:
-        n = seg_docs.get(d)
-        if n is None:
-            # pre-policy store: one count backfills the manifest entry
-            n = spark.read.parquet(f"{path}/{d}/docid_map").count()
-        merged_docs += int(n)
-
-    def _union(sub: str) -> DataFrame:
-        # per-dir reads + unionByName, NOT one multi-path read: each
-        # segment is its own partitioned (bucket=N) layout, and Spark's
-        # multi-root partition discovery rejects that as conflicting
-        # (the same shape load_blocks serves from)
-        frames = [spark.read.parquet(f"{path}/{d}/{sub}") for d in dirs]
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
-        return out
-
-    blocks = _union("blocks")
-    maps = _union("docid_map")
+    merged_docs = sum(int(meta["segment_docs"][d]) for d in dirs)
     new_dir = fsio.new_segment_name("seg", len(data_dirs))
-    n_buckets = int(meta.get("n_buckets") or 16)
-    # bounded rewrite tasks, sized like the append path's segment write:
-    # merged segments are epoch-scale until the top tiers — one task per
-    # ~25k docs, capped at one per bucket
-    n_tasks = max(1, min(n_buckets, merged_docs // 25_000))
-    (
-        blocks.repartition(n_tasks, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/{new_dir}/blocks")
+    n_buckets = int(meta["n_buckets"])
+    _write_segment(
+        spark, path, new_dir,
+        _union_read(spark, [f"{path}/{d}/blocks" for d in dirs]),
+        _union_read(spark, [f"{path}/{d}/docid_map" for d in dirs]),
+        merged_docs, None, n_buckets,
+        _segment_tasks(spark, n_buckets, merged_docs, encoded=False),
     )
-    _write_docid_map(maps, merged_docs, f"{path}/{new_dir}/docid_map")
-
     # replace the FIRST merged dir in place (order preserved), drop the
     # rest — reader unions are order-insensitive, but a stable order
     # keeps manifests diffable
-    merged_set = set(dirs)
-    new_list: list[str] = []
-    for d in data_dirs:
-        if d == dirs[0]:
-            new_list.append(new_dir)
-        elif d not in merged_set:
-            new_list.append(d)
-    for d in dirs:
-        seg_docs.pop(d, None)
-    seg_docs[new_dir] = merged_docs
-    meta.update({"data_dirs": new_list, "segment_docs": seg_docs})
-    _commit_meta(spark, path, meta)
-    if vacuum:
-        vacuum_blocks(spark, path)
+    merged = set(dirs)
+    meta["data_dirs"] = [
+        new_dir if d == dirs[0] else d for d in data_dirs if d == dirs[0] or d not in merged
+    ]
+    meta["segment_docs"] = {
+        **{d: n for d, n in meta["segment_docs"].items() if d not in merged},
+        new_dir: merged_docs,
+    }
+    _commit(spark, path, meta, vacuum=vacuum)
     return new_dir
 
 
@@ -2193,24 +2157,16 @@ def plan_tiered_merges(
     accumulates ``merge_at`` segments — oldest first, within-tier append
     order preserved.
 
-    Pure manifest arithmetic (integer tiering, no float log): zero Spark
-    jobs when ``segment_docs`` is present (every store written since the
-    policy landed); pre-policy stores pay one docid_map count per
-    unlabeled segment, after which merge_segments re-records the entry.
-    Returns a list of merge groups (each a list of segment dir names);
-    empty when the store is within policy.
+    Pure manifest arithmetic over ``segment_docs`` (integer tiering, no
+    float log): zero Spark jobs. Returns a list of merge groups (each a
+    list of segment dir names); empty when the store is within policy.
     """
     meta = _read_meta(spark, path)
-    data_dirs = _manifest_dirs(meta)
-    if "." in data_dirs or len(data_dirs) < merge_at:
+    if len(meta["data_dirs"]) < merge_at:
         return []
-    seg_docs = meta.get("segment_docs", {})
     tiers: dict[int, list[str]] = {}
-    for d in data_dirs:
-        n = seg_docs.get(d)
-        if n is None:
-            n = spark.read.parquet(f"{path}/{d}/docid_map").count()
-        t, x = 0, int(n) // min_tier_docs
+    for d in meta["data_dirs"]:
+        t, x = 0, int(meta["segment_docs"][d]) // min_tier_docs
         while x > 0:
             t += 1
             x //= tier_factor
@@ -2252,15 +2208,6 @@ def tiered_merge(
     return done
 
 
-def _manifest_postings(meta: dict, stats: DataFrame) -> int:
-    """The store's posting total: the manifest's ``n_postings``, or —
-    for a legacy (pre-round-4) manifest without it — Σdf over its stats,
-    one agg."""
-    if "n_postings" in meta:
-        return int(meta["n_postings"])
-    return int(stats.agg(F.sum("df")).collect()[0][0] or 0)
-
-
 def load_blocks(spark, path: str) -> "BlockIndex":
     """Reopen a persisted block index. The returned BlockIndex's
     `blocks` carry the `bucket` column; `bm25_topk_blocks` adds a
@@ -2269,68 +2216,38 @@ def load_blocks(spark, path: str) -> "BlockIndex":
 
     Reads ONLY manifest-listed data dirs: orphaned segment directories
     from crashed appends are invisible (the exactly-once guarantee's
-    read side). Multiple segments union per-scan — the bucket/term
-    filters push through the Union into every child scan.
+    read side). Multiple segments union per-scan (`_union_read`) — the
+    bucket/term filters push through the Union into every child scan.
+    The manifest must meet the store's contract (`_read_meta`): a store
+    written before the segment layout raises ValueError.
 
     The index also keeps ``path`` and the ``manifest`` dict read here:
     the driver serving path reads exactly this committed snapshot, with
     no per-query manifest read.
     """
     meta = _read_meta(spark, path)
-    bucket_fn = meta.get("bucket_fn", None)
-    n_buckets = meta["n_buckets"]
-    if bucket_fn != "crc32":
-        # a layout bucketed under a different/unknown hash MUST NOT be
-        # pruned with crc32-computed buckets (silently empty results);
-        # fall back to unpruned-but-correct full scans
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "block index at %s uses bucket_fn=%r (expected crc32); "
-            "disabling bucket pruning", path, bucket_fn,
-        )
-        n_buckets = None
-
-    def union_read(sub: str) -> DataFrame:
-        frames = [
-            spark.read.parquet(f"{path}/{d}/{sub}" if d != "." else f"{path}/{sub}")
-            for d in _manifest_dirs(meta)
-        ]
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
-        return out
-
-    stats_dir = meta.get("stats_dir")
-    stats_path = f"{path}/{stats_dir}" if stats_dir else f"{path}/corpus_stats"
-    tombstones = None
     tdirs = meta.get("tombstone_dirs", [])
-    if tdirs:
-        frames = [spark.read.parquet(f"{path}/{d}") for d in tdirs]
-        tombstones = frames[0]
-        for fr in frames[1:]:
-            tombstones = tombstones.unionByName(fr)
-        if len(tdirs) > 1:
-            # stage the multi-dir union ONCE at open (ADVICE r3): each
-            # query consults the dead set twice (seed-θ and final
-            # scoring), so an unstaged N-dir union re-scans every delete
-            # epoch's parquet 2x per query — per-query overhead growing
-            # with delete epochs until compaction. The set is docids
-            # only (bounded by n_docs); dirs are disjoint by
-            # construction (delete_docs anti-joins already-tombstoned
-            # ids), so no distinct is needed.
-            tombstones = _stage(tombstones)
-    stats = spark.read.parquet(stats_path)
+    tombstones = _union_read(spark, [f"{path}/{d}" for d in tdirs]) if tdirs else None
+    if len(tdirs) > 1:
+        # stage the multi-dir union ONCE at open (ADVICE r3): each
+        # query consults the dead set twice (seed-θ and final
+        # scoring), so an unstaged N-dir union re-scans every delete
+        # epoch's parquet 2x per query — per-query overhead growing
+        # with delete epochs until compaction. The set is docids
+        # only (bounded by n_docs); dirs are disjoint by
+        # construction (delete_docs anti-joins already-tombstoned
+        # ids), so no distinct is needed.
+        tombstones = _stage(tombstones)
     return BlockIndex(
-        blocks=union_read("blocks"),
-        docid_map=union_read("docid_map"),
-        corpus_stats=stats,
+        blocks=_union_read(spark, [f"{path}/{d}/blocks" for d in meta["data_dirs"]]),
+        docid_map=_union_read(spark, [f"{path}/{d}/docid_map" for d in meta["data_dirs"]]),
+        corpus_stats=spark.read.parquet(f"{path}/{meta['stats_dir']}"),
         doc_key=tuple(meta["doc_key"]),
         n_docs=meta["n_docs"],
-        n_postings=_manifest_postings(meta, stats),
+        n_postings=int(meta["n_postings"]),
         avg_doc_len=meta["avg_doc_len"],
         block_span=meta["block_span"],
-        n_buckets=n_buckets,
+        n_buckets=meta["n_buckets"],
         stale_bounds=bool(meta.get("stale_bounds", False)),
         key_ordered=bool(meta.get("key_ordered", True)),
         tombstones=tombstones,

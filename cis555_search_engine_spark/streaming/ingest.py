@@ -157,7 +157,7 @@ def streaming_index_maintenance(
     maintenance ticks.
     """
     from ..operators.index_build import build_index
-    from ..operators.postings_codec import _read_meta, append_blocks, vacuum_blocks
+    from ..operators.postings_codec import _applied, _read_meta, append_blocks, vacuum_blocks
 
     # the marker key must be stable across restarts: URIs (s3a://...,
     # hdfs://...) pass through verbatim (abspath would mangle them into
@@ -172,8 +172,7 @@ def streaming_index_maintenance(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         marker = f"{ckpt_key}:{int(epoch_id)}"
         spark = batch_df.sparkSession
-        meta = _read_meta(spark, index_path)
-        if marker in meta.get("applied_epochs", []):
+        if _applied(_read_meta(spark, index_path), marker):
             return  # crash-redelivered epoch: append already committed
         # cache="checkpoint": the epoch's postings materialize ONCE
         # (eager localCheckpoint, GC-released) instead of re-running the
@@ -194,13 +193,11 @@ def streaming_index_maintenance(
             # on EVERY non-empty epoch (per-epoch fixed cost, verdict r4
             # item 7); empty epochs are the rare case, not the hot one
             return
-        # key-collision scan stays ON: the streaming checkpoint dedups
-        # input FILES, not doc keys — a producer re-emitting a turn in a
-        # LATER file would silently double-index it with the scan off
-        # (the file-level exactly-once guard cannot see it). The scan is
-        # one docid-map pass per epoch; producers that guarantee
-        # key-disjoint arrivals can call append_blocks directly with
-        # check_new_keys=False.
+        # append_blocks' key-collision scan matters here: the streaming
+        # checkpoint dedups input FILES, not doc keys — a producer
+        # re-emitting a turn in a LATER file would otherwise be silently
+        # double-indexed (the file-level exactly-once guard cannot see
+        # it). The scan is one docid-map pass per epoch.
         append_blocks(spark, index_path, idx, applied_marker=marker)
         if counters is not None:
             # per-tick applied-epoch count from the sink itself (ADVICE

@@ -250,9 +250,12 @@ def test_write_load_blocks_bucketed(
 ):
     """An explicit n_buckets is honoured. By default write_blocks sizes
     the bucket fan-out to the store's postings and writes one docid-map
-    file; append_blocks keeps the manifest's fan-out and compact_blocks
-    derives it afresh. On each store the driver path and the Spark path
-    over the persisted buckets answer as the oracle does."""
+    file; append_blocks and merge_segments keep the manifest's fan-out
+    and compact_blocks derives it afresh. On this small store every
+    write — fresh, an epoch-sized append, a merge, a compaction — leaves
+    one part file per bucket=b dir and one docid-map file per segment.
+    On each store the driver path and the Spark path over the persisted
+    buckets answer as the oracle does."""
     import dataclasses
     import glob
     import zlib
@@ -267,6 +270,7 @@ def test_write_load_blocks_bucketed(
         build_blocks,
         compact_blocks,
         load_blocks,
+        merge_segments,
         phrase_match_blocks,
         write_blocks,
     )
@@ -293,7 +297,9 @@ def test_write_load_blocks_bucketed(
         bidx = load_blocks(spark, path)
         assert bidx.n_buckets == bidx.manifest["n_buckets"] == n_buckets, what
         for seg in bidx.manifest["data_dirs"]:
-            assert 1 <= len(glob.glob(f"{path}/{seg}/blocks/bucket=*")) <= n_buckets, what
+            buckets = glob.glob(f"{path}/{seg}/blocks/bucket=*")
+            assert 1 <= len(buckets) <= n_buckets, what
+            assert [len(glob.glob(f"{b}/*.parquet")) for b in buckets] == [1] * len(buckets), what
             assert len(glob.glob(f"{path}/{seg}/docid_map/*.parquet")) == 1, what
         bm25, phrase = _oracle_state(docs_in)
         for served in (bidx, dataclasses.replace(bidx, manifest=None)):
@@ -313,6 +319,8 @@ def test_write_load_blocks_bucketed(
     check(fresh, [d for d in docs if zlib.crc32(d[0].encode()) % 2 == 0], "fresh")
     append_blocks(spark, path, build_index(corpus_sdf.filter(~a_pred), cache=False))
     check(fresh, docs, "appended")
+    merge_segments(spark, path, load_blocks(spark, path).manifest["data_dirs"])
+    check(fresh, docs, "merged")
     compact_blocks(spark, path)
     check(_derived_buckets(spark_index.n_postings), docs, "compacted")
 
@@ -899,6 +907,138 @@ def test_compact_refuses_fully_tombstoned_store(spark, corpus_sdf, tmp_path):
     assert bm25_topk_blocks(bidx, "rice noodle", k=5).count() == 0
 
 
+def _tokenless_index(spark, conv_id):
+    """An index over turns that hold no indexable token."""
+    from cis555_search_engine_spark.operators.index_build import build_index
+
+    rows = [(conv_id, 0, "12345"), (conv_id, 1, None)]
+    idx = build_index(
+        spark.createDataFrame(rows, "conv_id string, turn_idx int, text string"), cache=False
+    )
+    assert idx.n_postings == 0
+    return idx
+
+
+def _answers(spark, path):
+    from cis555_search_engine_spark.operators.postings_codec import (
+        bm25_topk_blocks,
+        load_blocks,
+    )
+
+    return [tuple(r) for r in bm25_topk_blocks(load_blocks(spark, path), "rice noodle", k=10).collect()]
+
+
+def test_write_blocks_refuses_empty_segment(spark, corpus_sdf, tmp_path):
+    """A write of an index without postings raises before anything is
+    written: over an existing store, the store keeps its manifest and
+    data and still answers as before; at a new path, nothing appears."""
+    from pyspark.sql import functions as F
+
+    from cis555_search_engine_spark.operators.index_build import build_index
+    from cis555_search_engine_spark.operators.postings_codec import (
+        _read_meta,
+        build_blocks,
+        write_blocks,
+    )
+
+    path = str(tmp_path / "store")
+    some = corpus_sdf.filter(F.crc32(F.col("conv_id").cast("binary")) % 3 == 0)
+    write_blocks(build_blocks(build_index(some, cache=False), block_span=64), path)
+    before, meta, children = _answers(spark, path), _read_meta(spark, path), set(os.listdir(path))
+    assert before
+
+    empty = build_blocks(_tokenless_index(spark, "zz-empty"), block_span=64)
+    with pytest.raises(ValueError, match="empty segment"):
+        write_blocks(empty, path)
+    assert _read_meta(spark, path) == meta and set(os.listdir(path)) == children
+    assert _answers(spark, path) == before
+
+    fresh = str(tmp_path / "fresh")
+    with pytest.raises(ValueError, match="empty segment"):
+        write_blocks(empty, fresh)
+    assert not os.path.exists(fresh)
+
+
+def test_append_of_empty_index_commits_no_segment(spark, corpus_sdf, tmp_path):
+    """An append of an index without postings adds no segment: without a
+    marker it commits nothing, with one it commits only the marker (a
+    redelivery of that epoch is then skipped); the store still answers
+    as before."""
+    from pyspark.sql import functions as F
+
+    from cis555_search_engine_spark.operators.index_build import build_index
+    from cis555_search_engine_spark.operators.postings_codec import (
+        _read_meta,
+        append_blocks,
+        build_blocks,
+        write_blocks,
+    )
+
+    path = str(tmp_path / "store")
+    some = corpus_sdf.filter(F.crc32(F.col("conv_id").cast("binary")) % 3 == 0)
+    write_blocks(build_blocks(build_index(some, cache=False), block_span=64), path)
+    before, meta = _answers(spark, path), _read_meta(spark, path)
+
+    append_blocks(spark, path, _tokenless_index(spark, "zz-empty"))
+    assert _read_meta(spark, path) == meta
+    append_blocks(spark, path, _tokenless_index(spark, "zz-empty"), applied_marker="ep:7")
+    after = _read_meta(spark, path)
+    assert after.pop("applied_epochs") == ["ep:7"]
+    assert after == meta
+    other = corpus_sdf.filter(F.crc32(F.col("conv_id").cast("binary")) % 3 == 1)
+    append_blocks(spark, path, build_index(other, cache=False), applied_marker="ep:7")
+    assert _read_meta(spark, path)["data_dirs"] == meta["data_dirs"]
+    assert _answers(spark, path) == before
+
+
+def test_manifest_contract_refuses_old_layouts(spark, corpus_sdf, tmp_path):
+    """A manifest written before the segment layout — layout 1 (no
+    data_dirs), xxhash64 buckets, no stats_dir — is refused: every
+    reader and maintenance op raises ValueError naming the field, and
+    none of them writes a dir."""
+    from pyspark.sql import functions as F
+
+    from cis555_search_engine_spark.operators.index_build import build_index
+    from cis555_search_engine_spark.operators.postings_codec import (
+        _commit_meta,
+        _read_meta,
+        append_blocks,
+        build_blocks,
+        compact_blocks,
+        delete_docs,
+        load_blocks,
+        merge_segments,
+        write_blocks,
+    )
+
+    pred = F.crc32(F.col("conv_id").cast("binary")) % 3
+    path = str(tmp_path / "store")
+    write_blocks(build_blocks(build_index(corpus_sdf.filter(pred == 0), cache=False), 64), path)
+    append_blocks(spark, path, build_index(corpus_sdf.filter(pred == 1), cache=False))
+    meta = _read_meta(spark, path)
+    incoming = build_index(corpus_sdf.filter(pred == 2), cache=False)
+    keys = corpus_sdf.filter(pred == 0).select("conv_id", "turn_idx")
+    ops = {
+        "load_blocks": lambda: load_blocks(spark, path),
+        "append_blocks": lambda: append_blocks(spark, path, incoming),
+        "delete_docs": lambda: delete_docs(spark, path, keys),
+        "merge_segments": lambda: merge_segments(spark, path, meta["data_dirs"]),
+        "compact_blocks": lambda: compact_blocks(spark, path),
+    }
+    variants = {
+        "data_dirs": {k: v for k, v in meta.items() if k != "data_dirs"},
+        "bucket_fn": {**meta, "bucket_fn": "xxhash64"},
+        "stats_dir": {k: v for k, v in meta.items() if k != "stats_dir"},
+    }
+    for field, old in variants.items():
+        _commit_meta(spark, path, old)
+        children = sorted(os.listdir(path))
+        for name, op in ops.items():
+            with pytest.raises(ValueError, match=f"'{field}'.*rebuild"):
+                op()
+            assert sorted(os.listdir(path)) == children, (field, name)
+
+
 def test_impact_ordered_build_same_results_better_pruning(spark, spark_index, block_index):
     """Docid reordering for block-max WAND (mint_doc_ids order_cols):
     an impact-ordered build must return IDENTICAL top-k (doc_key, score)
@@ -1188,7 +1328,6 @@ def test_merge_segments_physical_only(spark, corpus_sdf, tmp_path):
 
     from cis555_search_engine_spark.operators.index_build import build_index
     from cis555_search_engine_spark.operators.postings_codec import (
-        _manifest_dirs,
         _read_meta,
         append_blocks,
         bm25_topk_blocks,
@@ -1211,7 +1350,7 @@ def test_merge_segments_physical_only(spark, corpus_sdf, tmp_path):
     for q in quarters[1:]:
         append_blocks(spark, path, build_index(q, cache=False))
     meta = _read_meta(spark, path)
-    dirs = _manifest_dirs(meta)
+    dirs = meta["data_dirs"]
     assert len(dirs) == 4
     assert set(meta["segment_docs"]) == set(dirs)
 
@@ -1229,7 +1368,7 @@ def test_merge_segments_physical_only(spark, corpus_sdf, tmp_path):
     # merge the three appended segments (dirs[1:]) into one
     new_dir = merge_segments(spark, path, dirs[1:])
     meta2 = _read_meta(spark, path)
-    dirs2 = _manifest_dirs(meta2)
+    dirs2 = meta2["data_dirs"]
     assert dirs2 == [dirs[0], new_dir]
     assert set(meta2["segment_docs"]) == set(dirs2)
     assert sum(meta2["segment_docs"].values()) == meta2["n_docs"]
@@ -1263,7 +1402,6 @@ def test_merge_segments_validation(spark, corpus_sdf, tmp_path):
 
     from cis555_search_engine_spark.operators.index_build import build_index
     from cis555_search_engine_spark.operators.postings_codec import (
-        _manifest_dirs,
         _read_meta,
         append_blocks,
         build_blocks,
@@ -1280,7 +1418,7 @@ def test_merge_segments_validation(spark, corpus_sdf, tmp_path):
         n_buckets=4,
     )
     append_blocks(spark, path, build_index(half_b, cache=False))
-    dirs = _manifest_dirs(_read_meta(spark, path))
+    dirs = _read_meta(spark, path)["data_dirs"]
     with pytest.raises(ValueError, match=">= 2"):
         merge_segments(spark, path, dirs[:1])
     with pytest.raises(ValueError, match="not in manifest"):
@@ -1299,7 +1437,6 @@ def test_tiered_merge_policy_fixpoint(spark, tmp_path):
 
     from cis555_search_engine_spark.operators.index_build import build_index
     from cis555_search_engine_spark.operators.postings_codec import (
-        _manifest_dirs,
         _read_meta,
         append_blocks,
         bm25_topk_blocks,
@@ -1322,7 +1459,7 @@ def test_tiered_merge_policy_fixpoint(spark, tmp_path):
     )
     for p in parts[1:]:
         append_blocks(spark, path, build_index(p, cache=False))
-    assert len(_manifest_dirs(_read_meta(spark, path))) == 9
+    assert len(_read_meta(spark, path)["data_dirs"]) == 9
 
     # every epoch-sized segment sits in tier 0 (all < 1024 docs), so the
     # plan proposes floor(9/3) = 3 merges at merge_at=3
@@ -1334,7 +1471,7 @@ def test_tiered_merge_policy_fixpoint(spark, tmp_path):
     # one tier up together) may cascade into one — fixpoint leaves < 3
     # segments per tier
     assert n >= 3
-    dirs = _manifest_dirs(_read_meta(spark, path))
+    dirs = _read_meta(spark, path)["data_dirs"]
     assert len(dirs) < 9
     assert not plan_tiered_merges(spark, path, merge_at=3)
 
@@ -1363,7 +1500,6 @@ def test_merge_segments_with_tombstones(spark, corpus_sdf, tmp_path):
 
     from cis555_search_engine_spark.operators.index_build import build_index
     from cis555_search_engine_spark.operators.postings_codec import (
-        _manifest_dirs,
         _read_meta,
         append_blocks,
         bm25_topk_blocks,
@@ -1392,10 +1528,10 @@ def test_merge_segments_with_tombstones(spark, corpus_sdf, tmp_path):
     n_dead = delete_docs(spark, path, dead_keys)
     assert n_dead > 0
 
-    dirs = _manifest_dirs(_read_meta(spark, path))
+    dirs = _read_meta(spark, path)["data_dirs"]
     merge_segments(spark, path, dirs)
     meta = _read_meta(spark, path)
-    assert len(_manifest_dirs(meta)) == 1
+    assert len(meta["data_dirs"]) == 1
     assert meta["n_deleted"] == n_dead and meta["tombstone_dirs"]
 
     merged = load_blocks(spark, path)
@@ -1855,9 +1991,9 @@ def test_snapshot_datasets_stay_inside_their_snapshot(spark, corpus_pdf, corpus_
 def test_n_postings_on_every_store_shape(spark, corpus_sdf, spark_jobs, tmp_path):
     """``BlockIndex.n_postings`` is the store's posting total on every
     store shape — in memory, fresh, appended, tombstoned, tiered-merged,
-    compacted, reloaded from a legacy manifest without the field, and
-    re-persisted from a loaded index: it equals Σdf of the store's stats
-    and the manifest's ``n_postings``. write_blocks reads it instead of
+    compacted and re-persisted from a loaded index: it equals Σdf of the
+    store's stats and the manifest's ``n_postings``; a manifest without
+    the field is refused on load. write_blocks reads it instead of
     re-aggregating, so it runs no Σdf job and no range-sampling job for
     a small term dictionary: over staged blocks it runs one job per file
     set it writes."""
@@ -1915,12 +2051,12 @@ def test_n_postings_on_every_store_shape(spark, corpus_sdf, spark_jobs, tmp_path
     compacted = check(path, "compacted")
     assert compacted.n_postings < tombstoned.n_postings  # tombstones purged
 
-    # a legacy manifest without the field: recovered as Σdf on load
+    # a manifest without the field predates the store's contract
     meta = _read_meta(spark, path)
     del meta["n_postings"]
     _commit_meta(spark, path, meta)
-    legacy = load_blocks(spark, path)
-    assert legacy.n_postings == sum_df(legacy) == compacted.n_postings
+    with pytest.raises(ValueError, match="n_postings"):
+        load_blocks(spark, path)
 
 
 # ------------------------------------------------- direct parquet reads

@@ -159,7 +159,7 @@ def main() -> None:
         "epochs_applied": int(tick_counters.get("epochs_applied", 0)),
         "stale_bounds": bidx.stale_bounds,
         "tier_merges": n_merges,
-        "n_segments": len(meta.get("data_dirs", ["."])),
+        "n_segments": len(meta["data_dirs"]),
         "wall_s": round(time.perf_counter() - t0, 3),
     }))
     spark.stop()

@@ -40,7 +40,6 @@ def main() -> None:
 
     from cis555_search_engine_spark.operators.index_build import build_index
     from cis555_search_engine_spark.operators.postings_codec import (
-        _manifest_dirs,
         _read_meta,
         append_blocks,
         bm25_topk_blocks,
@@ -96,7 +95,7 @@ def main() -> None:
                 )
                 t_merge = time.perf_counter() - t0
             meta = _read_meta(spark, path)
-            n_seg = len(_manifest_dirs(meta))
+            n_seg = len(meta["data_dirs"])
             # cold reopen (fresh manifest + file listing), warm queries
             bidx = load_blocks(spark, path)
             lats = []
