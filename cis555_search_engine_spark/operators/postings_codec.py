@@ -54,17 +54,24 @@ Design decisions, all for 10^12-doc scale:
   (`data_dirs`, `stats_dir`, `segment_docs`, `n_postings`); an older
   store raises ValueError naming the field — rebuild it.
 
-- **Two serving paths, one kernel.** A store opened by `load_blocks`
-  keeps its path and the manifest it read. A query whose terms the
+- **Two serving paths, one kernel.** `load_blocks` opens a store as a
+  `StoreSnapshot` of the manifest it read, and reads the index's Spark
+  frames with the schemas the footers record, so that opening runs no
+  Spark job (up to 32 bucket dirs a segment). A query whose terms the
   Spark path would decode in full anyway — Σdf over the terms (read
   from the term dictionary) below ``min_prune_postings``, or a store of
   at most max(seed_blocks, 4) blocks — is served in the driver from
-  that manifest snapshot: pyarrow reads the row groups of the terms'
-  bucket files that their parquet footers (parsed once per loaded
-  index) say may hold the terms, numpy decodes, scores and takes the
-  top-k, and the result is a driver-held frame whose collect() never
-  enters the JVM (0 Spark jobs). Everything else runs as Spark jobs,
-  its Python inside Arrow-batched pandas UDFs.
+  that snapshot. The snapshot holds the term dictionary, the docid maps
+  and the tombstones in driver memory, each read once on first use when
+  its parquet bytes are at most `HOLD_MAX_BYTES`, so such a query opens
+  parquet only for its terms' bucket files, and there only the row
+  groups their footers (parsed once per snapshot) say may hold the
+  terms. numpy decodes, scores and takes the top-k, and the result is a
+  driver-held frame whose collect() never enters the JVM (0 Spark
+  jobs). A structure over the bound is read per query in the same
+  footer-pruned way.
+  Everything else runs as Spark jobs, its Python inside Arrow-batched
+  pandas UDFs.
   Both paths decode with `decode_blocks_arrays` and score with
   `_bm25_impact`, over whole blocks — no per-row Python (north rule).
 """
@@ -72,6 +79,7 @@ Design decisions, all for 10^12-doc scale:
 from __future__ import annotations
 
 import functools
+import json
 import os
 from bisect import bisect_left
 from dataclasses import dataclass, field
@@ -486,18 +494,16 @@ class BlockIndex:
     #                               after decode, compact_blocks purges
     #                               them physically (Lucene's live-docs
     #                               bitmap, re-expressed relationally)
-    path: str | None = None       # store root and the manifest load_blocks
-    manifest: dict | None = None  # read: the snapshot the driver-side
-    #                               serving path reads from (None for
-    #                               in-memory build_blocks indexes)
-    footers: dict[tuple[str, str], list["_Footer"]] = field(
-        default_factory=dict, repr=False, compare=False
-    )                             # the driver path's parsed parquet
-    #                               footers per (manifest dir, filter
-    #                               column), read on first use: metadata
-    #                               only, never row data or open files;
-    #                               sound because commits only add fresh
-    #                               uuid-named dirs
+    snapshot: "StoreSnapshot | None" = field(default=None, repr=False, compare=False)
+    #                               the committed store state load_blocks
+    #                               opened (None for in-memory build_blocks
+    #                               indexes): the driver path reads only
+    #                               through it
+
+    @property
+    def manifest(self) -> dict | None:
+        """The manifest the index was loaded with (None in memory)."""
+        return None if self.snapshot is None else self.snapshot.manifest
 
     def cache(self) -> "BlockIndex":
         self.blocks = self.blocks.cache()
@@ -756,21 +762,34 @@ def _prune_live_blocks(
 # ------------------------------------------------------- driver serving
 #
 # A query the Spark path would decode in full anyway (see the gate in
-# `_driver_idf`) is answered in the driver process straight from the
-# loaded store's committed files: the term dictionary gives df/idf, the
-# terms' bucket directories give the blobs, and the result is a
-# driver-held frame (`_DriverFrame`) — its collect() crosses no JVM
-# boundary and runs no Spark job. Each read opens the snapshot's parquet
-# files directly, through footers parsed once per loaded index
-# (`_snapshot_footers`), and skips the files and row groups whose
-# min/max statistics exclude every wanted term or docid. Decode and the
-# BM25 partial are the same functions the Spark path runs in its tasks.
+# `_driver_idf`) is answered in the driver process from the snapshot of
+# the loaded store (`StoreSnapshot`): the term dictionary gives df/idf,
+# the terms' bucket directories give the blobs, the docid maps give the
+# keys, and the result is a driver-held frame (`_DriverFrame`) — its
+# collect() crosses no JVM boundary and runs no Spark job. The term
+# dictionary, the docid maps and the tombstones are held by the snapshot
+# when they are small (`HOLD_MAX_BYTES`); every other read opens the
+# snapshot's parquet files directly, through footers parsed once per
+# loaded index (`_snapshot_footers`), and skips the files and row groups
+# whose min/max statistics exclude every wanted term or docid. Decode and
+# the BM25 partial are the same functions the Spark path runs in its
+# tasks.
 
+# parquet bytes (the uncompressed column-chunk sizes the footers record)
+# up to which a snapshot holds each of its three read-side structures —
+# the term dictionary, the docid maps, the tombstones — in driver memory,
+# read once on first use. A structure over the bound is read per query,
+# footer-pruned (`_arrow_read`). The bound is on parquet bytes, not
+# memory: a held docid map takes ~2.7x its parquet bytes (26 B a key
+# against 9.8 B), so 4 MiB holds ~430k keys in ~11 MB, about a tenth of
+# the driver's Python RSS. Measured on a 500k-turn store (5.2 MB of map
+# parquet in one row group, 4 vCPU), a held key lookup of 1-80 docids
+# takes 0.1 ms and a footer-pruned one 24-37 ms, so holding pays at any
+# size; the bound caps memory.
+HOLD_MAX_BYTES = 4 << 20
 
-def _result_schema(bidx: BlockIndex, *extra: T.StructField) -> T.StructType:
-    """(doc_key..., *extra) with the key fields typed as in the docid map."""
-    key_schema = bidx.docid_map.schema
-    return T.StructType([key_schema[c] for c in bidx.doc_key] + list(extra))
+# the Spark schema a Spark parquet writer records in every file's footer
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class _DriverFrame(ClassicDataFrame):
@@ -813,29 +832,30 @@ class _DriverFrame(ClassicDataFrame):
         return self._table
 
 
-def _local_frame(spark, schema: T.StructType, table: pa.Table | None = None) -> DataFrame:
+def _local_frame(
+    spark, schema: T.StructType, table: pa.Table | None = None,
+    arrow_schema: pa.Schema | None = None,
+) -> DataFrame:
     """A `_DriverFrame` over driver-held rows (``None``: no rows), cast
-    once to the Arrow form of ``schema``. Its JVM frame, if a caller
-    needs one, is built from this Arrow table: ``createDataFrame`` over
-    a Python list or an EMPTY pandas frame would run a Python-worker
-    job (~0.5 s)."""
-    arrow_schema = to_arrow_schema(schema)
+    once to ``arrow_schema``, the Arrow form of ``schema`` (derived when
+    not given). Its JVM frame, if a caller needs one, is built from this
+    Arrow table: ``createDataFrame`` over a Python list or an EMPTY pandas
+    frame would run a Python-worker job (~0.5 s)."""
+    if arrow_schema is None:
+        arrow_schema = to_arrow_schema(schema)
     table = arrow_schema.empty_table() if table is None else table.cast(arrow_schema)
     return _DriverFrame(spark, schema, table)
 
 
-def _store_root(bidx: BlockIndex) -> str | None:
-    """Local directory of a store the driver path can read, or None: the
-    index was not opened by load_blocks, or its path is not on the local
-    filesystem (hdfs://, s3a://, ...)."""
+def _local_root(path: str) -> str | None:
+    """Local directory of the store at ``path``, or None when it is not
+    on the local filesystem (hdfs://, s3a://, ...)."""
     from urllib.parse import urlparse
 
-    if bidx.path is None or bidx.manifest is None:
-        return None
-    url = urlparse(bidx.path)
+    url = urlparse(path)
     if url.scheme not in ("", "file"):
         return None
-    root = url.path if url.scheme else bidx.path
+    root = url.path if url.scheme else path
     return root if os.path.isdir(root) else None
 
 
@@ -874,27 +894,42 @@ def _row_group_bounds(md: pq.FileMetaData, col: str) -> list[tuple | None]:
     return out
 
 
-def _snapshot_footers(bidx: BlockIndex, d: str, col: str) -> list[_Footer]:
+def _snapshot_footers(snap: "StoreSnapshot", d: str, col: str) -> list[_Footer]:
     """The footers of manifest dir ``d``'s parquet part files, with the
     row-group bounds of ``col`` (empty: an empty dir, or the absent
     ``bucket=b`` dir of a segment where no term hashes to b), parsed once
-    per loaded index. A snapshot's dirs never change — every commit
-    writes fresh uuid-named dirs — so the file list and footers stay
-    valid for the index's lifetime, until a vacuum deletes them: any
-    other missing dir raises `FileNotFoundError` rather than reading as
-    empty. Two threads missing at once each parse equal footers; either
-    may stay."""
+    per snapshot. A snapshot's dirs never change — every commit writes
+    fresh uuid-named dirs — so the file list and footers stay valid for
+    the index's lifetime, until a vacuum deletes them: any other missing
+    dir raises `FileNotFoundError` rather than reading as empty. Two
+    threads missing at once each parse equal footers; either may stay."""
     key = (d, col)
-    if key not in bidx.footers:
+    if key not in snap.footers:
         if _gone(d):
             raise _vacuumed(d)
         files = [os.path.join(d, f) for f in sorted(os.listdir(d))
                  if not f.startswith((".", "_"))] if os.path.isdir(d) else []
         mds = [pq.read_metadata(f) for f in files]
-        bidx.footers[key] = [
+        snap.footers[key] = [
             _Footer(f, md, _row_group_bounds(md, col)) for f, md in zip(files, mds)
         ]
-    return bidx.footers[key]
+    return snap.footers[key]
+
+
+def _written_schema(d: str) -> T.StructType:
+    """The Spark schema the writer of local parquet dir ``d`` recorded in
+    the footer of its first part file, as a Spark read types it: every
+    field nullable, and a bucketed blocks dir's ``bucket`` partition
+    column last, as an int."""
+    def first(src: str) -> str:
+        return f"{src}/" + min(n for n in os.listdir(src) if not n.startswith((".", "_")))
+
+    buckets = [n for n in os.listdir(d) if n.startswith("bucket=")]
+    md = pq.read_metadata(first(f"{d}/{min(buckets)}" if buckets else d))
+    fields = T.StructType.fromJson(json.loads(md.metadata[_SPARK_SCHEMA_KEY])).fields
+    if buckets:
+        fields.append(T.StructField("bucket", T.IntegerType()))
+    return T.StructType([T.StructField(f.name, f.dataType, True, f.metadata) for f in fields])
 
 
 def _holds(vals, bound: tuple | None) -> bool:
@@ -907,11 +942,12 @@ def _holds(vals, bound: tuple | None) -> bool:
 
 
 def _arrow_read(
-    bidx: BlockIndex, dirs: list[str], columns: list[str], col: str, values
+    snap: "StoreSnapshot", dirs: list[str], columns: list[str], col: str, values=None
 ) -> pa.Table | None:
     """The rows of ``dirs``' part files whose ``col`` is one of
-    ``values`` (a list of str or an int64 array), as one table of
-    ``columns`` (which include ``col``); None when no dir has files.
+    ``values`` (a list of str or an int64 array; None: every row), as one
+    table of ``columns`` (which include ``col``); None when no dir has
+    files.
 
     Each file is read directly with its cached footer: only the row
     groups whose [min, max] of ``col`` may hold a value are read, a file
@@ -921,14 +957,15 @@ def _arrow_read(
     written before the window-rank mint are nullable, window-ranked ones
     are not), which a plain ``pa.concat_tables`` rejects. A footer
     parsed before a vacuum deleted its file raises like a missing dir."""
-    footers = [f for d in dirs for f in _snapshot_footers(bidx, d, col)]
+    footers = [f for d in dirs for f in _snapshot_footers(snap, d, col)]
     if not footers:
         return None
-    vals = np.unique(values) if isinstance(values, np.ndarray) else sorted(set(values))
+    if values is not None:
+        vals = np.unique(values) if isinstance(values, np.ndarray) else sorted(set(values))
     parts = []
     try:
         for path, md, bounds in footers:
-            kept = [i for i, b in enumerate(bounds) if _holds(vals, b)]
+            kept = [i for i, b in enumerate(bounds) if values is None or _holds(vals, b)]
             if kept:
                 with pq.ParquetFile(path, metadata=md, pre_buffer=False) as f:
                     parts.append(f.read_row_groups(kept, columns=columns, use_threads=False))
@@ -942,15 +979,211 @@ def _arrow_read(
     if not parts:
         return schema.empty_table()
     tab = pa.concat_tables([pa.Table.from_arrays(p.columns, schema=schema) for p in parts])
+    if values is None:
+        return tab
     return tab.filter(pc.is_in(tab.column(col), value_set=pa.array(vals, schema.field(col).type)))
 
 
+def _members(sorted_vals: np.ndarray, vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(mask over ``vals`` of those in ``sorted_vals``, their positions
+    there)."""
+    at = np.searchsorted(sorted_vals, vals)
+    hit = at < len(sorted_vals)
+    hit[hit] = sorted_vals[at[hit]] == vals[hit]
+    return hit, at[hit]
+
+
+class StoreSnapshot:
+    """The committed state a `load_blocks` index was opened on, as the
+    driver path reads it — pyarrow and numpy only, so that building it
+    runs no Spark job: the store's ``path`` and local ``root`` (None when
+    the store is not on the local filesystem; then the driver path is
+    off), the ``manifest``, the scalars a query needs, the result schemas
+    and the parsed parquet ``footers`` of its dirs.
+
+    Three read-side structures are ``held``: each is read whole once, on
+    first use, when its parquet bytes (summed from the footers, so the
+    check reads no rows; recorded in ``parquet_bytes``) are at most
+    `HOLD_MAX_BYTES`; ``held_bytes`` records what each held structure
+    takes in memory:
+
+    - ``terms``: the term dictionary, as one sorted Arrow string array
+      with its df and idf_bm25;
+    - ``keys``: the docid maps of every segment, as one docid-sorted
+      array and the key columns in that order;
+    - ``dead``: the tombstoned docids, as one sorted array.
+
+    A structure over the bound is held as None, and its lookups read the
+    row groups that may hold their values (`_arrow_read`). Everything
+    cached stays valid for the snapshot's lifetime, since a commit only
+    adds fresh uuid-named dirs, until a vacuum deletes its dirs: every
+    driver-path query checks the snapshot's dirs first (`check_live`), so a
+    vacuumed snapshot raises even when the held structures answer it
+    without opening a file. Two threads building the same entry at once
+    each build equal ones; either may stay."""
+
+    def __init__(self, spark, path: str, manifest: dict):
+        self.spark = spark
+        self.path = path
+        self.manifest = manifest
+        self.root = _local_root(path)
+        self.doc_key = tuple(manifest["doc_key"])
+        self.n_docs = int(manifest["n_docs"])
+        self.n_postings = int(manifest["n_postings"])
+        self.avg_doc_len = float(manifest["avg_doc_len"])
+        self.block_span = int(manifest["block_span"])
+        self.n_buckets = int(manifest["n_buckets"])
+        self.footers: dict[tuple[str, str], list[_Footer]] = {}
+        self.held: dict[str, tuple | None] = {}
+        self.parquet_bytes: dict[str, int] = {}
+        self.held_bytes: dict[str, int] = {}
+        self._schemas: dict[tuple[str, ...], tuple[T.StructType, pa.Schema]] = {}
+
+    def _dirs(self, kind: str) -> list[str]:
+        meta = self.manifest
+        if kind == "stats":
+            return [f"{self.root}/{meta['stats_dir']}"]
+        if kind == "tombstones":
+            return [f"{self.root}/{d}" for d in meta.get("tombstone_dirs", [])]
+        return [f"{self.root}/{d}/{kind}" for d in meta["data_dirs"]]
+
+    def _hold(self, name: str, kind: str, columns: list[str], col: str, build):
+        """The held structure ``name``: ``build`` over every row of the
+        ``kind`` dirs' ``columns`` -> (structure, in-memory bytes), or
+        None over the bound."""
+        if name not in self.held:
+            dirs = self._dirs(kind)
+            footers = [f for d in dirs for f in _snapshot_footers(self, d, col)]
+            size = sum(
+                f.md.row_group(i).total_byte_size
+                for f in footers for i in range(f.md.num_row_groups)
+            )
+            self.parquet_bytes[name] = size
+            held = None
+            if size <= HOLD_MAX_BYTES:
+                held, self.held_bytes[name] = build(_arrow_read(self, dirs, columns, col))
+            self.held[name] = held
+        return self.held[name]
+
+    def check_live(self) -> None:
+        """Raise `_vacuumed` when a later commit's vacuum deleted any of
+        this snapshot's dirs — a segment, the term dictionary or a
+        tombstone dir (one directory check each) — whether or not a held
+        structure would answer without opening it."""
+        meta = self.manifest
+        for d in (*meta["data_dirs"], meta["stats_dir"], *meta.get("tombstone_dirs", [])):
+            if _gone(f"{self.root}/{d}"):
+                raise _vacuumed(f"{self.root}/{d}")
+
+    def term_stats(self, terms: list[str]) -> dict[str, tuple[int, float]]:
+        """{term: (df, idf_bm25)} for those of ``terms`` in the term
+        dictionary."""
+        held = self._hold("terms", "stats", ["term", "df", "idf_bm25"], "term", _held_terms)
+        if held is None:
+            got = _arrow_read(self, self._dirs("stats"), ["term", "df", "idf_bm25"], "term", terms)
+            cols = got.to_pydict() if got is not None else {"term": []}
+            return {t: (d, i) for t, d, i in zip(*cols.values())}
+        names, df, idf = held
+        out = {}
+        for t in terms:
+            i = bisect_left(names, t, key=pa.StringScalar.as_py)
+            if i < len(names) and names[i].as_py() == t:
+                out[t] = (int(df[i]), float(idf[i]))
+        return out
+
+    def dead(self, docids: np.ndarray) -> np.ndarray:
+        """The tombstoned members of the sorted unique ``docids``."""
+        if not self.manifest.get("tombstone_dirs") or not len(docids):
+            return np.empty(0, dtype=np.int64)
+        held = self._hold("dead", "tombstones", ["docid"], "docid", _held_dead)
+        if held is None:
+            got = _arrow_read(self, self._dirs("tombstones"), ["docid"], "docid", docids)
+            return np.empty(0, dtype=np.int64) if got is None else got.column("docid").to_numpy()
+        return docids[_members(held[0], docids)[0]]
+
+    def keys(self, docids: np.ndarray, values: dict[str, np.ndarray]) -> pa.Table:
+        """(doc_key..., *values) for the sorted unique ``docids``;
+        ``values`` are aligned with ``docids``."""
+        key = list(self.doc_key)
+        held = self._hold("keys", "docid_map", [*key, "docid"], "docid", _held_keys)
+        if held is None:
+            got = _arrow_read(self, self._dirs("docid_map"), [*key, "docid"], "docid", docids)
+            if got is None:
+                got = pa.table({c: [] for c in [*key, "docid"]})
+            at = np.searchsorted(docids, got.column("docid").to_numpy())
+            cols = {c: got.column(c) for c in key}
+        else:
+            held_docids, held_keys = held
+            hit, pos = _members(held_docids, docids)
+            at = np.flatnonzero(hit)
+            cols = {c: held_keys.column(c).take(pos) for c in key}
+        return pa.table({**cols, **{n: v[at] for n, v in values.items()}})
+
+    @functools.cached_property
+    def key_schema(self) -> T.StructType:
+        """The docid map's fields as a Spark read types them."""
+        return _written_schema(self._dirs("docid_map")[0])
+
+    def result_frame(self, extra: Sequence[T.StructField], table: pa.Table | None = None):
+        """A driver-held (doc_key..., *extra) frame over ``table`` (None:
+        no rows); each schema and its Arrow form resolved once."""
+        names = tuple(f.name for f in extra)
+        if names not in self._schemas:
+            schema = T.StructType([*(self.key_schema[c] for c in self.doc_key), *extra])
+            self._schemas[names] = (schema, to_arrow_schema(schema))
+        schema, arrow_schema = self._schemas[names]
+        return _local_frame(self.spark, schema, table, arrow_schema)
+
+
+def _held_terms(tab: pa.Table):
+    # one Arrow string array, searched in place: a Python list of str
+    # would take ~6x the dictionary's parquet bytes
+    tab = tab.sort_by("term")
+    names = tab.column("term").combine_chunks()
+    df, idf = tab.column("df").to_numpy(), tab.column("idf_bm25").to_numpy()
+    return (names, df, idf), names.nbytes + df.nbytes + idf.nbytes
+
+
+def _held_keys(tab: pa.Table):
+    tab = tab.sort_by("docid")
+    docids = tab.column("docid").to_numpy()
+    keys = tab.drop_columns(["docid"]).combine_chunks()
+    return (docids, keys), docids.nbytes + keys.nbytes
+
+
+def _held_dead(tab: pa.Table | None):
+    dead = np.unique(tab.column("docid").to_numpy()) if tab is not None else np.empty(0, np.int64)
+    return (dead,), dead.nbytes
+
+
+def _driver_snapshot(bidx: BlockIndex) -> StoreSnapshot | None:
+    """The snapshot the driver path serves ``bidx`` from: that of a store
+    `load_blocks` opened on the local filesystem, else None."""
+    snap = bidx.snapshot
+    return snap if snap is not None and snap.root is not None else None
+
+
+def _result_schema(bidx: BlockIndex, *extra: T.StructField) -> T.StructType:
+    """(doc_key..., *extra) with the key fields typed as in the docid map."""
+    snap = _driver_snapshot(bidx)
+    key_schema = snap.key_schema if snap is not None else bidx.docid_map.schema
+    return T.StructType([key_schema[c] for c in bidx.doc_key] + list(extra))
+
+
+def _empty_result(bidx: BlockIndex, *extra: T.StructField) -> DataFrame:
+    """A driver-held (doc_key..., *extra) frame without rows."""
+    snap = _driver_snapshot(bidx)
+    if snap is not None:
+        return snap.result_frame(extra)
+    return _local_frame(bidx.docid_map.sparkSession, _result_schema(bidx, *extra))
+
+
 def _driver_idf(
-    bidx: BlockIndex, root: str, terms: list[str], min_prune_postings: int, seed_blocks: int
+    snap: StoreSnapshot, terms: list[str], min_prune_postings: int, seed_blocks: int
 ) -> dict[str, float] | None:
-    """{term: idf_bm25} from the term dictionary of the store at
-    ``root`` (`_store_root`) when the driver path serves a query over
-    ``terms``; None routes it to Spark.
+    """{term: idf_bm25} of those of ``terms`` in the snapshot's term
+    dictionary when the driver path serves a query over ``terms``; None
+    routes it to Spark. A vacuumed snapshot raises (`check_live`).
 
     The gate is the one `_prune_live_blocks` applies, decided from store
     metadata: Σdf over the terms equals the posting total that function
@@ -959,28 +1192,26 @@ def _driver_idf(
     bounds the number of distinct blocks. Either bound below its limit
     means Spark would decode every block of the terms anyway — and it
     caps what the driver reads."""
-    got = _arrow_read(
-        bidx, [f"{root}/{bidx.manifest['stats_dir']}"], ["term", "df", "idf_bm25"],
-        "term", terms,
-    )
-    rows = got.to_pydict() if got is not None else {"term": [], "df": [], "idf_bm25": []}
-    n_store_blocks = -(-int(bidx.n_docs) // int(bidx.block_span))
-    if n_store_blocks <= max(seed_blocks, 4) or sum(rows["df"]) < min_prune_postings:
-        return dict(zip(rows["term"], rows["idf_bm25"]))
+    snap.check_live()
+    stats = snap.term_stats(terms)
+    n_store_blocks = -(-snap.n_docs // snap.block_span)
+    if n_store_blocks <= max(seed_blocks, 4) or sum(d for d, _ in stats.values()) < min_prune_postings:
+        return {t: idf for t, (_, idf) in stats.items()}
     return None
 
 
-def _driver_postings(bidx: BlockIndex, root: str, terms: list[str], with_positions: bool):
+def _driver_postings(
+    snap: StoreSnapshot, terms: list[str], idf: dict[str, float], with_positions: bool
+):
     """Decode every block of ``terms`` from the snapshot's segments ->
     (term index per posting, docids, tfs, doc_lens, (npos, flat positions)).
-    Blocks are decoded in ``terms`` order, so each doc's partials are
-    summed in one fixed order and exact ties stay exact."""
-    buckets = sorted({term_bucket(t, bidx.n_buckets) for t in terms})
-    dirs = [
-        f"{root}/{d}/blocks/bucket={b}"
-        for d in bidx.manifest["data_dirs"] for b in buckets
-    ]
-    tab = _arrow_read(bidx, dirs, ["term", "block_id", "blob"], "term", terms)
+    Only the bucket files of the terms in the dictionary (``idf``) are
+    read. Blocks are decoded in ``terms`` order, so each doc's partials
+    are summed in one fixed order and exact ties stay exact."""
+    known = [t for t in terms if t in idf]
+    buckets = sorted({term_bucket(t, snap.n_buckets) for t in known})
+    dirs = [f"{d}/bucket={b}" for d in snap._dirs("blocks") for b in buckets]
+    tab = _arrow_read(snap, dirs, ["term", "block_id", "blob"], "term", known) if known else None
     if tab is None or tab.num_rows == 0:
         e = np.empty(0, dtype=np.int64)
         return e, e.copy(), e.copy(), e.copy(), (e.copy(), e.copy())
@@ -990,38 +1221,9 @@ def _driver_postings(bidx: BlockIndex, root: str, terms: list[str], with_positio
     order = np.lexsort((block_id, tidx))
     blobs = tab.column("blob").take(pa.array(order)).to_pylist()
     d, tf, ln, pos, counts = decode_blocks_arrays(
-        blobs, block_id[order] * bidx.block_span, with_positions, flat_positions=True
+        blobs, block_id[order] * snap.block_span, with_positions, flat_positions=True
     )
     return np.repeat(tidx[order], counts), d, tf, ln, pos
-
-
-def _driver_dead(bidx: BlockIndex, root: str, docids: np.ndarray) -> np.ndarray:
-    """The tombstoned members of ``docids`` (a docid-filtered read of the
-    snapshot's tombstone dirs)."""
-    tdirs = bidx.manifest.get("tombstone_dirs", [])
-    if not tdirs or not len(docids):
-        return np.empty(0, dtype=np.int64)
-    got = _arrow_read(bidx, [f"{root}/{t}" for t in tdirs], ["docid"], "docid", docids)
-    return np.empty(0, dtype=np.int64) if got is None else got.column("docid").to_numpy()
-
-
-def _driver_keys(
-    bidx: BlockIndex, root: str, docids: np.ndarray, values: dict[str, np.ndarray]
-) -> pa.Table:
-    """(doc_key..., *values) for sorted unique ``docids`` — a docid-
-    filtered read of the snapshot's docid maps; ``values`` are aligned
-    with ``docids``."""
-    key = list(bidx.doc_key)
-    got = _arrow_read(
-        bidx, [f"{root}/{d}/docid_map" for d in bidx.manifest["data_dirs"]],
-        [*key, "docid"], "docid", docids,
-    )
-    if got is None:
-        got = pa.table({c: [] for c in [*key, "docid"]})
-    at = np.searchsorted(docids, got.column("docid").to_numpy())
-    return pa.table(
-        {**{c: got.column(c) for c in key}, **{n: v[at] for n, v in values.items()}}
-    )
 
 
 def _check_k(k: int) -> None:
@@ -1031,9 +1233,12 @@ def _check_k(k: int) -> None:
         raise ValueError(f"k must be >= 0, got {k}")
 
 
+_SCORE = T.StructField("score", T.DoubleType())
+_N_OCCURRENCES = T.StructField("n_occurrences", T.LongType())
+
+
 def _driver_topk(
-    bidx: BlockIndex,
-    root: str,
+    snap: StoreSnapshot,
     idf: dict[str, float],
     terms: list[str],
     ex_terms: list[str],
@@ -1041,18 +1246,16 @@ def _driver_topk(
     conjunctive: bool,
 ) -> DataFrame:
     """`bm25_topk_blocks` on the driver (same results, same schema)."""
-    schema = _result_schema(bidx, T.StructField("score", T.DoubleType()))
-    spark = bidx.docid_map.sparkSession
-    tidx, d, tf, ln, _ = _driver_postings(bidx, root, terms + ex_terms, with_positions=False)
+    tidx, d, tf, ln, _ = _driver_postings(snap, terms + ex_terms, idf, with_positions=False)
     excluded = tidx >= len(terms)
     dead = d[excluded]
     tidx, d, tf, ln = tidx[~excluded], d[~excluded], tf[~excluded], ln[~excluded]
     if not len(d):
-        return _local_frame(spark, schema)
+        return snap.result_frame([_SCORE])
     term_idf = np.array([idf.get(t, 0.0) for t in terms])
     docs, inv = np.unique(d, return_inverse=True)
-    scores = np.bincount(inv, weights=_bm25_impact(tf, ln, term_idf[tidx], bidx.avg_doc_len))
-    keep = ~np.isin(docs, np.concatenate([dead, _driver_dead(bidx, root, docs)]))
+    scores = np.bincount(inv, weights=_bm25_impact(tf, ln, term_idf[tidx], snap.avg_doc_len))
+    keep = ~np.isin(docs, np.concatenate([dead, snap.dead(docs)]))
     if conjunctive:
         keep &= np.bincount(inv) == len(terms)
     docs, scores = docs[keep], scores[keep]
@@ -1062,21 +1265,19 @@ def _driver_topk(
         kth = np.partition(scores, len(scores) - k)[len(scores) - k]
         cand = scores >= kth
         docs, scores = docs[cand], scores[cand]
-    keyed = _driver_keys(bidx, root, docs, {"score": scores})
-    order = [("score", "descending")] + [(c, "ascending") for c in bidx.doc_key]
-    return _local_frame(spark, schema, keyed.sort_by(order).slice(0, k))
+    keyed = snap.keys(docs, {"score": scores})
+    order = [("score", "descending")] + [(c, "ascending") for c in snap.doc_key]
+    return snap.result_frame([_SCORE], keyed.sort_by(order).slice(0, k))
 
 
-def _driver_phrase(bidx: BlockIndex, root: str, terms: list[str]) -> DataFrame:
+def _driver_phrase(snap: StoreSnapshot, idf: dict[str, float], terms: list[str]) -> DataFrame:
     """`phrase_match_blocks` on the driver: a phrase starts at p in a doc
     when term i sits at p + i for every i — the intersection, over i, of
     term i's (doc, position − i) keys, computed with numpy set ops."""
-    schema = _result_schema(bidx, T.StructField("n_occurrences", T.LongType()))
-    spark = bidx.docid_map.sparkSession
     uniq = list(dict.fromkeys(terms))
-    tidx, d, _, _, (npos, flat) = _driver_postings(bidx, root, uniq, with_positions=True)
+    tidx, d, _, _, (npos, flat) = _driver_postings(snap, uniq, idf, with_positions=True)
     if not len(flat):
-        return _local_frame(spark, schema)
+        return snap.result_frame([_N_OCCURRENCES])
     # docs ranked densely so (rank, start) packs into one int64 key
     docs, doc_rank = np.unique(d, return_inverse=True)
     pos_doc = np.repeat(doc_rank, npos)
@@ -1089,11 +1290,11 @@ def _driver_phrase(bidx: BlockIndex, root: str, terms: list[str]) -> DataFrame:
         starts = keys if starts is None else starts[np.isin(starts, keys)]
     hit, n_occ = np.unique(starts // width, return_counts=True)
     hit_docs = docs[hit]
-    live = ~np.isin(hit_docs, _driver_dead(bidx, root, hit_docs))
-    keyed = _driver_keys(
-        bidx, root, hit_docs[live], {"n_occurrences": n_occ[live].astype(np.int64)}
+    live = ~np.isin(hit_docs, snap.dead(hit_docs))
+    keyed = snap.keys(hit_docs[live], {"n_occurrences": n_occ[live].astype(np.int64)})
+    return snap.result_frame(
+        [_N_OCCURRENCES], keyed.sort_by([(c, "ascending") for c in snap.doc_key])
     )
-    return _local_frame(spark, schema, keyed.sort_by([(c, "ascending") for c in bidx.doc_key]))
 
 
 def bm25_topk_blocks(
@@ -1151,18 +1352,18 @@ def bm25_topk_blocks(
     _check_k(k)
     terms = _query_terms(query, stem)
     if not terms or k == 0:
-        return _empty_topk(bidx)
+        return _empty_result(bidx, _SCORE)
     ex_terms = list(
         dict.fromkeys(t for q in (exclude_terms or []) for t in _query_terms(q, stem))
     )
     terms = [t for t in terms if t not in set(ex_terms)]
     if not terms:
-        return _empty_topk(bidx)
-    root = _store_root(bidx) if include_docs is None and exclude_docs is None else None
-    if root is not None:
-        idf = _driver_idf(bidx, root, terms + ex_terms, min_prune_postings, seed_blocks)
+        return _empty_result(bidx, _SCORE)
+    snap = _driver_snapshot(bidx) if include_docs is None and exclude_docs is None else None
+    if snap is not None:
+        idf = _driver_idf(snap, terms + ex_terms, min_prune_postings, seed_blocks)
         if idf is not None:
-            return _driver_topk(bidx, root, idf, terms, ex_terms, k, conjunctive)
+            return _driver_topk(snap, idf, terms, ex_terms, k, conjunctive)
 
     dead = bidx.tombstones
     if exclude_docs is not None:
@@ -1275,7 +1476,7 @@ def bm25_topk_many_blocks(
         for t in _query_terms(q, stem):
             pairs.append((qid, t))
     if not pairs or k == 0:
-        schema = _result_schema(bidx, T.StructField("score", T.DoubleType()))
+        schema = _result_schema(bidx, _SCORE)
         qid = T.StructField("qid", T.StringType())
         return _local_frame(bidx.blocks.sparkSession, T.StructType([qid, *schema.fields]))
     spark = bidx.blocks.sparkSession
@@ -1328,11 +1529,6 @@ def bm25_topk_many_blocks(
         .filter(F.col("rnk") <= k)
         .select("qid", *key, "score")
     )
-
-
-def _empty_topk(bidx: BlockIndex) -> DataFrame:
-    schema = _result_schema(bidx, T.StructField("score", T.DoubleType()))
-    return _local_frame(bidx.docid_map.sparkSession, schema)
 
 
 def term_bucket(term: str, n_buckets: int) -> int:
@@ -1557,13 +1753,26 @@ def _commit(
         vacuum_blocks(spark, path)
 
 
-def _union_read(spark, dirs: list[str]) -> DataFrame:
-    """One frame over parquet ``dirs``, read dir by dir and unioned by
-    name — NOT one multi-path read: each segment's blocks are their own
-    partitioned (bucket=b) layout, which Spark's multi-root partition
-    discovery rejects as conflicting. Filters push through the union
-    into every child scan."""
-    return functools.reduce(DataFrame.unionByName, [spark.read.parquet(d) for d in dirs])
+def _union_read(spark, path: str, dirs: list[str]) -> DataFrame:
+    """One frame over the parquet ``dirs`` of the store at ``path``, read
+    dir by dir and unioned by name — NOT one multi-path read: each
+    segment's blocks are their own partitioned (bucket=b) layout, which
+    Spark's multi-root partition discovery rejects as conflicting.
+    Filters push through the union into every child scan. On the local
+    filesystem each dir is read with the Spark schema its writer
+    recorded (`_written_schema`), so Spark infers none: the read runs no
+    job while a dir has at most
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    bucket dirs — above that, Spark lists the dir with a job."""
+    root = _local_root(path)
+
+    def read(d: str) -> DataFrame:
+        reader = spark.read
+        if root is not None:
+            reader = reader.schema(_written_schema(f"{root}/{d}"))
+        return reader.parquet(f"{path}/{d}")
+
+    return functools.reduce(DataFrame.unionByName, map(read, dirs))
 
 
 def vacuum_blocks(spark, path: str) -> None:
@@ -1801,13 +2010,13 @@ def append_blocks(
         # in top-k, double-counted in df/n_docs). The store's docid map
         # semi-joined against the incoming key set, short-circuited at
         # the first collision — one scan of the map per append
-        live = _union_read(spark, [f"{path}/{d}/docid_map" for d in meta["data_dirs"]])
+        live = _union_read(spark, path, [f"{d}/docid_map" for d in meta["data_dirs"]])
         tomb_dirs = meta.get("tombstone_dirs", [])
         if tomb_dirs:
             # tombstoned keys stay in the map until compaction but are
             # NOT live — re-appending them is exactly the documented
             # update path (delete -> append -> compact), so no collision
-            dead = _union_read(spark, [f"{path}/{d}" for d in tomb_dirs])
+            dead = _union_read(spark, path, tomb_dirs)
             live = live.join(dead.select("docid"), "docid", "left_anti")
         collisions = (
             live.join(
@@ -2124,8 +2333,8 @@ def merge_segments(
     n_buckets = int(meta["n_buckets"])
     _write_segment(
         spark, path, new_dir,
-        _union_read(spark, [f"{path}/{d}/blocks" for d in dirs]),
-        _union_read(spark, [f"{path}/{d}/docid_map" for d in dirs]),
+        _union_read(spark, path, [f"{d}/blocks" for d in dirs]),
+        _union_read(spark, path, [f"{d}/docid_map" for d in dirs]),
         merged_docs, None, n_buckets,
         _segment_tasks(spark, n_buckets, merged_docs, encoded=False),
     )
@@ -2221,38 +2430,40 @@ def load_blocks(spark, path: str) -> "BlockIndex":
     The manifest must meet the store's contract (`_read_meta`): a store
     written before the segment layout raises ValueError.
 
-    The index also keeps ``path`` and the ``manifest`` dict read here:
-    the driver serving path reads exactly this committed snapshot, with
-    no per-query manifest read.
+    The index also keeps the manifest read here as its `StoreSnapshot`,
+    which the driver serving path reads with no per-query manifest read.
+    Each frame is read with the Spark schema its writer recorded
+    (`_union_read`), so opening a local store infers no schema and runs
+    no Spark job while a segment has at most 32 bucket dirs.
     """
-    meta = _read_meta(spark, path)
+    snap = StoreSnapshot(spark, path, _read_meta(spark, path))
+    meta = snap.manifest
     tdirs = meta.get("tombstone_dirs", [])
-    tombstones = _union_read(spark, [f"{path}/{d}" for d in tdirs]) if tdirs else None
+    tombstones = _union_read(spark, path, tdirs) if tdirs else None
     if len(tdirs) > 1:
-        # stage the multi-dir union ONCE at open (ADVICE r3): each
-        # query consults the dead set twice (seed-θ and final
-        # scoring), so an unstaged N-dir union re-scans every delete
-        # epoch's parquet 2x per query — per-query overhead growing
-        # with delete epochs until compaction. The set is docids
-        # only (bounded by n_docs); dirs are disjoint by
-        # construction (delete_docs anti-joins already-tombstoned
-        # ids), so no distinct is needed.
-        tombstones = _stage(tombstones)
+        # stage the multi-dir union ONCE, on its first use:
+        # each Spark-path query consults the dead set twice (seed-θ and
+        # final scoring), so an unstaged N-dir union re-scans every
+        # delete epoch's parquet 2x per query — per-query overhead
+        # growing with delete epochs until compaction. The set is docids
+        # only (bounded by n_docs); dirs are disjoint by construction
+        # (delete_docs anti-joins already-tombstoned ids), so no
+        # distinct is needed.
+        tombstones = _stage(tombstones, eager=False)
     return BlockIndex(
-        blocks=_union_read(spark, [f"{path}/{d}/blocks" for d in meta["data_dirs"]]),
-        docid_map=_union_read(spark, [f"{path}/{d}/docid_map" for d in meta["data_dirs"]]),
-        corpus_stats=spark.read.parquet(f"{path}/{meta['stats_dir']}"),
-        doc_key=tuple(meta["doc_key"]),
-        n_docs=meta["n_docs"],
-        n_postings=int(meta["n_postings"]),
-        avg_doc_len=meta["avg_doc_len"],
-        block_span=meta["block_span"],
-        n_buckets=meta["n_buckets"],
+        blocks=_union_read(spark, path, [f"{d}/blocks" for d in meta["data_dirs"]]),
+        docid_map=_union_read(spark, path, [f"{d}/docid_map" for d in meta["data_dirs"]]),
+        corpus_stats=_union_read(spark, path, [meta["stats_dir"]]),
+        doc_key=snap.doc_key,
+        n_docs=snap.n_docs,
+        n_postings=snap.n_postings,
+        avg_doc_len=snap.avg_doc_len,
+        block_span=snap.block_span,
+        n_buckets=snap.n_buckets,
         stale_bounds=bool(meta.get("stale_bounds", False)),
         key_ordered=bool(meta.get("key_ordered", True)),
         tombstones=tombstones,
-        path=path,
-        manifest=meta,
+        snapshot=snap,
     )
 
 
@@ -2331,13 +2542,14 @@ def phrase_match_blocks(
     if not terms:
         # same schema as the non-empty path: an untokenizable phrase
         # must not surprise unionByName / column-referencing callers
-        schema = _result_schema(bidx, T.StructField("n_occurrences", T.LongType()))
-        return _local_frame(bidx.docid_map.sparkSession, schema)
-    root = _store_root(bidx)
-    if root is not None and _driver_idf(
-        bidx, root, list(dict.fromkeys(terms)), DEFAULT_MIN_PRUNE_POSTINGS, DEFAULT_SEED_BLOCKS
-    ) is not None:
-        return _driver_phrase(bidx, root, terms)
+        return _empty_result(bidx, _N_OCCURRENCES)
+    snap = _driver_snapshot(bidx)
+    if snap is not None:
+        idf = _driver_idf(
+            snap, list(dict.fromkeys(terms)), DEFAULT_MIN_PRUNE_POSTINGS, DEFAULT_SEED_BLOCKS
+        )
+        if idf is not None:
+            return _driver_phrase(snap, idf, terms)
     out = _phrase_docids(bidx, phrase, stem)
     key = list(bidx.doc_key)
     return (
@@ -2369,10 +2581,7 @@ def proximity_topk_blocks(
     ta = _query_terms(term_a, stem)
     tb = _query_terms(term_b, stem)
     if not ta or not tb or k == 0:
-        schema = _result_schema(
-            bidx, T.StructField("min_gap", T.LongType()), T.StructField("score", T.DoubleType())
-        )
-        return _local_frame(bidx.docid_map.sparkSession, schema)
+        return _empty_result(bidx, T.StructField("min_gap", T.LongType()), _SCORE)
     a, b = ta[0], tb[0]
     tblocks = bidx.blocks.filter(_term_filter(bidx, list({a, b})))
     decoded = _drop_dead(
@@ -2467,7 +2676,7 @@ def boolean_topk_blocks(
             # empty result, consistent with a tokenizable phrase that
             # matches nothing. (A NEGATED untokenizable phrase below is
             # the opposite: it excludes nothing.)
-            return _empty_topk(bidx)
+            return _empty_result(bidx, _SCORE)
         d = d.select("docid")
         include = d if include is None else include.join(d, "docid", "left_semi")
     exclude_docs = None
@@ -2479,7 +2688,7 @@ def boolean_topk_blocks(
         exclude_docs = d if exclude_docs is None else exclude_docs.unionByName(d)
     pos_query = " ".join(p["terms"] + p["phrases"])
     if not pos_query.strip():
-        return _empty_topk(bidx)
+        return _empty_result(bidx, _SCORE)
     return bm25_topk_blocks(
         bidx,
         pos_query,

@@ -73,7 +73,11 @@ def test_facade_round2_surface(spark, corpus_sdf, tmp_path):
     eng_a = SearchEngine.build(spark, half_a)
     store = str(tmp_path / "store")
     eng_a.save_block_store(store, n_buckets=8)
+    assert eng_a.index.corpus_stats.is_cached
     eng_a.append_to_block_store(store, half_b)
+    # switching stores releases the in-memory blocks, which share the
+    # index's term statistics: those stay cached
+    assert eng_a.index.corpus_stats.is_cached
     want = [(r["conv_id"], r["turn_idx"]) for r in eng.search("coronavirus", k=8).collect()]
     got = [(r["conv_id"], r["turn_idx"]) for r in eng_a.search_blocks("coronavirus", k=8).collect()]
     assert got == want

@@ -302,7 +302,7 @@ def test_write_load_blocks_bucketed(
             assert [len(glob.glob(f"{b}/*.parquet")) for b in buckets] == [1] * len(buckets), what
             assert len(glob.glob(f"{path}/{seg}/docid_map/*.parquet")) == 1, what
         bm25, phrase = _oracle_state(docs_in)
-        for served in (bidx, dataclasses.replace(bidx, manifest=None)):
+        for served in (bidx, dataclasses.replace(bidx, snapshot=None)):
             _check_ranked([tuple(r) for r in
                            bm25_topk_blocks(served, "rice noodle", k=10).collect()],
                           bm25("rice noodle", 10), what)
@@ -1892,14 +1892,15 @@ def test_driver_frame_matches_jvm_frame(spark, block_index):
 
 
 def test_snapshot_datasets_stay_inside_their_snapshot(spark, corpus_pdf, corpus_sdf, tmp_path):
-    """A loaded index caches one pyarrow dataset per manifest dir. Across
-    append_blocks, delete_docs, tiered_merge and compact_blocks (without
-    vacuum), an index loaded before each op keeps answering from its own
-    snapshot, and a fresh load_blocks answers from the new one — both
-    equal to the oracle of their state. Indexes over two stores share no
-    cache entry. Once a vacuum deletes a snapshot, an index still holding
-    it raises FileNotFoundError, whether it had read the deleted dirs or
-    not, instead of answering []."""
+    """A loaded index caches its snapshot's footers and held structures.
+    Across append_blocks, delete_docs, tiered_merge and compact_blocks
+    (without vacuum), an index loaded before each op keeps answering from
+    its own snapshot, and a fresh load_blocks answers from the new one —
+    both equal to the oracle of their state. Indexes over two stores share
+    no cache entry. Once a vacuum deletes a snapshot, an index still
+    holding it raises FileNotFoundError, whether it had read the deleted
+    dirs or not, instead of answering [] — also for a query whose terms
+    are all absent from the held term dictionary, which opens no file."""
     import zlib
 
     from pyspark.sql import functions as F
@@ -1915,6 +1916,7 @@ def test_snapshot_datasets_stay_inside_their_snapshot(spark, corpus_pdf, corpus_
         load_blocks,
         phrase_match_blocks,
         tiered_merge,
+        vacuum_blocks,
         write_blocks,
     )
 
@@ -1941,7 +1943,7 @@ def test_snapshot_datasets_stay_inside_their_snapshot(spark, corpus_pdf, corpus_
             df = fn(bidx, q, **kw)
             _check_ranked([tuple(r) for r in df.collect()], want, (what, q))
             assert "_jdf" not in df.__dict__, (what, q)
-        assert bidx.footers, what
+        assert bidx.snapshot.footers and bidx.snapshot.held["terms"], what
 
     oracle = _oracle_state(docs_a)
     before = load_blocks(spark, path)
@@ -1973,19 +1975,38 @@ def test_snapshot_datasets_stay_inside_their_snapshot(spark, corpus_pdf, corpus_
     )
     twin = load_blocks(spark, str(tmp_path / "twin"))
     serve(twin, oracle, "second store")
-    assert twin.footers.keys().isdisjoint(before.footers)
+    assert twin.snapshot.footers.keys().isdisjoint(before.snapshot.footers)
 
     # compaction with its default vacuum deletes the snapshot both the
     # queried twin and an unqueried index hold
     unqueried = load_blocks(spark, str(tmp_path / "twin"))
     compact_blocks(spark, str(tmp_path / "twin"))
-    for stale in (twin, unqueried):
-        for fn, q in ((bm25_topk_blocks, "rice noodle"), (phrase_match_blocks, "waaaa waaaa")):
+    absent = "qqqzzx xxqqqz"
+    assert not twin.snapshot.term_stats(absent.split())
+
+    def raises_vacuumed(stale, what):
+        for fn, q in ((bm25_topk_blocks, "rice noodle"), (phrase_match_blocks, "waaaa waaaa"),
+                      (bm25_topk_blocks, absent), (phrase_match_blocks, absent)):
             with pytest.raises(FileNotFoundError, match="vacuumed.*reload the index") as err:
                 fn(stale, q).collect()
             # the error names a dir the vacuum deleted
-            assert _gone(str(err.value).split(" is gone:")[0])
+            assert _gone(str(err.value).split(" is gone:")[0]), (what, q)
+
+    for stale in (twin, unqueried):
+        raises_vacuumed(stale, "compacted")
     serve(load_blocks(spark, str(tmp_path / "twin")), oracle, "reloaded after vacuum")
+
+    # an append keeps the snapshot's segments, and a later vacuum deletes
+    # only its superseded term dictionary: an index holding that
+    # dictionary raises like one that never read it
+    unqueried = load_blocks(spark, path)
+    new = corpus_sdf.limit(5).withColumn("conv_id", F.concat(F.lit("new-"), "conv_id"))
+    append_blocks(spark, path, build_index(new, cache=False))
+    vacuum_blocks(spark, path)
+    for stale in (before, unqueried):
+        assert not any(_gone(f"{path}/{d}") for d in stale.manifest["data_dirs"])
+        assert _gone(f"{path}/{stale.manifest['stats_dir']}")
+        raises_vacuumed(stale, "appended and vacuumed")
 
 
 def test_n_postings_on_every_store_shape(spark, corpus_sdf, spark_jobs, tmp_path):
@@ -2069,7 +2090,8 @@ def test_arrow_read_matches_dataset_scan(tmp_path, monkeypatch):
     values below, between and above every row group's range; an empty
     value list; a row group written without statistics; a nullable and a
     non-null docid segment read together. A file none of whose row
-    groups may hold a value is not opened."""
+    groups may hold a value is not opened. Without values it reads every
+    row."""
     import types
 
     import pyarrow as pa
@@ -2149,17 +2171,26 @@ def test_arrow_read_matches_dataset_scan(tmp_path, monkeypatch):
         assert got.sort_by(order).equals(want.sort_by(order)), what
     (tmp_path / "empty").mkdir()
     assert _arrow_read(bidx, [str(tmp_path / "empty")], ["docid"], "docid", np.array([1])) is None
+    # no values: every row of every file
+    opened.clear()
+    every = _arrow_read(bidx, [str(terms)], ["term", "df"], "term")
+    assert sorted(every.column("df").to_pylist()) == list(range(1, 16))
+    assert len(opened) == 3
 
 
 def test_driver_state_stays_bounded(spark, block_index, spark_jobs, tmp_path):
     """Fifty driver-path queries over two loaded indexes leave no file
     open: afterwards the process has as many open descriptors as before
-    them and none into either store. The per-snapshot cache holds parsed
-    parquet footers, not row data."""
+    them and none into either store. Each snapshot's footer cache holds
+    parsed parquet footers, not row data; held row data exists only in
+    the three bounded structures (term dictionary, docid maps,
+    tombstones), each held from at most HOLD_MAX_BYTES of parquet, and
+    the fifty queries do not grow it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from cis555_search_engine_spark.operators.postings_codec import (
+        HOLD_MAX_BYTES,
         _Footer,
         bm25_topk_blocks,
         load_blocks,
@@ -2191,8 +2222,14 @@ def test_driver_state_stays_bounded(spark, block_index, spark_jobs, tmp_path):
                 pass
         return fds
 
+    def held(bidx):
+        """The snapshot's held structures and their recorded sizes."""
+        snap = bidx.snapshot
+        return {n: [id(x) for x in h] for n, h in snap.held.items()}, dict(snap.held_bytes)
+
     for i in range(len(queries) * len(loaded)):
-        serve(i)  # every footer parsed, every frame schema resolved
+        serve(i)  # every footer parsed, every structure held, every schema resolved
+    warm = [held(bidx) for bidx in loaded]
     with spark_jobs() as jobs:
         before = open_fds()
         for i in range(50):
@@ -2201,12 +2238,20 @@ def test_driver_state_stays_bounded(spark, block_index, spark_jobs, tmp_path):
     assert jobs.n == 0
     assert len(after) == len(before), (before, after)
     assert not [t for t in after.values() if t.startswith(str(tmp_path))], after
-    for bidx in loaded:
-        assert bidx.footers
-        for footers in bidx.footers.values():
+    for bidx, was in zip(loaded, warm):
+        snap = bidx.snapshot
+        assert snap.footers
+        for footers in snap.footers.values():
             for f in footers:
                 assert isinstance(f, _Footer) and isinstance(f.md, pq.FileMetaData)
                 assert not any(isinstance(x, (pa.Table, pa.RecordBatch)) for x in f)
+        rows = (pa.Table, pa.RecordBatch, pa.ChunkedArray, pa.Array, np.ndarray, list)
+        assert not [n for n, v in vars(snap).items() if n != "held" and isinstance(v, rows)]
+        # a store without tombstones holds its dictionary and its keys
+        assert set(snap.held) == set(snap.held_bytes) == set(snap.parquet_bytes) == {"terms", "keys"}
+        assert all(0 < snap.parquet_bytes[n] <= HOLD_MAX_BYTES for n in snap.held)
+        assert all(snap.held_bytes.values())
+        assert held(bidx) == was  # the same objects, the same sizes
 
 
 def test_footer_pruning_skips_other_segments(
@@ -2214,9 +2259,11 @@ def test_footer_pruning_skips_other_segments(
 ):
     """On an appended and tombstoned store — two segments and a tombstone
     dir, the maintain workload's shape — a driver-path query whose hits
-    all lie in the first segment equals the oracle and opens fewer docid
-    map files than the store has segments: the appended segment's docid
-    range, read from its footer, holds none of the candidates."""
+    all lie in the first segment equals the oracle. With its docid maps
+    held, the query opens no docid map file once they are read; with the
+    hold bound at 0 it opens fewer docid map files than the store has
+    segments: the appended segment's docid range, read from its footer,
+    holds none of the candidates."""
     import zlib
 
     import pyarrow.parquet as pq
@@ -2224,6 +2271,7 @@ def test_footer_pruning_skips_other_segments(
 
     from cis555_search_engine_spark.functions.porter import porter_stem
     from cis555_search_engine_spark.functions.tokenizer import tokenize_py
+    from cis555_search_engine_spark.operators import postings_codec
     from cis555_search_engine_spark.operators.index_build import build_index
     from cis555_search_engine_spark.operators.postings_codec import (
         append_blocks,
@@ -2269,9 +2317,103 @@ def test_footer_pruning_skips_other_segments(
         return real(source, *args, **kwargs)
 
     monkeypatch.setattr(pq, "ParquetFile", counting)
-    for run in ("footers parsed", "footers cached"):
-        opened.clear()
-        got = [tuple(r) for r in bm25_topk_blocks(bidx, word, k=10).collect()]
-        _check_ranked(got, want, (word, run))
-    maps = [p for p in opened if "/docid_map/" in p]
+
+    def map_files_opened():
+        for run in ("footers parsed", "footers cached"):
+            opened.clear()
+            got = [tuple(r) for r in bm25_topk_blocks(bidx, word, k=10).collect()]
+            _check_ranked(got, want, (word, run))
+        return [p for p in opened if "/docid_map/" in p]
+
+    assert map_files_opened() == []
+    assert bidx.snapshot.held["keys"] is not None
+    monkeypatch.setattr(postings_codec, "HOLD_MAX_BYTES", 0)
+    bidx = load_blocks(spark, path)
+    maps = map_files_opened()
+    assert bidx.snapshot.held["keys"] is None
     assert 0 < len(maps) < len(bidx.manifest["data_dirs"]), opened
+
+
+def test_held_structures_match_fallback_reads(
+    spark, corpus_pdf, corpus_sdf, spark_jobs, tmp_path, monkeypatch
+):
+    """On a multi-segment, tombstoned and merged store, the driver path
+    answers BM25, AND, NOT and phrase queries alike from the snapshot's
+    held structures (term dictionary, docid maps, tombstones) and from
+    footer-pruned reads (hold bound 0), and both equal the oracle.
+    load_blocks runs no Spark job: it reads each Spark frame with the
+    schema the footers record, so the docid map's key types are the
+    driver path's, and the staged union of the two tombstone dirs holds
+    every dead doc."""
+    import zlib
+
+    from pyspark.sql import functions as F
+
+    from cis555_search_engine_spark.operators import postings_codec
+    from cis555_search_engine_spark.operators.index_build import build_index
+    from cis555_search_engine_spark.operators.postings_codec import (
+        _result_schema,
+        append_blocks,
+        bm25_topk_blocks,
+        build_blocks,
+        delete_docs,
+        load_blocks,
+        merge_segments,
+        phrase_match_blocks,
+        write_blocks,
+    )
+
+    docs = list(corpus_pdf[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None))
+    part = F.crc32(F.col("conv_id").cast("binary")) % 3
+    dead_pred = F.col("turn_idx") % 7 == 3
+    dead = {(c, t) for c, t, _ in docs if t % 7 == 3}
+    path = str(tmp_path / "store")
+    write_blocks(
+        build_blocks(build_index(corpus_sdf.filter(part == 0), cache=False), 64), path,
+        n_buckets=8,
+    )
+    for i in (1, 2):
+        append_blocks(spark, path, build_index(corpus_sdf.filter(part == i), cache=False))
+    for sel in (part == 0, part != 0):  # two tombstone dirs
+        delete_docs(spark, path, corpus_sdf.filter(dead_pred & sel).select("conv_id", "turn_idx"))
+    merge_segments(spark, path, load_blocks(spark, path).manifest["data_dirs"][1:])
+    with spark_jobs() as jobs:
+        held = load_blocks(spark, path)
+    assert jobs.n == 0
+    assert len(held.manifest["data_dirs"]) == 2 and len(held.manifest["tombstone_dirs"]) == 2
+
+    bm25, phrase = _oracle_state(docs, dead)
+    cases = [
+        (bm25_topk_blocks, "rice noodle", dict(k=10), bm25("rice noodle", 10)),
+        (bm25_topk_blocks, "presidential election", dict(k=10, conjunctive=True),
+         bm25("presidential election", 10, True)),
+        (bm25_topk_blocks, "rice noodle", dict(k=10, exclude_terms=["waaaf"]),
+         bm25("rice noodle", 10, exclude=["waaaf"])),
+        (phrase_match_blocks, "waaaa waaaa", {}, phrase("waaaa waaaa")),
+    ]
+    live_bm25, live_phrase = _oracle_state(docs)
+    assert cases[1][3] != live_bm25("presidential election", 10, True), "tombstones must matter"
+    assert cases[3][3] != live_phrase("waaaa waaaa"), "tombstones must matter"
+    assert cases[2][3] != bm25("rice noodle", 10), "the exclusion must matter"
+
+    def serve(bidx):
+        out = []
+        for fn, q, kw, want in cases:
+            with spark_jobs() as jobs:
+                df = fn(bidx, q, **kw)
+                got = [tuple(r) for r in df.collect()]
+            assert jobs.n == 0, (q, kw)
+            _check_ranked(got, want, (q, kw))
+            out.append((df.schema, got))
+        return out
+
+    answers = serve(held)
+    monkeypatch.setattr(postings_codec, "HOLD_MAX_BYTES", 0)
+    fallback = load_blocks(spark, path)
+    assert serve(fallback) == answers
+    assert set(held.snapshot.held) == set(fallback.snapshot.held) == {"terms", "keys", "dead"}
+    assert all(h is not None for h in held.snapshot.held.values())
+    assert all(h is None for h in fallback.snapshot.held.values())
+
+    assert _result_schema(held).fields == [held.docid_map.schema[c] for c in held.doc_key]
+    assert held.tombstones.count() == len(dead)
