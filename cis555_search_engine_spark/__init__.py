@@ -8,18 +8,21 @@ ranking), re-expressed Spark-first:
 - corpus        = Iceberg/parquet table of multi-turn transcripts
                   (conv_id, turn_idx, role, text, tool, ts); a "document"
                   is one turn, identity (conv_id, turn_idx)
-- index build   = tokenize (vectorized pandas UDF, reference semantics of
-                  indexer/Indexer.java:345-392) -> explode -> Porter stem via
-                  distinct-vocab broadcast join (the reference's `stemmer`
-                  table trick, indexer/stem.java:74-157) -> native groupBy
-                  aggregation into postings + doc/corpus statistics
+- index build   = one shuffle-free doc-local pass: an Arrow-batched UDF
+                  tokenizes each turn (reference semantics of
+                  indexer/Indexer.java:345-392), Porter-stems through a
+                  memo and counts its terms in one hash map
+                  (Indexer.java:340,356-360) -> postings; native groupBy
+                  rollups give the doc/corpus statistics
 - physical fmt  = doc_id-range-aligned posting blocks, delta+varint
-                  compressed, per-block max-impact (block-max WAND)
-- query         = broadcast semi-join on query terms -> BM25 / reference
-                  tf-idf scoring -> distributed top-k (TakeOrderedAndProject)
-
-Everything is DataFrame/SQL + Arrow-vectorized pandas UDFs; no per-row
-Python anywhere in the hot path.
+                  compressed, per-block max-impact (block-max WAND), in a
+                  manifest-committed block store
+- query         = a gated block-store query (small Σdf) is decoded and
+                  scored on the driver from the loaded store snapshot,
+                  with no Spark job; past the gate, broadcast semi-join on
+                  the query terms -> BM25 scoring -> distributed top-k
+                  (TakeOrderedAndProject). The in-memory index serves
+                  BM25 and the reference tf-idf the same way in Spark.
 """
 
 __version__ = "0.1.0"

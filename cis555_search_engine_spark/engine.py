@@ -50,6 +50,15 @@ from .operators.postings_codec import (
 from .operators.scoring import bm25_topk, bm25_topk_many, cosine_ref_topk, tfidf_ref_topk, with_snippets
 
 
+def _conjunctive(mode: str) -> bool:
+    """The kernels' ``conjunctive`` flag for a facade ``mode``. Any mode
+    but "or"/"and" raises: reading it as OR would serve a disjunctive
+    result for a request such as mode="AND"."""
+    if mode not in ("or", "and"):
+        raise ValueError(f"unknown mode {mode!r} (or|and)")
+    return mode == "and"
+
+
 @dataclass
 class SearchEngine:
     spark: SparkSession
@@ -82,9 +91,10 @@ class SearchEngine:
     def search(
         self, query: str, k: int = 80, ranker: str = "bm25", mode: str = "or"
     ) -> DataFrame:
+        conjunctive = _conjunctive(mode)
         if ranker == "bm25":
-            return bm25_topk(self.index, query, k=k, conjunctive=(mode == "and"))
-        if mode != "or":
+            return bm25_topk(self.index, query, k=k, conjunctive=conjunctive)
+        if conjunctive:
             # the parity rankers reproduce the reference's OR-only SQL —
             # returning disjunctive results for an explicit mode="and"
             # request would be a silent semantics swap
@@ -111,8 +121,9 @@ class SearchEngine:
         return self._blocks
 
     def search_blocks(self, query: str, k: int = 80, mode: str = "or", prune: bool = True) -> DataFrame:
+        conjunctive = _conjunctive(mode)
         return bm25_topk_blocks(
-            self.blocks(), query, k=k, prune=prune, conjunctive=(mode == "and")
+            self.blocks(), query, k=k, prune=prune, conjunctive=conjunctive
         )
 
     def phrase(self, phrase: str) -> DataFrame:
@@ -126,7 +137,8 @@ class SearchEngine:
         applied before the pruning bar)."""
         from .operators.postings_codec import boolean_topk_blocks
 
-        return boolean_topk_blocks(self.blocks(), q, k=k, conjunctive=(mode == "and"))
+        conjunctive = _conjunctive(mode)
+        return boolean_topk_blocks(self.blocks(), q, k=k, conjunctive=conjunctive)
 
     # ------------------------------------------- batch / presentation
 

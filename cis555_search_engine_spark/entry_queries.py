@@ -1603,66 +1603,6 @@ SELECT id, clean, len(list_filter(string_split(clean, ' '), t -> t <> ''))::BIGI
 SQL_HTML_CLEAN = _sql_html_clean()
 
 
-def q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed curation pipeline: quality >= 0.55, lang in (en, de),
-    exact-dedup representative (operators/curation.py)."""
-    from .operators.curation import curate
-
-    return curate(load(spark, sf_dir, "documents"))
-
-
-def _sql_curate() -> str:
-    from .operators.text_analysis import LANG_STOPWORDS
-
-    all_stop = sorted({w for ws in LANG_STOPWORDS.values() for w in ws})
-    lang_sql = _sql_lang_id()
-    quality_sql = _sql_quality()
-    return f"""
-WITH qual AS ({quality_sql}),
-lang AS ({lang_sql}),
-keyed AS (
-  SELECT doc_id AS id,
-         list_aggr(list_sort(list_distinct(string_split(text, ' '))), 'string_agg', ' ') AS ckey
-  FROM documents
-),
-reps AS (SELECT ckey, min(id) AS rep_id FROM keyed GROUP BY ckey)
-SELECT q.id, l.pred_lang, q.score
-FROM qual q
-JOIN lang l ON q.id = l.id
-JOIN keyed k ON q.id = k.id
-JOIN reps r ON k.ckey = r.ckey AND k.id = r.rep_id
-WHERE q.score >= 0.55 AND l.pred_lang IN ('en', 'de')
-"""
-
-
-SQL_CURATE = _sql_curate()
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing for pretraining: docs -> fixed 512-token training
-    chunks via a running token-count window over the stable id order
-    (operators/curation.pack_sequences)."""
-    from .operators.curation import pack_sequences
-
-    return pack_sequences(load(spark, sf_dir, "documents"), budget_tokens=512)
-
-
-SQL_PACK_SEQUENCES = """
-WITH toked AS (
-  SELECT doc_id AS id,
-         len(list_filter(string_split(text, ' '), t -> t <> ''))::BIGINT AS n_tokens
-  FROM documents
-),
-ofs AS (
-  SELECT id, n_tokens,
-         coalesce(sum(n_tokens) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND 1 PRECEDING), 0)::BIGINT AS start_offset
-  FROM toked
-)
-SELECT id, n_tokens, start_offset, (start_offset // 512)::BIGINT AS chunk_id FROM ofs
-"""
-
-
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataFrame-native PageRank, 10 fixed iterations, over a
     deterministic edge set derived from orders (operators/pagerank.py)."""
@@ -2142,71 +2082,6 @@ LEFT JOIN bga ON b.doc_id = bga.doc_id
 LEFT JOIN tga ON b.doc_id = tga.doc_id
 """
 
-# data-mixing rates for the stratified-sampling query (zh/fr fall to the
-# default rate 0.0 — absent strata must drop, part of the contract)
-STRATA_RATES = {"en": 0.5, "de": 0.25, "es": 0.1}
-
-
-def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-stratum (language) sampling — the data-mixing
-    step; membership is a pure function of doc_id, twinned in SQL."""
-    from .operators.curation import sample_stratified
-
-    docs = load(spark, sf_dir, "documents")
-    return sample_stratified(docs, STRATA_RATES, stratum_col="lang").select(
-        "doc_id", "lang"
-    )
-
-
-from .operators.curation import hex_rate_threshold as _hex_thr
-
-SQL_SAMPLE_STRATIFIED = """
-SELECT doc_id, lang FROM documents
-WHERE substr(md5(doc_id::VARCHAR), 1, 8) <
-      CASE lang {cases} ELSE '{default}' END
-""".format(
-    cases=" ".join(
-        f"WHEN '{s}' THEN '{_hex_thr(r)}'" for s, r in sorted(STRATA_RATES.items())
-    ),
-    default=_hex_thr(0.0),
-)
-
-
-def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-weighted (p^alpha) mixture sampling over the language
-    strata — data-dependent rates, deterministic md5-key membership
-    (operators/curation.sample_temperature; XLM-R-style upweighting of
-    low-resource strata). The SQL twin recomputes the rates from the
-    same counts with the identical operation order."""
-    from .operators.curation import sample_temperature
-
-    docs = load(spark, sf_dir, "documents")
-    return sample_temperature(
-        docs, alpha=0.5, target_frac=0.5, stratum_col="lang"
-    ).select("doc_id", "lang", "sample_rate")
-
-
-# the oracle twin recomputes the data-dependent rates in pure SQL with
-# the same operation order and the same round-to-6-then-floor threshold
-# conversion as curation.hex_rate_threshold_col (printf('%08x', ...) is
-# fixed-width lowercase hex on both engines)
-SQL_SAMPLE_TEMPERATURE = """
-WITH c AS (SELECT lang AS g, count(*)::DOUBLE AS n_g FROM documents GROUP BY lang),
-t AS (SELECT sum(n_g) AS n_tot FROM c),
-w AS (SELECT g, n_g, pow(n_g / n_tot, 0.5) AS q, n_tot FROM c, t),
-z AS (SELECT sum(q) AS z_tot FROM w),
-r AS (SELECT g, round(least(1.0, 0.5 * n_tot * q / (z_tot * n_g)), 6) AS rate
-      FROM w, z),
-thr AS (SELECT g, rate,
-               CASE WHEN rate >= 1.0 THEN 'g'
-                    ELSE printf('%08x', CAST(floor(rate * 4294967296.0) AS BIGINT))
-               END AS thr
-        FROM r)
-SELECT d.doc_id, d.lang, thr.rate AS sample_rate
-FROM documents d JOIN thr ON d.lang IS NOT DISTINCT FROM thr.g
-WHERE substr(md5(d.doc_id::VARCHAR), 1, 8) < thr.thr
-"""
-
 
 def q_dup_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Passage-level dedup: maximal spans of 5-token windows repeated
@@ -2568,94 +2443,8 @@ ORDER BY vocab_size
 )
 
 
-def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights (Xie et al. 2023): score every document
-    by hashed-ngram target-vs-raw log-likelihood ratio, target = the
-    doc_id % 10 == 0 slice (a stand-in curated subset)
-    (operators/curation.dsir_weights)."""
-    from .operators.curation import dsir_weights
-
-    docs = load(spark, sf_dir, "documents")
-    return dsir_weights(docs, docs.filter(F.col("doc_id") % 10 == 0))
-
-
-def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DSIR selection cut: top-100 most target-like docs by
-    importance weight, deterministic ties on id
-    (operators/curation.dsir_select)."""
-    from .operators.curation import dsir_select
-
-    docs = load(spark, sf_dir, "documents")
-    return dsir_select(docs, docs.filter(F.col("doc_id") % 10 == 0), k=100)
-
-
-# shared DSIR body: unigram ∪ adjacent-bigram grams, md5-bucketed with
-# the exact _gram_bucket formula, add-0.5-smoothed log-ratio per bucket
-_SQL_DSIR_BODY = (
-    SQL_TOK
-    + """,
-grams AS (
-  SELECT doc_id, term AS g FROM tok
-  UNION ALL
-  SELECT t1.doc_id, t1.term || ' ' || t2.term AS g
-  FROM tok t1 JOIN tok t2 ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1
-),
-gb AS (SELECT doc_id,
-              (('0x' || substr(md5(g), 1, 8))::UBIGINT % 4096)::BIGINT AS b
-       FROM grams),
-rawb AS (SELECT b, count(*)::BIGINT AS cr FROM gb GROUP BY b),
-tgtb AS (SELECT b, count(*)::BIGINT AS ct FROM gb WHERE doc_id % 10 = 0
-         GROUP BY b),
-jb AS (SELECT coalesce(rawb.b, tgtb.b) AS b,
-              coalesce(cr, 0) AS cr, coalesce(ct, 0) AS ct
-       FROM rawb FULL OUTER JOIN tgtb ON rawb.b = tgtb.b),
-jt AS (SELECT sum(cr)::DOUBLE AS n_r, sum(ct)::DOUBLE AS n_t FROM jb),
-lr AS (SELECT b, ln((ct + 0.5) / (n_t + 0.5 * 4096))
-                 - ln((cr + 0.5) / (n_r + 0.5 * 4096)) AS lr
-       FROM jb CROSS JOIN jt),
-dw AS (SELECT gb.doc_id AS id, count(*)::BIGINT AS n_grams,
-              round(sum(lr.lr), 6) AS logw
-       FROM gb JOIN lr ON gb.b = lr.b
-       GROUP BY gb.doc_id)
-"""
-)
-
-SQL_DSIR_WEIGHTS = _SQL_DSIR_BODY + "SELECT id, n_grams, logw FROM dw"
-
-SQL_DSIR_SELECT = (
-    _SQL_DSIR_BODY
-    + "SELECT id, n_grams, logw FROM dw ORDER BY logw DESC, id ASC LIMIT 100"
-)
-
-
-
-# ------------------------------------------- round-5b: chunking, winnowing,
+# ------------------------------------------- round-5b: winnowing,
 # permuterm wildcards, next-word suggestion
-
-
-def q_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window chunking with overlap (window=8 tokens, stride=6):
-    the RAG / pretraining context splitter
-    (operators/curation.chunk_windows) — every token covered, tail
-    truncated, zero-token docs dropped."""
-    from .operators.curation import chunk_windows
-
-    return chunk_windows(load(spark, sf_dir, "documents"), window=8, stride=6)
-
-
-SQL_CHUNK_WINDOWS = """
-WITH t AS (SELECT doc_id,
-                  list_filter(string_split(text, ' '), x -> x <> '') AS toks
-           FROM documents),
-n AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
-c AS (SELECT doc_id, toks, n, i AS chunk_id, i * 6 AS chunk_start
-      FROM n, unnest(generate_series(0, (greatest(n - 8, 0) + 5) // 6)) s(i))
-SELECT doc_id AS id, chunk_id::BIGINT AS chunk_id,
-       chunk_start::BIGINT AS chunk_start,
-       least(8, n - chunk_start)::BIGINT AS n_tokens,
-       array_to_string(toks[chunk_start + 1 : chunk_start + 8], ' ') AS chunk_text
-FROM c
-"""
 
 
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2859,31 +2648,6 @@ JOIN d ON d.doc_id = t.doc_id
 )
 
 
-
-def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic global shuffle + round-robin shard assignment
-    (operators/curation.shard_assign): seeded md5-prefix hash order,
-    global position via the mint_doc_ids range-boundary algebra (no
-    single-partition window), shard = pos % 8."""
-    from .operators.curation import shard_assign
-
-    return shard_assign(load(spark, sf_dir, "documents"), n_shards=8, seed=0)
-
-
-SQL_SHARD_ASSIGN = """
-WITH h AS (SELECT doc_id AS id,
-                  ('0x' || substr(md5(doc_id::VARCHAR || ':0'), 1, 15))::BIGINT AS hkey
-           FROM documents),
-r AS (SELECT id, hkey,
-             row_number() OVER (ORDER BY hkey, id) - 1 AS pos
-      FROM h)
-SELECT id, hkey, pos::BIGINT AS pos, (pos % 8)::BIGINT AS shard,
-       (pos // 8)::BIGINT AS pos_in_shard
-FROM r
-"""
-
-
-
 def q_bm25_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Static index pruning (Carmel et al. SIGIR'01 top-k variant):
     keep only the 8 highest-impact postings per term (original global
@@ -2980,16 +2744,13 @@ SQL_PAGERANK_PERSONALIZED = _sql_pagerank_personalized(10)
 
 # ---------------------------------------------------------- registry
 
-# Registry ORDER is a driver contract (round-3 verdict item 1): the
-# correctness driver gates the FIRST 50 entries. Round-5 ROTATION
-# (round-4 verdict item 5): the 16 near-twin variants parked past
-# position 50 in round 4 (green there via tools/selfcheck.py + pytest)
-# now occupy driver slots, together with ALL FIVE round-5 additions
-# (none of which has ever had a driver row); round-4 driver-green
-# representatives rotate past position 50 in exchange (each keeps its
-# green CORRECTNESS_r04 row, its selfcheck coverage, and its pytest
-# oracles) — the union of CORRECTNESS_r04 + CORRECTNESS_r05 covers
-# every registered query.
+# Registry ORDER is a driver contract: the correctness driver gates the
+# first 50 entries, in insertion order. The search-engine queries come
+# first, grouped by family, so every one of them is gated; the
+# data-pipeline tier that ROADMAP item 3 deletes module by module comes
+# last, and its first entries fill the remaining gated slots. Every
+# entry, gated or not, has its ORACLES twin under the same key
+# (tests/test_entry_contract.py) and runs in tools/selfcheck.py.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- index + corpus statistics ---
     "postings": q_postings,
@@ -3075,15 +2836,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "corpus_drift": q_corpus_drift,
     "corpus_jsd": q_corpus_jsd,
     "vocab_coverage": q_vocab_coverage,
-    # curation, sampling
-    "curate": q_curate,
-    "pack_sequences": q_pack_sequences,
-    "chunk_windows": q_chunk_windows,
-    "shard_assign": q_shard_assign,
-    "sample_stratified": q_sample_stratified,
-    "sample_temperature": q_sample_temperature,
-    "dsir_weights": q_dsir_weights,
-    "dsir_select": q_dsir_select,
 }
 
 ORACLES: dict[str, str] = {
@@ -3166,13 +2918,4 @@ ORACLES: dict[str, str] = {
     "corpus_drift": SQL_CORPUS_DRIFT,
     "corpus_jsd": SQL_CORPUS_JSD,
     "vocab_coverage": SQL_VOCAB_COVERAGE,
-    # curation, sampling
-    "curate": SQL_CURATE,
-    "pack_sequences": SQL_PACK_SEQUENCES,
-    "chunk_windows": SQL_CHUNK_WINDOWS,
-    "shard_assign": SQL_SHARD_ASSIGN,
-    "sample_stratified": SQL_SAMPLE_STRATIFIED,
-    "sample_temperature": SQL_SAMPLE_TEMPERATURE,
-    "dsir_weights": SQL_DSIR_WEIGHTS,
-    "dsir_select": SQL_DSIR_SELECT,
 }

@@ -127,10 +127,7 @@ def with_shingle_hashes(
 
 def canonical_key_col(text):
     """The bag-of-words canonical content key (sorted distinct token
-    set, space-joined) — ONE definition shared by `exact_dedup` and
-    `curation.curate` (which keys its keep/drop dedup on the identical
-    canonicalization; a silent divergence between the two would make the
-    composed pipeline's dedup disagree with the standalone operator)."""
+    set, space-joined) that `exact_dedup` groups on."""
     return F.array_join(F.array_sort(F.array_distinct(tokens_col(text))), " ")
 
 
@@ -143,8 +140,8 @@ def exact_dedup(
     (deterministic).
 
     **Key semantics — read before trusting the word "exact"**:
-    ``canonical=True`` (default, and what the driver oracle + `curate`
-    key on) canonicalizes to the SORTED DISTINCT TOKEN SET — docs that
+    ``canonical=True`` (default, and what the driver oracle keys on)
+    canonicalizes to the SORTED DISTINCT TOKEN SET — docs that
     differ only in word order or token multiplicity ("the cat sat on
     the cat" vs "on sat the cat") land in ONE group and the
     non-representative is reported as a duplicate. That is bag-of-words
@@ -745,7 +742,7 @@ def cluster_representatives(
 ) -> DataFrame:
     """Canonical-document selection: given near-dup edges, keep ONE
     representative per duplicate cluster — the highest-``score_col`` doc
-    (ties: min id) — the policy step a curation pipeline runs after the
+    (ties: min id) — the policy step a dedup pipeline runs after the
     pair-finding family (public recipe: near-dedup keeping the
     best-quality member, e.g. Lee et al. 2022 §3 "we keep one document
     from each cluster").

@@ -1,4 +1,4 @@
-"""Text-analysis operators for training-data curation.
+"""Text-analysis operators over a document corpus.
 
 All four are pure native column expressions (no UDF, whole-stage
 codegen) and each has an exact ANSI-SQL twin in entry_queries.py:
@@ -50,8 +50,7 @@ def _toks(text_col):
 
 def lang_hit_cols(toks) -> dict[str, "F.Column"]:
     """Per-language stopword OCCURRENCE counts (not distinct hits) from
-    a staged lowercase token-array attribute. Shared by `lang_id` and
-    the single-scan `curation.curate` — one formula, two consumers."""
+    a staged lowercase token-array attribute, for `lang_id`."""
     return {
         lang: F.size(F.filter(toks, lambda t: t.isin(words)))
         for lang, words in LANG_STOPWORDS.items()
@@ -80,8 +79,7 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
 
 def quality_part_cols(toks) -> dict[str, "F.Column"]:
     """Raw quality features (n_tok, n_stop, n_distinct) from a staged
-    lowercase token-array attribute — shared by `quality_score` and the
-    single-scan `curation.curate`."""
+    lowercase token-array attribute, for `quality_score`."""
     all_stop = sorted({w for ws in LANG_STOPWORDS.values() for w in ws})
     return {
         "n_tok": F.size(toks),
@@ -736,7 +734,7 @@ def length_quantiles(
     text_col: str = "text",
 ) -> DataFrame:
     """Per-group token-length distribution report — the summary a
-    curation pipeline reads before setting packing lengths, truncation
+    data pipeline reads before setting packing lengths, truncation
     budgets, and outlier cuts. Returns (group, n_docs, mean_len,
     min_len, max_len, p<q>...) with EXACT linearly-interpolated
     quantiles (pos = q·(n−1), the SQL ``quantile_cont`` definition).

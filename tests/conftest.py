@@ -54,6 +54,22 @@ def spark_index(corpus_sdf):
     return build_index(corpus_sdf)
 
 
+@pytest.fixture(scope="module")
+def skewed_rows():
+    """Heavy-tail (doc_id, text) corpus: Pareto turn lengths, p99 ~100x
+    the median (FIXTURES.md §7) — the case the uniform sf corpus
+    (5-60 tokens/doc) never exercises."""
+    from cis555_search_engine_spark.synth import generate_transcripts
+
+    pdf = generate_transcripts(n_convs=40, seed=99, length_skew=1.0)
+    return [(i, t) for i, t in enumerate(pdf["text"].tolist())]
+
+
+@pytest.fixture(scope="module")
+def skewed_sdf(spark, skewed_rows):
+    return spark.createDataFrame(skewed_rows, ["doc_id", "text"]).cache()
+
+
 class _JobCount:
     n: int | None = None  # set when the counted block exits
 

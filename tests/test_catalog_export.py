@@ -79,23 +79,6 @@ def test_pagerank_converges_early_with_share_guard(spark):
         assert abs(full[k] - early[k]) < 0.05  # converged to the same fixpoint
 
 
-def test_sample_filter_modes(spark):
-    """P6 sampling filter: rate respected within tolerance; the
-    content-keyed mode is identical across partition layouts."""
-    from cis555_search_engine_spark.operators.curation import sample_filter
-
-    df = spark.range(0, 10000).withColumnRenamed("id", "doc_id")
-    n = sample_filter(df, rate=0.5, seed=1).count()
-    assert 4500 <= n <= 5500, n
-    a = {r["doc_id"] for r in sample_filter(df, 0.3, seed=7, id_col="doc_id").collect()}
-    b = {r["doc_id"] for r in
-         sample_filter(df.repartition(13), 0.3, seed=7, id_col="doc_id").collect()}
-    assert a == b                       # layout-independent
-    assert 2600 <= len(a) <= 3400, len(a)
-    c = {r["doc_id"] for r in sample_filter(df, 0.3, seed=8, id_col="doc_id").collect()}
-    assert a != c                       # seed actually matters
-
-
 def test_jdbc_reader_surface(spark):
     """JDBC methods construct a partitioned reader (no DB in sandbox —
     load() must fail with a connection/driver error, not an API error)."""

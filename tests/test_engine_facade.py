@@ -38,6 +38,19 @@ def test_unknown_ranker_raises(engine):
         engine.search("x", ranker="pagerank")
 
 
+def test_unknown_mode_raises(engine):
+    """A mode other than "or"/"and" raises on every facade query method
+    instead of serving a disjunctive result."""
+    with pytest.raises(ValueError, match="unknown mode 'AND'"):
+        engine.search("rice noodle", mode="AND")
+    with pytest.raises(ValueError, match="unknown mode 'AND'"):
+        engine.search("rice noodle", ranker="tfidf", mode="AND")
+    with pytest.raises(ValueError, match="unknown mode 'nad'"):
+        engine.search_blocks("rice noodle", mode="nad")
+    with pytest.raises(ValueError, match="unknown mode 'AND'"):
+        engine.query("rice noodle", mode="AND")
+
+
 def test_checkpoint_build_then_load_roundtrip(spark, corpus_sdf, tmp_path):
     from cis555_search_engine_spark.engine import SearchEngine
 

@@ -20,7 +20,7 @@ REPO = Path(__file__).resolve().parent.parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
-FIRST_PARTY = (pkg.__name__, "tools", "__spark_entry__")
+FIRST_PARTY = (pkg.__name__, "tools", "tests", "__spark_entry__")
 
 
 def _package_modules() -> list[str]:
@@ -30,9 +30,13 @@ def _package_modules() -> list[str]:
 
 
 def _source_files() -> list[tuple[str, Path]]:
-    """(dotted module name, path) of every package module and tools/*.py."""
+    """(dotted module name, path) of every package module, tools/*.py and
+    tests/*.py — a test that imports a deleted module fails here in
+    seconds, not when its Spark test runs."""
     out = [(m, Path(importlib.util.find_spec(m).origin)) for m in _package_modules()]
-    return out + [(f"tools.{p.stem}", p) for p in sorted((REPO / "tools").glob("*.py"))]
+    for d in ("tools", "tests"):
+        out += [(f"{d}.{p.stem}", p) for p in sorted((REPO / d).glob("*.py"))]
+    return out
 
 
 def _spec(name: str):

@@ -1,11 +1,10 @@
-"""Training-pipeline operators: repetition signals, stratified +
-temperature sampling, DSIR importance resampling, facet counts, passage
-dedup + removal, Zipf diagnostics — each vs a pure-Python/numpy oracle
-plus edge cases the driver's sf0.01 data may not exercise."""
+"""Data-pipeline operators: repetition signals, passage dedup + removal,
+Zipf diagnostics, collocations, perplexity, drift and vocabulary
+coverage — each vs a pure-Python/numpy oracle plus edge cases the
+driver's sf0.01 data may not exercise. The heavy-tail fixtures live in
+tests/conftest.py."""
 
 from __future__ import annotations
-
-import hashlib
 
 import pytest
 
@@ -70,211 +69,6 @@ def test_repetition_stats_degenerate_docs(spark):
     assert got[3]["dup_token_frac"] == 0.75
     assert got[3]["top_bigram_frac"] == 1.0  # "spam spam" is every bigram
     assert got[3]["dup_trigram_frac"] == 0.5  # 2 occurrences, 1 distinct
-
-
-# ---------------------------------------------------- sample_stratified
-
-
-def _hexkey(doc_id) -> str:
-    return hashlib.md5(str(doc_id).encode()).hexdigest()[:8]
-
-
-def test_sample_stratified_matches_oracle(spark, docs_sdf):
-    from cis555_search_engine_spark.operators.curation import sample_stratified
-
-    rates = {"en": 0.5, "de": 0.25, "es": 0.1}
-    rows = docs_sdf.select("doc_id", "lang").collect()
-    want = {
-        r["doc_id"]
-        for r in rows
-        if rates.get(r["lang"]) is not None
-        and _hexkey(r["doc_id"]) < format(int(rates[r["lang"]] * 16**8), "08x")
-    }
-    got = {r["doc_id"] for r in sample_stratified(docs_sdf, rates).collect()}
-    assert got == want
-    # unknown strata (zh, fr) fall to default_rate=0 -> dropped entirely
-    langs = {r["lang"] for r in rows}
-    assert {"zh", "fr"} <= langs
-    kept_langs = {
-        r["lang"] for r in sample_stratified(docs_sdf, rates).select("lang").collect()
-    }
-    assert kept_langs <= set(rates)
-
-
-def test_sample_stratified_nested_and_stable(spark, docs_sdf):
-    """Raising a rate strictly grows the sample; membership is invariant
-    under repartitioning (the property df.sample lacks)."""
-    from cis555_search_engine_spark.operators.curation import sample_stratified
-
-    small = {r["doc_id"] for r in sample_stratified(docs_sdf, {"en": 0.2}).collect()}
-    big = {r["doc_id"] for r in sample_stratified(docs_sdf, {"en": 0.6}).collect()}
-    assert small < big
-    re48 = {
-        r["doc_id"]
-        for r in sample_stratified(docs_sdf.repartition(48), {"en": 0.6}).collect()
-    }
-    assert re48 == big
-
-
-def test_sample_stratified_rate_one_keeps_all(spark, docs_sdf):
-    from cis555_search_engine_spark.operators.curation import sample_stratified
-
-    n_en = docs_sdf.filter("lang = 'en'").count()
-    assert sample_stratified(docs_sdf, {"en": 1.0}).count() == n_en
-
-
-# -------------------------------------------------------- facet_counts
-
-
-def test_facet_counts_matches_bm25_scores(spark, docs_sdf):
-    from pyspark.sql import functions as F
-
-    from cis555_search_engine_spark.operators.index_build import build_index
-    from cis555_search_engine_spark.operators.scoring import bm25_scores, facet_counts
-
-    idx = build_index(docs_sdf, doc_key=("doc_id",), text_col="text", stem=False)
-    meta = docs_sdf.select("doc_id", "source")
-    got = {
-        r["facet"]: (r["n_docs"], r["max_score"], r["min_score"])
-        for r in facet_counts(idx, "hash join merge", meta, "source", stem=False).collect()
-    }
-
-    scored = bm25_scores(idx, "hash join merge", stem=False)
-    src = {r["doc_id"]: r["source"] for r in meta.collect()}
-    per_facet: dict[str, list[float]] = {}
-    for r in scored.select("doc_id", F.round("score", 4).alias("s")).collect():
-        per_facet.setdefault(src[r["doc_id"]], []).append(r["s"])
-    want = {f: (len(v), max(v), min(v)) for f, v in per_facet.items()}
-    assert got == want
-    assert len(want) > 1, "need several facets for a meaningful check"
-
-
-def test_facet_counts_empty_query(spark, docs_sdf):
-    from cis555_search_engine_spark.operators.index_build import build_index
-    from cis555_search_engine_spark.operators.scoring import facet_counts
-
-    idx = build_index(docs_sdf.limit(20), doc_key=("doc_id",), text_col="text", stem=False)
-    meta = docs_sdf.select("doc_id", "source")
-    out = facet_counts(idx, "", meta, "source", stem=False)
-    assert out.count() == 0
-    assert out.columns == ["facet", "n_docs", "max_score", "min_score"]
-
-
-def test_sample_stratified_threshold_math(spark):
-    """Random rates: kept fraction matches the exact md5-threshold count
-    computed in Python (no statistical tolerance — the sampler is a
-    deterministic function, so the check is exact)."""
-    import random
-
-    from cis555_search_engine_spark.operators.curation import sample_stratified
-
-    rng = random.Random(7)
-    rows = [(i, rng.choice(["a", "b", "c"])) for i in range(2000)]
-    df = spark.createDataFrame(rows, ["doc_id", "lang"])
-    rates = {"a": 0.123, "b": 0.777, "c": 1.0}
-
-    def kept(i, s):
-        r = rates[s]
-        return r >= 1.0 or _hexkey(i) < format(int(r * 16**8), "08x")
-
-    want = {i for i, s in rows if kept(i, s)}
-    got = {r["doc_id"] for r in sample_stratified(df, rates).collect()}
-    assert got == want
-
-
-# --------------------------------------------------- sample_temperature
-
-
-def _temp_rates(rows, alpha, target):
-    """Pure-Python oracle for the p^alpha mixture rates (same operation
-    order as the operator and its SQL twin)."""
-    from collections import Counter
-
-    counts = Counter(s for _, s in rows)
-    n_tot = float(sum(counts.values()))
-    q = {g: (n / n_tot) ** alpha for g, n in counts.items()}
-    z = sum(q[g] for g in sorted(q))  # any order: rates get round(,6)
-    return {
-        g: round(min(1.0, target * n_tot * q[g] / (z * counts[g])), 6)
-        for g in counts
-    }
-
-
-def test_sample_temperature_matches_python_oracle(spark):
-    """Skewed strata: membership equals the exact md5-threshold oracle
-    at the p^0.5 rates; low-resource strata get HIGHER keep-rates than
-    the head stratum (the point of temperature sampling)."""
-    import random
-
-    from cis555_search_engine_spark.operators.curation import sample_temperature
-
-    rng = random.Random(11)
-    # heavy head: ~80% 'en', small 'de'/'fi' tails
-    rows = [
-        (i, rng.choices(["en", "de", "fi"], weights=[80, 15, 5])[0])
-        for i in range(3000)
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "lang"])
-    rates = _temp_rates(rows, alpha=0.5, target=0.5)
-    assert rates["fi"] > rates["de"] > rates["en"]  # tail upweighted
-
-    def kept(i, s):
-        r = rates[s]
-        return r >= 1.0 or _hexkey(i) < format(int(r * 16**8), "08x")
-
-    want = {i for i, s in rows if kept(i, s)}
-    out = sample_temperature(df, alpha=0.5, target_frac=0.5).collect()
-    got = {r["doc_id"] for r in out}
-    assert got == want
-    # the reported sample_rate column carries the applied per-stratum rate
-    assert {(r["lang"], r["sample_rate"]) for r in out} == {
-        (g, rates[g]) for g in rates if any(s == g for i, s in rows if i in got)
-    }
-
-
-def test_sample_temperature_nested_stable_and_clamped(spark):
-    """target_frac nests the samples; membership survives repartitioning;
-    a tiny stratum whose upweighted rate clears 1.0 is kept whole, and
-    alpha=1 degenerates to uniform target_frac sampling."""
-    import random
-
-    from cis555_search_engine_spark.operators.curation import sample_temperature
-
-    rng = random.Random(5)
-    rows = [
-        (i, rng.choices(["en", "de", "xx"], weights=[96, 3, 1])[0])
-        for i in range(4000)
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "lang"])
-    small = {r["doc_id"] for r in sample_temperature(df, target_frac=0.25).collect()}
-    big = {r["doc_id"] for r in sample_temperature(df, target_frac=0.6).collect()}
-    assert small < big
-    re48 = {
-        r["doc_id"]
-        for r in sample_temperature(df.repartition(48), target_frac=0.6).collect()
-    }
-    assert re48 == big
-    # alpha=0.25, target 0.9: the rare stratum's rate clamps at 1.0 -> whole
-    out = sample_temperature(df, alpha=0.25, target_frac=0.9)
-    n_xx_all = sum(1 for _, s in rows if s == "xx")
-    n_xx_kept = out.filter("lang = 'xx'").count()
-    assert n_xx_kept == n_xx_all
-    assert out.filter("lang = 'xx'").select("sample_rate").first()[0] == 1.0
-    # alpha=1 -> q ∝ p, so every stratum keeps exactly target_frac
-    flat = sample_temperature(df, alpha=1.0, target_frac=0.3)
-    assert {r[0] for r in flat.select("sample_rate").distinct().collect()} == {0.3}
-    # non-positive target is a usage error, not a silent keep-all (the
-    # %08x threshold of a negative rate would sort above every md5 key)
-    with pytest.raises(ValueError, match="target_frac"):
-        sample_temperature(df, target_frac=0.0)
-    with pytest.raises(ValueError, match="target_frac"):
-        sample_temperature(df, target_frac=-0.5)
-    # re-sampling a previous pass's output replaces sample_rate instead
-    # of emitting a duplicate column
-    once = sample_temperature(df, target_frac=0.6)
-    twice = sample_temperature(once, target_frac=0.25)
-    assert twice.columns.count("sample_rate") == 1
-    assert {r["doc_id"] for r in twice.collect()} <= big
 
 
 # ------------------------------------------------------- dup_passages
@@ -403,32 +197,10 @@ def test_remove_spans_python_oracle(spark, docs_rows, docs_sdf):
     assert got == want
 
 
-# ----------------------------------------- heavy-tail (skewed) fixtures
-# Round-4 verdict item 10: the uniform sf corpus (5-60 tokens/doc) is
-# the friendliest case for the pipeline tier — re-oracle packing,
-# repetition and passage dedup on the synth heavy-tail corpus (Pareto
-# lengths, p99 ~100x the median; FIXTURES.md §skewed).
-
-
-@pytest.fixture(scope="module")
-def skewed_rows():
-    from cis555_search_engine_spark.synth import generate_transcripts
-
-    pdf = generate_transcripts(n_convs=40, seed=99, length_skew=1.0)
-    return [(i, t) for i, t in enumerate(pdf["text"].tolist())]
-
-
-@pytest.fixture(scope="module")
-def skewed_sdf(spark, skewed_rows):
-    return spark.createDataFrame(skewed_rows, ["doc_id", "text"]).cache()
-
-
-def test_skewed_corpus_is_actually_heavy_tailed(skewed_rows):
-    import statistics
-
-    lens = sorted(len(t.split()) for _, t in skewed_rows)
-    med = statistics.median(lens)
-    assert lens[-1] > 20 * med, (med, lens[-1])
+# ------------------------------------------- heavy-tail (skewed) corpus
+# The uniform sf corpus (5-60 tokens/doc) is the friendliest case:
+# re-oracle passage dedup and repetition on the heavy-tail corpus
+# (skewed_rows / skewed_sdf in tests/conftest.py).
 
 
 def test_repeated_passages_skewed_oracle(spark, skewed_rows, skewed_sdf):
@@ -492,31 +264,6 @@ def test_repetition_stats_skewed_oracle(spark, skewed_rows, skewed_sdf):
         for r in repetition_stats(skewed_sdf).collect()
     }
     assert got == want
-
-
-def test_pack_sequences_skewed_oracle(spark, skewed_rows, skewed_sdf):
-    """Packing on the heavy-tail corpus vs a pure-Python running-sum
-    oracle: a 4000-token doc must not derail offsets/chunk ids, and the
-    bucketed scale path must equal the single-window form."""
-    from cis555_search_engine_spark.operators.curation import pack_sequences
-
-    budget = 256
-    off = 0
-    want = {}
-    for i, t in sorted(skewed_rows):
-        n = len([x for x in t.split() if x])
-        want[i] = (n, off, off // budget)
-        off += n
-    got = {
-        r["id"]: (r["n_tokens"], r["start_offset"], r["chunk_id"])
-        for r in pack_sequences(skewed_sdf, budget_tokens=budget).collect()
-    }
-    assert got == want
-    single = {
-        r["id"]: (r["n_tokens"], r["start_offset"], r["chunk_id"])
-        for r in pack_sequences(skewed_sdf, budget_tokens=budget, num_buckets=1).collect()
-    }
-    assert single == got
 
 
 # --------------------------------------------------------- zipf_stats
@@ -846,124 +593,3 @@ def test_vocab_coverage_plan_and_validation(spark):
         vocab_coverage(wc, sizes=())
     with _pytest.raises(ValueError):
         vocab_coverage(wc, sizes=(0, 10))
-
-
-# --------------------------------------------------------------- DSIR
-
-
-def test_dsir_identity_target_gives_zero_weights(spark, docs_sdf):
-    """target == raw ⇒ the two smoothed distributions are the identical
-    doubles, so every log-ratio — and every doc weight — is exactly 0."""
-    from cis555_search_engine_spark.operators.curation import dsir_weights
-
-    out = dsir_weights(docs_sdf, docs_sdf, n_buckets=256).collect()
-    assert len(out) > 0
-    assert all(r["logw"] == 0.0 for r in out)
-
-
-def test_dsir_prefers_target_like_docs(spark):
-    """Docs sharing the target slice's grams must outscore docs that
-    share none — including a held-out doc NOT in the target itself."""
-    from cis555_search_engine_spark.operators.curation import (
-        dsir_select,
-        dsir_weights,
-    )
-
-    rows = [
-        (1, "cat dog cat dog"),       # target
-        (2, "cat dog bird"),          # held out, target-like
-        (3, "fish squid kelp"),       # off-target
-        (4, "fish squid squid kelp"), # off-target
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    target = docs.filter("doc_id = 1")
-    w = {r["id"]: r["logw"] for r in dsir_weights(docs, target).collect()}
-    assert w[2] > w[3] and w[2] > w[4]
-    assert w[1] > w[3]
-    top2 = [r["id"] for r in dsir_select(docs, target, k=2).collect()]
-    assert set(top2) == {1, 2}
-
-
-def test_dsir_python_oracle(spark, docs_sdf, docs_rows):
-    """Bit-for-bit against a pure-Python replay of the same hashing,
-    smoothing, and rounding (independent of the DuckDB twin)."""
-    import hashlib
-    import math
-    import re
-    from collections import Counter
-
-    from cis555_search_engine_spark.operators.curation import dsir_weights
-
-    B, K = 512, 0.5
-
-    def toks(text):
-        return [t for t in (x.strip("-") for x in re.findall(r"[a-z-]+", text.lower())) if t]
-
-    def buckets(text):
-        ts = toks(text)
-        grams = ts + [f"{a} {b}" for a, b in zip(ts, ts[1:])]
-        return Counter(
-            int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % B for g in grams
-        )
-
-    per_doc = {d: buckets(t) for d, t in docs_rows}
-    raw = Counter()
-    tgt = Counter()
-    for d, c in per_doc.items():
-        raw.update(c)
-        if d % 10 == 0:
-            tgt.update(c)
-    n_r, n_t = sum(raw.values()), sum(tgt.values())
-    lr = {
-        b: math.log((tgt.get(b, 0) + K) / (n_t + K * B))
-        - math.log((raw[b] + K) / (n_r + K * B))
-        for b in raw
-    }
-    expected = {
-        d: (sum(c.values()), round(sum(n * lr[b] for b, n in c.items()), 6))
-        for d, c in per_doc.items()
-        if c
-    }
-
-    from pyspark.sql import functions as F
-
-    got = {
-        r["id"]: (r["n_grams"], r["logw"])
-        for r in dsir_weights(
-            docs_sdf, docs_sdf.filter(F.col("doc_id") % 10 == 0),
-            n_buckets=B, k_smooth=K,
-        ).collect()
-    }
-    assert got == expected
-
-
-def test_dsir_degenerate_docs_and_param_guards(spark):
-    from cis555_search_engine_spark.operators.curation import dsir_weights
-
-    docs = spark.createDataFrame(
-        [(1, ""), (2, "one"), (3, None), (4, "two words here")],
-        "doc_id long, text string",
-    )
-    out = {r["id"]: r["n_grams"] for r in
-           dsir_weights(docs, docs.filter("doc_id = 4")).collect()}
-    # empty/null docs absent; 1-token doc contributes its unigram only
-    assert set(out) == {2, 4}
-    assert out[2] == 1 and out[4] == 5  # 3 unigrams + 2 bigrams
-    with pytest.raises(ValueError):
-        dsir_weights(docs, docs, n_buckets=0)
-    with pytest.raises(ValueError):
-        dsir_weights(docs, docs, k_smooth=0.0)
-
-
-def test_dsir_select_plan_is_take_ordered(spark, docs_sdf):
-    """The selection cut must plan as TakeOrderedAndProject (per-
-    partition heaps), never a global sort of the scored corpus."""
-    from pyspark.sql import functions as F
-
-    from cis555_search_engine_spark.operators.curation import dsir_select
-
-    plan = dsir_select(
-        docs_sdf, docs_sdf.filter(F.col("doc_id") % 10 == 0), k=10
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-

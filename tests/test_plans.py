@@ -16,9 +16,6 @@ def explain_str(df, mode: str = "formatted") -> str:
     return jdf.queryExecution().explainString(em)
 
 
-SF = "/root/testdata/sf0.001"
-
-
 def test_doclocal_build_has_no_shuffle(spark, corpus_sdf):
     from cis555_search_engine_spark.operators.index_build import build_postings_doclocal
 
@@ -120,18 +117,6 @@ def test_block_build_no_forced_vocab_broadcast(spark, corpus_sdf):
         assert "BroadcastExchange" not in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_sample_stratified_is_scan_fused(spark):
-    """The stratified sampler must stay a narrow scan-side filter: no
-    Exchange, no join, no Python — the property that makes it free at
-    100 TB (it rides the scan the downstream consumer already pays for)."""
-    from cis555_search_engine_spark.operators.curation import sample_stratified
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = explain_str(sample_stratified(docs, {"en": 0.5, "de": 0.25}))
-    for op in ("Exchange", "Join", "ArrowEvalPython", "BatchEvalPython"):
-        assert op not in plan, plan
 
 
 def test_facet_counts_single_agg_after_join(spark_index, corpus_sdf):

@@ -1,4 +1,5 @@
-"""Oracles for the query-serving extensions (operators/query_ops.py).
+"""Oracles for the query-serving extensions (operators/query_ops.py,
+and facet counts from operators/scoring.py).
 
 Every operator is checked against an independent pure-Python
 recomputation over the oracle index (tests/conftest.py fixtures) — the
@@ -224,3 +225,46 @@ def test_rrf_fuse_respects_k_and_ties(spark):
     b = spark.createDataFrame([(5, 1), (7, 2)], "doc_id int, rank int")
     rows = rrf_fuse([a, b], key="doc_id", c=60, k=1).collect()
     assert len(rows) == 1 and rows[0]["doc_id"] == 5
+
+
+# ------------------------------------------------------------ facets
+
+
+def test_facet_counts_matches_bm25_scores(spark_index, corpus_sdf):
+    from cis555_search_engine_spark.operators.scoring import bm25_scores, facet_counts
+
+    key = ["conv_id", "turn_idx"]
+    meta = corpus_sdf.select(*key, "role")
+    got = {
+        r["facet"]: (r["n_docs"], r["max_score"], r["min_score"])
+        for r in facet_counts(spark_index, "rice noodle", meta, "role").collect()
+    }
+
+    scored = bm25_scores(spark_index, "rice noodle")
+    role = {(r["conv_id"], r["turn_idx"]): r["role"] for r in meta.collect()}
+    per_facet: dict[str, list[float]] = {}
+    for r in scored.select(*key, F.round("score", 4).alias("s")).collect():
+        per_facet.setdefault(role[(r["conv_id"], r["turn_idx"])], []).append(r["s"])
+    want = {f: (len(v), max(v), min(v)) for f, v in per_facet.items()}
+    assert got == want
+    assert len(want) > 1, "need several facets for a meaningful check"
+
+
+def test_facet_counts_empty_query(spark_index, corpus_sdf):
+    from cis555_search_engine_spark.operators.scoring import facet_counts
+
+    meta = corpus_sdf.select("conv_id", "turn_idx", "role")
+    out = facet_counts(spark_index, "", meta, "role")
+    assert out.count() == 0
+    assert out.columns == ["facet", "n_docs", "max_score", "min_score"]
+
+
+# ------------------------------------------------------ heavy-tail corpus
+
+
+def test_skewed_corpus_is_actually_heavy_tailed(skewed_rows):
+    import statistics
+
+    lens = sorted(len(t.split()) for _, t in skewed_rows)
+    med = statistics.median(lens)
+    assert lens[-1] > 20 * med, (med, lens[-1])

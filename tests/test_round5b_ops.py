@@ -1,6 +1,7 @@
-"""Round-5b operators — sliding-window chunking, winnowing fingerprints
-(MOSS), permuterm wildcards, next-word suggestion — each vs a pure-Python
-oracle plus the edge cases the driver's sf0.01 data may not exercise."""
+"""Round-5b operators — winnowing fingerprints (MOSS), permuterm
+wildcards, next-word suggestion, best-window snippets, static pruning,
+personalized PageRank — each vs a pure-Python oracle plus the edge cases
+the driver's sf0.01 data may not exercise; and the maintenance CLI."""
 
 from __future__ import annotations
 
@@ -19,72 +20,6 @@ def docs_sdf(spark):
 @pytest.fixture(scope="module")
 def docs_rows(docs_sdf):
     return [(r["doc_id"], r["text"]) for r in docs_sdf.select("doc_id", "text").collect()]
-
-
-# ------------------------------------------------------- chunk_windows
-
-
-def _py_chunks(text: str, window: int, stride: int):
-    toks = [t for t in text.split() if t]
-    if not toks:
-        return []
-    n = len(toks)
-    n_chunks = 1 + max(0, -(-(n - window) // stride)) if n > window else 1
-    out = []
-    for c in range(n_chunks):
-        s = c * stride
-        out.append((c, s, min(window, n - s), " ".join(toks[s : s + window])))
-    return out
-
-
-def test_chunk_windows_matches_python_oracle(spark, docs_sdf, docs_rows):
-    from cis555_search_engine_spark.operators.curation import chunk_windows
-
-    got = {
-        (r["id"], r["chunk_id"]): (r["chunk_start"], r["n_tokens"], r["chunk_text"])
-        for r in chunk_windows(docs_sdf, window=8, stride=6).collect()
-    }
-    want = {}
-    for i, t in docs_rows:
-        for c, s, nt, txt in _py_chunks(t, 8, 6):
-            want[(i, c)] = (s, nt, txt)
-    assert got == want
-
-
-def test_chunk_windows_covers_every_token_and_overlap(spark):
-    from cis555_search_engine_spark.operators.curation import chunk_windows
-
-    text = " ".join(f"t{i}" for i in range(23))
-    df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    rows = sorted(
-        (r["chunk_start"], r["n_tokens"], r["chunk_text"])
-        for r in chunk_windows(df, window=10, stride=7).collect()
-    )
-    # starts 0,7,14 — last start must be < 23 and cover the tail
-    assert [r[0] for r in rows] == [0, 7, 14]
-    assert rows[-1][1] == 9  # truncated tail chunk
-    covered = set()
-    for s, nt, txt in rows:
-        toks = txt.split()
-        assert len(toks) == nt
-        assert toks == [f"t{i}" for i in range(s, s + nt)]
-        covered.update(range(s, s + nt))
-    assert covered == set(range(23))
-
-
-def test_chunk_windows_edges(spark):
-    from cis555_search_engine_spark.operators.curation import chunk_windows
-
-    df = spark.createDataFrame(
-        [(1, "a b c"), (2, ""), (3, None), (4, "solo")],
-        ["doc_id", "text"],
-    )
-    rows = chunk_windows(df, window=8, stride=6).collect()
-    got = {(r["id"], r["chunk_id"]): (r["n_tokens"], r["chunk_text"]) for r in rows}
-    # short docs -> exactly one truncated chunk; empty/null -> no rows
-    assert got == {(1, 0): (3, "a b c"), (4, 0): (1, "solo")}
-    with pytest.raises(ValueError):
-        chunk_windows(df, window=4, stride=5)
 
 
 # ------------------------------------------------- winnowing (MOSS)
@@ -325,49 +260,7 @@ def test_best_window_snippets_empty_query(spark, small_index, docs_sdf):
     assert out.collect() == []
 
 
-# ------------------------------------------------- shard assignment
-
-
-def test_shard_assign_matches_python_oracle(spark, docs_sdf, docs_rows):
-    import hashlib
-
-    from cis555_search_engine_spark.operators.curation import shard_assign
-
-    got = {
-        r["id"]: (r["pos"], r["shard"], r["pos_in_shard"])
-        for r in shard_assign(docs_sdf, n_shards=4, seed=7).collect()
-    }
-    ids = [i for i, _ in docs_rows]
-    hk = {
-        i: int(hashlib.md5(f"{i}:7".encode()).hexdigest()[:15], 16) for i in ids
-    }
-    order = sorted(ids, key=lambda i: (hk[i], i))
-    want = {i: (p, p % 4, p // 4) for p, i in enumerate(order)}
-    assert got == want
-
-
-def test_shard_assign_balanced_and_stable(spark, docs_sdf):
-    from pyspark.sql import functions as F
-
-    from cis555_search_engine_spark.operators.curation import shard_assign
-
-    out = shard_assign(docs_sdf, n_shards=8, seed=0)
-    sizes = {r["shard"]: r["n"] for r in out.groupBy("shard").agg(F.count("*").alias("n")).collect()}
-    assert len(sizes) == 8
-    assert max(sizes.values()) - min(sizes.values()) <= 1  # round-robin deal
-    # stability under repartitioning: same assignment regardless of layout
-    re = shard_assign(docs_sdf.repartition(13), n_shards=8, seed=0)
-    a = {(r["id"], r["pos"]) for r in out.select("id", "pos").collect()}
-    b = {(r["id"], r["pos"]) for r in re.select("id", "pos").collect()}
-    assert a == b
-    # a different seed produces a different interleave
-    other = shard_assign(docs_sdf, n_shards=8, seed=1)
-    c = {(r["id"], r["pos"]) for r in other.select("id", "pos").collect()}
-    assert a != c
-    import pytest
-
-    with pytest.raises(ValueError):
-        shard_assign(docs_sdf, n_shards=0)
+# ------------------------------------------------ maintenance CLI
 
 
 def test_maintenance_job_tier_merge_cli(spark, corpus_pdf, tmp_path, monkeypatch):
@@ -440,6 +333,36 @@ def test_maintenance_job_rejects_compact_with_tier_merge(tmp_path):
     assert proc.returncode == 2, proc.stderr
     assert "--tier-merge" in proc.stderr and "--compact" in proc.stderr
     assert not (tmp_path / "idx").exists()
+
+
+def test_query_job_rejects_blocks_with_non_bm25_ranker(tmp_path):
+    """--blocks serves BM25 only, so --blocks with another --ranker is a
+    usage error (exit code 2) raised before pyspark is even imported —
+    not a BM25 result served under a tfidf flag. A stub pyspark package
+    on the path fails the run if the tool reaches the session start."""
+    import os
+    import subprocess
+    import sys as _sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    stub = tmp_path / "stub" / "pyspark"
+    stub.mkdir(parents=True)
+    (stub / "__init__.py").write_text('raise ImportError("pyspark was imported")\n')
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(stub.parent), env.get("PYTHONPATH")) if p
+    )
+    proc = subprocess.run(
+        [
+            _sys.executable, os.path.join(root, "tools", "query_job.py"),
+            "--index", str(tmp_path / "idx"), "--query", "rice",
+            "--blocks", "--ranker", "tfidf",
+        ],
+        capture_output=True, text=True, timeout=120, env=env,
+    )
+    assert proc.returncode == 2, proc.stderr
+    assert "--blocks" in proc.stderr and "--ranker" in proc.stderr
+    assert "pyspark was imported" not in proc.stderr
 
 
 # ------------------------------------------------- static index pruning

@@ -190,27 +190,6 @@ def test_pagerank_does_not_accumulate_persisted_datasets(spark):
     assert after_long - after_short <= 1
 
 
-def test_pack_sequences_bucketed_equals_global_window(spark):
-    """The bucketed scale path (literal range buckets + per-bucket window
-    + broadcast offsets) is identical algebra to the single global
-    window — property-tested equal, and its plan has NO single-partition
-    Exchange (the 10^12-doc bottleneck, VERDICT r2 item 2)."""
-    from cis555_search_engine_spark.operators.curation import pack_sequences
-
-    rows = [(i, " ".join(f"w{j}" for j in range((i * 7) % 23 + 1))) for i in range(200)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    global_w = pack_sequences(docs, budget_tokens=64, num_buckets=1).collect()
-    bucketed = pack_sequences(docs, budget_tokens=64, num_buckets=8).collect()
-    key = lambda r: r["id"]
-    assert sorted(bucketed, key=key) == sorted(global_w, key=key)
-
-    plan = (
-        pack_sequences(docs, budget_tokens=64, num_buckets=8)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "SinglePartition" not in plan, plan
-
-
 def test_strip_markup_semantics(spark):
     """P1 projection (reference Indexer.java:333-338): script/style
     contents dropped, comments dropped, tags become word boundaries,

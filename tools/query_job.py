@@ -4,7 +4,7 @@
     spark-submit --master local[N] --py-files pkg.zip tools/query_job.py \
         --index <dir-from-index_build_job-or-checkpointed-build> \
         --query "rice noodle" [--k 10] [--ranker bm25|tfidf|cosine] \
-        [--mode or|and] [--blocks]
+        [--mode or|and] [--blocks]    # --blocks serves BM25 only
 
     # OR serve straight from a persisted block store (write_blocks /
     # maintenance_job layout) — no long-postings directory needed; the
@@ -44,6 +44,10 @@ def main() -> None:
         # ignoring --ranker/--blocks would serve BM25 under a tfidf flag
         ap.error("--block-store always serves boolean BM25: "
                  "--ranker/--blocks apply only to --index")
+    if args.blocks and args.ranker != "bm25":
+        # search_blocks serves BM25 only, for the same reason
+        ap.error(f"--blocks serves BM25 only: --ranker {args.ranker} "
+                 "needs the in-memory index (drop --blocks)")
 
     from pyspark.sql import SparkSession
 
